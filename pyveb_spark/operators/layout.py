@@ -41,19 +41,33 @@ __all__ = [
 ]
 
 
-def _local_fs_path(path: str) -> str | None:
-    """The local-filesystem path behind ``path``, or None when it names
-    a remote store. Hadoop FS metadata calls from Python pay several
-    Py4J roundtrips PER FILE; callers use this to route listing-only
-    work (file counts, byte totals) through ``os`` when the data
-    actually lives on local disk (every test/bench artifact dir), and
-    through the Hadoop FS API otherwise (HDFS, s3a, ...)."""
+def _parquet_files(spark, path: str) -> list[tuple[str, int]]:
+    """(parent directory name, bytes) of every ``.parquet`` file under
+    ``path``. Local paths (every test/bench artifact dir) are walked with
+    ``os``: the Hadoop iterator costs several Py4J roundtrips PER FILE
+    (~0.5-1 s on a few dozen files, paid per micro-batch by the IVF
+    compaction trigger) where ``os.walk`` is sub-millisecond. Remote
+    stores (HDFS, s3a, ...) take the Hadoop listing."""
     from urllib.parse import urlparse
+
+    from pyveb_spark.sinks.writers import _hadoop_fs
 
     parsed = urlparse(path)
     if parsed.scheme in ("", "file"):
-        return parsed.path or path
-    return None
+        return [
+            (os.path.basename(d), os.path.getsize(os.path.join(d, f)))
+            for d, _dirs, files in os.walk(parsed.path or path)
+            for f in files
+            if f.endswith(".parquet")
+        ]
+    fs, HPath = _hadoop_fs(spark, path)
+    out = []
+    it = fs.listFiles(HPath(path), True)
+    while it.hasNext():
+        f = it.next()
+        if f.getPath().getName().endswith(".parquet"):
+            out.append((f.getPath().getParent().getName(), f.getLen()))
+    return out
 
 
 def widen_scan(df: DataFrame, target: int | None = None) -> DataFrame:
@@ -287,47 +301,39 @@ def compact_files(
     costs 10⁸ opens per scan and starves the driver on listing. This
     rewrites with ``repartition(n)`` (round-robin — size-balanced without
     any key assumption) or, with ``partition_cols``, one file per
-    partition value via ``repartition(cols)`` + dynamic overwrite,
-    then atomically swaps the directory (same semantics as
-    ``ParquetMergeSink._swap_in``).
+    partition value via ``repartition(cols)`` + dynamic overwrite, into
+    ``<path>__compact_stage``, then commits it over ``path`` with
+    ``sinks.writers.swap_dir``.
 
     Returns the target file count. Sizing reads the FileSystem listing
     only — no data scan beyond the rewrite itself.
     """
     import math
 
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    Path = jvm.org.apache.hadoop.fs.Path
-    fs = Path(path).getFileSystem(conf)
-    total = 0
-    local = _local_fs_path(path)
-    if local is not None:
-        # listing-only sizing via os.walk — the Hadoop iterator costs
-        # several Py4J roundtrips per file (see _local_fs_path)
-        for dirpath, _dirs, files in os.walk(local):
-            for f in files:
-                if f.endswith(".parquet"):
-                    total += os.path.getsize(os.path.join(dirpath, f))
-    else:
-        it = fs.listFiles(Path(path), True)
-        while it.hasNext():
-            f = it.next()
-            if f.getPath().getName().endswith(".parquet"):
-                total += f.getLen()
+    from pyveb_spark.sinks.writers import (
+        _hadoop_fs,
+        raise_if_swap_crashed,
+        swap_dir,
+    )
+
+    stage = path.rstrip("/") + "__compact_stage"
+    raise_if_swap_crashed(spark, stage, path)
+    total = sum(size for _, size in _parquet_files(spark, path))
     n_files = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
     df = spark.read.parquet(path)
-    tmp = path.rstrip("/") + ".__compact__"
+    # a stage left by a run that failed before its swap: dynamic
+    # partition overwrite would keep its partitions the rewrite lacks
+    fs, HPath = _hadoop_fs(spark, stage)
+    fs.delete(HPath(stage), True)
     if partition_cols:
         (
             df.repartition(*[F.col(c) for c in partition_cols])
             .write.mode("overwrite")
             .partitionBy(*partition_cols)
-            .parquet(tmp)
+            .parquet(stage)
         )
     else:
-        df.repartition(n_files).write.mode("overwrite").parquet(tmp)
-    if fs.exists(Path(path)):
-        fs.delete(Path(path), True)
-    fs.rename(Path(tmp), Path(path))
+        df.repartition(n_files).write.mode("overwrite").parquet(stage)
+    with swap_dir(spark, stage, path):
+        pass
     return n_files

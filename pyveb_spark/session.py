@@ -47,7 +47,10 @@ def get_spark(
     the *only* things that change per environment are master URL and memory,
     which callers pass explicitly.
     """
+    import pyveb_spark
+
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(pyveb_spark.__file__)))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -99,6 +102,8 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Local mode housekeeping
         .config("spark.ui.enabled", "false")
+        # Python workers import pyveb_spark to unpickle UDFs, from any cwd
+        .config("spark.executorEnv.PYTHONPATH", root)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     for k, v in (extra_conf or {}).items():

@@ -5,7 +5,8 @@ Reference parity map (SURVEY.md §2.2): the reference writes Spark output to
 loads Redshift via staged ``COPY`` + transactional DELETE/INSERT merge SQL
 (``rs_client.py:68-148,242-337``). Here writes go direct to the target path
 (cluster-safe committers) and the three merge strategies run *in Spark* as
-DataFrame algebra with an atomic directory swap.
+DataFrame algebra committed by a rename-aside directory swap
+(``writers.swap_dir``).
 """
 
 from pyveb_spark.sinks.merge import ParquetMergeSink, upsert_frames

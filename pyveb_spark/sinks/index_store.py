@@ -127,9 +127,10 @@ def _read_manifest(spark: SparkSession, path: str) -> dict:
     """Manifest dict, ``{}`` when the path is ABSENT (a pre-manifest
     artifact). A path that exists but fails to read propagates — see
     ``load_lsh_index``."""
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
+    from pyveb_spark.sinks.writers import _hadoop_fs
+
+    fs, HPath = _hadoop_fs(spark, path)
+    if not fs.exists(HPath(path)):
         return {}
     row = spark.read.parquet(path).first()
     return {} if row is None else dict(row.asDict())
@@ -198,28 +199,14 @@ def save_ivf_index(
     _write_manifest(spark, os.path.join(path, _IVF_MANIFEST), manifest)
 
 
-def _raise_if_crashed_rebuild(spark: SparkSession, path: str) -> None:
-    """Detect an IVF rebuild that died inside its directory swap: the
-    index path has no postings, but the rebuild's stage (complete new
-    artifact) or aside copy (complete previous artifact) exists."""
-    HPath = spark._jvm.org.apache.hadoop.fs.Path
-    fs = HPath(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(HPath(os.path.join(path, _IVF_POSTINGS))):
-        return
-    stage = path.rstrip("/") + "__rebuild_stage"
-    aside = path.rstrip("/") + "__rebuild_old"
-    has_stage, has_aside = fs.exists(HPath(stage)), fs.exists(HPath(aside))
-    if has_stage or has_aside:
-        raise RuntimeError(
-            f"IVF index {path!r} has no postings but a rebuild artifact "
-            f"exists ({'stage' if has_stage else ''}"
-            f"{'+' if has_stage and has_aside else ''}"
-            f"{'aside' if has_aside else ''}) — a rebuild_ivf_index "
-            "crashed inside the directory swap. Both datasets are "
-            "complete: recover the NEW artifact by renaming "
-            f"{stage!r} to {path!r}, or the previous one by renaming "
-            f"{aside!r} to {path!r}."
-        )
+def _raise_if_ivf_swap_crashed(spark: SparkSession, path: str) -> None:
+    """Report a crashed ``swap_dir`` into an IVF index: of the whole index
+    (``rebuild_ivf_index``) or of its postings (``compact_files``)."""
+    from pyveb_spark.sinks.writers import raise_if_swap_crashed
+
+    postings = os.path.join(path, _IVF_POSTINGS)
+    raise_if_swap_crashed(spark, path.rstrip("/") + "__rebuild_stage", path)
+    raise_if_swap_crashed(spark, postings + "__compact_stage", postings)
 
 
 def load_ivf_index(
@@ -234,7 +221,7 @@ def load_ivf_index(
     by construction. ``with_meta=True`` also returns the build manifest
     (``{}`` for a pre-manifest artifact) — pass it to
     ``ivf_search(meta=...)`` so a dim/list-count drift fails loudly."""
-    _raise_if_crashed_rebuild(spark, path)
+    _raise_if_ivf_swap_crashed(spark, path)
     postings = spark.read.parquet(os.path.join(path, _IVF_POSTINGS))
     postings = postings.withColumn(
         list_col, F.col(list_col).cast("int")
@@ -280,8 +267,8 @@ def compact_ivf_postings(
     in the grown lists' partition directories, and after N batches a
     probe pays N file opens per pruned list. This rewrites the postings
     layout via ``layout.compact_files`` with ``partition_cols`` set to
-    the list id — one right-sized file per list partition, directory
-    swapped atomically — so the ``PartitionFilters`` pruning property is
+    the list id — one right-sized file per list partition, committed by
+    ``writers.swap_dir`` — so the ``PartitionFilters`` pruning property is
     untouched (pinned by test: search identical, file count drops).
     Centroids are k×dim and never fragment; they are left alone."""
     from pyveb_spark.operators.layout import compact_files
@@ -310,51 +297,27 @@ def maybe_compact_ivf_postings(
 
     100 TB note: the trigger runs off the ingest path's critical
     section — appends land first, the rewrite happens after the batch
-    commits — and the rewrite itself is per-partition with an atomic
-    directory swap (``compact_ivf_postings``), so probes never see a
-    half-compacted list."""
-    from pyveb_spark.operators.layout import _local_fs_path
+    commits — and the rewrite itself is per-partition and committed by
+    ``writers.swap_dir`` (``compact_ivf_postings``), so probes never see
+    a half-compacted list."""
+    from collections import Counter
+
+    from pyveb_spark.operators.layout import _parquet_files
+    from pyveb_spark.sinks.writers import _hadoop_fs
 
     root = os.path.join(path, _IVF_POSTINGS)
-    counts: dict[str, int] = {}
-    local_root = _local_fs_path(root)
-    if local_root is not None:
-        # local-FS fast path (r12): the Py4J listing below costs ~4 JVM
-        # roundtrips PER FILE (~0.5-1 s per check on a few dozen files)
-        # while the check itself runs once per micro-batch; os.walk is
-        # sub-millisecond. Production object-store/HDFS paths take the
-        # Hadoop listing branch unchanged.
-        if not os.path.isdir(local_root):
-            raise ValueError(
-                f"IVF postings directory {root!r} does not exist — "
-                "nothing to compact; seed the index with save_ivf_index "
-                "(or check the index path) before running the "
-                "compaction trigger"
-            )
-        for dirpath, _dirs, files in os.walk(local_root):
-            n = sum(1 for f in files if f.endswith(".parquet"))
-            if n:
-                part = os.path.basename(dirpath)
-                counts[part] = counts.get(part, 0) + n
-    else:
-        HPath = spark._jvm.org.apache.hadoop.fs.Path
-        fs = HPath(root).getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(HPath(root)):
-            # a raw Py4J FileNotFoundException here is the module's one
-            # non-actionable failure mode — name the missing path instead
-            raise ValueError(
-                f"IVF postings directory {root!r} does not exist — "
-                "nothing to compact; seed the index with save_ivf_index "
-                "(or check the index path) before running the "
-                "compaction trigger"
-            )
-        it = fs.listFiles(HPath(root), True)
-        while it.hasNext():
-            f = it.next()
-            if not f.getPath().getName().endswith(".parquet"):
-                continue
-            part = f.getPath().getParent().getName()
-            counts[part] = counts.get(part, 0) + 1
+    fs, HPath = _hadoop_fs(spark, root)
+    if not fs.exists(HPath(root)):
+        # a raw Py4J FileNotFoundException from the listing would be the
+        # module's one non-actionable failure — name the missing path
+        _raise_if_ivf_swap_crashed(spark, path)
+        raise ValueError(
+            f"IVF postings directory {root!r} does not exist — "
+            "nothing to compact; seed the index with save_ivf_index "
+            "(or check the index path) before running the "
+            "compaction trigger"
+        )
+    counts = Counter(part for part, _ in _parquet_files(spark, root))
     if not counts or max(counts.values()) <= int(max_files_per_list):
         return False
     compact_ivf_postings(
@@ -382,8 +345,7 @@ def rebuild_ivf_index(
     regions of the drifted distribution pile into a few lists and probe
     cost per pruned list grows unevenly. This retrains the coarse
     quantizer on the GROWN population, re-assigns every posting, and
-    swaps the artifact version atomically — the acting half of the
-    audit.
+    swaps in the new artifact version — the acting half of the audit.
 
     ``source`` is the full current population ``(id, vector)`` — for a
     flat index the postings themselves work; for an encoded index
@@ -399,16 +361,11 @@ def rebuild_ivf_index(
     to cover the postings ids aborts loudly before any swap (silent
     row loss is the failure mode).
 
-    Swap discipline (the shared rename-aside contract): the complete
-    new artifact — postings partitioned by the new assignment,
-    centroids, manifest (old extras preserved, geometry keys
-    refreshed), plus COPIES of any sidecar artifacts living in the
-    index dir (e.g. the q218 admission Bloom — id-set-dependent, and
-    the id set is preserved) — is staged at ``<path>__rebuild_stage``
-    while the original serves; then original → ``<path>__rebuild_old``,
-    stage → ``<path>``, aside deleted last. Both datasets exist in
-    full through every crash window; ``load_ivf_index`` detects the
-    mid-swap state and names the recovery.
+    The new artifact — postings, centroids, manifest (old extras kept,
+    geometry keys refreshed) and COPIES of any sidecars in the index
+    dir (e.g. the q218 admission Bloom; the id set is preserved) — is
+    staged at ``<path>__rebuild_stage``, then committed by
+    ``writers.swap_dir``.
 
     Returns the balance report: per-list max/mean ratio (empty lists
     count as zero) before and after — the number q211 monitors, so the
@@ -424,24 +381,20 @@ def rebuild_ivf_index(
         kmeans_fit,
         nearest_centroid,
     )
+    from pyveb_spark.sinks.writers import _hadoop_fs, swap_dir
 
     postings_dir = os.path.join(path, _IVF_POSTINGS)
-    HPath = spark._jvm.org.apache.hadoop.fs.Path
-    conf = spark._jsc.hadoopConfiguration()
-    fs = HPath(path).getFileSystem(conf)
+    fs, HPath = _hadoop_fs(spark, path)
     if not fs.exists(HPath(postings_dir)):
-        _raise_if_crashed_rebuild(spark, path)
+        _raise_if_ivf_swap_crashed(spark, path)
         raise ValueError(
             f"IVF postings directory {postings_dir!r} does not exist — "
             "seed the index with save_ivf_index before rebuilding"
         )
     stage = path.rstrip("/") + "__rebuild_stage"
-    aside = path.rstrip("/") + "__rebuild_old"
-    # leftovers: a stage from a run that failed before its swap (the
-    # live original is authoritative — redo), an aside from a completed
-    # swap that crashed before final cleanup (stale — drop)
+    # a stage beside the live index is left by a rebuild that failed
+    # before its swap; the live original is authoritative — redo
     fs.delete(HPath(stage), True)
-    fs.delete(HPath(aside), True)
 
     old_postings, _, old_meta = load_ivf_index(
         spark, path, list_col=list_col, with_meta=True
@@ -504,12 +457,11 @@ def rebuild_ivf_index(
             continue
         FileUtil.copy(
             fs, st.getPath(), fs,
-            HPath(os.path.join(stage, name)), False, conf,
+            HPath(os.path.join(stage, name)), False,
+            spark._jsc.hadoopConfiguration(),
         )
-    # rename-aside swap: both datasets exist through every window
-    fs.rename(HPath(path), HPath(aside))
-    fs.rename(HPath(stage), HPath(path))
-    fs.delete(HPath(aside), True)
+    with swap_dir(spark, stage, path):
+        pass
 
     def _imbalance(counts: dict[int, int]) -> float:
         total = sum(counts.values())
@@ -778,26 +730,14 @@ def compact_bucketed_index(spark: SparkSession, table: str) -> None:
     property survives by construction (pinned by test) and nothing in
     the rewrite is tier-specific.
 
-    Crash-safety (the ``compact_files`` commit-then-swap discipline):
-    the replacement is FULLY written as a bucketed staging table
-    ``{table}__compact_stage`` while the original stays live and
-    untouched — a failure anywhere in the expensive write leaves the
-    original index serving and the partial stage dropped. Only after
-    the stage commits does the metadata-only swap run: managed tables
-    DROP + ``ALTER TABLE ... RENAME``; external tables a RENAME-ASIDE
-    directory swap at the original location (original →
-    ``<loc>__compact_old``, stage → ``<loc>``, ``SET LOCATION`` +
-    RENAME, then delete the aside copy — the table's path is part of
-    its identity, so the replacement is a drop-in, pinned by test).
-    If the process dies inside that metadata window BOTH datasets
-    still exist in full — the compacted data under the stage
-    name/location, the original under the aside dir — and the next
-    compaction call (or any tier's loader) fails loudly with the
-    recovery steps (rename the stage back; external tables may need
-    ``SET LOCATION`` first) instead of silently rebuilding. The
-    directory renames are metadata-only on HDFS/local filesystems;
-    object stores copy on rename — use managed tables there."""
-    from pyveb_spark.sinks.writers import write_bucketed_table
+    Crash-safety: the replacement is FULLY written as the bucketed
+    table ``{table}__compact_stage`` while the original keeps serving;
+    a failed write drops the partial stage. Then managed tables DROP +
+    RENAME; external tables run ``SET LOCATION`` + RENAME inside a
+    ``writers.swap_dir`` from ``<loc>__compact_stage`` into ``<loc>``
+    (the path is part of the table's identity, pinned by test). A crash
+    in the catalog window is reported by ``_raise_if_crashed_swap``."""
+    from pyveb_spark.sinks.writers import swap_dir, write_bucketed_table
 
     stage = f"{table}__compact_stage"
     if not spark.catalog.tableExists(table):
@@ -848,34 +788,15 @@ def compact_bucketed_index(spark: SparkSession, table: str) -> None:
     # the swap so a crash inside the window loses no metadata either)
     if build_meta:
         _set_table_meta(spark, stage, build_meta)
-    # 2) metadata-only swap; the compacted data is durable from here on.
-    #    External tables swap by RENAME-ASIDE, never delete-then-rename:
-    #    the original moves to <loc>__compact_old, the stage moves into
-    #    <loc>, and only after the catalog swap completes is the aside
-    #    copy deleted — so the pre-compaction data survives EVERY crash
-    #    window (a delete-first swap destroys it before the replacement
-    #    is in place). Renames are metadata-only on HDFS/local
-    #    filesystems; on object stores a "rename" is a long copy —
-    #    prefer managed tables (catalog RENAME, no directory moves)
-    #    there.
+    # 2) swap; the compacted data is durable from here on (swap_dir
+    #    keeps the original at <loc>__compact_old until the body ends)
     spark.sql(f"DROP TABLE IF EXISTS {table}")
-    old_loc = None
     if is_external:
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        HPath = jvm.org.apache.hadoop.fs.Path
-        fs = HPath(loc).getFileSystem(conf)
-        old_loc = loc.rstrip("/") + "__compact_old"
-        # leftover aside dir from a prior swap that crashed before its
-        # final cleanup — the live table has served from loc since, so
-        # the aside copy is stale and safe to drop
-        fs.delete(HPath(old_loc), True)
-        fs.rename(HPath(loc), HPath(old_loc))
-        fs.rename(HPath(stage_loc), HPath(loc))
-        spark.sql(f"ALTER TABLE {stage} SET LOCATION '{loc}'")
-    spark.sql(f"ALTER TABLE {stage} RENAME TO {table}")
-    if old_loc is not None:
-        fs.delete(HPath(old_loc), True)
+        with swap_dir(spark, stage_loc, loc):
+            spark.sql(f"ALTER TABLE {stage} SET LOCATION '{loc}'")
+            spark.sql(f"ALTER TABLE {stage} RENAME TO {table}")
+    else:
+        spark.sql(f"ALTER TABLE {stage} RENAME TO {table}")
 
 
 def compact_minhash_index(

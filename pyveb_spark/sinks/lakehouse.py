@@ -1,7 +1,7 @@
 """Lakehouse ``MERGE INTO`` upgrade path for the merge sinks.
 
 ``ParquetMergeSink`` (merge.py) implements upsert as anti-join + union +
-atomic directory swap — correct single-writer semantics on plain Parquet.
+rename-aside directory swap — correct single-writer semantics on Parquet.
 On a table format with a transaction log (Delta, Iceberg) the same merge
 algebra should instead compile to ONE ``MERGE INTO`` statement: the log
 gives real atomicity, file-level pruning on the join keys, and no
@@ -230,7 +230,7 @@ def execute_merge_spec(
     - ``WHEN MATCHED [AND any-compare-col-differs] THEN UPDATE SET *``
       replaces the full target row,
     - ``WHEN NOT MATCHED THEN INSERT *`` appends,
-    - the new state lands via the sink's atomic directory swap (the
+    - the new state lands via the sink's ``swap_dir`` commit (the
       single-writer stand-in for the transaction log).
 
     Returns ``{"updated": n, "matched_skipped": n, "inserted": n}`` so
@@ -270,9 +270,7 @@ def execute_merge_spec(
     else:
         n_updated = n_matched
         new_state = upsert_frames(target, stage, keys)
-    # materialize before the swap destroys the plan's own input files
-    # (the ParquetMergeSink.upsert discipline)
-    sink.overwrite(new_state.localCheckpoint(eager=True))
+    sink.overwrite(new_state)
     return {
         "updated": n_updated,
         "matched_skipped": n_matched - n_updated,

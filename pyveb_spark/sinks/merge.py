@@ -9,13 +9,13 @@ the same algebra runs in Spark:
 
     upsert(target, stage, keys) = stage ∪ (target ⟕anti stage on keys)
 
-and lands with an atomic directory swap (write new table → swap), replacing
-the reference's UUID-suffixed staging tables (``rs_client.py:119-124``).
+and lands by writing the new table beside the live one and committing it
+with ``writers.swap_dir`` (its docstring states the crash contract),
+replacing the reference's UUID-suffixed staging tables
+(``rs_client.py:119-124``).
 
-Atomicity note (SURVEY §7 Phase 4 risk): plain Parquet directories have no
-transaction log, so the swap (write ``<path>.__tmp__`` → delete old →
-rename) has a small non-atomic window on object stores. Delta/Iceberg are
-the drop-in production upgrade — the merge *algebra* here is exactly what
+Plain Parquet directories have no transaction log. Delta/Iceberg are the
+drop-in production upgrade — the merge *algebra* here is exactly what
 their MERGE INTO compiles to, so callers don't change. That upgrade exists
 as code in ``sinks/lakehouse.py``: ``merge_into_sql(MergeSpec)`` generates
 the statement and ``LakehouseMergeSink`` executes it when
@@ -28,6 +28,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from pyveb_spark.sinks.writers import _hadoop_fs, raise_if_swap_crashed, swap_dir
 
 __all__ = [
     "upsert_frames",
@@ -288,48 +290,44 @@ class ParquetMergeSink:
     """A Parquet-directory table supporting append/overwrite/upsert writes.
 
     ↔ the reference's (stage table + COPY + transactional SQL) loader
-    collapsed into one Spark-native object. Uses the Hadoop FileSystem API
-    for the swap so the same code works on file://, hdfs:// and s3a://.
+    collapsed into one Spark-native object. Overwrite and upsert write the
+    new table to ``<path>__merge_stage`` and commit it with ``swap_dir``;
+    every method first raises if such a commit into ``path`` crashed.
     """
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-
-    # -- helpers ------------------------------------------------------------
-    def _fs(self):
-        jvm = self.spark._jvm
-        conf = self.spark._jsc.hadoopConfiguration()
-        hpath = jvm.org.apache.hadoop.fs.Path(self.path)
-        return hpath.getFileSystem(conf), jvm
+        self._stage = path.rstrip("/") + "__merge_stage"
 
     def exists(self) -> bool:
-        fs, jvm = self._fs()
-        return fs.exists(jvm.org.apache.hadoop.fs.Path(self.path))
+        raise_if_swap_crashed(self.spark, self._stage, self.path)
+        fs, HPath = _hadoop_fs(self.spark, self.path)
+        return fs.exists(HPath(self.path))
 
     def read(self) -> DataFrame:
+        raise_if_swap_crashed(self.spark, self._stage, self.path)
         return self.spark.read.parquet(self.path)
-
-    def _swap_in(self, df: DataFrame) -> None:
-        """Write df to a temp dir then swap it into place (small non-atomic
-        window; see module docstring)."""
-        tmp = self.path.rstrip("/") + ".__tmp__"
-        df.write.mode("overwrite").parquet(tmp)
-        fs, jvm = self._fs()
-        Path = jvm.org.apache.hadoop.fs.Path
-        if fs.exists(Path(self.path)):
-            fs.delete(Path(self.path), True)
-        fs.rename(Path(tmp), Path(self.path))
 
     # -- strategies ---------------------------------------------------------
     def append(self, df: DataFrame) -> None:
         """↔ ``rs_client.append`` (``rs_client.py:150-170``). Native append:
         new files land beside existing ones — no rewrite, no swap."""
+        raise_if_swap_crashed(self.spark, self._stage, self.path)
         df.write.mode("append").parquet(self.path)
 
     def overwrite(self, df: DataFrame) -> None:
         """↔ ``rs_client.full_refresh`` (``rs_client.py:127-148``)."""
-        self._swap_in(df)
+        raise_if_swap_crashed(self.spark, self._stage, self.path)
+        try:
+            df.write.mode("overwrite").parquet(self._stage)
+        except Exception:
+            # a partial stage beside a missing table reads as a crashed swap
+            fs, HPath = _hadoop_fs(self.spark, self._stage)
+            fs.delete(HPath(self._stage), True)
+            raise
+        with swap_dir(self.spark, self._stage, self.path):
+            pass
 
     def upsert(self, df: DataFrame, keys: Sequence[str]) -> None:
         """↔ ``rs_client.upsert`` (``rs_client.py:103-125``). Reads current
@@ -340,13 +338,9 @@ class ParquetMergeSink:
         partitioned targets prefer ``upsert_partitioned`` which rewrites
         only the partitions the stage batch touches.
         """
-        if not self.exists():
-            self._swap_in(df)
-            return
-        # Cache the merge result before the swap destroys its own input
-        # files (the lazy plan would otherwise re-read the deleted dir).
-        merged = upsert_frames(self.read(), df, keys).localCheckpoint(eager=True)
-        self._swap_in(merged)
+        if self.exists():
+            df = upsert_frames(self.read(), df, keys)
+        self.overwrite(df)
 
     def upsert_partitioned(
         self,

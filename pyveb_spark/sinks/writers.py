@@ -13,7 +13,8 @@ straight to the destination; on object stores the committer config in
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Iterator, Sequence
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -29,6 +30,8 @@ __all__ = [
     "write_bucketed_table",
     "with_date_partitions",
     "write_tar_shards",
+    "swap_dir",
+    "raise_if_swap_crashed",
 ]
 
 # reference default: spark_client.py:207,213
@@ -344,3 +347,70 @@ def write_tar_shards(
     return src.mapInPandas(
         _pack, schema="shard string, n_members long, n_bytes long"
     )
+
+
+def _hadoop_fs(spark, path: str):
+    """(FileSystem, Path class) for ``path``: file://, hdfs:// or s3a://."""
+    HPath = spark._jvm.org.apache.hadoop.fs.Path
+    return HPath(path).getFileSystem(spark._jsc.hadoopConfiguration()), HPath
+
+
+def _rename(fs, HPath, src: str, dst: str) -> None:
+    # Hadoop reports most rename failures as False, not as an exception
+    if not fs.rename(HPath(src), HPath(dst)):
+        raise RuntimeError(f"could not rename {src!r} to {dst!r}")
+
+
+def _raise_if_crashed(fs, HPath, live: str, *copies: str) -> None:
+    if fs.exists(HPath(live)):
+        return
+    for copy in copies:
+        if fs.exists(HPath(copy)):
+            raise RuntimeError(
+                f"{live!r} is missing but {copy!r} exists: a swap_dir "
+                "commit died between its renames. Recover with one "
+                f"rename: {copy!r} -> {live!r}"
+            )
+
+
+def raise_if_swap_crashed(spark, stage: str, live: str) -> None:
+    """Raise if a :func:`swap_dir` from ``stage`` into ``live`` died
+    midway (``live`` missing, stage or aside present), naming the rename
+    that recovers it, so readers never take a crashed commit for "no
+    table"."""
+    fs, HPath = _hadoop_fs(spark, live)
+    _raise_if_crashed(
+        fs, HPath, live, stage, stage.removesuffix("_stage") + "_old"
+    )
+
+
+@contextmanager
+def swap_dir(spark, stage: str, live: str) -> Iterator[None]:
+    """Install the complete directory ``stage`` (``<live>__<tag>_stage``)
+    as ``live`` by rename-aside. The engine's one directory commit: the
+    merge sink, ``compact_files``, ``rebuild_ivf_index`` and the external
+    ``compact_bucketed_index`` all use it.
+
+    - On entry: if ``live`` is missing while the aside
+      (``<live>__<tag>_old``) exists, an earlier swap died between its
+      renames; raise with the rename that recovers it. Otherwise drop a
+      stale aside, rename ``live`` → aside (when ``live`` exists), then
+      ``stage`` → ``live``.
+    - The ``with`` body runs with the new directory in place (catalog
+      updates that must follow it).
+    - On clean exit the aside is deleted. On an exception, in a rename
+      or in the body, both copies stay on disk and it propagates.
+
+    So the data survives a crash at every step, and
+    :func:`raise_if_swap_crashed` names the recovery to readers. Renames
+    are metadata-only on local filesystems and HDFS; object stores copy
+    on rename, so there the crash windows last as long as the copy."""
+    fs, HPath = _hadoop_fs(spark, live)
+    aside = stage.removesuffix("_stage") + "_old"
+    _raise_if_crashed(fs, HPath, live, aside)
+    fs.delete(HPath(aside), True)
+    if fs.exists(HPath(live)):
+        _rename(fs, HPath, live, aside)
+    _rename(fs, HPath, stage, live)
+    yield
+    fs.delete(HPath(aside), True)

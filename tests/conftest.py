@@ -35,7 +35,6 @@ _SLOW_FILES = {
     "test_llm_pipeline_e2e.py",
     # Hypothesis property suites (many examples per test)
     "test_properties.py",
-    "test_bt_properties.py",
     # numeric ANN/k-means reference comparisons (matmul-heavy)
     "test_layout_kmeans.py",
     # Structured Streaming replays / embedded Derby (also carry their

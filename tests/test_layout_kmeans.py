@@ -391,7 +391,8 @@ def test_compact_files_reduces_file_count_preserving_data(spark, tmp_path):
     got = spark.read.parquet(path)
     assert got.count() == 10_000
     assert got.agg(F.sum("v")).first()[0] == 2 * sum(range(10_000))
-    assert not os.path.exists(path + ".__compact__")
+    assert not os.path.exists(path + "__compact_stage")
+    assert not os.path.exists(path + "__compact_old")
 
 
 def test_compact_files_partitioned_mode(spark, tmp_path):

@@ -193,3 +193,222 @@ def test_snapshot_diff_roundtrip_law(spark):
     assert sorted(map(tuple, applied.collect())) == sorted(
         map(tuple, new.collect())
     )
+
+
+# ---------------------------------------------------------------------------
+# A crash inside the directory commit (writers.swap_dir), for every caller:
+# the swap dies between its two renames. No row may be lost, the caller's
+# next read/upsert/load must name the recovery rename, and doing that
+# rename must restore service.
+# ---------------------------------------------------------------------------
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def _dir_swap(live, stage, rows, **case):
+    """A case whose recovery is the directory rename stage -> live."""
+    return dict(
+        live=live,
+        stage=stage,
+        aside=stage.removesuffix("_stage") + "_old",
+        rows=rows,
+        hint=f"{stage!r} -> {live!r}",
+        recover=lambda: os.rename(stage, live),
+        read=lambda: rows(live),
+        **case,
+    )
+
+
+def _merge_sink_case(spark, tmp_path, mode):
+    sink = ParquetMergeSink(spark, str(tmp_path / "tbl"))
+    sink.overwrite(
+        spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
+    )
+    batch = spark.createDataFrame([(2, "B"), (3, "C")], "k int, v string")
+    commit = {
+        "overwrite": lambda: sink.overwrite(batch),
+        "upsert": lambda: sink.upsert(batch, keys=["k"]),
+    }[mode]
+    return _dir_swap(
+        sink.path,
+        sink.path + "__merge_stage",
+        lambda d: _rows(spark.read.parquet(d)),
+        commit=commit,
+        after={
+            "overwrite": [(2, "B"), (3, "C")],
+            "upsert": [(1, "a"), (2, "B"), (3, "C")],
+        }[mode],
+        # an upsert must not read the crashed table as missing and
+        # replace it with the batch
+        next_ops=[
+            sink.read,
+            sink.exists,
+            lambda: sink.upsert(batch, keys=["k"]),
+            lambda: sink.append(batch),
+            lambda: sink.overwrite(batch),
+        ],
+    )
+
+
+def _ivf(spark, tmp_path, sf_dir):
+    from pyveb_spark.operators.similarity import ivf_index
+    from pyveb_spark.sinks.index_store import save_ivf_index
+    from pyveb_spark.sources.readers import read_table
+
+    e = read_table(spark, sf_dir, "embeddings").where("vec_id < 120")
+    path = str(tmp_path / "ivf")
+    indexed, cents = ivf_index(e, n_lists=4)
+    save_ivf_index(indexed, cents, path)
+    return e, path
+
+
+def _compact_postings_case(spark, tmp_path, sf_dir):
+    from pyveb_spark.sinks.index_store import (
+        compact_ivf_postings,
+        load_ivf_index,
+        maybe_compact_ivf_postings,
+    )
+
+    _, path = _ivf(spark, tmp_path, sf_dir)
+    postings = os.path.join(path, "postings")
+
+    def ids(d):
+        return _rows(spark.read.parquet(d).select("vec_id"))
+
+    return _dir_swap(
+        postings,
+        postings + "__compact_stage",
+        ids,
+        commit=lambda: compact_ivf_postings(spark, path),
+        after=ids(postings),
+        next_ops=[
+            lambda: load_ivf_index(spark, path),
+            lambda: compact_ivf_postings(spark, path),
+            lambda: maybe_compact_ivf_postings(spark, path),
+        ],
+    )
+
+
+def _rebuild_case(spark, tmp_path, sf_dir):
+    from pyveb_spark.sinks.index_store import (
+        load_ivf_index,
+        rebuild_ivf_index,
+    )
+
+    e, path = _ivf(spark, tmp_path, sf_dir)
+
+    def ids(d):
+        return _rows(load_ivf_index(spark, d)[0].select("vec_id"))
+
+    return _dir_swap(
+        path,
+        path + "__rebuild_stage",
+        ids,
+        commit=lambda: rebuild_ivf_index(spark, path, e),
+        after=ids(path),
+        next_ops=[
+            lambda: load_ivf_index(spark, path),
+            lambda: rebuild_ivf_index(spark, path, e),
+        ],
+    )
+
+
+def _bucketed_case(spark, tmp_path):
+    import uuid
+
+    from pyveb_spark.session import local_df
+    from pyveb_spark.sinks.index_store import (
+        compact_bucketed_index,
+        load_bm25_index,
+    )
+    from pyveb_spark.sinks.writers import write_bucketed_table
+
+    table = f"t_swapcrash_{uuid.uuid4().hex[:8]}"
+    loc = str(tmp_path / "postings")
+    rows = [("hash", i, i % 3) for i in range(40)]
+    write_bucketed_table(
+        local_df(spark, rows, "token string, doc_id int, tf bigint")
+        .repartition(4),
+        table,
+        ["token"],
+        num_buckets=4,
+        path=loc,
+    )
+    stage_table = f"{table}__compact_stage"
+    recovery = f"ALTER TABLE {stage_table} RENAME TO {table}"
+    return dict(
+        live=loc,
+        stage=loc + "__compact_stage",
+        aside=loc + "__compact_old",
+        rows=lambda d: _rows(spark.read.parquet(d)),
+        hint=recovery,
+        recover=lambda: spark.sql(recovery),
+        read=lambda: _rows(spark.table(table)),
+        commit=lambda: compact_bucketed_index(spark, table),
+        after=sorted(rows),
+        next_ops=[
+            lambda: compact_bucketed_index(spark, table),
+            lambda: load_bm25_index(spark, table, str(tmp_path / "dl")),
+        ],
+        cleanup=lambda: [
+            spark.sql(f"DROP TABLE IF EXISTS {t}") for t in (table, stage_table)
+        ],
+    )
+
+
+@pytest.mark.parametrize(
+    "caller",
+    [
+        "merge_overwrite",
+        "merge_upsert",
+        "compact_ivf_postings",
+        "rebuild_ivf_index",
+        "compact_bucketed_index_external",
+    ],
+)
+def test_crash_between_swap_renames_loses_nothing(
+    spark, sf_dir, tmp_path, monkeypatch, caller
+):
+    from pyveb_spark.sinks import writers
+
+    case = {
+        "merge_overwrite": lambda: _merge_sink_case(spark, tmp_path, "overwrite"),
+        "merge_upsert": lambda: _merge_sink_case(spark, tmp_path, "upsert"),
+        "compact_ivf_postings": lambda: _compact_postings_case(
+            spark, tmp_path, sf_dir
+        ),
+        "rebuild_ivf_index": lambda: _rebuild_case(spark, tmp_path, sf_dir),
+        "compact_bucketed_index_external": lambda: _bucketed_case(
+            spark, tmp_path
+        ),
+    }[caller]()
+    try:
+        before = case["rows"](case["live"])
+        real_rename = writers._rename
+
+        def crashing_rename(fs, HPath, src, dst):
+            if src.endswith("_stage"):  # the second rename: stage -> live
+                raise RuntimeError("injected crash between the renames")
+            real_rename(fs, HPath, src, dst)
+
+        monkeypatch.setattr(writers, "_rename", crashing_rename)
+        with pytest.raises(RuntimeError, match="injected"):
+            case["commit"]()
+        monkeypatch.setattr(writers, "_rename", real_rename)
+
+        # no row lost: the previous data sits aside, the commit in the stage
+        assert not os.path.exists(case["live"])
+        assert case["rows"](case["aside"]) == before
+        assert case["rows"](case["stage"]) == case["after"]
+        # the next operation refuses, naming the one recovery rename
+        for op in case["next_ops"]:
+            with pytest.raises(RuntimeError) as err:
+                op()
+            assert case["hint"] in str(err.value)
+        assert case["rows"](case["stage"]) == case["after"]
+        case["recover"]()
+        assert case["read"]() == case["after"]
+    finally:
+        case.get("cleanup", lambda: None)()
