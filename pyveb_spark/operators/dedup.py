@@ -1168,12 +1168,11 @@ def simhash_index(
     serving form of ``simhash_pairs``' pigeonhole blocking: one row per
     (doc, band) carrying ``(<id>, simhash, __band, __h)`` where ``__h``
     is the band's ``bits/bands``-wide fingerprint chunk. Persist it
-    bucketed on ``(__band, __h)`` (``index_store.save_simhash_index`` —
-    the same zero-index-side-shuffle join layout as the MinHash index;
-    the column convention is shared deliberately so the bucketed-table
-    lifecycle machinery, including ``compact_minhash_index``, applies
-    verbatim). Pure scan-stage: fingerprint fold + one posexplode, no
-    shuffle at build.
+    bucketed on ``(__band, __h)`` (``index_store.save_bucketed_index``
+    — the same zero-index-side-shuffle join layout as the MinHash
+    index, with the same column convention, so the whole bucketed-index
+    lifecycle applies). Pure scan-stage: fingerprint fold + one
+    posexplode, no shuffle at build.
 
     Unlike MinHash banding, this blocking is LOSSLESS for
     ``max_hamming < bands`` (any pair within that many bit flips agrees
@@ -1221,7 +1220,7 @@ def simhash_lookup(
     ``(<id>_new, <id>_corpus, hamming)``.
 
     ``meta`` — the index's persisted build manifest
-    (``load_simhash_index(..., with_meta=True)``) — makes the probe
+    (``load_bucketed_index(..., with_meta=True)``) — makes the probe
     band with the index's OWN ``bands``/``bits``: chunks cut at
     different widths join into unrelated buckets and silently return
     nothing. A conflicting explicit argument raises."""

@@ -1633,10 +1633,9 @@ def q219_simhash_persisted_admission(
     against it — wave-1 (doc_id 100-199) is checked via
     ``simhash_lookup`` (probe postings equi-join the bucketed index,
     zero index-side shuffle; exact ``bit_count(xor)`` verify), its
-    non-matches append into the index, ``compact_minhash_index``
-    rewrites the grown table band-hash-aligned (nothing in it is
-    MinHash-specific — shared column convention, crash-safe staged
-    swap, manifest preserved), and wave-2 (doc_id < 100) probes the
+    non-matches append into the index, ``compact_bucketed_index``
+    rewrites the grown table band-hash-aligned (the shared crash-safe
+    staged swap, manifest preserved), and wave-2 (doc_id < 100) probes the
     compacted result through the reloaded manifest. Unlike MinHash
     banding, SimHash's pigeonhole blocking is LOSSLESS at
     max_hamming < bands, so this index needs no skew blacklist: the
@@ -1675,10 +1674,10 @@ def _q219_frame(
     """q219's pre-checkpoint frame over a caller-owned table + dir."""
     from pyveb_spark.operators.dedup import simhash_index, simhash_lookup
     from pyveb_spark.sinks.index_store import (
-        append_simhash_index,
-        compact_minhash_index,
-        load_simhash_index,
-        save_simhash_index,
+        append_bucketed_index,
+        compact_bucketed_index,
+        load_bucketed_index,
+        save_bucketed_index,
     )
 
     d = read_table(spark, sf_dir, "documents")
@@ -1686,13 +1685,14 @@ def _q219_frame(
     wave1 = d.where((F.col("doc_id") >= 100) & (F.col("doc_id") < 200))
     wave2 = d.where(F.col("doc_id") < 100)
 
-    save_simhash_index(
+    save_bucketed_index(
         simhash_index(corpus0, "doc_id", "text"),
         table,
+        ["__band", "__h"],
         path=f"{tmp}/postings",
         meta={"bands": 4, "bits": 60},
     )
-    idx, idx_meta = load_simhash_index(spark, table, with_meta=True)
+    idx, idx_meta = load_bucketed_index(spark, table, with_meta=True)
     w1_matched = (
         simhash_lookup(
             wave1, idx, "doc_id", "text", max_hamming=3, meta=idx_meta
@@ -1701,9 +1701,9 @@ def _q219_frame(
         .distinct()
     )
     admitted1 = wave1.join(w1_matched, "doc_id", "left_anti")
-    append_simhash_index(simhash_index(admitted1, "doc_id", "text"), table)
-    compact_minhash_index(spark, table)
-    idx2, meta2 = load_simhash_index(spark, table, with_meta=True)
+    append_bucketed_index(simhash_index(admitted1, "doc_id", "text"), table)
+    compact_bucketed_index(spark, table)
+    idx2, meta2 = load_bucketed_index(spark, table, with_meta=True)
     matches2 = simhash_lookup(
         wave2, idx2, "doc_id", "text", max_hamming=3, meta=meta2
     )

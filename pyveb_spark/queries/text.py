@@ -2313,7 +2313,7 @@ def _q221_frame(
     from pyveb_spark.sinks.index_store import (
         append_ngram_index,
         compact_bucketed_index,
-        load_ngram_index,
+        load_bucketed_index,
         save_ngram_index,
     )
 
@@ -2327,7 +2327,7 @@ def _q221_frame(
     )
     append_ngram_index(d.where(F.col("doc_id") < 100), table, n)
     compact_bucketed_index(spark, table)
-    idx, meta = load_ngram_index(spark, table, with_meta=True)
+    idx, meta = load_bucketed_index(spark, table, with_meta=True)
     idx_hits = phrase_search(None, phrase, index=idx, meta=meta)
     scan_hits = d.where(
         F.contains(

@@ -1,35 +1,34 @@
-"""Durable ANN / dedup index persistence (round-9 tranche).
+"""Durable index artifacts: build once, reload in any later session.
+The layout is the index: each artifact is laid out on the column its
+lookup prunes by, so reading it back costs a metadata listing, not a
+rebuild.
 
-The warm-index property (q45/q165/q180: admission cost scales with the
-BATCH because the corpus-side index is already built) previously lived
-only as a session cache. These helpers make it durable: each index type
-is saved as plain parquet (or a bucketed catalog table) laid out so the
-lookup's pruning column IS the physical layout key, and reloaded with
-that layout intact — a warm index that survives sessions, the missing
-piece between "build the index once" and "run admission forever".
+Every artifact belongs to one of two families:
 
-- **IVF** (``similarity.ivf_index``): postings PARTITIONED BY
-  ``ivf_list`` → an ``ivf_search`` probe over the reloaded frame is
-  partition pruning at the scan (``PartitionFilters``, plan-gated) —
-  reading ~nprobe/n_lists of the corpus bytes, exactly the docstring
-  promise the in-session form could only simulate. Centroids are a
-  k×dim side table, re-collected to the driver on load (the coarse
-  quantizer is driver-resident by design in every IVF implementation).
-- **sign-LSH** (``similarity.lsh_bucket``): (id, vector, bucket) rows
-  partitioned by the bucket id (≤ 2**n_planes directories); a reloaded
-  index passes straight into ``lsh_cosine_lookup(index=...)``.
-- **MinHash** (``dedup.minhash_lsh_index``): postings saved as a
-  BUCKETED catalog table on ``(__band, __h)``
-  (``writers.write_bucketed_table`` — the zero-index-side-shuffle join
-  path its docstring names), with the ``minhash_hot_buckets`` skew
-  blacklist persisted NEXT TO it so admission never recomputes it
-  (the q45 production shape, now durable).
+- **Parquet directory.** IVF postings partitioned by ``ivf_list`` (a
+  probe is partition pruning at the scan) with a k×dim centroid table
+  beside them; sign-LSH rows partitioned by bucket id; the id-Bloom word
+  table; PQ codebooks; SQ8 stats. The build manifest is a one-row typed
+  parquet table at ``<path>/manifest`` (IVF) or ``<path>_meta`` (all
+  others).
+- **Bucketed catalog table.** MinHash and SimHash banded postings on
+  ``(__band, __h)``, BM25 token postings on ``token``, n-gram phrase
+  postings on ``__h``. They share one lifecycle:
+  ``save_bucketed_index`` → ``load_bucketed_index`` →
+  ``append_bucketed_index`` → ``compact_bucketed_index``. The save fixes
+  the bucket spec; appends and compaction read it back from the catalog,
+  so the zero-index-side-shuffle join survives every step. The build
+  manifest lives in ``pyveb.index.*`` TBLPROPERTIES and travels with the
+  table. The tier functions add only their own step: the MinHash skew
+  list, the BM25 doclens and collection statistics, the n-gram build.
 
-Reference parity: the reference stages corpus artifacts to files between
-pipeline phases (``src/pyveb/s3_client.py:188-231`` upload/download
-staging);
-this is the Spark-first equivalent for index artifacts — the LAYOUT is
-the index, and reading it back costs a metadata listing, not a rebuild.
+Loaders return the manifest with ``with_meta=True``; search and lookup
+helpers validate against it (``check_index_meta``).
+
+Reference parity: the reference stages corpus artifacts to files
+between pipeline phases through one upload/download path
+(``src/pyveb/s3_client.py:188-231``); this is the Spark-first
+equivalent for index artifacts.
 """
 
 from __future__ import annotations
@@ -49,14 +48,14 @@ __all__ = [
     "rebuild_ivf_index",
     "save_lsh_index",
     "load_lsh_index",
+    "save_bucketed_index",
+    "load_bucketed_index",
+    "append_bucketed_index",
+    "compact_bucketed_index",
     "save_minhash_index",
     "load_minhash_index",
     "append_minhash_index",
-    "compact_bucketed_index",
     "compact_minhash_index",
-    "save_simhash_index",
-    "load_simhash_index",
-    "append_simhash_index",
     "save_id_bloom",
     "load_id_bloom",
     "update_id_bloom",
@@ -66,7 +65,6 @@ __all__ = [
     "append_bm25_index",
     "refresh_bm25_stats",
     "save_ngram_index",
-    "load_ngram_index",
     "append_ngram_index",
     "save_pq_codebooks",
     "load_pq_codebooks",
@@ -78,9 +76,13 @@ __all__ = [
 _IVF_POSTINGS = "postings"
 _IVF_CENTROIDS = "centroids"
 _IVF_MANIFEST = "manifest"
-_MH_HOT = "hot_buckets"
-# catalog-property namespace for the MinHash table's build manifest
+_IVF_LIST = "ivf_list"  # the partition column every IVF search probes
+_LSH_BUCKET = "__b"  # the lsh_bucket column a persisted LSH index keeps
+# catalog-property namespace for a bucketed table's build manifest
 _MH_PROP = "pyveb.index."
+# bucket count a bucketed index is saved with; appends and compaction
+# read the count back from the catalog
+_NUM_BUCKETS = 8
 
 
 # ---------------------------------------------------------------------------
@@ -163,7 +165,6 @@ def save_ivf_index(
     indexed: DataFrame,
     centroids: list[tuple[int, list[float]]],
     path: str,
-    list_col: str = "ivf_list",
     meta: dict | None = None,
 ) -> None:
     """Persist an ``ivf_index`` result: postings partitioned by the list
@@ -181,9 +182,9 @@ def save_ivf_index(
     # bytes + list) shuffle into one task per list — one right-sized
     # file per partition instead of (input partitions × lists) small
     # files, and the probe's pruned scan opens nprobe files.
-    indexed.repartition(F.col(list_col)).write.mode(
+    indexed.repartition(F.col(_IVF_LIST)).write.mode(
         "overwrite"
-    ).partitionBy(list_col).parquet(os.path.join(path, _IVF_POSTINGS))
+    ).partitionBy(_IVF_LIST).parquet(os.path.join(path, _IVF_POSTINGS))
     spark = indexed.sparkSession
     local_df(
         spark,
@@ -210,10 +211,7 @@ def _raise_if_ivf_swap_crashed(spark: SparkSession, path: str) -> None:
 
 
 def load_ivf_index(
-    spark: SparkSession,
-    path: str,
-    list_col: str = "ivf_list",
-    with_meta: bool = False,
+    spark: SparkSession, path: str, with_meta: bool = False
 ):
     """Reload a persisted IVF index: (postings frame with the partition
     column restored to its build-time int type, driver-side centroid
@@ -224,7 +222,7 @@ def load_ivf_index(
     _raise_if_ivf_swap_crashed(spark, path)
     postings = spark.read.parquet(os.path.join(path, _IVF_POSTINGS))
     postings = postings.withColumn(
-        list_col, F.col(list_col).cast("int")
+        _IVF_LIST, F.col(_IVF_LIST).cast("int")
     )
     cents = sorted(
         spark.read.parquet(os.path.join(path, _IVF_CENTROIDS)).collect(),
@@ -241,27 +239,20 @@ def load_ivf_index(
     )
 
 
-def append_ivf_postings(
-    assigned: DataFrame, path: str, list_col: str = "ivf_list"
-) -> None:
+def append_ivf_postings(assigned: DataFrame, path: str) -> None:
     """Incremental IVF admission: append newly-assigned vectors (rows
-    already carrying ``list_col`` from ``nearest_centroid`` against the
+    already carrying ``ivf_list`` from ``nearest_centroid`` against the
     EXISTING centroids) into the persisted postings — each batch lands
     in its list's partition directories, searchable immediately, no
     rebuild. The coarse quantizer stays frozen between rebuilds (the
     standard IVF serving contract; re-clustering is the rebuild path,
     ``save_ivf_index``)."""
-    assigned.write.mode("append").partitionBy(list_col).parquet(
+    assigned.write.mode("append").partitionBy(_IVF_LIST).parquet(
         os.path.join(path, _IVF_POSTINGS)
     )
 
 
-def compact_ivf_postings(
-    spark: SparkSession,
-    path: str,
-    target_mb: int = 256,
-    list_col: str = "ivf_list",
-) -> None:
+def compact_ivf_postings(spark: SparkSession, path: str) -> None:
     """Index-lifecycle compaction for the IVF postings (the step
     ``append_ivf_postings`` defers): every append lands new small files
     in the grown lists' partition directories, and after N batches a
@@ -274,10 +265,7 @@ def compact_ivf_postings(
     from pyveb_spark.operators.layout import compact_files
 
     compact_files(
-        spark,
-        os.path.join(path, _IVF_POSTINGS),
-        target_mb=target_mb,
-        partition_cols=[list_col],
+        spark, os.path.join(path, _IVF_POSTINGS), partition_cols=[_IVF_LIST]
     )
 
 
@@ -285,8 +273,6 @@ def maybe_compact_ivf_postings(
     spark: SparkSession,
     path: str,
     max_files_per_list: int = 8,
-    target_mb: int = 256,
-    list_col: str = "ivf_list",
 ) -> bool:
     """Threshold-triggered lifecycle compaction — the policy half of
     ``compact_ivf_postings``, for callers that append continuously (the
@@ -320,9 +306,7 @@ def maybe_compact_ivf_postings(
     counts = Counter(part for part, _ in _parquet_files(spark, root))
     if not counts or max(counts.values()) <= int(max_files_per_list):
         return False
-    compact_ivf_postings(
-        spark, path, target_mb=target_mb, list_col=list_col
-    )
+    compact_ivf_postings(spark, path)
     return True
 
 
@@ -333,7 +317,6 @@ def rebuild_ivf_index(
     n_lists: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    list_col: str = "ivf_list",
     kmeans_iters: int = 0,
     tol: float = 0.0,
     meta: dict | None = None,
@@ -396,12 +379,10 @@ def rebuild_ivf_index(
     # before its swap; the live original is authoritative — redo
     fs.delete(HPath(stage), True)
 
-    old_postings, _, old_meta = load_ivf_index(
-        spark, path, list_col=list_col, with_meta=True
-    )
+    old_postings, _, old_meta = load_ivf_index(spark, path, with_meta=True)
     before = {
-        int(r[list_col]): int(r["n"])
-        for r in old_postings.groupBy(list_col)
+        int(r[_IVF_LIST]): int(r["n"])
+        for r in old_postings.groupBy(_IVF_LIST)
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     }
@@ -419,22 +400,20 @@ def rebuild_ivf_index(
     assigned = vecs.select(
         F.col(id_col),
         nearest_centroid(F.col(vec_col), new_cents)["list_id"].alias(
-            list_col
+            _IVF_LIST
         ),
     )
-    new_postings = old_postings.drop(list_col).join(assigned, id_col)
+    new_postings = old_postings.drop(_IVF_LIST).join(assigned, id_col)
     new_meta = {
         k: v for k, v in old_meta.items() if k not in ("n_lists", "dim")
     }
     new_meta.update(meta or {})
-    save_ivf_index(
-        new_postings, new_cents, stage, list_col=list_col, meta=new_meta
-    )
+    save_ivf_index(new_postings, new_cents, stage, meta=new_meta)
 
     after = {
-        int(r[list_col]): int(r["n"])
+        int(r[_IVF_LIST]): int(r["n"])
         for r in spark.read.parquet(os.path.join(stage, _IVF_POSTINGS))
-        .groupBy(list_col)
+        .groupBy(_IVF_LIST)
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     }
@@ -479,14 +458,11 @@ def rebuild_ivf_index(
 
 
 def save_lsh_index(
-    index: DataFrame,
-    path: str,
-    bucket_col: str = "__b",
-    meta: dict[str, int] | None = None,
+    index: DataFrame, path: str, meta: dict[str, int] | None = None
 ) -> None:
-    """Persist a sign-LSH bucketed corpus (``lsh_bucket`` output)
-    partitioned by the bucket id: a lookup against the reloaded index
-    prunes to the probe's buckets at the scan.
+    """Persist a sign-LSH bucketed corpus (``lsh_bucket`` output with
+    ``bucket_col="__b"``) partitioned by the bucket id: a lookup against
+    the reloaded index prunes to the probe's buckets at the scan.
 
     ``meta`` (recommended: ``{"n_planes": ..., "seed": ..., "dim":
     ...}``) is written as a one-row manifest NEXT TO the index. A sign-
@@ -499,23 +475,13 @@ def save_lsh_index(
     composes with persistence: resolve the count at BUILD time —
     ``suggest_lsh_planes`` — save it in the manifest, reload it at
     admission time)."""
-    index.write.mode("overwrite").partitionBy(bucket_col).parquet(path)
+    index.write.mode("overwrite").partitionBy(_LSH_BUCKET).parquet(path)
     if meta:
-        from pyveb_spark.session import local_df
-
-        keys = sorted(meta)
-        local_df(
-            index.sparkSession,
-            [tuple(int(meta[k]) for k in keys)],
-            ", ".join(f"{k} int" for k in keys),
-        ).coalesce(1).write.mode("overwrite").parquet(path + "_meta")
+        _write_manifest(index.sparkSession, path + "_meta", meta)
 
 
 def load_lsh_index(
-    spark: SparkSession,
-    path: str,
-    bucket_col: str = "__b",
-    with_meta: bool = False,
+    spark: SparkSession, path: str, with_meta: bool = False
 ) -> DataFrame | tuple[DataFrame, dict[str, int]]:
     """Reload a persisted LSH index with the bucket column restored to
     the build-time long type (partition-dir inference narrows it).
@@ -524,7 +490,7 @@ def load_lsh_index(
     pass its ``n_planes``/``seed`` straight into
     ``lsh_cosine_lookup``."""
     df = spark.read.parquet(path).withColumn(
-        bucket_col, F.col(bucket_col).cast("long")
+        _LSH_BUCKET, F.col(_LSH_BUCKET).cast("long")
     )
     if not with_meta:
         return df
@@ -583,19 +549,19 @@ def _get_table_meta(spark: SparkSession, table: str) -> dict:
     return meta
 
 
-def _raise_if_crashed_swap(spark: SparkSession, table: str, kind: str) -> None:
-    """Shared crashed-compaction detection for every bucketed catalog
-    index tier (MinHash / SimHash / BM25 / n-gram): the table is missing
-    but its committed compaction stage exists — a compaction died inside
-    the metadata swap. Refuse to proceed with the full recovery steps
-    (including the external-table SET LOCATION case, where a plain
-    RENAME would re-attach the stage to a now-moved path)."""
+def _raise_if_crashed_swap(spark: SparkSession, table: str) -> None:
+    """Crashed-compaction detection for every bucketed catalog index:
+    the table is missing but its committed compaction stage exists — a
+    compaction died inside the metadata swap. Refuse to proceed with the
+    full recovery steps (including the external-table SET LOCATION case,
+    where a plain RENAME would re-attach the stage to a now-moved
+    path)."""
     stage = f"{table}__compact_stage"
     if not spark.catalog.tableExists(table) and spark.catalog.tableExists(
         stage
     ):
         raise RuntimeError(
-            f"{kind} index table {table!r} is missing but its "
+            f"index table {table!r} is missing but its "
             f"compaction stage {stage!r} exists — a compaction crashed "
             "inside the metadata swap; the compacted data is complete. "
             f"Recover with: ALTER TABLE {stage} RENAME TO {table}. "
@@ -608,112 +574,95 @@ def _raise_if_crashed_swap(spark: SparkSession, table: str, kind: str) -> None:
         )
 
 
-def save_minhash_index(
-    index: DataFrame,
-    table: str,
-    hot_path: str,
-    max_bucket_size: int | None = None,
-    num_buckets: int = 8,
-    path: str | None = None,
-    meta: dict | None = None,
-) -> None:
-    """Persist a ``minhash_lsh_index`` as a catalog table bucketed on
-    ``(__band, __h)`` — the zero-index-side-shuffle lookup join — and
-    write the ``minhash_hot_buckets`` skew blacklist next to it (tiny by
-    definition; refresh at compaction time, staleness after appends only
-    loosens the skew guard, never correctness).
-
-    ``meta`` (recommended: the ``minhash_lsh_index`` build parameters
-    ``{"n": ..., "num_hashes": ..., "bands": ...}``) is stamped into the
-    table's catalog properties: a lookup that hashes probes with
-    DIFFERENT parameters joins into unrelated buckets and silently
-    returns garbage, so the parameters belong to the artifact.
-    ``load_minhash_index(..., with_meta=True)`` returns them for
-    ``minhash_lsh_lookup(meta=...)``; they survive appends and the
-    compaction swap (pinned by test)."""
-    from pyveb_spark.operators.dedup import (
-        DEFAULT_MAX_BUCKET_SIZE,
-        minhash_hot_buckets,
-    )
-    from pyveb_spark.sinks.writers import write_bucketed_table
-
-    write_bucketed_table(
-        index, table, ["__band", "__h"], num_buckets=num_buckets,
-        path=path,
-    )
-    spark = index.sparkSession
-    if meta:
-        _set_table_meta(spark, table, meta)
-    cap = DEFAULT_MAX_BUCKET_SIZE if max_bucket_size is None else int(
-        max_bucket_size
-    )
-    persisted = spark.table(table)
-    minhash_hot_buckets(persisted, cap).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(hot_path)
-
-
-def load_minhash_index(
-    spark: SparkSession,
-    table: str,
-    hot_path: str,
-    with_meta: bool = False,
-):
-    """Reload the bucketed MinHash postings table and its persisted
-    hot-bucket blacklist — pass both straight into
-    ``minhash_lsh_lookup(index=..., hot_buckets=...)`` (the q45
-    production shape with zero per-batch index work). ``with_meta=True``
-    also returns the build manifest stamped by
-    ``save_minhash_index(meta=...)`` (``{}`` for a pre-manifest table) —
-    pass it as ``minhash_lsh_lookup(meta=...)`` so the probe hashes
-    with the index's OWN n/num_hashes/bands."""
-    _raise_if_crashed_swap(spark, table, "MinHash")
-    idx, hot = spark.table(table), spark.read.parquet(hot_path)
-    if not with_meta:
-        return idx, hot
-    return idx, hot, _get_table_meta(spark, table)
-
-
-def append_minhash_index(
-    postings: DataFrame,
-    table: str,
-    hot_path: str | None = None,
-    max_bucket_size: int | None = None,
-    num_buckets: int = 8,
-) -> None:
-    """Append an admitted batch's postings into the persisted bucketed
-    index (same bucket spec — Spark keeps the table's zero-shuffle join
-    property across appends, pinned by test). Pass ``hot_path`` to also
-    REFRESH the skew blacklist from the grown table (the compaction-time
-    step); omit it to defer — staleness only loosens the skew guard,
-    never correctness (the ``minhash_lsh_index`` contract)."""
-    from pyveb_spark.operators.dedup import (
-        DEFAULT_MAX_BUCKET_SIZE,
-        minhash_hot_buckets,
-    )
-
-    postings.write.format("parquet").mode("append").bucketBy(
-        num_buckets, "__band", "__h"
-    ).saveAsTable(table)
-    if hot_path is not None:
-        cap = (
-            DEFAULT_MAX_BUCKET_SIZE
-            if max_bucket_size is None
-            else int(max_bucket_size)
-        )
-        spark = postings.sparkSession
-        minhash_hot_buckets(spark.table(table), cap).coalesce(
-            1
-        ).write.mode("overwrite").parquet(hot_path)
-
-
-def _table_meta(spark: SparkSession, table: str) -> dict[str, str]:
-    """DESCRIBE FORMATTED as a dict (bucket count, location, type)."""
-    return {
+def _bucket_spec(
+    spark: SparkSession, table: str
+) -> tuple[int, list[str], dict[str, str]]:
+    """(bucket count, bucket columns, DESCRIBE FORMATTED fields) of an
+    existing bucketed index table, read from the catalog — the one
+    source of the layout for appends and compaction. The spec is
+    load-bearing: a different count or key would rebucket the table
+    (Spark refuses such an append) and break the zero-shuffle
+    co-located join, so an unreadable spec raises instead of being
+    guessed."""
+    if not spark.catalog.tableExists(table):
+        _raise_if_crashed_swap(spark, table)
+        raise ValueError(f"index table {table!r} does not exist")
+    described = {
         r.col_name.strip(): (r.data_type or "").strip()
         for r in spark.sql(f"DESCRIBE FORMATTED {table}").collect()
         if r.col_name and r.col_name.strip()
     }
+    if "Num Buckets" not in described:
+        raise ValueError(
+            f"table {table!r} has no 'Num Buckets' in its catalog "
+            "metadata — not a bucketed index table (or the DESCRIBE "
+            "FORMATTED layout changed); refusing to guess a count"
+        )
+    bucket_cols = re.findall(
+        r"`([^`]+)`", described.get("Bucket Columns", "")
+    )
+    if not bucket_cols:
+        raise ValueError(
+            f"table {table!r} has no parseable 'Bucket Columns' in its "
+            "catalog metadata — refusing to guess the bucket key "
+            f"(got: {described.get('Bucket Columns')!r})"
+        )
+    return int(described["Num Buckets"]), bucket_cols, described
+
+
+def save_bucketed_index(
+    postings: DataFrame,
+    table: str,
+    bucket_cols: list[str],
+    path: str | None = None,
+    meta: dict | None = None,
+) -> None:
+    """Persist index postings as a catalog table bucketed on
+    ``bucket_cols`` (``writers.write_bucketed_table``) — a lookup
+    equi-joins the table with zero index-side shuffle, and a literal
+    probe bucket-prunes the scan. ``path`` makes it an external table.
+
+    ``meta`` (the build parameters the lookup must hash with) is stamped
+    as ``pyveb.index.*`` TBLPROPERTIES: a probe built with different
+    parameters joins into unrelated buckets and silently returns
+    garbage, so the parameters belong to the artifact. They survive
+    appends and the compaction swap (pinned by test)."""
+    from pyveb_spark.sinks.writers import write_bucketed_table
+
+    write_bucketed_table(
+        postings, table, bucket_cols, num_buckets=_NUM_BUCKETS, path=path
+    )
+    if meta:
+        _set_table_meta(postings.sparkSession, table, meta)
+
+
+def load_bucketed_index(
+    spark: SparkSession, table: str, with_meta: bool = False
+):
+    """Reload a bucketed index table after checking for a crashed
+    compaction swap. ``with_meta=True`` also returns the build manifest
+    (``{}`` for a pre-manifest table) — pass it to the lookup
+    (``simhash_lookup(meta=...)``, ``phrase_search(meta=...)``, …) so
+    the probe uses the index's own parameters."""
+    _raise_if_crashed_swap(spark, table)
+    idx = spark.table(table)
+    if not with_meta:
+        return idx
+    return idx, _get_table_meta(spark, table)
+
+
+def append_bucketed_index(postings: DataFrame, table: str) -> None:
+    """Append an admitted batch's postings into a persisted bucketed
+    index. The bucket count and columns come from the table's catalog
+    entry (``_bucket_spec``), so the append always matches the spec the
+    table was saved with and the zero-shuffle join property survives
+    (pinned by test)."""
+    from pyveb_spark.sinks.writers import write_bucketed_table
+
+    num_buckets, bucket_cols, _ = _bucket_spec(postings.sparkSession, table)
+    write_bucketed_table(
+        postings, table, bucket_cols, num_buckets=num_buckets, mode="append"
+    )
 
 
 def compact_bucketed_index(spark: SparkSession, table: str) -> None:
@@ -726,9 +675,9 @@ def compact_bucketed_index(spark: SparkSession, table: str) -> None:
     hash (Spark's bucket id and HashPartitioning share the same
     pmod-Murmur3, so every task holds exactly one bucket → ONE file per
     bucket), with the bucket spec — count AND columns — read from the
-    table's own catalog metadata, so the zero-index-side-shuffle join
-    property survives by construction (pinned by test) and nothing in
-    the rewrite is tier-specific.
+    table's own catalog metadata (``_bucket_spec``), so the
+    zero-index-side-shuffle join property survives by construction
+    (pinned by test) and nothing in the rewrite is tier-specific.
 
     Crash-safety: the replacement is FULLY written as the bucketed
     table ``{table}__compact_stage`` while the original keeps serving;
@@ -739,34 +688,13 @@ def compact_bucketed_index(spark: SparkSession, table: str) -> None:
     in the catalog window is reported by ``_raise_if_crashed_swap``."""
     from pyveb_spark.sinks.writers import swap_dir, write_bucketed_table
 
+    num_buckets, bucket_cols, described = _bucket_spec(spark, table)
     stage = f"{table}__compact_stage"
-    if not spark.catalog.tableExists(table):
-        _raise_if_crashed_swap(spark, table, "bucketed")
-        raise ValueError(f"index table {table!r} does not exist")
     # a stage alongside a live original is leftover from a run that
     # failed BEFORE the swap — the original is authoritative; redo.
     spark.sql(f"DROP TABLE IF EXISTS {stage}")
-
-    meta = _table_meta(spark, table)
-    if "Num Buckets" not in meta:
-        # the bucket count is load-bearing: defaulting here would
-        # silently rebucket the table and break the zero-shuffle
-        # co-located-join property against its existing bucket spec.
-        raise ValueError(
-            f"table {table!r} has no 'Num Buckets' in its catalog "
-            "metadata — not a bucketed index table (or the DESCRIBE "
-            "FORMATTED layout changed); refusing to guess a count"
-        )
-    num_buckets = int(meta["Num Buckets"])
-    bucket_cols = re.findall(r"`([^`]+)`", meta.get("Bucket Columns", ""))
-    if not bucket_cols:
-        raise ValueError(
-            f"table {table!r} has no parseable 'Bucket Columns' in its "
-            "catalog metadata — refusing to guess the bucket key "
-            f"(got: {meta.get('Bucket Columns')!r})"
-        )
-    loc = meta.get("Location") or None
-    is_external = meta.get("Type", "").upper() == "EXTERNAL"
+    loc = described.get("Location") or None
+    is_external = described.get("Type", "").upper() == "EXTERNAL"
     stage_loc = (loc.rstrip("/") + "__compact_stage") if is_external else None
     build_meta = _get_table_meta(spark, table)
 
@@ -799,89 +727,80 @@ def compact_bucketed_index(spark: SparkSession, table: str) -> None:
         spark.sql(f"ALTER TABLE {stage} RENAME TO {table}")
 
 
-def compact_minhash_index(
-    spark: SparkSession,
-    table: str,
-    hot_path: str | None = None,
-    max_bucket_size: int | None = None,
-) -> None:
-    """MinHash/SimHash entry point for :func:`compact_bucketed_index`
-    (the shared crash-safe rewrite — see its docstring for the staged
-    swap contract), plus the one banded-tier-specific step: when
-    ``hot_path`` is given, the ``minhash_hot_buckets`` skew blacklist
-    is refreshed from the compacted table in the same pass (the
-    compaction-time refresh ``append_minhash_index`` defers to)."""
-    from pyveb_spark.operators.dedup import (
-        DEFAULT_MAX_BUCKET_SIZE,
-        minhash_hot_buckets,
-    )
+def _write_hot_buckets(spark: SparkSession, table: str, hot_path: str) -> None:
+    """(Re)write the ``minhash_hot_buckets`` skew blacklist of a MinHash
+    index table at ``hot_path`` — one tiny file."""
+    from pyveb_spark.operators.dedup import minhash_hot_buckets
 
-    compact_bucketed_index(spark, table)
-    if hot_path is not None:
-        cap = (
-            DEFAULT_MAX_BUCKET_SIZE
-            if max_bucket_size is None
-            else int(max_bucket_size)
-        )
-        minhash_hot_buckets(spark.table(table), cap).coalesce(
-            1
-        ).write.mode("overwrite").parquet(hot_path)
+    minhash_hot_buckets(spark.table(table)).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(hot_path)
 
 
-def save_simhash_index(
+def save_minhash_index(
     index: DataFrame,
     table: str,
-    num_buckets: int = 8,
+    hot_path: str,
     path: str | None = None,
     meta: dict | None = None,
 ) -> None:
-    """Persist a ``simhash_index`` as a catalog table bucketed on
-    ``(__band, __h)`` — the same zero-index-side-shuffle lookup layout
-    (and the same column convention, deliberately) as the MinHash
-    index, so the whole bucketed-table lifecycle applies verbatim:
-    append with ``append_simhash_index``, compact with
-    ``compact_minhash_index`` (band-hash-aligned rewrite, crash-safe
-    swap — nothing in it is MinHash-specific; pass ``hot_path=None``,
-    SimHash carries no skew blacklist because its blocking is lossless
-    and its verify is O(1) per candidate).
-
-    ``meta`` (recommended: ``{"bands": ..., "bits": ...}``) is stamped
-    as ``pyveb.index.*`` TBLPROPERTIES — a probe banding at a different
-    chunk width joins into unrelated buckets and silently returns
-    nothing, so the band geometry belongs to the artifact."""
-    from pyveb_spark.sinks.writers import write_bucketed_table
-
-    write_bucketed_table(
-        index, table, ["__band", "__h"], num_buckets=num_buckets,
-        path=path,
-    )
-    if meta:
-        _set_table_meta(index.sparkSession, table, meta)
+    """Persist a ``minhash_lsh_index`` through ``save_bucketed_index``
+    on ``(__band, __h)`` and write the ``minhash_hot_buckets`` skew
+    blacklist at ``hot_path`` (tiny by definition; refresh at compaction
+    time, staleness after appends only loosens the skew guard, never
+    correctness). ``meta`` is the ``minhash_lsh_index`` build parameters
+    ``{"n": ..., "num_hashes": ..., "bands": ...}``;
+    ``load_minhash_index(..., with_meta=True)`` returns them for
+    ``minhash_lsh_lookup(meta=...)``."""
+    save_bucketed_index(index, table, ["__band", "__h"], path=path, meta=meta)
+    _write_hot_buckets(index.sparkSession, table, hot_path)
 
 
-def load_simhash_index(
-    spark: SparkSession, table: str, with_meta: bool = False
+def load_minhash_index(
+    spark: SparkSession,
+    table: str,
+    hot_path: str,
+    with_meta: bool = False,
 ):
-    """Reload the bucketed SimHash postings table; ``with_meta=True``
-    also returns the build manifest (``{}`` for a pre-manifest table) —
-    pass it as ``simhash_lookup(meta=...)``. Detects the crashed-
-    compaction state the same way ``load_minhash_index`` does."""
-    _raise_if_crashed_swap(spark, table, "SimHash")
-    idx = spark.table(table)
+    """Reload the bucketed MinHash postings table and its persisted
+    hot-bucket blacklist — pass both straight into
+    ``minhash_lsh_lookup(index=..., hot_buckets=...)`` (the q45
+    production shape with zero per-batch index work). ``with_meta=True``
+    also returns the build manifest stamped by
+    ``save_minhash_index(meta=...)`` (``{}`` for a pre-manifest table) —
+    pass it as ``minhash_lsh_lookup(meta=...)`` so the probe hashes
+    with the index's OWN n/num_hashes/bands."""
+    idx = load_bucketed_index(spark, table)
+    hot = spark.read.parquet(hot_path)
     if not with_meta:
-        return idx
-    return idx, _get_table_meta(spark, table)
+        return idx, hot
+    return idx, hot, _get_table_meta(spark, table)
 
 
-def append_simhash_index(
-    postings: DataFrame, table: str, num_buckets: int = 8
+def append_minhash_index(
+    postings: DataFrame, table: str, hot_path: str | None = None
 ) -> None:
-    """Append an admitted batch's banded postings into the persisted
-    SimHash index (same bucket spec — the zero-shuffle join property
-    survives appends, as with the MinHash table)."""
-    postings.write.format("parquet").mode("append").bucketBy(
-        num_buckets, "__band", "__h"
-    ).saveAsTable(table)
+    """``append_bucketed_index`` for MinHash postings. Pass ``hot_path``
+    to also REFRESH the skew blacklist from the grown table (the
+    compaction-time step); omit it to defer — staleness only loosens the
+    skew guard, never correctness (the ``minhash_lsh_index``
+    contract)."""
+    append_bucketed_index(postings, table)
+    if hot_path is not None:
+        _write_hot_buckets(postings.sparkSession, table, hot_path)
+
+
+def compact_minhash_index(
+    spark: SparkSession, table: str, hot_path: str | None = None
+) -> None:
+    """:func:`compact_bucketed_index` (the shared crash-safe rewrite —
+    see its docstring for the staged swap contract) plus the MinHash
+    step: when ``hot_path`` is given, the ``minhash_hot_buckets`` skew
+    blacklist is refreshed from the compacted table in the same pass
+    (the compaction-time refresh ``append_minhash_index`` defers to)."""
+    compact_bucketed_index(spark, table)
+    if hot_path is not None:
+        _write_hot_buckets(spark, table, hot_path)
 
 
 # ---------------------------------------------------------------------------
@@ -1079,13 +998,19 @@ def update_id_bloom(
 
 
 # ---------------------------------------------------------------------------
-# Durable LEXICAL retrieval tier (round 12): BM25 inverted index + n-gram
-# phrase index — the last index family without persistence joins the
-# shared bucketed-catalog lifecycle convention. Reference analogue: the
-# staged-artifact pattern of ``src/pyveb/s3_client.py:188-231`` (persist
-# once, serve many); design follows the standard Lucene/ES split of
-# per-posting data vs collection statistics.
+# Durable lexical retrieval: the BM25 inverted index and the n-gram phrase
+# index, both bucketed catalog tables. Design follows the standard
+# Lucene/ES split of per-posting data vs collection statistics.
 # ---------------------------------------------------------------------------
+
+
+def _doclen_stats(doclens: DataFrame) -> dict[str, int]:
+    """BM25 collection statistics ``{"n_docs", "sum_dl"}`` of a doclens
+    frame — one narrow aggregation."""
+    row = doclens.agg(
+        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
+    ).first()
+    return {"n_docs": int(row["n"]), "sum_dl": int(row["s"] or 0)}
 
 
 def save_bm25_index(
@@ -1094,17 +1019,16 @@ def save_bm25_index(
     doclen_path: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_buckets: int = 8,
     path: str | None = None,
     meta: dict | None = None,
 ) -> None:
     """Persist a corpus's inverted index for BM25/phrase-era lexical
-    serving: token postings ``(token, <id>, tf)`` as a catalog table
-    BUCKETED on ``token`` — a query's IN-filter bucket-prunes the scan,
-    the same serving shape as the banded dedup tiers — plus the per-doc
-    length table at ``doclen_path`` and the collection statistics
-    (``n_docs``, ``sum_dl``) stamped as ``pyveb.index.*``
-    TBLPROPERTIES, surviving appends and the compaction swap.
+    serving: token postings ``(token, <id>, tf)`` through
+    ``save_bucketed_index`` on ``token`` — a query's IN-filter
+    bucket-prunes the scan — plus the per-doc length table at
+    ``doclen_path`` and the collection statistics (``n_docs``,
+    ``sum_dl``) in the table's manifest, surviving appends and the
+    compaction swap.
 
     The layout deliberately carries NO corpus-global columns per
     posting (contrast ``build_inverted_index``'s df-annotated form):
@@ -1118,29 +1042,13 @@ def save_bm25_index(
     the ingest path, and the artifact serves across sessions with zero
     rebuild."""
     from pyveb_spark.operators.retrieval import build_bm25_postings
-    from pyveb_spark.sinks.writers import write_bucketed_table
 
     postings, doclens = build_bm25_postings(df, id_col, text_col)
-    write_bucketed_table(
-        postings, table, ["token"], num_buckets=num_buckets, path=path
-    )
     doclens.write.mode("overwrite").parquet(doclen_path)
-    spark = df.sparkSession
-    row = (
-        spark.read.parquet(doclen_path)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("dl").alias("s"),
-        )
-        .first()
-    )
-    manifest = {
-        "n_docs": int(row["n"]),
-        "sum_dl": int(row["s"] or 0),
-        "tokenizer": "whitespace",
-    }
+    manifest = _doclen_stats(df.sparkSession.read.parquet(doclen_path))
+    manifest["tokenizer"] = "whitespace"
     manifest.update(meta or {})
-    _set_table_meta(spark, table, manifest)
+    save_bucketed_index(postings, table, ["token"], path=path, meta=manifest)
 
 
 def load_bm25_index(
@@ -1152,10 +1060,8 @@ def load_bm25_index(
     """Reload the persisted BM25 tier: (token-bucketed postings frame,
     doclens frame[, manifest]). Pass the manifest's ``n_docs``/
     ``sum_dl`` straight into ``bm25_search_indexed`` — the search needs
-    no other session state and no corpus scan. Detects the
-    crashed-compaction state like every bucketed tier."""
-    _raise_if_crashed_swap(spark, table, "BM25")
-    postings = spark.table(table)
+    no other session state and no corpus scan."""
+    postings = load_bucketed_index(spark, table)
     doclens = spark.read.parquet(doclen_path)
     if not with_meta:
         return postings, doclens
@@ -1168,13 +1074,11 @@ def append_bm25_index(
     doclen_path: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_buckets: int = 8,
 ) -> None:
     """Admit a NEW-document wave into the persisted BM25 tier: the
-    batch's postings append into the token-bucketed table (same bucket
-    spec — the pruning property survives), its doclens append at
-    ``doclen_path``, and the manifest's collection statistics bump
-    incrementally (one batch-sized aggregation — n_docs += |batch|,
+    batch's postings go through ``append_bucketed_index``, its doclens
+    append at ``doclen_path``, and the manifest's collection statistics
+    bump incrementally (one batch-sized aggregation — n_docs += |batch|,
     sum_dl += Σ batch dl; the corpus is never rescanned). Documents
     must be new ids (admission dedup is the caller's anti-join, as in
     every other tier); re-appending an id would double-count its tf
@@ -1186,23 +1090,14 @@ def append_bm25_index(
     from pyveb_spark.operators.retrieval import build_bm25_postings
 
     postings, doclens = build_bm25_postings(batch_df, id_col, text_col)
-    postings.write.format("parquet").mode("append").bucketBy(
-        num_buckets, "token"
-    ).saveAsTable(table)
+    append_bucketed_index(postings, table)
     doclens.write.mode("append").parquet(doclen_path)
     spark = batch_df.sparkSession
-    row = doclens.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
-    ).first()
+    batch = _doclen_stats(doclens)
     meta = _get_table_meta(spark, table)
     if "n_docs" in meta and "sum_dl" in meta:
         _set_table_meta(
-            spark,
-            table,
-            {
-                "n_docs": int(meta["n_docs"]) + int(row["n"]),
-                "sum_dl": int(meta["sum_dl"]) + int(row["s"] or 0),
-            },
+            spark, table, {k: int(meta[k]) + v for k, v in batch.items()}
         )
 
 
@@ -1214,12 +1109,7 @@ def refresh_bm25_stats(
     self-heal for any drift the incremental bumps accumulated (a crash
     between an append's data and manifest writes). One narrow two-column
     scan; returns the fresh ``{"n_docs", "sum_dl"}``."""
-    row = (
-        spark.read.parquet(doclen_path)
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s"))
-        .first()
-    )
-    fresh = {"n_docs": int(row["n"]), "sum_dl": int(row["s"] or 0)}
+    fresh = _doclen_stats(spark.read.parquet(doclen_path))
     _set_table_meta(spark, table, fresh)
     return fresh
 
@@ -1230,46 +1120,27 @@ def save_ngram_index(
     n: int,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_buckets: int = 8,
     path: str | None = None,
     meta: dict | None = None,
 ) -> None:
     """Persist a positional n-gram (phrase) index
-    (``retrieval.build_ngram_index``) as a catalog table bucketed on
+    (``retrieval.build_ngram_index``) through ``save_bucketed_index`` on
     the window hash ``__h`` — a phrase probe is one literal equality,
-    bucket-pruned at the scan. The window width ``n`` is stamped into
-    the manifest: a probe phrase of any other token count hashes to a
-    key that cannot exist and silently returns nothing, so
-    ``phrase_search(meta=...)`` validates it loudly instead."""
-    from pyveb_spark.operators.retrieval import build_ngram_index
-    from pyveb_spark.sinks.writers import write_bucketed_table
-
+    bucket-pruned at the scan. Reload it with ``load_bucketed_index``.
+    The window width ``n`` is stamped into the manifest: a probe phrase
+    of any other token count hashes to a key that cannot exist and
+    silently returns nothing, so ``phrase_search(meta=...)`` validates
+    it loudly instead."""
     from pyveb_spark.operators.layout import widen_scan
+    from pyveb_spark.operators.retrieval import build_ngram_index
 
-    write_bucketed_table(
+    save_bucketed_index(
         build_ngram_index(widen_scan(df), n, id_col, text_col),
         table,
         ["__h"],
-        num_buckets=num_buckets,
         path=path,
+        meta={"n": int(n), **(meta or {})},
     )
-    manifest = {"n": int(n)}
-    manifest.update(meta or {})
-    _set_table_meta(df.sparkSession, table, manifest)
-
-
-def load_ngram_index(
-    spark: SparkSession, table: str, with_meta: bool = False
-):
-    """Reload the bucketed n-gram phrase index; ``with_meta=True`` also
-    returns the build manifest — pass it as ``phrase_search(meta=...)``
-    so a phrase/window-width mismatch raises. Detects the
-    crashed-compaction state like every bucketed tier."""
-    _raise_if_crashed_swap(spark, table, "n-gram")
-    idx = spark.table(table)
-    if not with_meta:
-        return idx
-    return idx, _get_table_meta(spark, table)
 
 
 def append_ngram_index(
@@ -1278,17 +1149,17 @@ def append_ngram_index(
     n: int,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_buckets: int = 8,
 ) -> None:
-    """Append a new-document wave's n-gram postings (same bucket spec;
-    documents must be new ids — a re-appended doc would split its
-    per-window occurrence counts across rows). Validate ``n`` against
-    the manifest first when loading via ``with_meta``."""
+    """Append a new-document wave's n-gram postings through
+    ``append_bucketed_index`` (documents must be new ids — a re-appended
+    doc would split its per-window occurrence counts across rows).
+    Validate ``n`` against the manifest first when loading via
+    ``with_meta``."""
     from pyveb_spark.operators.retrieval import build_ngram_index
 
-    build_ngram_index(batch_df, n, id_col, text_col).write.format(
-        "parquet"
-    ).mode("append").bucketBy(num_buckets, "__h").saveAsTable(table)
+    append_bucketed_index(
+        build_ngram_index(batch_df, n, id_col, text_col), table
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -319,13 +319,7 @@ class ParquetMergeSink:
     def overwrite(self, df: DataFrame) -> None:
         """↔ ``rs_client.full_refresh`` (``rs_client.py:127-148``)."""
         raise_if_swap_crashed(self.spark, self._stage, self.path)
-        try:
-            df.write.mode("overwrite").parquet(self._stage)
-        except Exception:
-            # a partial stage beside a missing table reads as a crashed swap
-            fs, HPath = _hadoop_fs(self.spark, self._stage)
-            fs.delete(HPath(self._stage), True)
-            raise
+        df.write.mode("overwrite").parquet(self._stage)
         with swap_dir(self.spark, self._stage, self.path):
             pass
 

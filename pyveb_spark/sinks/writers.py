@@ -361,26 +361,40 @@ def _rename(fs, HPath, src: str, dst: str) -> None:
         raise RuntimeError(f"could not rename {src!r} to {dst!r}")
 
 
-def _raise_if_crashed(fs, HPath, live: str, *copies: str) -> None:
+def _raise_if_crashed(
+    fs, HPath, live: str, aside: str, stage: str | None = None
+) -> None:
     if fs.exists(HPath(live)):
         return
-    for copy in copies:
-        if fs.exists(HPath(copy)):
-            raise RuntimeError(
-                f"{live!r} is missing but {copy!r} exists: a swap_dir "
-                "commit died between its renames. Recover with one "
-                f"rename: {copy!r} -> {live!r}"
-            )
+    has_aside = fs.exists(HPath(aside))
+    # Without the aside, the stage is a committed copy only if it holds
+    # Hadoop's job-commit marker; otherwise it is a partial first write,
+    # which the next write replaces.
+    if stage is not None and fs.exists(
+        HPath(stage if has_aside else stage + "/_SUCCESS")
+    ):
+        copy = stage
+    elif has_aside:
+        copy = aside
+    else:
+        return
+    raise RuntimeError(
+        f"{live!r} is missing but {copy!r} exists: a swap_dir "
+        "commit died between its renames. Recover with one "
+        f"rename: {copy!r} -> {live!r}"
+    )
 
 
 def raise_if_swap_crashed(spark, stage: str, live: str) -> None:
     """Raise if a :func:`swap_dir` from ``stage`` into ``live`` died
-    midway (``live`` missing, stage or aside present), naming the rename
-    that recovers it, so readers never take a crashed commit for "no
-    table"."""
+    midway, naming the rename that recovers it, so readers never take a
+    crashed commit for "no table". That is: ``live`` is missing and the
+    aside exists, or the stage holds a complete job (``_SUCCESS``). A
+    stage without either is a partial first write: ``live`` does not
+    exist yet."""
     fs, HPath = _hadoop_fs(spark, live)
     _raise_if_crashed(
-        fs, HPath, live, stage, stage.removesuffix("_stage") + "_old"
+        fs, HPath, live, stage.removesuffix("_stage") + "_old", stage
     )
 
 

@@ -479,3 +479,99 @@ def test_ivf_empty_corpus_split_degenerates_to_empty(spark, tmp_path):
         "list_id", "n_original", "n_appended", "n_total",
         "corpus_share", "growth_ratio",
     ]
+
+
+def test_appends_follow_the_catalog_bucket_spec(spark, tmp_path):
+    """Every tier's append reads the bucket count and columns from the
+    catalog: tables saved with 4 buckets keep 4 through
+    ``append_bucketed_index``, ``append_bm25_index`` and
+    ``append_ngram_index`` (an append with any other count raises
+    'Specified bucketing does not match'), and a self-join on the
+    bucket columns still needs no Exchange."""
+    from pyveb_spark.operators.dedup import simhash_index
+    from pyveb_spark.operators.retrieval import (
+        build_bm25_postings,
+        build_ngram_index,
+    )
+    from pyveb_spark.sinks.index_store import (
+        append_bm25_index,
+        append_bucketed_index,
+        append_ngram_index,
+    )
+    from pyveb_spark.sinks.writers import write_bucketed_table
+
+    d = read_table(spark, SF, "documents")
+    corpus = d.where(F.col("doc_id") >= 100)
+    wave = d.where(F.col("doc_id") < 100)
+    dl = str(tmp_path / "doclens")
+    bm25_postings, doclens = build_bm25_postings(corpus)
+    doclens.write.parquet(dl)
+    suffix = uuid.uuid4().hex[:8]
+    cases = {
+        f"t_sim4_{suffix}": (
+            simhash_index(corpus, "doc_id", "text"),
+            ["__band", "__h"],
+            lambda t: append_bucketed_index(
+                simhash_index(wave, "doc_id", "text"), t
+            ),
+        ),
+        f"t_bm4_{suffix}": (
+            bm25_postings,
+            ["token"],
+            lambda t: append_bm25_index(wave, t, dl),
+        ),
+        f"t_ng4_{suffix}": (
+            build_ngram_index(corpus, 3),
+            ["__h"],
+            lambda t: append_ngram_index(wave, t, 3),
+        ),
+    }
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        for table, (postings, cols, append) in cases.items():
+            write_bucketed_table(postings, table, cols, num_buckets=4)
+            before = spark.table(table).count()
+            append(table)
+            idx = spark.table(table)
+            assert idx.count() > before, table
+            described = {
+                r.col_name.strip(): (r.data_type or "").strip()
+                for r in spark.sql(f"DESCRIBE FORMATTED {table}").collect()
+                if r.col_name
+            }
+            assert described["Num Buckets"] == "4", table
+            plan = (
+                idx.alias("a")
+                .join(idx.alias("b"), cols)
+                ._jdf.queryExecution()
+                .executedPlan()
+                .toString()
+            )
+            assert "Exchange" not in plan, (table, plan)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        for table in cases:
+            spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_lsh_manifest_of_earlier_int_format_loads_the_same(spark, tmp_path):
+    """``save_lsh_index`` writes its manifest with the shared typed
+    writer (bigint columns); a manifest in the earlier int-column format
+    at ``<path>_meta`` must load to the same dict."""
+    from pyveb_spark.session import local_df
+    from pyveb_spark.sinks.index_store import load_lsh_index, save_lsh_index
+
+    rows = local_df(spark, [(1, 3), (2, 5)], "vec_id bigint, __b bigint")
+    meta = {"dim": 16, "n_planes": 6, "seed": 42}
+    new, old = str(tmp_path / "new"), str(tmp_path / "old")
+    save_lsh_index(rows, new, meta=meta)
+    rows.write.partitionBy("__b").parquet(old)
+    local_df(
+        spark, [(16, 6, 42)], "dim int, n_planes int, seed int"
+    ).coalesce(1).write.parquet(old + "_meta")
+
+    _, new_meta = load_lsh_index(spark, new, with_meta=True)
+    _, old_meta = load_lsh_index(spark, old, with_meta=True)
+    assert new_meta == old_meta == meta
+    assert all(type(v) is int for v in (*new_meta.values(), *old_meta.values()))

@@ -412,3 +412,24 @@ def test_crash_between_swap_renames_loses_nothing(
         assert case["read"]() == case["after"]
     finally:
         case.get("cleanup", lambda: None)()
+
+
+def test_partial_first_write_is_not_a_crashed_swap(spark, tmp_path):
+    """A kill during the stage write of a brand-new merge-sink table
+    leaves a stage without Hadoop's ``_SUCCESS`` marker and no aside:
+    the table does not exist yet, and the next overwrite replaces the
+    stage. A stage that holds ``_SUCCESS`` is a complete commit and
+    still raises with the recovery rename."""
+    sink = ParquetMergeSink(spark, str(tmp_path / "t"))
+    os.makedirs(os.path.join(sink.path + "__merge_stage", "_temporary", "0"))
+    assert sink.exists() is False
+    sink.overwrite(spark.createDataFrame([(1, "a")], "k int, v string"))
+    assert _rows(sink.read()) == [(1, "a")]
+
+    done = ParquetMergeSink(spark, str(tmp_path / "u"))
+    stage = done.path + "__merge_stage"
+    spark.createDataFrame([(2, "b")], "k int, v string").write.parquet(stage)
+    assert os.path.exists(os.path.join(stage, "_SUCCESS"))
+    with pytest.raises(RuntimeError) as err:
+        done.exists()
+    assert f"{stage!r} -> {done.path!r}" in str(err.value)

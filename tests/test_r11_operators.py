@@ -574,10 +574,10 @@ def test_simhash_persisted_lifecycle(spark, tmp_path):
     compaction keep the lookup identical with zero-Exchange intact."""
     from pyveb_spark.operators.dedup import simhash_index, simhash_lookup
     from pyveb_spark.sinks.index_store import (
-        append_simhash_index,
-        compact_minhash_index,
-        load_simhash_index,
-        save_simhash_index,
+        append_bucketed_index,
+        compact_bucketed_index,
+        load_bucketed_index,
+        save_bucketed_index,
     )
 
     d = read_table(spark, SF, "documents")
@@ -587,11 +587,12 @@ def test_simhash_persisted_lifecycle(spark, tmp_path):
     table = f"t_sim_{uuid.uuid4().hex[:8]}"
     try:
         fresh_idx = simhash_index(corpus, "doc_id", "text")
-        save_simhash_index(
-            fresh_idx, table, path=str(tmp_path / "postings"),
+        save_bucketed_index(
+            fresh_idx, table, ["__band", "__h"],
+            path=str(tmp_path / "postings"),
             meta={"bands": 4, "bits": 60},
         )
-        idx, meta = load_simhash_index(spark, table, with_meta=True)
+        idx, meta = load_bucketed_index(spark, table, with_meta=True)
         assert meta == {"bands": 4, "bits": 60}
 
         def rows(frame):
@@ -610,13 +611,13 @@ def test_simhash_persisted_lifecycle(spark, tmp_path):
             )
         # append + shared crash-safe compaction: manifest survives,
         # grown lookup identical before/after the rewrite
-        append_simhash_index(
+        append_bucketed_index(
             simhash_index(extra, "doc_id", "text"), table
         )
         before = rows(simhash_lookup(
             batch, spark.table(table), "doc_id", "text", meta=meta))
-        compact_minhash_index(spark, table)
-        idx2, meta2 = load_simhash_index(spark, table, with_meta=True)
+        compact_bucketed_index(spark, table)
+        idx2, meta2 = load_bucketed_index(spark, table, with_meta=True)
         assert meta2 == meta
         assert rows(simhash_lookup(
             batch, idx2, "doc_id", "text", meta=meta2)) == before

@@ -120,8 +120,8 @@ def test_load_errors_name_external_set_location_recovery(spark):
     now-missing path. Both loaders must name the SET LOCATION step."""
     from pyveb_spark.session import local_df
     from pyveb_spark.sinks.index_store import (
+        load_bucketed_index,
         load_minhash_index,
-        load_simhash_index,
     )
     from pyveb_spark.sinks.writers import write_bucketed_table
 
@@ -141,7 +141,7 @@ def test_load_errors_name_external_set_location_recovery(spark):
         with pytest.raises(RuntimeError, match="SET LOCATION"):
             load_minhash_index(spark, table, "/nonexistent")
         with pytest.raises(RuntimeError, match="SET LOCATION"):
-            load_simhash_index(spark, table)
+            load_bucketed_index(spark, table)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
         spark.sql(f"DROP TABLE IF EXISTS {stage}")
@@ -383,7 +383,7 @@ def test_phrase_index_lifecycle_and_width_mismatch(spark, tmp_path):
     from pyveb_spark.sinks.index_store import (
         append_ngram_index,
         compact_bucketed_index,
-        load_ngram_index,
+        load_bucketed_index,
         save_ngram_index,
     )
 
@@ -398,7 +398,7 @@ def test_phrase_index_lifecycle_and_width_mismatch(spark, tmp_path):
         )
         append_ngram_index(d.where("doc_id < 100"), table, 3)
         compact_bucketed_index(spark, table)
-        idx, meta = load_ngram_index(spark, table, with_meta=True)
+        idx, meta = load_bucketed_index(spark, table, with_meta=True)
         assert meta["n"] == 3
         got = sorted(
             tuple(r)
@@ -425,7 +425,7 @@ def test_bm25_loader_detects_crashed_swap(spark, tmp_path):
     from pyveb_spark.session import local_df
     from pyveb_spark.sinks.index_store import (
         load_bm25_index,
-        load_ngram_index,
+        load_bucketed_index,
     )
     from pyveb_spark.sinks.writers import write_bucketed_table
 
@@ -445,7 +445,7 @@ def test_bm25_loader_detects_crashed_swap(spark, tmp_path):
         with pytest.raises(RuntimeError, match="SET LOCATION"):
             load_bm25_index(spark, table, str(tmp_path / "dl"))
         with pytest.raises(RuntimeError, match="SET LOCATION"):
-            load_ngram_index(spark, table)
+            load_bucketed_index(spark, table)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
         spark.sql(f"DROP TABLE IF EXISTS {stage}")
