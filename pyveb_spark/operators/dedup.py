@@ -30,6 +30,8 @@ from functools import lru_cache
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pyveb_spark.operators.cache import cached_once
+
 __all__ = [
     "exact_dedup",
     "keep_first",
@@ -342,14 +344,11 @@ def ngram_jaccard_pairs(
     # join), and without a cache each read re-runs the md5 over every
     # shingle of every document — the single most CPU-expensive scan
     # expression in the operator (guide §5: cache when reused and
-    # recompute is more expensive). Same bounded-slot discipline as the
-    # prefix table (_PERSISTED_PREFIXES, evicted together below); size is
-    # Σ|shingle set| longs — MEMORY_AND_DISK-spillable at any SF, and the
-    # same frame the lookup path already persists (_PERSISTED_LOOKUP_*).
-    while _PERSISTED_PREFIXES:
-        _PERSISTED_PREFIXES.pop().unpersist(blocking=False)
-    docs = _doc_shingle_sets(df, id_col, text_col, n).persist()
-    _PERSISTED_PREFIXES.append(docs)
+    # recompute is more expensive). Size is Σ|shingle set| longs —
+    # MEMORY_AND_DISK-spillable at any SF.
+    docs = cached_once(
+        _doc_shingle_sets(df, id_col, text_col, n), "dedup.pairs.shingle_sets"
+    )
     postings = docs.select(id_col, "__n", F.explode("__grams").alias("__g"))
     gfreq = postings.groupBy("__g").agg(F.count(F.lit(1)).alias("__df"))
     # canonical order: ascending (df, gram); prefix = rarest shingles.
@@ -372,21 +371,13 @@ def ngram_jaccard_pairs(
     # not reuse the exchange across the differently-aliased sides — without
     # this the whole postings→freq→rank pipeline runs twice. Size is
     # ~(1−t)·Σ|doc| rows of (id, int, long) — trivially cacheable at any SF.
-    # The previous call's cache entry is released (the returned plan is
-    # lazy, so the caller can't unpersist) — at most one prefix table stays
-    # cached per process.
-    # unpersist BEFORE persist (done above, together with the docs
-    # frame): cache entries are keyed by plan equality, so on a repeated
-    # identical call persist() no-ops against the old entry and a popped
-    # unpersist afterwards would drop the shared entry, leaving the new
-    # call uncached (see text.py::winnow_pairs).
-    pref = (
+    pref = cached_once(
         postings.join(gfreq, "__g")
         .withColumn("__p", F.row_number().over(w) - 1)
         .where(F.col("__p") < prefix_len)
-        .select(id_col, "__n", "__p", "__g")
-    ).persist()
-    _PERSISTED_PREFIXES.append(pref)
+        .select(id_col, "__n", "__p", "__g"),
+        "dedup.ngram_jaccard_pairs.prefixes",
+    )
     # Pin the self-join exchange width (layout.pin_width — the q17 rule):
     # the prefix table is BYTES-tiny but the __g join's output explodes
     # (Σ prefix_df²), so AQE's bytes-based coalescing — reachable inside
@@ -444,14 +435,6 @@ def ngram_jaccard_pairs(
         .dropDuplicates([a, b])
     )
     return _verify_jaccard(cand, docs, id_col, threshold)
-
-
-# see ngram_jaccard_pairs: cache bookkeeping for the prefix-postings table
-_PERSISTED_PREFIXES: list[DataFrame] = []
-
-# at most one cached lookup-postings frame per process (minhash_lsh_lookup's
-# derive-blacklist-on-the-fly branch); new persists evict the previous one
-_PERSISTED_LOOKUP_POSTINGS: list[DataFrame] = []
 
 
 # Portable hashing: every hash in the MinHash/SimHash pipelines must be
@@ -640,12 +623,10 @@ def minhash_lsh_pairs(
     _check_banding(num_hashes, bands)
     a, b_ = f"{id_col}_a", f"{id_col}_b"
     # Same three-read pattern as ngram_jaccard_pairs: the hashed shingle
-    # sets feed the signature pipeline AND both verify sides — persist
-    # once per call (bounded slot shared with the prefix table).
-    while _PERSISTED_PREFIXES:
-        _PERSISTED_PREFIXES.pop().unpersist(blocking=False)
-    docs = _doc_shingle_sets(df, id_col, text_col, n).persist()
-    _PERSISTED_PREFIXES.append(docs)
+    # sets feed the signature pipeline AND both verify sides (same slot).
+    docs = cached_once(
+        _doc_shingle_sets(df, id_col, text_col, n), "dedup.pairs.shingle_sets"
+    )
     sets = docs.where(F.size("__grams") > 0)
     sig = sets.select(F.col(id_col), *_minhash_cols_aliased(num_hashes))
     # one (band_idx, band_hash) row per band → a single self-join keyed on
@@ -880,38 +861,10 @@ def minhash_lsh_lookup(
         else:
             # Deriving the blacklist on the fly reads the index twice
             # (blacklist aggregation + candidate join); persist the
-            # postings so the expensive minhash pipeline runs once. At
-            # most one such cache is kept per process (previous one is
-            # unpersisted — the text.py postings pattern); production
-            # passes a persisted blacklist and never hits this branch.
-            # evict the previous cache ONLY when the plan actually
-            # changed: repeated lookups against the same index (bench
-            # warm runs, successive admission batches in one session)
-            # must keep hitting the CacheManager — the eager eviction an
-            # earlier fix did here forced every call to re-run the full
-            # minhash pipeline (~2x the lookup cost)
-            def _same_plan(x: DataFrame, y: DataFrame) -> bool:
-                return bool(
-                    x._jdf.queryExecution()
-                    .analyzed()
-                    .sameResult(y._jdf.queryExecution().analyzed())
-                )
-
-            cached = next(
-                (
-                    old
-                    for old in _PERSISTED_LOOKUP_POSTINGS
-                    if _same_plan(old, b)
-                ),
-                None,
-            )
-            if cached is not None:
-                b = cached
-            else:
-                while _PERSISTED_LOOKUP_POSTINGS:
-                    _PERSISTED_LOOKUP_POSTINGS.pop().unpersist()
-                b = b.persist()
-                _PERSISTED_LOOKUP_POSTINGS.append(b)
+            # postings so the expensive minhash pipeline runs once.
+            # Production passes a persisted blacklist and never hits
+            # this branch.
+            b = cached_once(b, "dedup.minhash_lsh_lookup.postings")
             derived = minhash_hot_buckets(
                 b.select("__band", "__h"), max_bucket_size
             )

@@ -15,6 +15,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pyveb_spark.operators.cache import cached_once
+
 __all__ = [
     "tokenize",
     "regex_tokens",
@@ -38,10 +40,6 @@ __all__ = [
     "fim_transform",
     "preference_pairs",
 ]
-
-# see dedup.py::_PERSISTED_PREFIXES for the pattern: the returned plan is
-# lazy so the caller can't unpersist; keep at most one postings table cached
-_PERSISTED_POSTINGS: list[DataFrame] = []
 
 # tiny built-in stopword marker sets per language for the heuristic lang-id;
 # the corpus convention (FIXTURES.md documents table) is space-separated text
@@ -342,16 +340,10 @@ def winnow_pairs(
     narrow = df.select(id_col, text_col).repartition(
         df.sparkSession.sparkContext.defaultParallelism
     )
-    # unpersist BEFORE persist: Spark's CacheManager keys entries by plan
-    # equality, so a repeated call builds the *same* plan and its persist()
-    # is a no-op against the existing entry ("already cached data");
-    # unpersisting the old handle afterwards would then drop that shared
-    # entry and leave the new call uncached — every later run pays the
-    # collapsed-plan cost this cache exists to prevent (measured 3×).
-    while _PERSISTED_POSTINGS:
-        _PERSISTED_POSTINGS.pop().unpersist(blocking=False)
-    fp = winnow_fingerprints(narrow, id_col, text_col, k, w).persist()
-    _PERSISTED_POSTINGS.append(fp)
+    fp = cached_once(
+        winnow_fingerprints(narrow, id_col, text_col, k, w),
+        "text.winnow_pairs.fingerprints",
+    )
     ex = fp.select(id_col, F.explode("fingerprints").alias("__f"))
     a_id, b_id = f"{id_col}_a", f"{id_col}_b"
     a = ex.select(F.col(id_col).alias(a_id), "__f")

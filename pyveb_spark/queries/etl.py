@@ -15,11 +15,6 @@ from pyveb_spark.operators.joins import asof_join
 from pyveb_spark.queries._helpers import _dec, _query_vec
 from pyveb_spark.sources.readers import read_table
 
-# at most one pinned (dup_ids, contam_ids) pair per process — the q180
-# intra-plan subtree pins; evicted at the next q180 call (see below)
-_Q180_PINNED: list[DataFrame] = []
-
-
 
 # ---------------------------------------------------------------------------
 # §2.2 merge: upsert semantics (delete-then-insert, rs_client.py:242-283)
@@ -605,26 +600,24 @@ def q180_ingest_recipe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # LSH admission lookup executes once per leg that references
     # dup_ids/pass2 (4 legs + the packing subquery) and the
     # decontamination pipeline three times (guide §5 caching rule). Both
-    # frames are batch-sized id lists; previous call's pins are evicted
-    # here (bounded memory, fresh compute per invocation).
-    while _Q180_PINNED:
-        _Q180_PINNED.pop().unpersist(blocking=False)
-    dup_ids = (
+    # frames are batch-sized id lists.
+    dup_ids = cached_once(
         minhash_lsh_lookup(
             pass1, index, "doc_id", "text", threshold=0.8, hot_buckets=hot
         )
         .select(F.col("doc_id_new").alias("doc_id"))
-        .distinct()
-        .persist()
+        .distinct(),
+        "q180_dup_ids",
     )
-    _Q180_PINNED.append(dup_ids)
     duplicate = pass1.join(dup_ids, "doc_id", "left_semi")
     pass2 = pass1.join(dup_ids, "doc_id", "left_anti")
 
-    contam_ids = fuzzy_decontaminate(
-        pass2, eval_docs, "doc_id", "text", threshold=0.7, widen=False
-    ).select("doc_id").persist()
-    _Q180_PINNED.append(contam_ids)
+    contam_ids = cached_once(
+        fuzzy_decontaminate(
+            pass2, eval_docs, "doc_id", "text", threshold=0.7, widen=False
+        ).select("doc_id"),
+        "q180_contam_ids",
+    )
     contaminated = pass2.join(contam_ids, "doc_id", "left_semi")
     admitted = pass2.join(contam_ids, "doc_id", "left_anti")
 

@@ -1742,3 +1742,53 @@ def test_audio_fingerprint_parses_real_wav_bytes(spark):
     }
     assert got == {0: py_fp(0), 1: py_fp(1), 2: py_fp(0), 3: py_fp(5)}
     assert got[0] == got[2] and got[0] != got[1]
+
+
+def test_cache_slots_reuse_identical_plans_and_evict_new_ones(spark):
+    """``cached_once`` keeps one frame per slot: an identical repeated
+    call reuses it, a call on new input unpersists it, so repeated
+    ``ngram_jaccard_pairs`` calls on three inputs leave one cached frame
+    in each of its two slots. A renamed input is a new plan."""
+    from pyveb_spark.operators import cache
+    from pyveb_spark.operators.dedup import ngram_jaccard_pairs
+
+    slots = ("dedup.pairs.shingle_sets", "dedup.ngram_jaccard_pairs.prefixes")
+    words = [f"w{i}" for i in range(30)]
+
+    def docs(shift):
+        texts = [" ".join(words[s + shift:s + shift + 12]) for s in (0, 6)]
+        return spark.createDataFrame(
+            [(1, texts[0]), (2, texts[0] + " x"), (3, texts[1])],
+            "doc_id long, text string",
+        )
+
+    try:
+        first = docs(0)
+        pairs = ngram_jaccard_pairs(first, "doc_id", "text").collect()
+        assert [(r.doc_id_a, r.doc_id_b) for r in pairs] == [(1, 2)]
+        held = {s: cache._SLOTS[s] for s in slots}
+        ngram_jaccard_pairs(first, "doc_id", "text").collect()
+        assert all(cache._SLOTS[s] is held[s] for s in slots)
+        assert all(held[s].storageLevel.useMemory for s in slots)
+
+        seen = {s: [held[s]] for s in slots}
+        for shift in (1, 2):
+            ngram_jaccard_pairs(docs(shift), "doc_id", "text").collect()
+            for s in slots:
+                seen[s].append(cache._SLOTS[s])
+        for s in slots:
+            *old, live = seen[s]
+            assert len({id(f) for f in seen[s]}) == 3
+            assert live.storageLevel.useMemory
+            assert not any(
+                f.storageLevel.useMemory or f.storageLevel.useDisk
+                for f in old
+            )
+        # sameResult ignores output names: a renamed input is a new frame
+        r = spark.range(3)
+        for name in ("a", "b"):
+            got = cache.cached_once(r.withColumnRenamed("id", name), slots[0])
+            assert got.columns == [name]
+    finally:
+        for s in slots:
+            cache.clear_slot(s)
