@@ -1477,7 +1477,6 @@ def cross_source_overlap(
     text_col: str,
     chunk_tokens: int = 12,
     delimiter: str = " ",
-    widen: bool = False,
 ) -> DataFrame:
     """Pairwise CONTENT overlap between corpus partitions (sources,
     crawl dumps, snapshots): chunk every document (the ``chunk_stats``
@@ -1496,17 +1495,10 @@ def cross_source_overlap(
     chunk)² — bounded by |groups|², not documents. One distinct shuffle,
     one hash-keyed join, one pair aggregation; fixed-width md5 keys.
 
-    ``widen`` is OPT-IN (r13): the per-row work here is one split + slice
-    + md5 per chunk — cheap enough that a round-robin shuffle of the full
-    document text costs more than it buys on subset-sized inputs
-    (measured r12: q149 ×0.73 with the widen on, 8 cores beating 32).
-    Corpus-scale callers with a single-split scan can pass
-    ``widen=True``; at production split counts ``widen_scan`` is a
-    structural no-op either way."""
-    if widen:
-        from pyveb_spark.operators.layout import widen_scan
-
-        df = widen_scan(df)
+    No ``widen_scan``: the per-row work here is one split + slice + md5
+    per chunk — cheap enough that a round-robin shuffle of the full
+    document text costs more than it buys (measured r12: q149 ×0.73
+    with the widen on, 8 cores beating 32)."""
     toks = F.split(F.coalesce(F.col(text_col), F.lit("")), delimiter)
     n_chunks = F.ceil(F.size(toks) / F.lit(chunk_tokens)).cast("int")
     chunks = (

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from pyveb_spark.operators.cleaning import clean_old_dates
 from pyveb_spark.operators.joins import asof_join
-from pyveb_spark.queries._helpers import _dec, _query_vec
+from pyveb_spark.queries._helpers import _dec, _query_vec, query_scratch
 from pyveb_spark.sources.readers import read_table
 
 
@@ -1246,19 +1246,10 @@ def q208_minhash_persisted_admission(
     bucketed table, blacklist refresh rides compaction (staleness only
     loosens the skew guard). Pre-checkpoint plan gated via
     :func:`_q208_frame` (test_index_store.py)."""
-    import shutil
-    import tempfile
-    import uuid
-
-    table = f"q208_minhash_idx_{uuid.uuid4().hex[:8]}"
-    tmp = tempfile.mkdtemp(prefix="q208_")
-    try:
-        return _q208_frame(spark, sf_dir, tmp, table).localCheckpoint(
-            eager=True
-        )
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        shutil.rmtree(tmp, ignore_errors=True)
+    with query_scratch(spark, "q208") as s:
+        return _q208_frame(
+            spark, sf_dir, s.dir, s.name("minhash_idx")
+        ).localCheckpoint(eager=True)
 
 
 def _q208_frame(
@@ -1393,19 +1384,10 @@ def q209_minhash_index_evolution(
     appends are new files in existing buckets. This is the shape a
     continuous ingest runs forever. Pre-checkpoint plan gated via
     :func:`_q209_frame` (test_index_store.py)."""
-    import shutil
-    import tempfile
-    import uuid
-
-    table = f"q209_minhash_idx_{uuid.uuid4().hex[:8]}"
-    tmp = tempfile.mkdtemp(prefix="q209_")
-    try:
-        return _q209_frame(spark, sf_dir, tmp, table).localCheckpoint(
-            eager=True
-        )
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        shutil.rmtree(tmp, ignore_errors=True)
+    with query_scratch(spark, "q209") as s:
+        return _q209_frame(
+            spark, sf_dir, s.dir, s.name("minhash_idx")
+        ).localCheckpoint(eager=True)
 
 
 def _q209_frame(
@@ -1598,19 +1580,10 @@ def q216_minhash_compacted_evolution(
     lookups before and after read identical postings through fewer
     opens. Pre-checkpoint plan covered by the q209 gate row
     (test_index_store.py — same builder, ``compact=True``)."""
-    import shutil
-    import tempfile
-    import uuid
-
-    table = f"q216_minhash_idx_{uuid.uuid4().hex[:8]}"
-    tmp = tempfile.mkdtemp(prefix="q216_")
-    try:
+    with query_scratch(spark, "q216") as s:
         return _q209_frame(
-            spark, sf_dir, tmp, table, compact=True
+            spark, sf_dir, s.dir, s.name("minhash_idx"), compact=True
         ).localCheckpoint(eager=True)
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 _Q216_SQL = _Q209_SQL
@@ -1652,20 +1625,10 @@ def q219_simhash_persisted_admission(
     fingerprint fold + one bucketed equijoin); appends are batch-sized;
     compaction is the shared crash-safe aligned rewrite, off the ingest
     path. Pre-checkpoint plan gated via :func:`_q219_frame`."""
-    import shutil
-    import tempfile
-    import uuid
-
-    table = f"q219_simhash_idx_{uuid.uuid4().hex[:8]}"
-    tmp = tempfile.mkdtemp(prefix="q219_")
-    try:
-        return _q219_frame(spark, sf_dir, tmp, table).localCheckpoint(
-            eager=True
-        )
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        spark.sql(f"DROP TABLE IF EXISTS {table}__compact_stage")
-        shutil.rmtree(tmp, ignore_errors=True)
+    with query_scratch(spark, "q219") as s:
+        return _q219_frame(
+            spark, sf_dir, s.dir, s.name("simhash_idx")
+        ).localCheckpoint(eager=True)
 
 
 def _q219_frame(

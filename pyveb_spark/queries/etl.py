@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from pyveb_spark.operators.cleaning import clean_old_dates
 from pyveb_spark.operators.joins import asof_join
-from pyveb_spark.queries._helpers import _dec, _query_vec
+from pyveb_spark.queries._helpers import _dec, _query_vec, query_scratch
 from pyveb_spark.sources.readers import read_table
 
 
@@ -78,15 +78,10 @@ def q32_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     processes and S3 staging between them (SURVEY §3.1); here extract,
     transform and merge fuse into one lazy plan per run."""
     import os
-    import shutil
-    import tempfile
 
     from pyveb_spark.operators.cleaning import clean_old_dates, nan_to_null
     from pyveb_spark.plans.pipeline import Pipeline, PipelineStep
     from pyveb_spark.sinks.merge import ParquetMergeSink
-
-    tmp = tempfile.mkdtemp(prefix="q86_")
-    sink = ParquetMergeSink(spark, os.path.join(tmp, "table"))
 
     def agg(df: DataFrame) -> DataFrame:
         return (
@@ -100,26 +95,27 @@ def q32_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    pipe = Pipeline(
-        name="orders_rollup",
-        source=lambda s: read_table(s, sf_dir, "orders"),
-        steps=[
-            PipelineStep("clamp", clean_old_dates,
-                         {"cols": ["o_orderdate"], "floor": "1996-01-01"}),
-            PipelineStep("nulls", nan_to_null, {"cols": ["o_orderstatus"]}),
-            PipelineStep("rollup", agg),
-        ],
-        sink=lambda df: sink.upsert(df, keys=["order_year", "priority"]),
-    )
-    try:
+    with query_scratch(spark, "q32") as s:
+        sink = ParquetMergeSink(spark, os.path.join(s.dir, "table"))
+        pipe = Pipeline(
+            name="orders_rollup",
+            source=lambda sess: read_table(sess, sf_dir, "orders"),
+            steps=[
+                PipelineStep("clamp", clean_old_dates,
+                             {"cols": ["o_orderdate"], "floor": "1996-01-01"}),
+                PipelineStep("nulls", nan_to_null, {"cols": ["o_orderstatus"]}),
+                PipelineStep("rollup", agg),
+            ],
+            sink=lambda df: sink.upsert(df, keys=["order_year", "priority"]),
+        )
         pipe.run(spark)
         pipe.run(spark)  # idempotent re-run: same keys upsert to same state
-        out = sink.read().orderBy("order_year", "priority")
-        # materialize before the temp dir is removed (eager checkpoint,
-        # not collect-and-rebuild — the q26 treatment)
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        # eager checkpoint, not collect-and-rebuild — the q26 treatment
+        return (
+            sink.read()
+            .orderBy("order_year", "priority")
+            .localCheckpoint(eager=True)
+        )
 
 
 _Q32_SQL = """

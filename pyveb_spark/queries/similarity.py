@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from pyveb_spark.operators.cleaning import clean_old_dates
 from pyveb_spark.operators.joins import asof_join
-from pyveb_spark.queries._helpers import _dec, _query_vec
+from pyveb_spark.queries._helpers import _dec, _query_vec, query_scratch
 from pyveb_spark.sources.readers import read_table
 
 
@@ -1634,14 +1634,8 @@ def q207_ivf_persisted_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     can't see through the checkpoint scan) is gated by
     ``tests/test_index_store.py::test_lifecycle_pre_checkpoint_plans``
     via :func:`_q207_frame`."""
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="q207_")
-    try:
-        return _q207_frame(spark, sf_dir, tmp).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    with query_scratch(spark, "q207") as s:
+        return _q207_frame(spark, sf_dir, s.dir).localCheckpoint(eager=True)
 
 
 def _q207_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
@@ -1732,15 +1726,8 @@ def q210_ivf_incremental_admission(
     shuffle; searches keep paying only ~nprobe/n_lists of the (grown)
     corpus via partition pruning. Pre-checkpoint plan gated via
     :func:`_q210_frame` (test_index_store.py)."""
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="q210_")
-    try:
-        frame = _q210_frame(spark, sf_dir, tmp)
-        return frame.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    with query_scratch(spark, "q210") as s:
+        return _q210_frame(spark, sf_dir, s.dir).localCheckpoint(eager=True)
 
 
 def _q210_frame(
@@ -1858,14 +1845,8 @@ def q211_ivf_index_health(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantizer), assignment argmin over all vectors, grouped split
     counts — the q210 CTEs plus integer arithmetic. Pre-checkpoint plan
     gated via :func:`_q211_frame` (test_index_store.py)."""
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="q211_")
-    try:
-        return _q211_frame(spark, sf_dir, tmp).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    with query_scratch(spark, "q211") as s:
+        return _q211_frame(spark, sf_dir, s.dir).localCheckpoint(eager=True)
 
 
 def _q211_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
@@ -1989,14 +1970,8 @@ def q213_pq_persisted_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONLY it (shuffle-free TakeOrdered heap) — the reloaded-model serving
     shape every FAISS deployment runs. Pre-checkpoint plan gated via
     :func:`_q213_frame` (test_index_store.py)."""
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="q213_")
-    try:
-        return _q213_frame(spark, sf_dir, tmp).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    with query_scratch(spark, "q213") as s:
+        return _q213_frame(spark, sf_dir, s.dir).localCheckpoint(eager=True)
 
 
 def _q213_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
@@ -2066,14 +2041,8 @@ def q214_sq8_persisted_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     q213's codes table) — kept in-plan here so the query certifies the
     STATS round trip in isolation. Pre-checkpoint plan gated via
     :func:`_q214_frame` (test_index_store.py)."""
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="q214_")
-    try:
-        return _q214_frame(spark, sf_dir, tmp).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    with query_scratch(spark, "q214") as s:
+        return _q214_frame(spark, sf_dir, s.dir).localCheckpoint(eager=True)
 
 
 def _q214_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
@@ -2125,14 +2094,8 @@ def q215_ivfpq_persisted_serving(
     the two effects this tranche made durable, now composed. Pre-
     checkpoint plan gated via :func:`_q215_frame`
     (test_index_store.py)."""
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="q215_")
-    try:
-        return _q215_frame(spark, sf_dir, tmp).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    with query_scratch(spark, "q215") as s:
+        return _q215_frame(spark, sf_dir, s.dir).localCheckpoint(eager=True)
 
 
 def _q215_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
@@ -2217,15 +2180,10 @@ def q217_ivf_compacted_search(
     (no shuffle — ``repartition`` by the partition column), runs per
     partition and is throttleable; probes before and after read the
     same pruned byte ranges, just through fewer opens."""
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="q217_")
-    try:
-        return _q210_frame(spark, sf_dir, tmp, compact=True
-                           ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    with query_scratch(spark, "q217") as s:
+        return _q210_frame(
+            spark, sf_dir, s.dir, compact=True
+        ).localCheckpoint(eager=True)
 
 
 _Q217_SQL = _Q210_SQL
@@ -2264,14 +2222,8 @@ def q222_ivf_rebuild_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-pruned probe. Balance-improvement and crash-window
     recovery are pinned by tests (test_r12_operators.py).
     Pre-checkpoint plan gated via :func:`_q222_frame`."""
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="q222_")
-    try:
-        return _q222_frame(spark, sf_dir, tmp).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    with query_scratch(spark, "q222") as s:
+        return _q222_frame(spark, sf_dir, s.dir).localCheckpoint(eager=True)
 
 
 def _q222_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:

@@ -7,14 +7,32 @@ in ``pyveb_spark.queries.__doc__``. Registry/gate-window order lives in
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pyveb_spark.operators.cleaning import clean_old_dates
 from pyveb_spark.operators.joins import asof_join
-from pyveb_spark.queries._helpers import _dec, _query_vec
+from pyveb_spark.queries._helpers import _dec, _query_vec, query_scratch
 from pyveb_spark.sources.readers import read_table
 
+
+@contextmanager
+def _state_width(spark: SparkSession) -> Iterator[None]:
+    """Narrow the streaming state width to 4 for an AvailableNow replay.
+    One state store per shuffle partition is created at the checkpoint's
+    FIRST start and initialized every micro-batch; at replay scale 4
+    stores cover the key space, so don't pay 32 store inits per batch.
+    Every caller runs on a fresh checkpoint, which makes the narrowed
+    setting safe; the session value is restored on exit."""
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
 
 
 # ---------------------------------------------------------------------------
@@ -135,8 +153,6 @@ def q40_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized result. Exercises readStream → window agg → memory sink
     under the driver's rows-only gate."""
     import os
-    import tempfile
-    import uuid
 
     from pyveb_spark.streaming.stream import (
         read_file_stream,
@@ -145,52 +161,38 @@ def q40_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     src = read_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="q40_")
-    drops = os.path.join(tmp, "drops")
-    src.repartition(2).write.mode("overwrite").parquet(drops)
-    stream = read_file_stream(spark, drops, src.schema, max_files_per_trigger=1)
-    windowed = windowed_agg(
-        stream,
-        ts_col="ts",
-        window_duration="1 day",
-        aggs={"n_events": F.count(F.lit(1))},
-        group_by=["event_type"],
-    )
-    name = f"q40_{uuid.uuid4().hex[:8]}"
-    # streaming state width: one state store per shuffle partition is
-    # created at the checkpoint's FIRST start and initialized every
-    # micro-batch; at replay scale 4 stores cover the (type×day) key
-    # space, so don't pay 32 store inits per batch. Fresh checkpoint per
-    # call makes the narrowed setting safe; restored in finally.
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = run_available_now(
-            windowed,
-            os.path.join(tmp, "ck"),
-            output_mode="complete",
-            fmt="memory",
-            query_name=name,
+    with query_scratch(spark, "q40") as s:
+        drops = os.path.join(s.dir, "drops")
+        src.repartition(2).write.mode("overwrite").parquet(drops)
+        stream = read_file_stream(
+            spark, drops, src.schema, max_files_per_trigger=1
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("q40 stream replay did not finish within 300s")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
-        # the memory sink holds the result; the staged drops + checkpoint
-        # are no longer needed (and would otherwise accrete per run)
-        import shutil
-
-        shutil.rmtree(tmp, ignore_errors=True)
-    return (
-        spark.table(name)
-        .select(
-            F.date_format("window_start", "yyyy-MM-dd").alias("day"),
-            "event_type",
-            "n_events",
+        windowed = windowed_agg(
+            stream,
+            ts_col="ts",
+            window_duration="1 day",
+            aggs={"n_events": F.count(F.lit(1))},
+            group_by=["event_type"],
         )
-        .orderBy("day", "event_type")
-    )
+        name = s.name("sink")
+        with _state_width(spark):
+            run_available_now(
+                windowed,
+                os.path.join(s.dir, "ck"),
+                output_mode="complete",
+                fmt="memory",
+                query_name=name,
+            )
+        return (
+            spark.table(name)
+            .select(
+                F.date_format("window_start", "yyyy-MM-dd").alias("day"),
+                "event_type",
+                "n_events",
+            )
+            .orderBy("day", "event_type")
+            .localCheckpoint(eager=True)
+        )
 
 
 # F.window(ts, '1 day') buckets are epoch-aligned UTC days — identical to
@@ -221,9 +223,6 @@ def q49_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the AvailableNow replay processes the whole fixture, so the final
     count table equals the batch interval join the DuckDB oracle runs."""
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from pyveb_spark.streaming.stream import (
         read_file_stream,
@@ -232,55 +231,46 @@ def q49_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     src = read_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="q49_")
-    drops = os.path.join(tmp, "drops")
-    src.repartition(2).write.mode("overwrite").parquet(drops)
-    stream = read_file_stream(spark, drops, src.schema)
-    clicks = stream.where(F.col("event_type") == "click").select(
-        "user_id",
-        F.col("ts").alias("ts_click"),
-        F.col("event_id").alias("click_id"),
-    )
-    buys = stream.where(F.col("event_type") == "purchase").select(
-        "user_id",
-        F.col("ts").alias("ts_buy"),
-        F.col("event_id").alias("buy_id"),
-    )
-    joined = stream_interval_join(
-        clicks,
-        buys,
-        keys=["user_id"],
-        left_ts="ts_click",
-        right_ts="ts_buy",
-        max_delay="2 days",
-        watermark="1 day",
-    ).select("user_id", "click_id", "buy_id")
-    name = f"q49_{uuid.uuid4().hex[:8]}"
-    # narrow the streaming state width (one store per shuffle partition,
-    # ×2 join sides) for the replay; fresh checkpoint per call, restored
-    # in finally — same rationale as q40
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = run_available_now(
-            joined,
-            os.path.join(tmp, "ck"),
-            output_mode="append",
-            fmt="memory",
-            query_name=name,
+    with query_scratch(spark, "q49") as s:
+        drops = os.path.join(s.dir, "drops")
+        src.repartition(2).write.mode("overwrite").parquet(drops)
+        stream = read_file_stream(spark, drops, src.schema)
+        clicks = stream.where(F.col("event_type") == "click").select(
+            "user_id",
+            F.col("ts").alias("ts_click"),
+            F.col("event_id").alias("click_id"),
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("q49 stream attribution did not finish in 300s")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
-        shutil.rmtree(tmp, ignore_errors=True)
-    return (
-        spark.table(name)
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_attributed"))
-        .orderBy("user_id")
-    )
+        buys = stream.where(F.col("event_type") == "purchase").select(
+            "user_id",
+            F.col("ts").alias("ts_buy"),
+            F.col("event_id").alias("buy_id"),
+        )
+        joined = stream_interval_join(
+            clicks,
+            buys,
+            keys=["user_id"],
+            left_ts="ts_click",
+            right_ts="ts_buy",
+            max_delay="2 days",
+            watermark="1 day",
+        ).select("user_id", "click_id", "buy_id")
+        name = s.name("sink")
+        # one state store per shuffle partition, ×2 join sides
+        with _state_width(spark):
+            run_available_now(
+                joined,
+                os.path.join(s.dir, "ck"),
+                output_mode="append",
+                fmt="memory",
+                query_name=name,
+            )
+        return (
+            spark.table(name)
+            .groupBy("user_id")
+            .agg(F.count(F.lit(1)).alias("n_attributed"))
+            .orderBy("user_id")
+            .localCheckpoint(eager=True)
+        )
 
 
 _Q49_SQL = """
@@ -311,9 +301,6 @@ def q46_stream_stateful_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch DISTINCT. Keep the drop a single-trigger load (or widen the
     watermark past the fixture's day span) when changing file layout."""
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from pyveb_spark.streaming.stream import (
         read_file_stream,
@@ -322,32 +309,27 @@ def q46_stream_stateful_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     src = read_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="q82_")
-    drops = os.path.join(tmp, "drops")
-    src.repartition(2).write.mode("overwrite").parquet(drops)
-    stream = read_file_stream(spark, drops, src.schema)
-    dd = stateful_dedup(
-        stream.select(
-            "user_id", "event_type", F.to_date("ts").alias("day"), "ts"
-        ),
-        ["user_id", "event_type", "day"],
-        ts_col="ts",
-        watermark="1 day",
-    ).drop("ts")
-    name = f"q82_{uuid.uuid4().hex[:8]}"
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = run_available_now(
-            dd,
-            os.path.join(tmp, "ck"),
-            output_mode="append",
-            fmt="memory",
-            query_name=name,
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("q46 stateful dedup replay did not finish")
+    with query_scratch(spark, "q46") as s:
+        drops = os.path.join(s.dir, "drops")
+        src.repartition(2).write.mode("overwrite").parquet(drops)
+        stream = read_file_stream(spark, drops, src.schema)
+        dd = stateful_dedup(
+            stream.select(
+                "user_id", "event_type", F.to_date("ts").alias("day"), "ts"
+            ),
+            ["user_id", "event_type", "day"],
+            ts_col="ts",
+            watermark="1 day",
+        ).drop("ts")
+        name = s.name("sink")
+        with _state_width(spark):
+            q = run_available_now(
+                dd,
+                os.path.join(s.dir, "ck"),
+                output_mode="append",
+                fmt="memory",
+                query_name=name,
+            )
         # pin the single-micro-batch dependence the docstring explains:
         # every input row must arrive in batch 0 (later batches are only
         # the empty state-cleanup trigger AvailableNow appends)
@@ -363,15 +345,13 @@ def q46_stream_stateful_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "duplicates and the batch oracle no longer applies; see "
                 "docstring"
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
-        shutil.rmtree(tmp, ignore_errors=True)
-    return (
-        spark.table(name)
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n_user_days"))
-        .orderBy("event_type")
-    )
+        return (
+            spark.table(name)
+            .groupBy("event_type")
+            .agg(F.count(F.lit(1)).alias("n_user_days"))
+            .orderBy("event_type")
+            .localCheckpoint(eager=True)
+        )
 
 
 _Q46_SQL = """
@@ -391,9 +371,6 @@ def q47_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     The enrichment is stateless, so the full replay equals the batch join
     the oracle runs."""
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from pyveb_spark.streaming.stream import (
         read_file_stream,
@@ -405,39 +382,32 @@ def q47_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = read_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
-    tmp = tempfile.mkdtemp(prefix="q83_")
-    drops = os.path.join(tmp, "drops")
-    src.repartition(2).write.mode("overwrite").parquet(drops)
-    stream = read_file_stream(spark, drops, src.schema)
-    enriched = stream_enrich(
-        stream.select("event_id", "user_id", "event_type"),
-        cust,
-        keys=["user_id"],
-        how="inner",
-    )
-    name = f"q83_{uuid.uuid4().hex[:8]}"
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = run_available_now(
-            enriched,
-            os.path.join(tmp, "ck"),
-            output_mode="append",
-            fmt="memory",
-            query_name=name,
+    with query_scratch(spark, "q47") as s:
+        drops = os.path.join(s.dir, "drops")
+        src.repartition(2).write.mode("overwrite").parquet(drops)
+        stream = read_file_stream(spark, drops, src.schema)
+        enriched = stream_enrich(
+            stream.select("event_id", "user_id", "event_type"),
+            cust,
+            keys=["user_id"],
+            how="inner",
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("q47 stream enrich replay did not finish")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
-        shutil.rmtree(tmp, ignore_errors=True)
-    return (
-        spark.table(name)
-        .groupBy("c_mktsegment", "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .orderBy("c_mktsegment", "event_type")
-    )
+        name = s.name("sink")
+        with _state_width(spark):
+            run_available_now(
+                enriched,
+                os.path.join(s.dir, "ck"),
+                output_mode="append",
+                fmt="memory",
+                query_name=name,
+            )
+        return (
+            spark.table(name)
+            .groupBy("c_mktsegment", "event_type")
+            .agg(F.count(F.lit(1)).alias("n_events"))
+            .orderBy("c_mktsegment", "event_type")
+            .localCheckpoint(eager=True)
+        )
 
 
 _Q47_SQL = """
@@ -459,8 +429,6 @@ def q26_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     key). That multi-batch-safe equivalence is exactly what the oracle
     checks."""
     import os
-    import shutil
-    import tempfile
 
     from pyveb_spark.sinks.merge import ParquetMergeSink
     from pyveb_spark.streaming.stream import (
@@ -470,41 +438,31 @@ def q26_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     src = read_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="q84_")
-    drops = os.path.join(tmp, "drops")
-    src.repartition(2).write.mode("overwrite").parquet(drops)
-    stream = read_file_stream(spark, drops, src.schema)
-    agg = (
-        stream.where(F.col("event_type") == "purchase")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_purchases"))
-    )
-    sink = ParquetMergeSink(spark, os.path.join(tmp, "table"))
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = run_available_now(
+    with query_scratch(spark, "q26") as s, _state_width(spark):
+        drops = os.path.join(s.dir, "drops")
+        src.repartition(2).write.mode("overwrite").parquet(drops)
+        stream = read_file_stream(spark, drops, src.schema)
+        agg = (
+            stream.where(F.col("event_type") == "purchase")
+            .groupBy("user_id")
+            .agg(F.count(F.lit(1)).alias("n_purchases"))
+        )
+        sink = ParquetMergeSink(spark, os.path.join(s.dir, "table"))
+        run_available_now(
             agg,
-            os.path.join(tmp, "ck"),
+            os.path.join(s.dir, "ck"),
             foreach_batch=foreach_batch_upsert(sink, ["user_id"]),
             output_mode="update",
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("q26 stream upsert replay did not finish")
-        out = (
+        # an eager checkpoint, not collect-and-rebuild (the rebuilt frame
+        # was a Python RDD whose every scan paid 32 worker roundtrips;
+        # session.local_df docstring has the measurement)
+        return (
             sink.read()
             .select("user_id", "n_purchases")
             .orderBy("user_id")
+            .localCheckpoint(eager=True)
         )
-        # materialize before the temp table directory is removed — an
-        # eager checkpoint, not collect-and-rebuild (the rebuilt frame
-        # was a Python RDD whose every scan paid 32 worker roundtrips;
-        # session.local_df docstring has the measurement)
-        return out.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 _Q26_SQL = """
@@ -577,9 +535,6 @@ def q119_stream_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     production streams switch to append + a watermark (``windowed_agg``
     takes both) and trade the tail windows for bounded state."""
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from pyveb_spark.streaming.stream import (
         read_file_stream,
@@ -588,48 +543,41 @@ def q119_stream_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     src = read_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="q119_")
-    drops = os.path.join(tmp, "drops")
-    src.repartition(2).write.mode("overwrite").parquet(drops)
-    stream = read_file_stream(spark, drops, src.schema)
-    win = windowed_agg(
-        stream,
-        "ts",
-        "1 day",
-        {
-            "n_events": F.count(F.lit(1)),
-            "sum_value": F.sum(_dec("value")).cast("double"),
-        },
-        slide_duration="12 hours",
-        group_by=["event_type"],
-    )
-    name = f"q119_{uuid.uuid4().hex[:8]}"
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = run_available_now(
-            win,
-            os.path.join(tmp, "ck"),
-            output_mode="complete",
-            fmt="memory",
-            query_name=name,
+    with query_scratch(spark, "q119") as s:
+        drops = os.path.join(s.dir, "drops")
+        src.repartition(2).write.mode("overwrite").parquet(drops)
+        stream = read_file_stream(spark, drops, src.schema)
+        win = windowed_agg(
+            stream,
+            "ts",
+            "1 day",
+            {
+                "n_events": F.count(F.lit(1)),
+                "sum_value": F.sum(_dec("value")).cast("double"),
+            },
+            slide_duration="12 hours",
+            group_by=["event_type"],
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("q119 sliding-window replay did not finish")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
-        shutil.rmtree(tmp, ignore_errors=True)
-    return (
-        spark.table(name)
-        .select(
-            F.unix_micros("window_start").alias("window_start_us"),
-            "event_type",
-            "n_events",
-            "sum_value",
+        name = s.name("sink")
+        with _state_width(spark):
+            run_available_now(
+                win,
+                os.path.join(s.dir, "ck"),
+                output_mode="complete",
+                fmt="memory",
+                query_name=name,
+            )
+        return (
+            spark.table(name)
+            .select(
+                F.unix_micros("window_start").alias("window_start_us"),
+                "event_type",
+                "n_events",
+                "sum_value",
+            )
+            .orderBy("window_start_us", "event_type")
+            .localCheckpoint(eager=True)
         )
-        .orderBy("window_start_us", "event_type")
-    )
 
 
 _Q119_SQL = """
@@ -661,8 +609,6 @@ def q164_stream_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop or a stream, and the oracle is the batch replay. Returns
     ``(source, n_admitted, n_rejected)``."""
     import os
-    import tempfile
-    import uuid
 
     from pyveb_spark.operators.text import gopher_quality_filter
     from pyveb_spark.streaming.stream import (
@@ -671,36 +617,29 @@ def q164_stream_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     src = read_table(spark, sf_dir, "documents")
-    tmp = tempfile.mkdtemp(prefix="q164_")
-    drops = os.path.join(tmp, "drops")
-    src.repartition(2).write.mode("overwrite").parquet(drops)
-    stream = read_file_stream(spark, drops, src.schema)
-    gated = gopher_quality_filter(stream, min_words=30)
-    counts = gated.groupBy("source").agg(
-        F.sum(F.col("keep").cast("int")).alias("n_admitted"),
-        F.sum((~F.col("keep")).cast("int")).alias("n_rejected"),
-    )
-    name = f"q164_{uuid.uuid4().hex[:8]}"
-    q = run_available_now(
-        counts,
-        os.path.join(tmp, "ck"),
-        output_mode="complete",
-        fmt="memory",
-        query_name=name,
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("q164 streaming admission did not finish")
-    import shutil
-
-    out = (
-        spark.table(name)
-        .select("source", "n_admitted", "n_rejected")
-        .orderBy("source")
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    with query_scratch(spark, "q164") as s:
+        drops = os.path.join(s.dir, "drops")
+        src.repartition(2).write.mode("overwrite").parquet(drops)
+        stream = read_file_stream(spark, drops, src.schema)
+        gated = gopher_quality_filter(stream, min_words=30)
+        counts = gated.groupBy("source").agg(
+            F.sum(F.col("keep").cast("int")).alias("n_admitted"),
+            F.sum((~F.col("keep")).cast("int")).alias("n_rejected"),
+        )
+        name = s.name("sink")
+        run_available_now(
+            counts,
+            os.path.join(s.dir, "ck"),
+            output_mode="complete",
+            fmt="memory",
+            query_name=name,
+        )
+        return (
+            spark.table(name)
+            .select("source", "n_admitted", "n_rejected")
+            .orderBy("source")
+            .localCheckpoint(eager=True)
+        )
 
 
 _Q164_SQL = """
@@ -775,8 +714,6 @@ def q206_stream_lsh_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     the candidate stage back to its sf1 density). Returns ``(vec_id,
     n_matches, best_cosine, admitted)`` for every streamed vector."""
     import os
-    import shutil
-    import tempfile
 
     from pyveb_spark.operators.similarity import (
         lsh_bucket,
@@ -797,8 +734,7 @@ def q206_stream_lsh_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus.select(F.size("embedding").alias("d")).first()["d"]
     )
 
-    tmp = tempfile.mkdtemp(prefix="q206_")
-    try:
+    with query_scratch(spark, "q206") as s:
         # build parameters travel WITH the artifact (the manifest): the
         # admission side below hashes with the reloaded n_planes/seed,
         # never a remembered constant — the pattern that makes
@@ -808,11 +744,11 @@ def q206_stream_lsh_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
                 corpus, dim, _Q206_PLANES, vec_col="embedding",
                 seed=42, bucket_col="__b",
             ),
-            os.path.join(tmp, "index"),
+            os.path.join(s.dir, "index"),
             meta={"n_planes": _Q206_PLANES, "seed": 42, "dim": dim},
         )
         warm, idx_meta = load_lsh_index(
-            spark, os.path.join(tmp, "index"), with_meta=True
+            spark, os.path.join(s.dir, "index"), with_meta=True
         )
         # Pin the reloaded index for the stream's lifetime: every
         # micro-batch joins it TWICE (bucket equijoin + the
@@ -826,12 +762,12 @@ def q206_stream_lsh_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         # source of truth.
         warm = warm.localCheckpoint(eager=True)
 
-        drops = os.path.join(tmp, "drops")
+        drops = os.path.join(s.dir, "drops")
         arriving.repartition(3).write.mode("overwrite").parquet(drops)
         stream = read_file_stream(
             spark, drops, arriving.schema, max_files_per_trigger=1
         )
-        sink = ParquetMergeSink(spark, os.path.join(tmp, "admitted"))
+        sink = ParquetMergeSink(spark, os.path.join(s.dir, "admitted"))
         # the probe bucket expression is frozen for the stream's lifetime
         # (pure function of the manifest geometry) — build the Column
         # ONCE here, not per micro-batch (r13; the q218 change-#15 shape)
@@ -868,20 +804,15 @@ def q206_stream_lsh_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             sink.upsert(decided, keys=["vec_id"])
 
-        q = run_available_now(
-            stream, os.path.join(tmp, "ck"), foreach_batch=_admit
+        run_available_now(
+            stream, os.path.join(s.dir, "ck"), foreach_batch=_admit
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("q206 streaming admission did not finish")
         return (
             sink.read()
             .select("vec_id", "n_matches", "best_cosine", "admitted")
             .orderBy("vec_id")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 _Q206_SQL = """
@@ -975,14 +906,8 @@ def q218_stream_ivfpq_admission(
     list, off the query path (staged swap — probes see old or new
     layout, never half). Pre-checkpoint plan gated via
     :func:`_q218_frame`."""
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="q218_")
-    try:
-        return _q218_frame(spark, sf_dir, tmp).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    with query_scratch(spark, "q218") as s:
+        return _q218_frame(spark, sf_dir, s.dir).localCheckpoint(eager=True)
 
 
 def _q218_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
@@ -1128,12 +1053,7 @@ def _q218_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
                 with_state=True,
             )
 
-    q = run_available_now(
-        stream, os.path.join(tmp, "ck"), foreach_batch=_admit
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("q218 streaming admission did not finish")
+    run_available_now(stream, os.path.join(tmp, "ck"), foreach_batch=_admit)
 
     # ---- serve from the RELOADED grown artifacts only ----
     grown, cents2, meta2 = load_ivf_index(spark, ivf_dir, with_meta=True)

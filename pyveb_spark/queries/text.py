@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from pyveb_spark.operators.cleaning import clean_old_dates
 from pyveb_spark.operators.joins import asof_join
-from pyveb_spark.queries._helpers import _dec, _query_vec
+from pyveb_spark.queries._helpers import _dec, _query_vec, query_scratch
 from pyveb_spark.sources.readers import read_table
 
 
@@ -2214,20 +2214,10 @@ def q220_bm25_persisted_lifecycle(
     token-bucketed table) plus matched doclens; compaction amortizes
     off the ingest path with the crash-safe rename-aside swap.
     Pre-checkpoint plan gated via :func:`_q220_frame`."""
-    import shutil
-    import tempfile
-    import uuid
-
-    table = f"q220_bm25_idx_{uuid.uuid4().hex[:8]}"
-    tmp = tempfile.mkdtemp(prefix="q220_")
-    try:
-        return _q220_frame(spark, sf_dir, tmp, table).localCheckpoint(
-            eager=True
-        )
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        spark.sql(f"DROP TABLE IF EXISTS {table}__compact_stage")
-        shutil.rmtree(tmp, ignore_errors=True)
+    with query_scratch(spark, "q220") as s:
+        return _q220_frame(
+            spark, sf_dir, s.dir, s.name("bm25_idx")
+        ).localCheckpoint(eager=True)
 
 
 def _q220_frame(
@@ -2289,20 +2279,10 @@ def q221_phrase_persisted_lifecycle(
     scan of the hash-bucketed postings; appends are batch-sized;
     compaction is the shared staged swap. Pre-checkpoint plan gated via
     :func:`_q221_frame`."""
-    import shutil
-    import tempfile
-    import uuid
-
-    table = f"q221_ngram_idx_{uuid.uuid4().hex[:8]}"
-    tmp = tempfile.mkdtemp(prefix="q221_")
-    try:
-        return _q221_frame(spark, sf_dir, tmp, table).localCheckpoint(
-            eager=True
-        )
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        spark.sql(f"DROP TABLE IF EXISTS {table}__compact_stage")
-        shutil.rmtree(tmp, ignore_errors=True)
+    with query_scratch(spark, "q221") as s:
+        return _q221_frame(
+            spark, sf_dir, s.dir, s.name("ngram_idx")
+        ).localCheckpoint(eager=True)
 
 
 def _q221_frame(
@@ -2369,19 +2349,10 @@ def q223_hybrid_persisted_serving(
     end-to-end in SQL. Ranks are assigned on (rounded score, id) — the
     q169 determinism contract. Pre-checkpoint plan gated via
     :func:`_q223_frame`."""
-    import shutil
-    import tempfile
-    import uuid
-
-    table = f"q223_bm25_idx_{uuid.uuid4().hex[:8]}"
-    tmp = tempfile.mkdtemp(prefix="q223_")
-    try:
-        return _q223_frame(spark, sf_dir, tmp, table).localCheckpoint(
-            eager=True
-        )
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        shutil.rmtree(tmp, ignore_errors=True)
+    with query_scratch(spark, "q223") as s:
+        return _q223_frame(
+            spark, sf_dir, s.dir, s.name("bm25_idx")
+        ).localCheckpoint(eager=True)
 
 
 def _q223_frame(

@@ -244,7 +244,13 @@ def run_available_now(
     """Start a ``Trigger.AvailableNow`` run: process everything currently
     available, then stop — the Structured-Streaming form of the reference's
     Airflow-scheduled incremental backfill (``common.py:63-124`` CLI
-    contract). Caller awaits ``query.awaitTermination()``."""
+    contract).
+
+    Waits for the run it starts: returns the terminated
+    ``StreamingQuery`` (its ``recentProgress`` stays readable) once the
+    available input is processed. A stream still running after 300 s is
+    stopped and ``TimeoutError`` raised; a stream that fails raises its
+    ``StreamingQueryException`` from the wait."""
     writer = stream_df.writeStream.option("checkpointLocation", checkpoint).outputMode(
         output_mode
     ).trigger(availableNow=True)
@@ -256,7 +262,13 @@ def run_available_now(
         writer = writer.format(fmt)
         if path is not None:
             writer = writer.option("path", path)
-    return writer.start()
+    q = writer.start()
+    if not q.awaitTermination(300):
+        q.stop()
+        raise TimeoutError(
+            f"stream {query_name or checkpoint} did not finish within 300 s"
+        )
+    return q
 
 
 def stream_interval_join(

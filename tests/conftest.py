@@ -55,6 +55,8 @@ _SLOW_TESTS = {
     # multi-batch stream-state probes (tools/stream_state_probe.py)
     "test_stream_state_bounded_under_zipf_hot_key_skew",
     "test_stream_state_stays_bounded_across_many_batches",
+    # twelve streaming query replays (tests/test_query_scratch.py)
+    "test_memory_sink_queries_leave_no_tables",
 }
 
 

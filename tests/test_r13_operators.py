@@ -28,23 +28,14 @@ def test_ngram_count_table_widen_flag_value_identity(spark):
         assert on == off and len(off) > 0
 
 
-def test_cross_source_overlap_widen_flag_value_identity(spark):
-    """Same invariant for the chunk-overlap matrix — and the default is
-    now widen=False (the q149 call-site fix)."""
+def test_cross_source_overlap_has_no_widen_flag():
+    """The chunk-overlap matrix never widens its scan: the flag's only
+    non-test caller (q149) used the default ``False``, so it is gone."""
     import inspect
 
     from pyveb_spark.operators.dedup import cross_source_overlap
 
-    assert (
-        inspect.signature(cross_source_overlap).parameters["widen"].default
-        is False
-    )
-    d = read_table(spark, SF, "documents")
-    off = _rows(cross_source_overlap(d, "source", "text", chunk_tokens=12))
-    on = _rows(
-        cross_source_overlap(d, "source", "text", chunk_tokens=12, widen=True)
-    )
-    assert on == off and len(off) > 0
+    assert "widen" not in inspect.signature(cross_source_overlap).parameters
 
 
 def test_lsh_bucket_expr_matches_lsh_bucket(spark):

@@ -46,11 +46,10 @@ def test_stream_window_counts_equal_batch(spark, events_dir):
         group_by=["event_type"],
     )
     with tempfile.TemporaryDirectory() as ckpt:
-        q = run_available_now(
+        run_available_now(
             windowed, os.path.join(ckpt, "ck"), output_mode="complete",
             fmt="memory", query_name="win_counts",
         )
-        q.awaitTermination(120)
     got = {
         (r.window_start, r.event_type): r.n_events
         for r in spark.sql("SELECT * FROM win_counts").collect()
@@ -92,10 +91,9 @@ def test_watermark_drops_late_events(spark):
             stream, ts_col="ts", window_duration="1 day",
             aggs={"n_events": F.count(F.lit(1))}, watermark="1 hour",
         )
-        q = run_available_now(
+        run_available_now(
             windowed, ck, output_mode="append", fmt="parquet", path=out
         )
-        q.awaitTermination(120)
         return spark.read.parquet(out).collect()
 
     _write([(1, "2024-01-01 00:10:00", "click"), (2, "2024-01-03 12:00:00", "click")], "d0")
@@ -116,13 +114,12 @@ def test_foreach_batch_upsert_equals_batch_merge(spark, events_dir):
     stream = read_file_stream(spark, path, schema, max_files_per_trigger=1)
     with tempfile.TemporaryDirectory() as tmp:
         sink = ParquetMergeSink(spark, os.path.join(tmp, "tbl"))
-        q = run_available_now(
+        run_available_now(
             stream,
             os.path.join(tmp, "ck"),
             foreach_batch=foreach_batch_upsert(sink, keys=["event_id"]),
             output_mode="append",
         )
-        q.awaitTermination(120)
         batch = read_table(spark, "/root/testdata/sf0.001", "events")
         assert sink.read().count() == batch.count()
         # spot-check content equality via checksum of event_ids
@@ -136,11 +133,10 @@ def test_stateful_dedup_across_batches(spark, events_dir):
     stream = read_file_stream(spark, path, schema, max_files_per_trigger=1)
     deduped = stateful_dedup(stream, keys=["user_id"])  # heavy dup key
     with tempfile.TemporaryDirectory() as ckpt:
-        q = run_available_now(
+        run_available_now(
             deduped, os.path.join(ckpt, "ck"), output_mode="append",
             fmt="memory", query_name="dedup_out",
         )
-        q.awaitTermination(120)
     n = spark.sql("SELECT count(DISTINCT user_id) c, count(*) n FROM dedup_out").first()
     assert n.c == n.n  # exactly one row per user survived across batches
 
@@ -154,11 +150,10 @@ def test_stateful_running_totals_accumulate_across_batches(spark, events_dir):
     stream = read_file_stream(spark, path, schema, max_files_per_trigger=1)
     totals = stateful_running_totals(stream, keys=["user_id"], value_col="value")
     with tempfile.TemporaryDirectory() as ckpt:
-        q = run_available_now(
+        run_available_now(
             totals, os.path.join(ckpt, "ck"), output_mode="update",
             fmt="memory", query_name="run_totals",
         )
-        q.awaitTermination(180)
     # update mode re-emits a key on every batch that touches it; the row
     # with the highest n_events per key is the final state
     emitted = spark.sql("SELECT * FROM run_totals").collect()
@@ -250,11 +245,10 @@ def test_stream_enrich_equals_batch_join(spark, events_dir):
         keys=["user_id"],
     ).select("event_id", "user_id", "tier")
     with tempfile.TemporaryDirectory() as ckpt:
-        q = run_available_now(
+        run_available_now(
             enriched, os.path.join(ckpt, "ck"), output_mode="append",
             fmt="memory", query_name="enriched_stream",
         )
-        q.awaitTermination(120)
     got = {
         tuple(r)
         for r in spark.sql("SELECT * FROM enriched_stream").collect()
@@ -296,11 +290,10 @@ def test_stream_interval_join_equals_batch(spark, events_dir):
         max_delay="2 days", watermark="1 day",
     ).select("user_id", "click_id", "buy_id")
     with tempfile.TemporaryDirectory() as ckpt:
-        q = run_available_now(
+        run_available_now(
             joined, os.path.join(ckpt, "ck"), output_mode="append",
             fmt="memory", query_name="attr_join",
         )
-        q.awaitTermination(120)
     got = {
         (r.user_id, r.click_id, r.buy_id)
         for r in spark.sql("SELECT * FROM attr_join").collect()
@@ -336,11 +329,10 @@ def test_stream_session_windows_equal_batch(spark, events_dir):
         group_by=["user_id"],
     )
     with tempfile.TemporaryDirectory() as ckpt:
-        q = run_available_now(
+        run_available_now(
             sess, os.path.join(ckpt, "ck"), output_mode="complete",
             fmt="memory", query_name="sess_counts",
         )
-        q.awaitTermination(120)
     got = {
         (r.user_id, r.session_start, r.session_end): r.n_events
         for r in spark.sql("SELECT * FROM sess_counts").collect()

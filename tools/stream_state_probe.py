@@ -144,7 +144,6 @@ def run_probe(
             output_mode=out_mode,
             fmt="noop",
         )
-        q.awaitTermination()
         progress = [json.loads(p.json) for p in q.recentProgress]
     rows = []
     for p in progress:
