@@ -806,7 +806,7 @@ def minhash_lsh_lookup(
     otherwise it is derived from ``index`` on the fly.
 
     ``meta`` — the index's persisted build manifest
-    (``load_minhash_index(..., with_meta=True)``) — makes the probe hash
+    (``load_minhash_index``) — makes the probe hash
     with the index's OWN ``n``/``num_hashes``/``bands``: a probe hashed
     under different parameters joins into unrelated buckets and silently
     returns nothing (or garbage). An explicit non-default argument that
@@ -1173,7 +1173,7 @@ def simhash_lookup(
     ``(<id>_new, <id>_corpus, hamming)``.
 
     ``meta`` — the index's persisted build manifest
-    (``load_bucketed_index(..., with_meta=True)``) — makes the probe
+    (``load_bucketed_index``) — makes the probe
     band with the index's OWN ``bands``/``bits``: chunks cut at
     different widths join into unrelated buckets and silently return
     nothing. A conflicting explicit argument raises."""

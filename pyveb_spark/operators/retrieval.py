@@ -339,7 +339,7 @@ def phrase_search(
     Pass a prebuilt (persisted/bucketed) ``index`` in production (``df``
     may then be ``None``); the default builds one from ``df`` for
     self-contained use. ``meta`` — the persisted index's build manifest
-    (``index_store.load_bucketed_index(..., with_meta=True)``) —
+    (``index_store.load_bucketed_index``) —
     validates that the phrase's token count equals the index's window width ``n``:
     a 3-token probe against a 2-gram index hashes to a key that cannot
     exist, silently returning nothing, so the mismatch raises instead.

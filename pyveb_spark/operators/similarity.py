@@ -472,7 +472,7 @@ def ivf_search(
     pruning, reading ~nprobe/n_lists of the corpus.
 
     ``meta`` — a persisted build manifest
-    (``load_ivf_index(..., with_meta=True)``) — validates the probe
+    (``load_ivf_index``) — validates the probe
     against the artifact's geometry: a query of the wrong ``dim`` or a
     centroid set of the wrong ``n_lists`` scores garbage silently."""
     if meta:
@@ -955,7 +955,7 @@ def pq_adc_topk(
     ``(id, adc_dist)`` ascending (approximate squared L2).
 
     ``meta`` (the persisted codebook manifest,
-    ``load_pq_codebooks(..., with_meta=True)``) validates the reloaded
+    ``load_pq_codebooks``) validates the reloaded
     model and query geometry against the artifact's build parameters.
     """
     m = len(codebooks)
@@ -1176,7 +1176,7 @@ def sq8_encode(
     rest than float32 and SIMD-decodable. Returns ``(id, code)`` only:
     the codes table is the thing you SCAN at serving time; full vectors
     are only fetched for the re-rank shortlist. ``meta`` (the persisted
-    stats manifest, ``load_sq8_stats(..., with_meta=True)``) validates
+    stats manifest, ``load_sq8_stats``) validates
     the reloaded stats' dim — codes written against the wrong stats
     dequantize to garbage silently."""
     if meta:

@@ -1276,9 +1276,7 @@ def _q208_frame(
         path=f"{tmp}/postings",
         meta={"n": 2, "num_hashes": 32, "bands": 8},
     )
-    idx, hot, idx_meta = load_minhash_index(
-        spark, table, f"{tmp}/hot", with_meta=True
-    )
+    idx, hot, idx_meta = load_minhash_index(spark, table, f"{tmp}/hot")
     matches = minhash_lsh_lookup(
         batch, idx, "doc_id", "text", threshold=0.8, hot_buckets=hot,
         meta=idx_meta,
@@ -1421,9 +1419,7 @@ def _q209_frame(
         path=f"{tmp}/postings",
         meta={"n": 2, "num_hashes": 32, "bands": 8},
     )
-    idx, hot, idx_meta = load_minhash_index(
-        spark, table, f"{tmp}/hot", with_meta=True
-    )
+    idx, hot, idx_meta = load_minhash_index(spark, table, f"{tmp}/hot")
     w1_matched = (
         minhash_lsh_lookup(
             wave1, idx, "doc_id", "text", threshold=0.8,
@@ -1442,12 +1438,10 @@ def _q209_frame(
         from pyveb_spark.sinks.index_store import compact_minhash_index
 
         compact_minhash_index(spark, table, hot_path=f"{tmp}/hot")
-    # second reload runs with_meta THROUGH the lifecycle: the manifest
+    # the second reload's manifest comes THROUGH the lifecycle: it
     # must survive the append (same table) and the q216 compaction swap
     # (properties copied to the staged replacement, pinned by test).
-    idx2, hot2, meta2 = load_minhash_index(
-        spark, table, f"{tmp}/hot", with_meta=True
-    )
+    idx2, hot2, meta2 = load_minhash_index(spark, table, f"{tmp}/hot")
     matches2 = minhash_lsh_lookup(
         wave2, idx2, "doc_id", "text", threshold=0.8,
         hot_buckets=hot2, meta=meta2,
@@ -1655,7 +1649,7 @@ def _q219_frame(
         path=f"{tmp}/postings",
         meta={"bands": 4, "bits": 60},
     )
-    idx, idx_meta = load_bucketed_index(spark, table, with_meta=True)
+    idx, idx_meta = load_bucketed_index(spark, table)
     w1_matched = (
         simhash_lookup(
             wave1, idx, "doc_id", "text", max_hamming=3, meta=idx_meta
@@ -1666,7 +1660,7 @@ def _q219_frame(
     admitted1 = wave1.join(w1_matched, "doc_id", "left_anti")
     append_bucketed_index(simhash_index(admitted1, "doc_id", "text"), table)
     compact_bucketed_index(spark, table)
-    idx2, meta2 = load_bucketed_index(spark, table, with_meta=True)
+    idx2, meta2 = load_bucketed_index(spark, table)
     matches2 = simhash_lookup(
         wave2, idx2, "doc_id", "text", max_hamming=3, meta=meta2
     )

@@ -1647,8 +1647,9 @@ def _q207_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     e = read_table(spark, sf_dir, "embeddings")
     query_vec = _query_vec(e)
     indexed, centroids = ivf_index(e, n_lists=16)
-    save_ivf_index(indexed, centroids, tmp)
-    postings, cents, idx_meta = load_ivf_index(spark, tmp, with_meta=True)
+    ivf_dir = f"{tmp}/ivf"
+    save_ivf_index(indexed, centroids, ivf_dir)
+    postings, cents, idx_meta = load_ivf_index(spark, ivf_dir)
     return (
         ivf_search(
             postings, cents, query_vec, k=8, nprobe=3,
@@ -1763,17 +1764,18 @@ def _q210_frame(
         return spark.createDataFrame(
             [], "vec_id bigint, label int, cosine_sim double"
         )
-    save_ivf_index(indexed0, centroids, tmp)
-    postings, cents = load_ivf_index(spark, tmp)
+    ivf_dir = f"{tmp}/ivf"
+    save_ivf_index(indexed0, centroids, ivf_dir)
+    _, cents, _ = load_ivf_index(spark, ivf_dir)
     assigned = batch.withColumn(
         "ivf_list", nearest_centroid(F.col("embedding"), cents)["list_id"]
     )
-    append_ivf_postings(assigned, tmp)
+    append_ivf_postings(assigned, ivf_dir)
     if compact:
         from pyveb_spark.sinks.index_store import compact_ivf_postings
 
-        compact_ivf_postings(spark, tmp)
-    grown, cents2, idx_meta = load_ivf_index(spark, tmp, with_meta=True)
+        compact_ivf_postings(spark, ivf_dir)
+    grown, cents2, idx_meta = load_ivf_index(spark, ivf_dir)
     return (
         ivf_search(
             grown, cents2, query_vec, k=10, nprobe=4,
@@ -1873,16 +1875,17 @@ def _q211_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
             "list_id int, n_original bigint, n_appended bigint,"
             " n_total bigint, corpus_share double, growth_ratio double",
         )
-    save_ivf_index(indexed0, centroids, tmp)
-    postings, cents = load_ivf_index(spark, tmp)
+    ivf_dir = f"{tmp}/ivf"
+    save_ivf_index(indexed0, centroids, ivf_dir)
+    _, cents, _ = load_ivf_index(spark, ivf_dir)
     append_ivf_postings(
         batch.withColumn(
             "ivf_list",
             nearest_centroid(F.col("embedding"), cents)["list_id"],
         ),
-        tmp,
+        ivf_dir,
     )
-    grown, _ = load_ivf_index(spark, tmp)
+    grown, _, _ = load_ivf_index(spark, ivf_dir)
     total_row = grown.count()
     return (
         grown.select("vec_id", "ivf_list")
@@ -1993,7 +1996,7 @@ def _q213_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     save_pq_codebooks(spark, pq_train(e, m=4, k=16, iters=2),
                       os.path.join(tmp, "codebooks"))
     codebooks, cb_meta = load_pq_codebooks(
-        spark, os.path.join(tmp, "codebooks"), with_meta=True
+        spark, os.path.join(tmp, "codebooks")
     )
     from pyveb_spark.operators.layout import widen_scan
 
@@ -2058,9 +2061,7 @@ def _q214_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     e = read_table(spark, sf_dir, "embeddings")
     query_vec = _query_vec(e)
     save_sq8_stats(spark, sq8_stats(e), os.path.join(tmp, "stats"))
-    stats, sq_meta = load_sq8_stats(
-        spark, os.path.join(tmp, "stats"), with_meta=True
-    )
+    stats, sq_meta = load_sq8_stats(spark, os.path.join(tmp, "stats"))
     from pyveb_spark.operators.layout import widen_scan
 
     out = sq8_ann(
@@ -2121,7 +2122,7 @@ def _q215_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     save_pq_codebooks(spark, pq_train(e, m=4, k=16, iters=2),
                       os.path.join(tmp, "codebooks"))
     codebooks, cb_meta = load_pq_codebooks(
-        spark, os.path.join(tmp, "codebooks"), with_meta=True
+        spark, os.path.join(tmp, "codebooks")
     )
     save_ivf_index(
         pq_encode(indexed, codebooks, meta=cb_meta).select(
@@ -2131,7 +2132,7 @@ def _q215_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
         os.path.join(tmp, "ivf"),
     )
     postings, loaded_cents, ivf_meta = load_ivf_index(
-        spark, os.path.join(tmp, "ivf"), with_meta=True
+        spark, os.path.join(tmp, "ivf")
     )
     short = ivfpq_search(
         postings, loaded_cents, codebooks, query_vec,
@@ -2251,7 +2252,7 @@ def _q222_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     wave = e.where(F.col("vec_id") % 5 == 0)
     indexed0, cents0 = ivf_index(corpus0, n_lists=16)
     save_ivf_index(indexed0, cents0, ivf_dir)
-    _, frozen, _ = load_ivf_index(spark, ivf_dir, with_meta=True)
+    _, frozen, _ = load_ivf_index(spark, ivf_dir)
     append_ivf_postings(
         wave.withColumn(
             "ivf_list",
@@ -2262,7 +2263,7 @@ def _q222_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
 
     # act on drift: retrain on the grown population, swap, serve
     rebuild_ivf_index(spark, ivf_dir, e, kmeans_iters=2, tol=0.0)
-    postings, cents, meta = load_ivf_index(spark, ivf_dir, with_meta=True)
+    postings, cents, meta = load_ivf_index(spark, ivf_dir)
     return ivf_search(
         postings, cents, query_vec, k=8, nprobe=3,
         exclude_ids=[0], meta=meta,

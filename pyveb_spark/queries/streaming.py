@@ -747,9 +747,7 @@ def q206_stream_lsh_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(s.dir, "index"),
             meta={"n_planes": _Q206_PLANES, "seed": 42, "dim": dim},
         )
-        warm, idx_meta = load_lsh_index(
-            spark, os.path.join(s.dir, "index"), with_meta=True
-        )
+        warm, idx_meta = load_lsh_index(spark, os.path.join(s.dir, "index"))
         # Pin the reloaded index for the stream's lifetime: every
         # micro-batch joins it TWICE (bucket equijoin + the
         # index-authoritative vector join-back, ADVICE r9), and
@@ -948,7 +946,7 @@ def _q218_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     save_pq_codebooks(spark, pq_train(corpus, m=4, k=16, iters=2),
                       os.path.join(tmp, "codebooks"))
     codebooks, cb_meta = load_pq_codebooks(
-        spark, os.path.join(tmp, "codebooks"), with_meta=True
+        spark, os.path.join(tmp, "codebooks")
     )
     indexed0, cents = ivf_index(corpus, n_lists=16)
     # Build the df-independent encode Columns ONCE: the quantizers are
@@ -964,9 +962,7 @@ def _q218_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
         cents,
         ivf_dir,
     )
-    _, frozen_cents, ivf_meta = load_ivf_index(
-        spark, ivf_dir, with_meta=True
-    )
+    _, frozen_cents, ivf_meta = load_ivf_index(spark, ivf_dir)
     assign_col = nearest_centroid(F.col("embedding"), frozen_cents)[
         "list_id"
     ]
@@ -978,8 +974,7 @@ def _q218_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     postings_dir = os.path.join(ivf_dir, "postings")
     bloom_path = os.path.join(ivf_dir, "idbloom")
     bloom0, bmeta, bwords = save_id_bloom(
-        spark.read.parquet(postings_dir).select("vec_id"), bloom_path,
-        with_state=True,
+        spark.read.parquet(postings_dir).select("vec_id"), bloom_path
     )
 
     # ---- stream: admit → frozen-quantizer encode → append → compact ----
@@ -991,12 +986,11 @@ def _q218_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
 
     # Bloom driver state threaded ACROSS batches (r12): the filter is
     # only ever mutated by this loop's own build/update/refresh calls,
-    # so the (frame, meta, words) triple returned by save_id_bloom
-    # (with_state=True — no save→load round trip) seeds the loop, and
-    # each update's merged words seed the next batch's probe frame —
-    # batches pay zero filter-load jobs. The parquet stays
-    # authoritative: a restarted loop reloads identical state from disk
-    # (load_id_bloom(with_rows=True) — the recovery path).
+    # so the (frame, meta, words) triple save_id_bloom returns (no
+    # save→load round trip) seeds the loop, and each update's merged
+    # words seed the next batch's probe frame — batches pay zero
+    # filter-load jobs. The artifact stays authoritative: a restarted
+    # loop gets the same triple from load_id_bloom (the recovery path).
     bstate = {"words": bwords, "frame": bloom0}
 
     def _admit(batch_df: DataFrame, batch_id: int) -> None:
@@ -1050,13 +1044,12 @@ def _q218_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
                 bloom_path,
                 num_bits=int(bmeta["num_bits"]),
                 num_hashes=int(bmeta["num_hashes"]),
-                with_state=True,
             )
 
     run_available_now(stream, os.path.join(tmp, "ck"), foreach_batch=_admit)
 
     # ---- serve from the RELOADED grown artifacts only ----
-    grown, cents2, meta2 = load_ivf_index(spark, ivf_dir, with_meta=True)
+    grown, cents2, meta2 = load_ivf_index(spark, ivf_dir)
     short = ivfpq_search(
         grown, cents2, codebooks, query_vec,
         nprobe=3, shortlist=40, exclude_ids=[0],

@@ -2242,9 +2242,7 @@ def _q220_frame(
     append_bm25_index(wave, table, dl_path)
     compact_bucketed_index(spark, table)
     refresh_bm25_stats(spark, table, dl_path)
-    postings, doclens, meta = load_bm25_index(
-        spark, table, dl_path, with_meta=True
-    )
+    postings, doclens, meta = load_bm25_index(spark, table, dl_path)
     return bm25_search_indexed(
         postings,
         doclens,
@@ -2307,7 +2305,7 @@ def _q221_frame(
     )
     append_ngram_index(d.where(F.col("doc_id") < 100), table, n)
     compact_bucketed_index(spark, table)
-    idx, meta = load_bucketed_index(spark, table, with_meta=True)
+    idx, meta = load_bucketed_index(spark, table)
     idx_hits = phrase_search(None, phrase, index=idx, meta=meta)
     scan_hits = d.where(
         F.contains(
@@ -2381,7 +2379,7 @@ def _q223_frame(
     save_ivf_index(indexed, cents, f"{tmp}/ivf")
 
     postings, doclens, bm_meta = load_bm25_index(
-        spark, table, f"{tmp}/doclens", with_meta=True
+        spark, table, f"{tmp}/doclens"
     )
     bm = bm25_search_indexed(
         postings, doclens, bm_meta["n_docs"], bm_meta["sum_dl"],
@@ -2394,9 +2392,7 @@ def _q223_frame(
         .alias("rank"),
     )
 
-    ivf_postings, ivf_cents, ivf_meta = load_ivf_index(
-        spark, f"{tmp}/ivf", with_meta=True
-    )
+    ivf_postings, ivf_cents, ivf_meta = load_ivf_index(spark, f"{tmp}/ivf")
     qv = _query_vec(e)
     knn = ivf_search(
         ivf_postings, ivf_cents, qv, k=10, nprobe=3,

@@ -8,9 +8,13 @@ Every artifact belongs to one of two families:
 - **Parquet directory.** IVF postings partitioned by ``ivf_list`` (a
   probe is partition pruning at the scan) with a k×dim centroid table
   beside them; sign-LSH rows partitioned by bucket id; the id-Bloom word
-  table; PQ codebooks; SQ8 stats. The build manifest is a one-row typed
-  parquet table at ``<path>/manifest`` (IVF) or ``<path>_meta`` (all
-  others).
+  table; PQ codebooks; SQ8 stats. One layout, ``<path>/{<table>…,
+  manifest}``, where the manifest is a one-row typed parquet table, and
+  one commit: ``_save_artifact`` writes every table and the manifest
+  under ``<path>__save_stage`` and installs it with ``writers.swap_dir``,
+  so a crash never leaves data and manifest that disagree.
+  ``_load_artifact`` names the recovery rename of a crashed commit
+  before anything is read.
 - **Bucketed catalog table.** MinHash and SimHash banded postings on
   ``(__band, __h)``, BM25 token postings on ``token``, n-gram phrase
   postings on ``__h``. They share one lifecycle:
@@ -22,8 +26,8 @@ Every artifact belongs to one of two families:
   table. The tier functions add only their own step: the MinHash skew
   list, the BM25 doclens and collection statistics, the n-gram build.
 
-Loaders return the manifest with ``with_meta=True``; search and lookup
-helpers validate against it (``check_index_meta``).
+Every loader returns the manifest as its last element; search and
+lookup helpers validate against it (``check_index_meta``).
 
 Reference parity: the reference stages corpus artifacts to files
 between pipeline phases through one upload/download path
@@ -73,11 +77,19 @@ __all__ = [
     "check_index_meta",
 ]
 
+# table names inside a directory artifact
+_MANIFEST = "manifest"
 _IVF_POSTINGS = "postings"
 _IVF_CENTROIDS = "centroids"
-_IVF_MANIFEST = "manifest"
+_LSH_BUCKETS = "buckets"
+_BLOOM_WORDS = "words"
+_PQ_CODEBOOKS = "codebooks"
+_SQ8_STATS = "stats"
+# every directory-artifact save stages at <path>__save_stage
+_SAVE_STAGE = "__save_stage"
 _IVF_LIST = "ivf_list"  # the partition column every IVF search probes
 _LSH_BUCKET = "__b"  # the lsh_bucket column a persisted LSH index keeps
+_BLOOM_BITS_PER_KEY = 32  # see save_id_bloom for the sizing
 # catalog-property namespace for a bucketed table's build manifest
 _MH_PROP = "pyveb.index."
 # bucket count a bucketed index is saved with; appends and compaction
@@ -94,7 +106,7 @@ _NUM_BUCKETS = 8
 # wrong dim or list count scores garbage, PQ/SQ8 codes decode against the
 # wrong geometry. The parameters therefore belong to the ARTIFACT, not to
 # whoever happens to remember them next session: savers persist a typed
-# one-row manifest next to the data, loaders return it, and the search/
+# one-row manifest with the data, loaders return it, and the search/
 # lookup helpers validate against it (mismatch = loud error, the exact
 # failure mode the LSH manifest docstring names).
 # ---------------------------------------------------------------------------
@@ -112,30 +124,79 @@ def _meta_type(v) -> str:
     raise TypeError(f"unsupported manifest value type: {type(v).__name__}")
 
 
-def _write_manifest(spark: SparkSession, path: str, meta: dict) -> None:
-    """One-row typed parquet manifest (int → bigint, float → double,
-    str → string) — values round-trip exactly."""
+def _save_artifact(
+    spark: SparkSession, path: str, tables: dict, meta: dict, check=None
+) -> None:
+    """The one commit of every directory artifact. Writes each table
+    (name → its configured ``DataFrameWriter``) and ``meta`` as the
+    one-row typed manifest (int → bigint, float → double, str → string;
+    values round-trip exactly; none when ``meta`` is empty) under
+    ``<path>__save_stage``, runs ``check(stage)`` on the complete stage,
+    marks it complete (``_SUCCESS``) and installs it as ``<path>``
+    through ``writers.swap_dir``. A failure before the swap drops the
+    stage and leaves ``<path>`` untouched; a crash inside the swap keeps
+    both copies, and ``_load_artifact`` and the next save name the
+    recovery rename."""
     from pyveb_spark.session import local_df
+    from pyveb_spark.sinks.writers import (
+        _hadoop_fs,
+        raise_if_swap_crashed,
+        swap_dir,
+    )
 
-    keys = sorted(meta)
-    local_df(
-        spark,
-        [tuple(meta[k] for k in keys)],
-        ", ".join(f"{k} {_meta_type(meta[k])}" for k in keys),
-    ).coalesce(1).write.mode("overwrite").parquet(path)
+    stage = path.rstrip("/") + _SAVE_STAGE
+    raise_if_swap_crashed(spark, stage, path)
+    fs, HPath = _hadoop_fs(spark, stage)
+    # a stage beside the live artifact is left by a save that failed
+    # before its swap; the live copy is authoritative — redo
+    fs.delete(HPath(stage), True)
+    if meta:
+        keys = sorted(meta)
+        tables = dict(tables)
+        tables[_MANIFEST] = local_df(
+            spark,
+            [tuple(meta[k] for k in keys)],
+            ", ".join(f"{k} {_meta_type(meta[k])}" for k in keys),
+        ).coalesce(1).write
+    try:
+        for name, writer in tables.items():
+            writer.mode("overwrite").parquet(os.path.join(stage, name))
+        if check is not None:
+            check(stage)
+        fs.create(HPath(os.path.join(stage, "_SUCCESS")), True).close()
+    except Exception:
+        fs.delete(HPath(stage), True)
+        raise
+    with swap_dir(spark, stage, path):
+        pass
 
 
-def _read_manifest(spark: SparkSession, path: str) -> dict:
-    """Manifest dict, ``{}`` when the path is ABSENT (a pre-manifest
-    artifact). A path that exists but fails to read propagates — see
-    ``load_lsh_index``."""
-    from pyveb_spark.sinks.writers import _hadoop_fs
+def _load_artifact(spark: SparkSession, path: str, *tables: str) -> tuple:
+    """``(path of each table…, manifest)`` of a directory artifact, after
+    ``writers.raise_if_swap_crashed`` on its save stage and on each
+    table's ``compact_files`` stage (the IVF postings compaction), so a
+    crashed commit is reported with its recovery rename instead of being
+    read as a missing or empty artifact.
 
-    fs, HPath = _hadoop_fs(spark, path)
-    if not fs.exists(HPath(path)):
-        return {}
-    row = spark.read.parquet(path).first()
-    return {} if row is None else dict(row.asDict())
+    The manifest comes back with its stored types, ``{}`` when the
+    artifact has none (saved without ``meta``, or before manifests). A
+    manifest that exists but fails to read propagates: swallowing the
+    error would be indistinguishable from no manifest and let a caller
+    silently hash with the wrong constants."""
+    from pyveb_spark.sinks.writers import _hadoop_fs, raise_if_swap_crashed
+
+    raise_if_swap_crashed(spark, path.rstrip("/") + _SAVE_STAGE, path)
+    paths = [os.path.join(path, t) for t in tables]
+    for p in paths:
+        raise_if_swap_crashed(spark, p + "__compact_stage", p)
+    manifest = os.path.join(path, _MANIFEST)
+    fs, HPath = _hadoop_fs(spark, manifest)
+    row = (
+        spark.read.parquet(manifest).first()
+        if fs.exists(HPath(manifest))
+        else None
+    )
+    return (*paths, {} if row is None else row.asDict())
 
 
 def check_index_meta(meta: dict, **expected) -> None:
@@ -156,9 +217,38 @@ def check_index_meta(meta: dict, **expected) -> None:
         raise ValueError(
             f"index build-manifest mismatch — {detail}. Searching an "
             "index with parameters other than its build parameters "
-            "returns silent garbage; reload the manifest "
-            "(load_*(..., with_meta=True)) and pass its values."
+            "returns silent garbage; pass the values of the manifest "
+            "its load_* function returned."
         )
+
+
+def _ivf_tables(
+    indexed: DataFrame, centroids: list[tuple[int, list[float]]], meta
+) -> tuple[dict, dict]:
+    """(tables, manifest) of an IVF index for ``_save_artifact``."""
+    from pyveb_spark.session import local_df
+
+    # Align the write to the partition column (guide §8: decide with
+    # small rows, move narrow bytes once): the upstream encode runs at
+    # scan parallelism, then only the NARROW encoded rows (id + m code
+    # bytes + list) shuffle into one task per list — one right-sized
+    # file per partition instead of (input partitions × lists) small
+    # files, and the probe's pruned scan opens nprobe files.
+    tables = {
+        _IVF_POSTINGS: indexed.repartition(F.col(_IVF_LIST)).write.partitionBy(
+            _IVF_LIST
+        ),
+        _IVF_CENTROIDS: local_df(
+            indexed.sparkSession,
+            [(int(i), [float(x) for x in c]) for i, c in centroids],
+            "list_id int, centroid array<double>",
+        ).coalesce(1).write,
+    }
+    manifest = {"n_lists": len(centroids)}
+    if centroids:
+        manifest["dim"] = len(centroids[0][1])
+    manifest.update(meta or {})
+    return tables, manifest
 
 
 def save_ivf_index(
@@ -171,71 +261,35 @@ def save_ivf_index(
     id (probe = partition pruning), centroids as a k×dim parquet table,
     plus a build manifest (``n_lists``/``dim`` derived from the
     centroids, merged with caller extras like ``metric`` or the PQ
-    geometry of encoded postings). Overwrites — an index rebuild
-    replaces the artifact atomically per partition (dynamic overwrite is
-    unnecessary: rebuilds re-cluster, so the whole artifact changes)."""
-    from pyveb_spark.session import local_df
-
-    # Align the write to the partition column (guide §8: decide with
-    # small rows, move narrow bytes once): the upstream encode runs at
-    # scan parallelism, then only the NARROW encoded rows (id + m code
-    # bytes + list) shuffle into one task per list — one right-sized
-    # file per partition instead of (input partitions × lists) small
-    # files, and the probe's pruned scan opens nprobe files.
-    indexed.repartition(F.col(_IVF_LIST)).write.mode(
-        "overwrite"
-    ).partitionBy(_IVF_LIST).parquet(os.path.join(path, _IVF_POSTINGS))
-    spark = indexed.sparkSession
-    local_df(
-        spark,
-        [(int(i), [float(x) for x in c]) for i, c in centroids],
-        "list_id int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, _IVF_CENTROIDS)
+    geometry of encoded postings). A re-save over an existing index
+    replaces the whole artifact in one ``_save_artifact`` commit."""
+    _save_artifact(
+        indexed.sparkSession, path, *_ivf_tables(indexed, centroids, meta)
     )
-    manifest = {"n_lists": len(centroids)}
-    if centroids:
-        manifest["dim"] = len(centroids[0][1])
-    manifest.update(meta or {})
-    _write_manifest(spark, os.path.join(path, _IVF_MANIFEST), manifest)
 
 
-def _raise_if_ivf_swap_crashed(spark: SparkSession, path: str) -> None:
-    """Report a crashed ``swap_dir`` into an IVF index: of the whole index
-    (``rebuild_ivf_index``) or of its postings (``compact_files``)."""
-    from pyveb_spark.sinks.writers import raise_if_swap_crashed
-
-    postings = os.path.join(path, _IVF_POSTINGS)
-    raise_if_swap_crashed(spark, path.rstrip("/") + "__rebuild_stage", path)
-    raise_if_swap_crashed(spark, postings + "__compact_stage", postings)
-
-
-def load_ivf_index(
-    spark: SparkSession, path: str, with_meta: bool = False
-):
+def load_ivf_index(spark: SparkSession, path: str):
     """Reload a persisted IVF index: (postings frame with the partition
     column restored to its build-time int type, driver-side centroid
-    list sorted by list id). The centroid collect is k×dim — model-sized
-    by construction. ``with_meta=True`` also returns the build manifest
-    (``{}`` for a pre-manifest artifact) — pass it to
+    list sorted by list id, build manifest). The centroid collect is
+    k×dim — model-sized by construction. Pass the manifest to
     ``ivf_search(meta=...)`` so a dim/list-count drift fails loudly."""
-    _raise_if_ivf_swap_crashed(spark, path)
-    postings = spark.read.parquet(os.path.join(path, _IVF_POSTINGS))
-    postings = postings.withColumn(
-        _IVF_LIST, F.col(_IVF_LIST).cast("int")
+    postings, cents, meta = _load_artifact(
+        spark, path, _IVF_POSTINGS, _IVF_CENTROIDS
     )
-    cents = sorted(
-        spark.read.parquet(os.path.join(path, _IVF_CENTROIDS)).collect(),
-        key=lambda r: r["list_id"],
+    rows = sorted(
+        spark.read.parquet(cents).collect(), key=lambda r: r["list_id"]
     )
     centroids = [
         (int(r["list_id"]), [float(x) for x in r["centroid"]])
-        for r in cents
+        for r in rows
     ]
-    if not with_meta:
-        return postings, centroids
-    return postings, centroids, _read_manifest(
-        spark, os.path.join(path, _IVF_MANIFEST)
+    return (
+        spark.read.parquet(postings).withColumn(
+            _IVF_LIST, F.col(_IVF_LIST).cast("int")
+        ),
+        centroids,
+        meta,
     )
 
 
@@ -295,8 +349,9 @@ def maybe_compact_ivf_postings(
     fs, HPath = _hadoop_fs(spark, root)
     if not fs.exists(HPath(root)):
         # a raw Py4J FileNotFoundException from the listing would be the
-        # module's one non-actionable failure — name the missing path
-        _raise_if_ivf_swap_crashed(spark, path)
+        # module's one non-actionable failure — name the crashed commit
+        # or the missing path
+        _load_artifact(spark, path, _IVF_POSTINGS)
         raise ValueError(
             f"IVF postings directory {root!r} does not exist — "
             "nothing to compact; seed the index with save_ivf_index "
@@ -347,8 +402,7 @@ def rebuild_ivf_index(
     The new artifact — postings, centroids, manifest (old extras kept,
     geometry keys refreshed) and COPIES of any sidecars in the index
     dir (e.g. the q218 admission Bloom; the id set is preserved) — is
-    staged at ``<path>__rebuild_stage``, then committed by
-    ``writers.swap_dir``.
+    staged and committed by ``_save_artifact``, like any re-save.
 
     Returns the balance report: per-list max/mean ratio (empty lists
     count as zero) before and after — the number q211 monitors, so the
@@ -364,22 +418,18 @@ def rebuild_ivf_index(
         kmeans_fit,
         nearest_centroid,
     )
-    from pyveb_spark.sinks.writers import _hadoop_fs, swap_dir
+    from pyveb_spark.sinks.writers import _hadoop_fs
 
     postings_dir = os.path.join(path, _IVF_POSTINGS)
     fs, HPath = _hadoop_fs(spark, path)
     if not fs.exists(HPath(postings_dir)):
-        _raise_if_ivf_swap_crashed(spark, path)
+        _load_artifact(spark, path, _IVF_POSTINGS)
         raise ValueError(
             f"IVF postings directory {postings_dir!r} does not exist — "
             "seed the index with save_ivf_index before rebuilding"
         )
-    stage = path.rstrip("/") + "__rebuild_stage"
-    # a stage beside the live index is left by a rebuild that failed
-    # before its swap; the live original is authoritative — redo
-    fs.delete(HPath(stage), True)
 
-    old_postings, _, old_meta = load_ivf_index(spark, path, with_meta=True)
+    old_postings, _, old_meta = load_ivf_index(spark, path)
     before = {
         int(r[_IVF_LIST]): int(r["n"])
         for r in old_postings.groupBy(_IVF_LIST)
@@ -408,39 +458,44 @@ def rebuild_ivf_index(
         k: v for k, v in old_meta.items() if k not in ("n_lists", "dim")
     }
     new_meta.update(meta or {})
-    save_ivf_index(new_postings, new_cents, stage, meta=new_meta)
+    after: dict[int, int] = {}
 
-    after = {
-        int(r[_IVF_LIST]): int(r["n"])
-        for r in spark.read.parquet(os.path.join(stage, _IVF_POSTINGS))
-        .groupBy(_IVF_LIST)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    n_before, n_after = sum(before.values()), sum(after.values())
-    if n_before != n_after:
-        fs.delete(HPath(stage), True)
-        raise ValueError(
-            f"rebuild source does not cover the postings ids: "
-            f"{n_before} postings rows but {n_after} survived the "
-            "re-assignment join — the original artifact is untouched; "
-            "pass a source containing every indexed id"
+    def _cover_and_copy_sidecars(stage: str) -> None:
+        after.update(
+            (int(r[_IVF_LIST]), int(r["n"]))
+            for r in spark.read.parquet(os.path.join(stage, _IVF_POSTINGS))
+            .groupBy(_IVF_LIST)
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
         )
-    # sidecar artifacts (anything that is not the three core dirs)
-    # travel as COPIES so the live artifact keeps its own until the swap
-    FileUtil = spark._jvm.org.apache.hadoop.fs.FileUtil
-    core = {_IVF_POSTINGS, _IVF_CENTROIDS, _IVF_MANIFEST}
-    for st in fs.listStatus(HPath(path)):
-        name = st.getPath().getName()
-        if name in core:
-            continue
-        FileUtil.copy(
-            fs, st.getPath(), fs,
-            HPath(os.path.join(stage, name)), False,
-            spark._jsc.hadoopConfiguration(),
-        )
-    with swap_dir(spark, stage, path):
-        pass
+        n_before, n_after = sum(before.values()), sum(after.values())
+        if n_before != n_after:
+            raise ValueError(
+                f"rebuild source does not cover the postings ids: "
+                f"{n_before} postings rows but {n_after} survived the "
+                "re-assignment join — the original artifact is "
+                "untouched; pass a source containing every indexed id"
+            )
+        # sidecar artifacts (anything that is not a core table) travel
+        # as COPIES so the live artifact keeps its own until the swap
+        FileUtil = spark._jvm.org.apache.hadoop.fs.FileUtil
+        core = {_IVF_POSTINGS, _IVF_CENTROIDS, _MANIFEST}
+        for st in fs.listStatus(HPath(path)):
+            name = st.getPath().getName()
+            if name in core:
+                continue
+            FileUtil.copy(
+                fs, st.getPath(), fs,
+                HPath(os.path.join(stage, name)), False,
+                spark._jsc.hadoopConfiguration(),
+            )
+
+    _save_artifact(
+        spark,
+        path,
+        *_ivf_tables(new_postings, new_cents, new_meta),
+        check=_cover_and_copy_sidecars,
+    )
 
     def _imbalance(counts: dict[int, int]) -> float:
         total = sum(counts.values())
@@ -448,7 +503,7 @@ def rebuild_ivf_index(
         return round(max(counts.values()) / mean, 4) if mean else 0.0
 
     return {
-        "n_rows": n_after,
+        "n_rows": sum(after.values()),
         "n_lists": int(n_lists),
         "before_max": max(before.values()),
         "before_imbalance": _imbalance(before),
@@ -458,49 +513,45 @@ def rebuild_ivf_index(
 
 
 def save_lsh_index(
-    index: DataFrame, path: str, meta: dict[str, int] | None = None
+    index: DataFrame, path: str, meta: dict | None = None
 ) -> None:
     """Persist a sign-LSH bucketed corpus (``lsh_bucket`` output with
     ``bucket_col="__b"``) partitioned by the bucket id: a lookup against
     the reloaded index prunes to the probe's buckets at the scan.
 
     ``meta`` (recommended: ``{"n_planes": ..., "seed": ..., "dim":
-    ...}``) is written as a one-row manifest NEXT TO the index. A sign-
-    LSH index is only usable with the EXACT plane construction it was
-    built with — a probe hashed under different planes lands in
-    unrelated buckets and silently returns garbage — so the build
-    parameters belong to the artifact, not to whoever happens to
-    remember them next session. ``load_lsh_index(..., with_meta=True)``
-    returns them for the lookup call (this is how ``n_planes="auto"``
-    composes with persistence: resolve the count at BUILD time —
-    ``suggest_lsh_planes`` — save it in the manifest, reload it at
-    admission time)."""
-    index.write.mode("overwrite").partitionBy(_LSH_BUCKET).parquet(path)
-    if meta:
-        _write_manifest(index.sparkSession, path + "_meta", meta)
+    ...}``) is the artifact's typed manifest. A sign-LSH index is only
+    usable with the EXACT plane construction it was built with — a probe
+    hashed under different planes lands in unrelated buckets and
+    silently returns garbage — so the build parameters belong to the
+    artifact, not to whoever happens to remember them next session.
+    ``load_lsh_index`` returns them for the lookup call (this is how
+    ``n_planes="auto"`` composes with persistence: resolve the count at
+    BUILD time — ``suggest_lsh_planes`` — save it in the manifest,
+    reload it at admission time)."""
+    _save_artifact(
+        index.sparkSession,
+        path,
+        {_LSH_BUCKETS: index.write.partitionBy(_LSH_BUCKET)},
+        meta or {},
+    )
 
 
 def load_lsh_index(
-    spark: SparkSession, path: str, with_meta: bool = False
-) -> DataFrame | tuple[DataFrame, dict[str, int]]:
-    """Reload a persisted LSH index with the bucket column restored to
-    the build-time long type (partition-dir inference narrows it).
-    ``with_meta=True`` also returns the build manifest saved by
-    ``save_lsh_index(meta=...)`` (``{}`` when the index predates it) —
-    pass its ``n_planes``/``seed`` straight into
-    ``lsh_cosine_lookup``."""
-    df = spark.read.parquet(path).withColumn(
+    spark: SparkSession, path: str
+) -> tuple[DataFrame, dict]:
+    """Reload a persisted LSH index: (frame with the bucket column
+    restored to the build-time long type — partition-dir inference
+    narrows it, build manifest with its saved types, ``{}`` when the
+    index was saved without one). Pass the manifest's
+    ``n_planes``/``seed`` straight into ``lsh_cosine_lookup``."""
+    buckets, meta = _load_artifact(spark, path, _LSH_BUCKETS)
+    df = spark.read.parquet(buckets).withColumn(
         _LSH_BUCKET, F.col(_LSH_BUCKET).cast("long")
     )
-    if not with_meta:
-        return df
-    # _read_manifest distinguishes "pre-manifest artifact" (meta dir
-    # absent → {}) from a genuinely failed/corrupt manifest read
-    # (propagates): swallowing IO errors here would be indistinguishable
-    # from no-manifest and let a caller silently hash with the wrong
-    # plane constants.
-    meta = {k: int(v) for k, v in _read_manifest(spark, path + "_meta").items()}
     return df, meta
+
+
 
 
 def _set_table_meta(spark: SparkSession, table: str, meta: dict) -> None:
@@ -508,8 +559,8 @@ def _set_table_meta(spark: SparkSession, table: str, meta: dict) -> None:
     the ``pyveb.index.`` namespace — the manifest travels with the table
     identity (rename, compaction swap), no side file to drift. Each
     value carries a type tag (``bigint:4`` / ``double:0.8`` /
-    ``string:007``) matching ``_write_manifest``'s typed-parquet
-    discipline: TBLPROPERTIES are strings, and blind int/float
+    ``string:007``) matching the typed parquet manifest of
+    ``_save_artifact``: TBLPROPERTIES are strings, and blind int/float
     re-parsing on read would round-trip a string value that happens to
     parse numerically (a version tag ``'007'``, ``'1e3'``) as a number
     — making ``check_index_meta`` raise a spurious mismatch against the
@@ -636,19 +687,14 @@ def save_bucketed_index(
         _set_table_meta(postings.sparkSession, table, meta)
 
 
-def load_bucketed_index(
-    spark: SparkSession, table: str, with_meta: bool = False
-):
+def load_bucketed_index(spark: SparkSession, table: str):
     """Reload a bucketed index table after checking for a crashed
-    compaction swap. ``with_meta=True`` also returns the build manifest
-    (``{}`` for a pre-manifest table) — pass it to the lookup
+    compaction swap: (table frame, build manifest — ``{}`` for a
+    pre-manifest table). Pass the manifest to the lookup
     (``simhash_lookup(meta=...)``, ``phrase_search(meta=...)``, …) so
     the probe uses the index's own parameters."""
     _raise_if_crashed_swap(spark, table)
-    idx = spark.table(table)
-    if not with_meta:
-        return idx
-    return idx, _get_table_meta(spark, table)
+    return spark.table(table), _get_table_meta(spark, table)
 
 
 def append_bucketed_index(postings: DataFrame, table: str) -> None:
@@ -750,31 +796,22 @@ def save_minhash_index(
     time, staleness after appends only loosens the skew guard, never
     correctness). ``meta`` is the ``minhash_lsh_index`` build parameters
     ``{"n": ..., "num_hashes": ..., "bands": ...}``;
-    ``load_minhash_index(..., with_meta=True)`` returns them for
+    ``load_minhash_index`` returns them for
     ``minhash_lsh_lookup(meta=...)``."""
     save_bucketed_index(index, table, ["__band", "__h"], path=path, meta=meta)
     _write_hot_buckets(index.sparkSession, table, hot_path)
 
 
-def load_minhash_index(
-    spark: SparkSession,
-    table: str,
-    hot_path: str,
-    with_meta: bool = False,
-):
+def load_minhash_index(spark: SparkSession, table: str, hot_path: str):
     """Reload the bucketed MinHash postings table and its persisted
     hot-bucket blacklist — pass both straight into
     ``minhash_lsh_lookup(index=..., hot_buckets=...)`` (the q45
-    production shape with zero per-batch index work). ``with_meta=True``
-    also returns the build manifest stamped by
-    ``save_minhash_index(meta=...)`` (``{}`` for a pre-manifest table) —
-    pass it as ``minhash_lsh_lookup(meta=...)`` so the probe hashes
-    with the index's OWN n/num_hashes/bands."""
-    idx = load_bucketed_index(spark, table)
-    hot = spark.read.parquet(hot_path)
-    if not with_meta:
-        return idx, hot
-    return idx, hot, _get_table_meta(spark, table)
+    production shape with zero per-batch index work) — plus the build
+    manifest stamped by ``save_minhash_index(meta=...)`` (``{}`` for a
+    pre-manifest table): pass it as ``minhash_lsh_lookup(meta=...)`` so
+    the probe hashes with the index's OWN n/num_hashes/bands."""
+    idx, meta = load_bucketed_index(spark, table)
+    return idx, spark.read.parquet(hot_path), meta
 
 
 def append_minhash_index(
@@ -816,8 +853,6 @@ def save_id_bloom(
     key_col: str = "vec_id",
     num_bits: int | None = None,
     num_hashes: int = 7,
-    bits_per_key: int = 32,
-    with_state: bool = False,
 ):
     """Build and persist a Bloom filter over an index's id column — the
     fixed-size membership sidecar that makes streaming admission's
@@ -829,90 +864,75 @@ def save_id_bloom(
     possible hits, so the per-batch false-positive budget is
     ``batch_size × FP`` and must sit well under 1 — a "1% FP" filter
     (the classic join-pruning sizing) false-hits on virtually every
-    1000-row batch and degenerates to exact-plus-overhead. The
-    defaults — 32 bits/key, 7 hashes → FP ≈ 9·10⁻⁶,
-    ``(1-e^{-k·n/m})^k`` — keep batches up to ~10⁴ rows hit-free >90%
-    of the time at 4 bytes/member of filter (100 M ids ≈ 400 MB: about
-    the ceiling for the broadcast form; beyond that the streaming
-    checkpoint state store is the right tool).
+    1000-row batch and degenerates to exact-plus-overhead. 32 bits/key
+    and the default 7 hashes → FP ≈ 9·10⁻⁶, ``(1-e^{-k·n/m})^k`` — keep
+    batches up to ~10⁴ rows hit-free >90% of the time at 4 bytes/member
+    of filter (100 M ids ≈ 400 MB: about the ceiling for the broadcast
+    form; beyond that the streaming checkpoint state store is the right
+    tool).
 
-    ``with_state=True`` returns ``(probe_frame, meta, words)`` — the
-    exact triple ``load_id_bloom(..., with_rows=True)`` would return —
-    by collecting the (model-sized, ≤ num_bits/63 rows) word table once
-    and writing it back through the Arrow LocalRelation path, so a
-    build-then-serve caller (the q218 seed and its compaction-time
-    refresh) skips the save→load round trip: no manifest re-read, no
-    word-table re-read — the state it just wrote IS the state it
-    serves (r12).
+    Returns ``(probe_frame, meta, words)`` — the exact triple
+    ``load_id_bloom`` returns — by collecting the (model-sized,
+    ≤ num_bits/63 rows) word table once and writing it back through the
+    Arrow LocalRelation path, so a build-then-serve caller (the q218
+    seed and its compaction-time refresh) skips the save→load round
+    trip: the state it just wrote IS the state it serves (r12).
 
-    ``num_bits=None`` auto-sizes to ``bits_per_key`` per member from a
-    count of the ids frame — one narrow scan, paid once at
-    build/refresh time. The geometry is persisted as a typed manifest
-    next to the word table: a probe hashed with different bits/hashes
-    tests garbage positions, so the parameters belong to the artifact
-    (the ``check_index_meta`` contract). Refresh by calling this again
-    on the index's id column — the compaction-time step that also
-    sheds any conservative over-approximation accumulated by
-    ``update_id_bloom``'s merge-before-append ordering."""
+    ``num_bits=None`` auto-sizes to 32 bits per member from a count of
+    the ids frame — one narrow scan, paid once at build/refresh time.
+    The geometry is the artifact's typed manifest: a probe hashed with
+    different bits/hashes tests garbage positions, so the parameters
+    belong to the artifact (the ``check_index_meta`` contract). Refresh
+    by calling this again on the index's id column — the
+    compaction-time step that also sheds any conservative
+    over-approximation accumulated by ``update_id_bloom``'s
+    merge-before-append ordering."""
     from pyveb_spark.operators.sketches import bloom_build
 
     if num_bits is None:
-        n = ids.count()
-        num_bits = max(2048, int(bits_per_key) * int(n))
-    bloom = bloom_build(ids, key_col, num_bits, num_hashes)
+        num_bits = max(2048, _BLOOM_BITS_PER_KEY * int(ids.count()))
     meta = {
         "num_bits": int(num_bits),
         "num_hashes": int(num_hashes),
         "key_col": key_col,
     }
-    spark = ids.sparkSession
-    if with_state:
-        words = sorted(
-            (int(r["word_idx"]), int(r["word"])) for r in bloom.collect()
-        )
-        frame = bloom_words_frame(spark, words)
-        frame.coalesce(1).write.mode("overwrite").parquet(path)
-        _write_manifest(spark, path + "_meta", meta)
-        return frame, meta, words
-    bloom.coalesce(1).write.mode("overwrite").parquet(path)
-    _write_manifest(spark, path + "_meta", meta)
-    return None
+    words = sorted(
+        (int(r["word_idx"]), int(r["word"]))
+        for r in bloom_build(ids, key_col, num_bits, num_hashes).collect()
+    )
+    return _save_bloom(ids.sparkSession, path, words, meta), meta, words
 
 
-def load_id_bloom(
-    spark: SparkSession,
-    path: str,
-    localize: bool = True,
-    with_rows: bool = False,
-):
-    """(word-table frame, geometry manifest) — pass both straight into
-    ``bloom_probe``/``bloom_gated_anti_join``. The word table is
-    ≤ num_bits/63 rows — broadcast-sized by construction.
+def _save_bloom(
+    spark: SparkSession, path: str, words: list[tuple[int, int]], meta: dict
+) -> DataFrame:
+    """Commit the word list and its geometry; returns the probe frame."""
+    frame = bloom_words_frame(spark, words)
+    _save_artifact(
+        spark, path, {_BLOOM_WORDS: frame.coalesce(1).write}, meta
+    )
+    return frame
 
-    ``localize=True`` (default) collects the words and returns them as
-    an Arrow LocalRelation: probe plans then embed the filter state and
-    are IMMUNE to a concurrent ``update_id_bloom`` overwriting the
-    parquet (the per-batch admission loop needs no defensive
-    checkpoint), and the broadcast ships from driver memory with exact
-    size stats. Pass ``localize=False`` for filters sized beyond
-    comfortable driver memory (≳10⁹ members) — then re-load after any
-    update before building new probe plans.
 
-    ``with_rows=True`` (implies localize) additionally returns the raw
-    ``(word_idx, word)`` list as a third element — the driver-side
-    state a per-batch admission loop threads into
-    ``update_id_bloom(words=...)`` and ``bloom_words_frame`` so later
-    batches never re-read the filter from parquet (r12)."""
-    meta = _read_manifest(spark, path + "_meta")
-    words = spark.read.parquet(path)
-    if localize or with_rows:
-        rows = [
-            (int(r["word_idx"]), int(r["word"])) for r in words.collect()
-        ]
-        words = bloom_words_frame(spark, rows)
-        if with_rows:
-            return words, meta, rows
-    return words, meta
+def load_id_bloom(spark: SparkSession, path: str):
+    """(word-table frame, geometry manifest, ``(word_idx, word)`` list).
+    Pass the first two straight into
+    ``bloom_probe``/``bloom_gated_anti_join``; the list is the
+    driver-side state a per-batch admission loop threads into
+    ``update_id_bloom`` and ``bloom_words_frame``, so a restarted loop
+    resumes from the filter on disk.
+
+    The word table is ≤ num_bits/63 rows — broadcast-sized by
+    construction — and comes back as an Arrow LocalRelation: probe
+    plans embed the filter state and are IMMUNE to a later
+    ``update_id_bloom`` replacing the artifact, and the broadcast ships
+    from driver memory with exact size stats."""
+    words_path, meta = _load_artifact(spark, path, _BLOOM_WORDS)
+    rows = sorted(
+        (int(r["word_idx"]), int(r["word"]))
+        for r in spark.read.parquet(words_path).collect()
+    )
+    return bloom_words_frame(spark, rows), meta, rows
 
 
 def bloom_words_frame(
@@ -928,27 +948,24 @@ def bloom_words_frame(
 def update_id_bloom(
     batch_ids: DataFrame,
     path: str,
-    words: list[tuple[int, int]] | None = None,
-    meta: dict | None = None,
+    words: list[tuple[int, int]],
+    meta: dict,
 ) -> list[tuple[int, int]]:
     """OR an admitted batch's keys into the persisted filter. Bloom
     words merge exactly (bit_or is the union), so the incremental
     filter equals a from-scratch rebuild over the grown corpus — no
-    false-negative drift, ever. The batch's delta words come from one
-    batch-sized aggregation; the merge happens driver-side over the
-    (model-sized) word dict and rewrites through the Arrow
-    LocalRelation path, so the overwrite never reads its own input.
+    false-negative drift, ever. ``words`` and ``meta`` are the filter's
+    current state, as ``save_id_bloom``/``load_id_bloom`` (or the
+    previous update) returned it: the update costs ONE batch-sized
+    aggregation job plus the commit, never a re-read of the artifact
+    (r12: two driver-roundtrip jobs per batch removed). The merge
+    happens driver-side over the (model-sized) word dict and commits
+    through ``_save_artifact``, so a kill mid-update leaves the previous
+    filter readable.
 
     Returns the merged ``(word_idx, word)`` list — exactly what the
-    parquet now holds. A per-batch caller (the q218 admission loop)
-    passes it back as ``words`` on the next call, together with the
-    load-time manifest as ``meta``: the update then costs ONE
-    batch-sized aggregation job plus the overwrite, instead of
-    re-reading the manifest and the word table from parquet every
-    micro-batch (r12: two driver-roundtrip jobs per batch removed; the
-    driver-side state is a pure cache of what this function itself
-    wrote, so a restarted loop that reloads from disk sees identical
-    state). With ``words=None`` the current parquet is read as before.
+    artifact now holds; a per-batch caller (the q218 admission loop)
+    passes it back as ``words`` on the next call.
 
     Ordering contract for crash-safe idempotent admission: update the
     filter BEFORE appending the batch to the index. A crash between
@@ -959,15 +976,11 @@ def update_id_bloom(
     and double-admit. Over-approximation is healed at compaction time
     by re-running ``save_id_bloom`` on the index's id column."""
     from pyveb_spark.operators.sketches import bloom_build
-    from pyveb_spark.session import local_df
 
-    spark = batch_ids.sparkSession
-    if meta is None:
-        meta = _read_manifest(spark, path + "_meta")
     if not meta:
         raise ValueError(
-            f"no Bloom manifest at {path + '_meta'!r} — build the "
-            "filter with save_id_bloom before updating it"
+            f"no Bloom manifest for {path!r} — build the filter with "
+            "save_id_bloom before updating it"
         )
     delta = bloom_build(
         batch_ids,
@@ -975,25 +988,13 @@ def update_id_bloom(
         int(meta["num_bits"]),
         int(meta["num_hashes"]),
     )
-    merged: dict[int, int] = (
-        dict(words)
-        if words is not None
-        else {
-            int(r["word_idx"]): int(r["word"])
-            for r in spark.read.parquet(path).collect()
-        }
-    )
+    merged = dict(words)
     for r in delta.collect():
         i = int(r["word_idx"])
         merged[i] = merged.get(i, 0) | int(r["word"])
     out = sorted(merged.items())
-    if not merged:
-        return out  # empty batch over an empty filter — nothing to write
-    local_df(
-        spark,
-        out,
-        "word_idx bigint, word bigint",
-    ).coalesce(1).write.mode("overwrite").parquet(path)
+    if merged:  # an empty batch over an empty filter has nothing to write
+        _save_bloom(batch_ids.sparkSession, path, out, meta)
     return out
 
 
@@ -1051,21 +1052,13 @@ def save_bm25_index(
     save_bucketed_index(postings, table, ["token"], path=path, meta=manifest)
 
 
-def load_bm25_index(
-    spark: SparkSession,
-    table: str,
-    doclen_path: str,
-    with_meta: bool = False,
-):
+def load_bm25_index(spark: SparkSession, table: str, doclen_path: str):
     """Reload the persisted BM25 tier: (token-bucketed postings frame,
-    doclens frame[, manifest]). Pass the manifest's ``n_docs``/
-    ``sum_dl`` straight into ``bm25_search_indexed`` — the search needs
-    no other session state and no corpus scan."""
-    postings = load_bucketed_index(spark, table)
-    doclens = spark.read.parquet(doclen_path)
-    if not with_meta:
-        return postings, doclens
-    return postings, doclens, _get_table_meta(spark, table)
+    doclens frame, manifest). Pass the manifest's ``n_docs``/``sum_dl``
+    straight into ``bm25_search_indexed`` — the search needs no other
+    session state and no corpus scan."""
+    postings, meta = load_bucketed_index(spark, table)
+    return postings, spark.read.parquet(doclen_path), meta
 
 
 def append_bm25_index(
@@ -1153,8 +1146,8 @@ def append_ngram_index(
     """Append a new-document wave's n-gram postings through
     ``append_bucketed_index`` (documents must be new ids — a re-appended
     doc would split its per-window occurrence counts across rows).
-    Validate ``n`` against the manifest first when loading via
-    ``with_meta``."""
+    Validate ``n`` against the manifest ``load_bucketed_index`` returns
+    first."""
     from pyveb_spark.operators.retrieval import build_ngram_index
 
     append_bucketed_index(
@@ -1175,13 +1168,13 @@ def save_pq_codebooks(
 ) -> None:
     """Persist trained PQ codebooks (``similarity.pq_train`` output) as
     one tiny parquet table ``(subspace, code, centroid)`` — m×k rows of
-    dim/m doubles, the whole model. Doubles round-trip parquet exactly,
-    so a reloaded codebook encodes and scores BIT-IDENTICALLY to the
-    fresh one (pinned by test). With this + ``save_ivf_index`` over a
-    ``pq_encode``d postings frame, the IVF-PQ serving composition (q88)
-    is fully durable: coarse lists prune partitions, codes stream from
-    the pruned scan, and the only session state is two model-sized
-    reloads."""
+    dim/m doubles, the whole model — plus a build manifest (m/k/dim +
+    caller extras). Doubles round-trip parquet exactly, so a reloaded
+    codebook encodes and scores BIT-IDENTICALLY to the fresh one (pinned
+    by test). With this + ``save_ivf_index`` over a ``pq_encode``d
+    postings frame, the IVF-PQ serving composition (q88) is fully
+    durable: coarse lists prune partitions, codes stream from the pruned
+    scan, and the only session state is two model-sized reloads."""
     from pyveb_spark.session import local_df
 
     rows = [
@@ -1189,28 +1182,28 @@ def save_pq_codebooks(
         for j, cb in enumerate(codebooks)
         for code, cent in cb
     ]
-    local_df(
-        spark, rows, "subspace int, code int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(path)
     manifest = {"m": len(codebooks)}
     if codebooks and codebooks[0]:
         manifest["k"] = len(codebooks[0])
         manifest["dim"] = len(codebooks) * len(codebooks[0][0][1])
     manifest.update(meta or {})
-    _write_manifest(spark, path + "_meta", manifest)
+    table = local_df(
+        spark, rows, "subspace int, code int, centroid array<double>"
+    )
+    _save_artifact(
+        spark, path, {_PQ_CODEBOOKS: table.coalesce(1).write}, manifest
+    )
 
 
-def load_pq_codebooks(
-    spark: SparkSession, path: str, with_meta: bool = False
-):
+def load_pq_codebooks(spark: SparkSession, path: str):
     """Reload persisted PQ codebooks in ``pq_train``'s return shape
-    (``codebooks[j] = [(code, sub_centroid), ...]`` sorted by code).
-    The collect is m×k rows — model-sized by construction.
-    ``with_meta=True`` also returns the build manifest (m/k/dim +
-    caller extras; ``{}`` for a pre-manifest artifact) — pass it to
-    ``pq_adc_topk(meta=...)`` / ``pq_encode(meta=...)``."""
+    (``codebooks[j] = [(code, sub_centroid), ...]`` sorted by code) plus
+    the build manifest — pass it to ``pq_adc_topk(meta=...)`` /
+    ``pq_encode(meta=...)``. The collect is m×k rows — model-sized by
+    construction."""
+    table, meta = _load_artifact(spark, path, _PQ_CODEBOOKS)
     by: dict[int, dict[int, list[float]]] = {}
-    for r in spark.read.parquet(path).collect():
+    for r in spark.read.parquet(table).collect():
         by.setdefault(int(r["subspace"]), {})[int(r["code"])] = [
             float(x) for x in r["centroid"]
         ]
@@ -1218,9 +1211,7 @@ def load_pq_codebooks(
         [(code, by[j][code]) for code in sorted(by[j])]
         for j in sorted(by)
     ]
-    if not with_meta:
-        return codebooks
-    return codebooks, _read_manifest(spark, path + "_meta")
+    return codebooks, meta
 
 
 def save_sq8_stats(
@@ -1237,31 +1228,26 @@ def save_sq8_stats(
     (pinned by test)."""
     from pyveb_spark.session import local_df
 
-    local_df(
+    table = local_df(
         spark,
-        [
-            (i, float(lo), float(hi))
-            for i, (lo, hi) in enumerate(stats)
-        ],
+        [(i, float(lo), float(hi)) for i, (lo, hi) in enumerate(stats)],
         "dim int, lo double, hi double",
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-    manifest = {"dim": len(stats)}
-    manifest.update(meta or {})
-    _write_manifest(spark, path + "_meta", manifest)
-
-
-def load_sq8_stats(
-    spark: SparkSession, path: str, with_meta: bool = False
-):
-    """Reload persisted SQ8 stats in ``sq8_stats``'s return shape
-    (``[(lo_0, hi_0), ...]`` ordered by dimension). ``with_meta=True``
-    also returns the build manifest (``{}`` for a pre-manifest
-    artifact) — validate with ``check_index_meta(meta, dim=...)``
-    before encoding a batch against reloaded stats."""
-    rows = sorted(
-        spark.read.parquet(path).collect(), key=lambda r: r["dim"]
     )
-    stats = [(float(r["lo"]), float(r["hi"])) for r in rows]
-    if not with_meta:
-        return stats
-    return stats, _read_manifest(spark, path + "_meta")
+    _save_artifact(
+        spark,
+        path,
+        {_SQ8_STATS: table.coalesce(1).write},
+        {"dim": len(stats), **(meta or {})},
+    )
+
+
+def load_sq8_stats(spark: SparkSession, path: str):
+    """Reload persisted SQ8 stats in ``sq8_stats``'s return shape
+    (``[(lo_0, hi_0), ...]`` ordered by dimension) plus the build
+    manifest — validate with ``check_index_meta(meta, dim=...)`` before
+    encoding a batch against reloaded stats."""
+    table, meta = _load_artifact(spark, path, _SQ8_STATS)
+    rows = sorted(
+        spark.read.parquet(table).collect(), key=lambda r: r["dim"]
+    )
+    return [(float(r["lo"]), float(r["hi"])) for r in rows], meta

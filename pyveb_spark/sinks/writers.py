@@ -402,7 +402,8 @@ def raise_if_swap_crashed(spark, stage: str, live: str) -> None:
 def swap_dir(spark, stage: str, live: str) -> Iterator[None]:
     """Install the complete directory ``stage`` (``<live>__<tag>_stage``)
     as ``live`` by rename-aside. The engine's one directory commit: the
-    merge sink, ``compact_files``, ``rebuild_ivf_index`` and the external
+    merge sink, ``compact_files``, every directory index artifact's save
+    (``index_store._save_artifact``) and the external
     ``compact_bucketed_index`` all use it.
 
     - On entry: if ``live`` is missing while the aside

@@ -28,7 +28,7 @@ def test_ivf_round_trip_identical_search_and_partition_pruning(
     qv = _query_vec(e)
     indexed, centroids = ivf_index(e, n_lists=8)
     save_ivf_index(indexed, centroids, str(tmp_path / "ivf"))
-    postings, cents = load_ivf_index(spark, str(tmp_path / "ivf"))
+    postings, cents, _ = load_ivf_index(spark, str(tmp_path / "ivf"))
 
     assert cents == centroids  # centroid table survives bit-for-bit
     assert postings.count() == indexed.count()
@@ -66,7 +66,7 @@ def test_lsh_round_trip_identical_lookup(spark, tmp_path):
     dim = len(corpus.select("embedding").first()[0])
     idx = lsh_bucket(corpus, dim, 6, seed=42, bucket_col="__b")
     save_lsh_index(idx, str(tmp_path / "lsh"))
-    warm = load_lsh_index(spark, str(tmp_path / "lsh"))
+    warm, _ = load_lsh_index(spark, str(tmp_path / "lsh"))
     assert warm.schema["__b"].dataType.simpleString() == "bigint"
 
     fresh = sorted(
@@ -107,7 +107,7 @@ def test_minhash_round_trip_identical_and_no_index_side_shuffle(
             str(tmp_path / "hot"),
             path=str(tmp_path / "postings"),
         )
-        idx, hot = load_minhash_index(spark, table, str(tmp_path / "hot"))
+        idx, hot, _ = load_minhash_index(spark, table, str(tmp_path / "hot"))
 
         fresh = sorted(
             (r.doc_id_new, r.doc_id_corpus, round(r.jaccard, 9))
@@ -229,7 +229,7 @@ def test_minhash_append_grows_index_and_keeps_bucketed_join(
             table,
             hot_path=str(tmp_path / "hot"),
         )
-        idx, hot = load_minhash_index(spark, table, str(tmp_path / "hot"))
+        idx, hot, _ = load_minhash_index(spark, table, str(tmp_path / "hot"))
         assert idx.count() > before
         # the append must not break the bucketed layout: a band-key
         # aggregation over the grown table still needs no Exchange
@@ -301,12 +301,12 @@ def test_q210_append_search_equals_assign_all_search(spark, tmp_path):
     batch = e.where(F.col("vec_id") < 100)
     indexed0, cents = ivf_index(corpus0, n_lists=8)
     save_ivf_index(indexed0, cents, str(tmp_path / "ivf"))
-    postings, loaded = load_ivf_index(spark, str(tmp_path / "ivf"))
+    postings, loaded, _ = load_ivf_index(spark, str(tmp_path / "ivf"))
     assigned = batch.withColumn(
         "ivf_list", nearest_centroid(F.col("embedding"), loaded)["list_id"]
     )
     append_ivf_postings(assigned, str(tmp_path / "ivf"))
-    grown, _ = load_ivf_index(spark, str(tmp_path / "ivf"))
+    grown, _, _ = load_ivf_index(spark, str(tmp_path / "ivf"))
     assert grown.count() == e.count()
 
     # frozen-quantizer equivalence: search over the appended postings ==
@@ -558,7 +558,7 @@ def test_appends_follow_the_catalog_bucket_spec(spark, tmp_path):
 def test_lsh_manifest_of_earlier_int_format_loads_the_same(spark, tmp_path):
     """``save_lsh_index`` writes its manifest with the shared typed
     writer (bigint columns); a manifest in the earlier int-column format
-    at ``<path>_meta`` must load to the same dict."""
+    at ``<path>/manifest`` must load to the same dict."""
     from pyveb_spark.session import local_df
     from pyveb_spark.sinks.index_store import load_lsh_index, save_lsh_index
 
@@ -566,12 +566,12 @@ def test_lsh_manifest_of_earlier_int_format_loads_the_same(spark, tmp_path):
     meta = {"dim": 16, "n_planes": 6, "seed": 42}
     new, old = str(tmp_path / "new"), str(tmp_path / "old")
     save_lsh_index(rows, new, meta=meta)
-    rows.write.partitionBy("__b").parquet(old)
+    rows.write.partitionBy("__b").parquet(old + "/buckets")
     local_df(
         spark, [(16, 6, 42)], "dim int, n_planes int, seed int"
-    ).coalesce(1).write.parquet(old + "_meta")
+    ).coalesce(1).write.parquet(old + "/manifest")
 
-    _, new_meta = load_lsh_index(spark, new, with_meta=True)
-    _, old_meta = load_lsh_index(spark, old, with_meta=True)
+    _, new_meta = load_lsh_index(spark, new)
+    _, old_meta = load_lsh_index(spark, old)
     assert new_meta == old_meta == meta
     assert all(type(v) is int for v in (*new_meta.values(), *old_meta.values()))

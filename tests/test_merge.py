@@ -304,7 +304,7 @@ def _rebuild_case(spark, tmp_path, sf_dir):
 
     return _dir_swap(
         path,
-        path + "__rebuild_stage",
+        path + "__save_stage",
         ids,
         commit=lambda: rebuild_ivf_index(spark, path, e),
         after=ids(path),
@@ -312,6 +312,127 @@ def _rebuild_case(spark, tmp_path, sf_dir):
             lambda: load_ivf_index(spark, path),
             lambda: rebuild_ivf_index(spark, path, e),
         ],
+    )
+
+
+def _resave_case(path, rows, save, commit):
+    """A commit into an existing directory artifact: ``save`` makes the
+    artifact the crash must preserve; ``commit`` is the crashing save.
+    ``rows`` reads an artifact directory through its loader (data and
+    manifest), and the expected result is ``commit`` run on a twin."""
+    save(path)
+    save(path + "_expected")
+    commit(path + "_expected")
+    return _dir_swap(
+        path,
+        path + "__save_stage",
+        rows,
+        commit=lambda: commit(path),
+        after=rows(path + "_expected"),
+        next_ops=[lambda: rows(path), lambda: commit(path)],
+    )
+
+
+def _ivf_resave_case(spark, tmp_path, sf_dir):
+    from pyveb_spark.operators.similarity import ivf_index
+    from pyveb_spark.sinks.index_store import load_ivf_index, save_ivf_index
+    from pyveb_spark.sources.readers import read_table
+
+    e = read_table(spark, sf_dir, "embeddings")
+    first = ivf_index(e.where("vec_id < 120"), n_lists=4)
+    second = ivf_index(e.where("vec_id < 60"), n_lists=2)
+
+    def rows(d):
+        postings, centroids, meta = load_ivf_index(spark, d)
+        return _rows(postings.select("vec_id")), centroids, meta
+
+    return _resave_case(
+        str(tmp_path / "ivf"),
+        rows,
+        lambda d: save_ivf_index(*first, d),
+        lambda d: save_ivf_index(*second, d),
+    )
+
+
+def _lsh_case(spark, tmp_path):
+    from pyveb_spark.session import local_df
+    from pyveb_spark.sinks.index_store import load_lsh_index, save_lsh_index
+
+    def index(n):
+        return local_df(
+            spark, [(i, i % 4) for i in range(n)], "vec_id bigint, __b bigint"
+        )
+
+    def rows(d):
+        df, meta = load_lsh_index(spark, d)
+        return _rows(df.select("vec_id", "__b")), meta
+
+    return _resave_case(
+        str(tmp_path / "lsh"),
+        rows,
+        lambda d: save_lsh_index(index(20), d, meta={"seed": 1}),
+        lambda d: save_lsh_index(index(30), d, meta={"seed": 2}),
+    )
+
+
+def _bloom_case(spark, tmp_path, update):
+    from pyveb_spark.session import local_df
+    from pyveb_spark.sinks.index_store import (
+        load_id_bloom,
+        save_id_bloom,
+        update_id_bloom,
+    )
+
+    def ids(lo, hi):
+        return local_df(spark, [(i,) for i in range(lo, hi)], "vec_id bigint")
+
+    state = {}
+
+    def save(d):
+        _, state["meta"], state["words"] = save_id_bloom(ids(0, 40), d)
+
+    def commit(d):
+        if update:
+            update_id_bloom(ids(40, 80), d, state["words"], state["meta"])
+        else:
+            save_id_bloom(ids(0, 80), d)
+
+    return _resave_case(
+        str(tmp_path / "bloom"),
+        lambda d: load_id_bloom(spark, d)[1:],
+        save,
+        commit,
+    )
+
+
+def _pq_case(spark, tmp_path):
+    from pyveb_spark.sinks.index_store import (
+        load_pq_codebooks,
+        save_pq_codebooks,
+    )
+
+    def codebooks(x):
+        return [
+            [(0, [x, 1.0]), (1, [1.0, x])],
+            [(0, [0.5, x]), (1, [x, 0.25])],
+        ]
+
+    return _resave_case(
+        str(tmp_path / "pq"),
+        lambda d: load_pq_codebooks(spark, d),
+        lambda d: save_pq_codebooks(spark, codebooks(0.0), d),
+        lambda d: save_pq_codebooks(spark, codebooks(2.0), d, meta={"v": 2}),
+    )
+
+
+def _sq8_case(spark, tmp_path):
+    from pyveb_spark.sinks.index_store import load_sq8_stats, save_sq8_stats
+
+    return _resave_case(
+        str(tmp_path / "sq8"),
+        lambda d: load_sq8_stats(spark, d),
+        lambda d: save_sq8_stats(spark, [(0.0, 1.0), (-1.0, 2.0)], d),
+        lambda d: save_sq8_stats(spark, [(0.5, 1.5)], d, meta={"v": 2}),
     )
 
 
@@ -366,6 +487,12 @@ def _bucketed_case(spark, tmp_path):
         "compact_ivf_postings",
         "rebuild_ivf_index",
         "compact_bucketed_index_external",
+        "save_ivf_index",
+        "save_lsh_index",
+        "save_id_bloom",
+        "update_id_bloom",
+        "save_pq_codebooks",
+        "save_sq8_stats",
     ],
 )
 def test_crash_between_swap_renames_loses_nothing(
@@ -383,6 +510,12 @@ def test_crash_between_swap_renames_loses_nothing(
         "compact_bucketed_index_external": lambda: _bucketed_case(
             spark, tmp_path
         ),
+        "save_ivf_index": lambda: _ivf_resave_case(spark, tmp_path, sf_dir),
+        "save_lsh_index": lambda: _lsh_case(spark, tmp_path),
+        "save_id_bloom": lambda: _bloom_case(spark, tmp_path, update=False),
+        "update_id_bloom": lambda: _bloom_case(spark, tmp_path, update=True),
+        "save_pq_codebooks": lambda: _pq_case(spark, tmp_path),
+        "save_sq8_stats": lambda: _sq8_case(spark, tmp_path),
     }[caller]()
     try:
         before = case["rows"](case["live"])
@@ -409,6 +542,9 @@ def test_crash_between_swap_renames_loses_nothing(
             assert case["hint"] in str(err.value)
         assert case["rows"](case["stage"]) == case["after"]
         case["recover"]()
+        assert case["read"]() == case["after"]
+        # and the next commit goes through
+        case["commit"]()
         assert case["read"]() == case["after"]
     finally:
         case.get("cleanup", lambda: None)()

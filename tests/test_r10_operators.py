@@ -28,7 +28,7 @@ def test_pq_codebooks_round_trip_bit_exact(spark, tmp_path):
     e = read_table(spark, SF, "embeddings")
     fresh = pq_train(e, m=4, k=16, iters=2)
     save_pq_codebooks(spark, fresh, str(tmp_path / "cb"))
-    loaded = load_pq_codebooks(spark, str(tmp_path / "cb"))
+    loaded, _ = load_pq_codebooks(spark, str(tmp_path / "cb"))
     assert loaded == fresh  # doubles round-trip parquet exactly
 
 
@@ -52,7 +52,7 @@ def test_pq_persisted_search_equals_fresh(spark, tmp_path):
     ).collect()
 
     save_pq_codebooks(spark, fresh_cb, str(tmp_path / "cb"))
-    cb = load_pq_codebooks(spark, str(tmp_path / "cb"))
+    cb, _ = load_pq_codebooks(spark, str(tmp_path / "cb"))
     pq_encode(e, cb).select("vec_id", "pq_codes").write.parquet(
         str(tmp_path / "codes")
     )
@@ -75,7 +75,7 @@ def test_sq8_stats_round_trip_and_identical_search(spark, tmp_path):
     qv = _query_vec(e)
     fresh_stats = sq8_stats(e)
     save_sq8_stats(spark, fresh_stats, str(tmp_path / "stats"))
-    loaded = load_sq8_stats(spark, str(tmp_path / "stats"))
+    loaded, _ = load_sq8_stats(spark, str(tmp_path / "stats"))
     assert loaded == fresh_stats
 
     fresh = sq8_ann(e, qv, k=10, shortlist=30, stats=fresh_stats,
@@ -107,13 +107,13 @@ def test_ivfpq_persisted_serving_plan_prunes_partitions(spark, tmp_path):
     indexed, cents = ivf_index(e, n_lists=8)
     save_pq_codebooks(spark, pq_train(e, m=4, k=16, iters=2),
                       str(tmp_path / "cb"))
-    cb = load_pq_codebooks(spark, str(tmp_path / "cb"))
+    cb, _ = load_pq_codebooks(spark, str(tmp_path / "cb"))
     save_ivf_index(
         pq_encode(indexed, cb).select("vec_id", "pq_codes", "ivf_list"),
         cents,
         str(tmp_path / "ivf"),
     )
-    postings, _ = load_ivf_index(spark, str(tmp_path / "ivf"))
+    postings, _, _ = load_ivf_index(spark, str(tmp_path / "ivf"))
     plan = postings.where(
         F.col("ivf_list").isin([0, 1])
     )._jdf.queryExecution().executedPlan().toString()
@@ -157,7 +157,7 @@ def test_compact_ivf_postings_drops_files_keeps_search(spark, tmp_path):
     indexed0, cents = ivf_index(corpus0, n_lists=4)
     root = str(tmp_path / "ivf")
     save_ivf_index(indexed0, cents, root)
-    _, loaded = load_ivf_index(spark, root)
+    _, loaded, _ = load_ivf_index(spark, root)
     # three admission waves -> small files accrete per list partition
     for lo, hi in [(0, 50), (50, 100), (100, 150)]:
         batch = e.where(
@@ -170,7 +170,7 @@ def test_compact_ivf_postings_drops_files_keeps_search(spark, tmp_path):
             ),
             root,
         )
-    grown, cents2 = load_ivf_index(spark, root)
+    grown, cents2, _ = load_ivf_index(spark, root)
     before_rows = [
         (r.vec_id, r.cosine_sim)
         for r in ivf_search(grown, cents2, qv, k=10, nprobe=2,
@@ -182,7 +182,7 @@ def test_compact_ivf_postings_drops_files_keeps_search(spark, tmp_path):
 
     n_after = len(_parquet_files(root + "/postings"))
     assert n_after < n_before
-    compacted, cents3 = load_ivf_index(spark, root)
+    compacted, cents3, _ = load_ivf_index(spark, root)
     assert cents3 == cents2
     after_rows = [
         (r.vec_id, r.cosine_sim)
@@ -232,7 +232,7 @@ def test_compact_minhash_index_drops_files_keeps_lookup(spark, tmp_path):
                 ),
                 table,
             )
-        idx, hot = load_minhash_index(spark, table, str(tmp_path / "hot"))
+        idx, hot, _ = load_minhash_index(spark, table, str(tmp_path / "hot"))
         before = sorted(
             (r.doc_id_new, r.doc_id_corpus, round(r.jaccard, 9))
             for r in minhash_lsh_lookup(
@@ -249,9 +249,7 @@ def test_compact_minhash_index_drops_files_keeps_lookup(spark, tmp_path):
 
         n_after = len(_parquet_files(postings_path))
         assert n_after < n_before
-        idx2, hot2 = load_minhash_index(
-            spark, table, str(tmp_path / "hot")
-        )
+        idx2, hot2, _ = load_minhash_index(spark, table, str(tmp_path / "hot"))
         assert idx2.count() == rows_before
         after = sorted(
             (r.doc_id_new, r.doc_id_corpus, round(r.jaccard, 9))
@@ -407,10 +405,14 @@ def test_lsh_index_manifest_round_trip(spark, tmp_path):
         idx, str(tmp_path / "lsh"),
         meta={"n_planes": 7, "seed": 11, "dim": dim},
     )
-    warm, meta = load_lsh_index(
-        spark, str(tmp_path / "lsh"), with_meta=True
-    )
+    warm, meta = load_lsh_index(spark, str(tmp_path / "lsh"))
     assert meta == {"n_planes": 7, "seed": 11, "dim": dim}
+    # non-int values come back with their saved types
+    typed = {**meta, "metric": "cosine", "threshold": 0.8}
+    save_lsh_index(idx, str(tmp_path / "typed"), meta=typed)
+    _, typed_meta = load_lsh_index(spark, str(tmp_path / "typed"))
+    assert typed_meta == typed
+    assert type(typed_meta["threshold"]) is float
     from_meta = sorted(
         (r.vec_id_new, r.vec_id_corpus, r.cosine_sim)
         for r in lsh_cosine_lookup(
@@ -427,9 +429,7 @@ def test_lsh_index_manifest_round_trip(spark, tmp_path):
     assert from_meta == explicit
 
     save_lsh_index(idx, str(tmp_path / "bare"))
-    _, bare_meta = load_lsh_index(
-        spark, str(tmp_path / "bare"), with_meta=True
-    )
+    _, bare_meta = load_lsh_index(spark, str(tmp_path / "bare"))
     assert bare_meta == {}
 
 

@@ -42,7 +42,7 @@ def _lookup(spark, tmp_path, table, batch):
     from pyveb_spark.operators.dedup import minhash_lsh_lookup
     from pyveb_spark.sinks.index_store import load_minhash_index
 
-    idx, hot = load_minhash_index(spark, table, str(tmp_path / "hot"))
+    idx, hot, _ = load_minhash_index(spark, table, str(tmp_path / "hot"))
     return sorted(
         (r.doc_id_new, r.doc_id_corpus, round(r.jaccard, 9))
         for r in minhash_lsh_lookup(
@@ -161,17 +161,17 @@ def test_load_lsh_index_corrupt_manifest_propagates(spark, tmp_path):
     path = str(tmp_path / "lshidx")
     local_df(
         spark, [(0, [0.1, 0.2], 3)], "id int, vec array<double>, __b long"
-    ).write.partitionBy("__b").parquet(path)
-    meta_dir = tmp_path / "lshidx_meta"
+    ).write.partitionBy("__b").parquet(path + "/buckets")
+    meta_dir = tmp_path / "lshidx" / "manifest"
     meta_dir.mkdir()
     (meta_dir / "garbage.parquet").write_text("this is not parquet")
     with pytest.raises(Exception):
-        load_lsh_index(spark, path, with_meta=True)
+        load_lsh_index(spark, path)
     # absent manifest still reads as a pre-manifest artifact
     import shutil
 
     shutil.rmtree(meta_dir)
-    df, meta = load_lsh_index(spark, path, with_meta=True)
+    df, meta = load_lsh_index(spark, path)
     assert meta == {} and df.count() == 1
 
 
@@ -209,9 +209,7 @@ def test_ivf_manifest_round_trip_and_mismatch(spark, tmp_path):
     e = read_table(spark, SF, "embeddings")
     indexed, cents = ivf_index(e, n_lists=8)
     save_ivf_index(indexed, cents, str(tmp_path), meta={"metric": "cosine"})
-    postings, loaded, meta = load_ivf_index(
-        spark, str(tmp_path), with_meta=True
-    )
+    postings, loaded, meta = load_ivf_index(spark, str(tmp_path))
     dim = len(loaded[0][1])
     assert meta == {"n_lists": 8, "dim": dim, "metric": "cosine"}
     q = loaded[0][1]  # a real vector: cosine needs a nonzero norm
@@ -237,9 +235,7 @@ def test_pq_manifest_round_trip_and_mismatch(spark, tmp_path):
     e = read_table(spark, SF, "embeddings")
     cb = pq_train(e, m=4, k=8, iters=1)
     save_pq_codebooks(spark, cb, str(tmp_path / "cb"))
-    loaded, meta = load_pq_codebooks(
-        spark, str(tmp_path / "cb"), with_meta=True
-    )
+    loaded, meta = load_pq_codebooks(spark, str(tmp_path / "cb"))
     dim = 4 * len(loaded[0][0][1])
     assert meta == {"m": 4, "k": 8, "dim": dim}
     codes = pq_encode(e, loaded, meta=meta)
@@ -261,7 +257,7 @@ def test_sq8_manifest_round_trip_and_mismatch(spark, tmp_path):
     e = read_table(spark, SF, "embeddings")
     stats = sq8_stats(e)
     save_sq8_stats(spark, stats, str(tmp_path / "st"), meta={"vec_col": "embedding"})
-    loaded, meta = load_sq8_stats(spark, str(tmp_path / "st"), with_meta=True)
+    loaded, meta = load_sq8_stats(spark, str(tmp_path / "st"))
     assert meta == {"dim": len(stats), "vec_col": "embedding"}
     assert sq8_encode(e, loaded, meta=meta).count() == e.count()
     with pytest.raises(ValueError, match="build-manifest mismatch"):
@@ -296,7 +292,7 @@ def test_minhash_manifest_survives_append_and_compaction(spark, tmp_path):
             meta=build,
         )
         idx, hot, meta = load_minhash_index(
-            spark, table, str(tmp_path / "hot"), with_meta=True
+            spark, table, str(tmp_path / "hot")
         )
         assert meta == build
         batch = d.where(F.col("doc_id") < 50)
@@ -331,9 +327,7 @@ def test_minhash_manifest_survives_append_and_compaction(spark, tmp_path):
             table,
         )
         compact_minhash_index(spark, table, hot_path=str(tmp_path / "hot"))
-        _, _, meta2 = load_minhash_index(
-            spark, table, str(tmp_path / "hot"), with_meta=True
-        )
+        _, _, meta2 = load_minhash_index(spark, table, str(tmp_path / "hot"))
         assert meta2 == build
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
@@ -353,9 +347,7 @@ def test_pre_manifest_artifacts_load_with_empty_meta(spark, tmp_path):
     local_df(
         spark, [(0, [0.1])], "list_id int, centroid array<double>"
     ).write.parquet(str(tmp_path / "centroids"))
-    postings, cents, meta = load_ivf_index(
-        spark, str(tmp_path), with_meta=True
-    )
+    postings, cents, meta = load_ivf_index(spark, str(tmp_path))
     assert meta == {} and postings.count() == 1 and len(cents) == 1
 
 
@@ -508,7 +500,7 @@ def test_append_after_compaction_swap(spark, tmp_path, external):
             hot_path=str(tmp_path / "hot"),
         )
         idx, hot, meta = load_minhash_index(
-            spark, table, str(tmp_path / "hot"), with_meta=True
+            spark, table, str(tmp_path / "hot")
         )
         assert meta == {"n": 2, "num_hashes": 32, "bands": 8}
         assert minhash_lsh_lookup(
@@ -592,7 +584,7 @@ def test_simhash_persisted_lifecycle(spark, tmp_path):
             path=str(tmp_path / "postings"),
             meta={"bands": 4, "bits": 60},
         )
-        idx, meta = load_bucketed_index(spark, table, with_meta=True)
+        idx, meta = load_bucketed_index(spark, table)
         assert meta == {"bands": 4, "bits": 60}
 
         def rows(frame):
@@ -617,7 +609,7 @@ def test_simhash_persisted_lifecycle(spark, tmp_path):
         before = rows(simhash_lookup(
             batch, spark.table(table), "doc_id", "text", meta=meta))
         compact_bucketed_index(spark, table)
-        idx2, meta2 = load_bucketed_index(spark, table, with_meta=True)
+        idx2, meta2 = load_bucketed_index(spark, table)
         assert meta2 == meta
         assert rows(simhash_lookup(
             batch, idx2, "doc_id", "text", meta=meta2)) == before

@@ -6,6 +6,7 @@ single-source lookup defaults, and the maybe-compact existence guard."""
 
 from __future__ import annotations
 
+import os
 import uuid
 
 import pytest
@@ -97,9 +98,7 @@ def test_external_compaction_completes_and_cleans_aside(spark, tmp_path):
         n_before = spark.table(table).count()
         compact_minhash_index(spark, table, hot_path=str(tmp_path / "hot"))
         assert not os.path.isdir(loc.rstrip("/") + "__compact_old")
-        _, _, meta = load_minhash_index(
-            spark, table, str(tmp_path / "hot"), with_meta=True
-        )
+        _, _, meta = load_minhash_index(spark, table, str(tmp_path / "hot"))
         assert meta == {"n": 2, "num_hashes": 32, "bands": 8}
         assert spark.table(table).count() == n_before
         described = {
@@ -279,7 +278,7 @@ def test_bm25_persisted_equals_fresh_through_lifecycle(spark, tmp_path):
         assert incremental["sum_dl"] == fresh_stats["sum_dl"]
 
         compact_bucketed_index(spark, table)
-        p, dls, meta = load_bm25_index(spark, table, dl, with_meta=True)
+        p, dls, meta = load_bm25_index(spark, table, dl)
         got = bm25_search_indexed(
             p, dls, meta["n_docs"], meta["sum_dl"], QTOKS, k=10
         )
@@ -308,7 +307,7 @@ def test_bm25_indexed_search_bucket_prunes_and_stays_jvm(spark, tmp_path):
     dl = str(tmp_path / "doclens")
     try:
         save_bm25_index(_docs(spark), table, dl)
-        p, dls, meta = load_bm25_index(spark, table, dl, with_meta=True)
+        p, dls, meta = load_bm25_index(spark, table, dl)
         res = bm25_search_indexed(
             p, dls, meta["n_docs"], meta["sum_dl"], ["hash", "merge"], k=5
         )
@@ -367,7 +366,7 @@ def test_bm25_compaction_reduces_files_keeps_bucket_spec(spark, tmp_path):
         }
         assert int(meta_rows["Num Buckets"]) == 8
         assert "token" in meta_rows["Bucket Columns"]
-        _, _, manifest = load_bm25_index(spark, table, dl, with_meta=True)
+        _, _, manifest = load_bm25_index(spark, table, dl)
         assert manifest["n_docs"] == d.count()
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
@@ -398,7 +397,7 @@ def test_phrase_index_lifecycle_and_width_mismatch(spark, tmp_path):
         )
         append_ngram_index(d.where("doc_id < 100"), table, 3)
         compact_bucketed_index(spark, table)
-        idx, meta = load_bucketed_index(spark, table, with_meta=True)
+        idx, meta = load_bucketed_index(spark, table)
         assert meta["n"] == 3
         got = sorted(
             tuple(r)
@@ -470,7 +469,7 @@ def test_bloom_gated_anti_join_equals_exact(spark, tmp_path):
     corpus = e.where("vec_id % 17 != 0").select("vec_id")
     path = str(tmp_path / "bloom")
     save_id_bloom(corpus, path)
-    bloom, meta = load_id_bloom(spark, path)
+    bloom, meta, _ = load_id_bloom(spark, path)
     calls = []
 
     def exact_ids():
@@ -533,10 +532,10 @@ def test_id_bloom_update_then_replay_is_noop(spark, tmp_path):
         "vec_id >= 200 AND vec_id < 260"
     ).select("vec_id")
     path = str(tmp_path / "bloom")
-    save_id_bloom(corpus, path, num_bits=8192)
-    update_id_bloom(batch, path)
+    _, meta0, words0 = save_id_bloom(corpus, path, num_bits=8192)
+    update_id_bloom(batch, path, words0, meta0)
     grown = corpus.unionByName(batch)
-    bloom, meta = load_id_bloom(spark, path)
+    bloom, meta, _ = load_id_bloom(spark, path)
     replayed = bloom_gated_anti_join(
         batch.withColumn("label", F.lit("x")), bloom, grown, "vec_id",
         int(meta["num_bits"]), int(meta["num_hashes"]),
@@ -547,7 +546,9 @@ def test_id_bloom_update_then_replay_is_noop(spark, tmp_path):
     a = sorted(tuple(r) for r in bloom.collect())
     b = sorted(
         tuple(r)
-        for r in spark.read.parquet(str(tmp_path / "rebuilt")).collect()
+        for r in spark.read.parquet(
+            str(tmp_path / "rebuilt" / "words")
+        ).collect()
     )
     assert a == b
 
@@ -570,10 +571,10 @@ def test_id_bloom_over_approximation_is_safe(spark, tmp_path):
         "vec_id >= 100 AND vec_id < 130"
     ).select("vec_id")
     path = str(tmp_path / "bloom")
-    save_id_bloom(corpus, path, num_bits=8192)
+    _, meta0, words0 = save_id_bloom(corpus, path, num_bits=8192)
     # simulate the crash: filter updated, postings never appended
-    update_id_bloom(lost_batch, path)
-    bloom, meta = load_id_bloom(spark, path)
+    update_id_bloom(lost_batch, path, words0, meta0)
+    bloom, meta, _ = load_id_bloom(spark, path)
     readmitted = bloom_gated_anti_join(
         lost_batch, bloom, corpus, "vec_id",
         int(meta["num_bits"]), int(meta["num_hashes"]),
@@ -585,10 +586,10 @@ def test_id_bloom_threaded_state_equals_parquet(spark, tmp_path):
     """The r12 per-batch state threading: update_id_bloom returns the
     merged (word_idx, word) list, and passing it back as ``words`` on
     the next call (with the load-time manifest as ``meta``) produces
-    the same filter — word for word — as the slow path that re-reads
-    the parquet every batch. The returned state always equals what the
-    parquet holds, so a restarted loop reloading from disk sees
-    identical state."""
+    the same filter — word for word — as a loop restarted before every
+    batch, which reloads its state with load_id_bloom. The returned
+    state always equals what the parquet holds, so a restarted loop
+    reloading from disk sees identical state."""
     from pyveb_spark.sinks.index_store import (
         bloom_words_frame,
         load_id_bloom,
@@ -606,19 +607,20 @@ def test_id_bloom_threaded_state_equals_parquet(spark, tmp_path):
     save_id_bloom(corpus, fast, num_bits=8192)
     save_id_bloom(corpus, slow, num_bits=8192)
 
-    _, meta, words = load_id_bloom(spark, fast, with_rows=True)
+    _, meta, words = load_id_bloom(spark, fast)
     words = update_id_bloom(b1, fast, words=words, meta=meta)
     words = update_id_bloom(b2, fast, words=words, meta=meta)
-    update_id_bloom(b1, slow)
-    update_id_bloom(b2, slow)
+    for b in (b1, b2):
+        _, slow_meta, slow_words = load_id_bloom(spark, slow)
+        update_id_bloom(b, slow, words=slow_words, meta=slow_meta)
 
     on_disk = sorted(
         (int(r["word_idx"]), int(r["word"]))
-        for r in spark.read.parquet(fast).collect()
+        for r in spark.read.parquet(os.path.join(fast, "words")).collect()
     )
     slow_disk = sorted(
         (int(r["word_idx"]), int(r["word"]))
-        for r in spark.read.parquet(slow).collect()
+        for r in spark.read.parquet(os.path.join(slow, "words")).collect()
     )
     assert words == on_disk  # returned state IS the parquet
     assert on_disk == slow_disk  # threaded == re-read-per-batch
@@ -632,21 +634,21 @@ def test_id_bloom_threaded_state_equals_parquet(spark, tmp_path):
     assert frame_rows == load_rows
 
 
-def test_save_id_bloom_with_state_equals_load(spark, tmp_path):
-    """save_id_bloom(with_state=True) must return exactly the triple a
-    fresh load_id_bloom(with_rows=True) would — same manifest geometry,
-    same words, same probe-frame rows — and the parquet it writes must
-    equal the plain save path's, word for word."""
+def test_save_id_bloom_state_equals_load(spark, tmp_path):
+    """save_id_bloom must return exactly the triple a fresh
+    load_id_bloom would — same manifest geometry, same words, same
+    probe-frame rows — and the parquet it writes must equal a second
+    save's, word for word."""
     from pyveb_spark.sinks.index_store import load_id_bloom, save_id_bloom
 
     ids = read_table(spark, SF, "embeddings").where(
         "vec_id < 150"
     ).select("vec_id")
     a, b = str(tmp_path / "a"), str(tmp_path / "b")
-    frame, meta, words = save_id_bloom(ids, a, with_state=True)
+    frame, meta, words = save_id_bloom(ids, a)
     save_id_bloom(ids, b)
 
-    lframe, lmeta, lwords = load_id_bloom(spark, a, with_rows=True)
+    lframe, lmeta, lwords = load_id_bloom(spark, a)
     assert {k: int(v) for k, v in lmeta.items() if k != "key_col"} == {
         k: int(v) for k, v in meta.items() if k != "key_col"
     }
@@ -656,7 +658,7 @@ def test_save_id_bloom_with_state_equals_load(spark, tmp_path):
     )
     plain = sorted(
         (int(r["word_idx"]), int(r["word"]))
-        for r in spark.read.parquet(b).collect()
+        for r in spark.read.parquet(os.path.join(b, "words")).collect()
     )
     assert words == plain
 
@@ -669,6 +671,8 @@ def test_update_id_bloom_without_manifest_raises(spark, tmp_path):
         update_id_bloom(
             local_df(spark, [(1,)], "vec_id bigint"),
             str(tmp_path / "nope"),
+            words=[],
+            meta={},
         )
 
 
@@ -701,7 +705,7 @@ def _hotspot_index(spark, tmp_path):
     path = str(tmp_path / "ivf")
     indexed0, cents0 = ivf_index(e, n_lists=16)
     save_ivf_index(indexed0, cents0, path)
-    _, frozen, _ = load_ivf_index(spark, path, with_meta=True)
+    _, frozen, _ = load_ivf_index(spark, path)
     base = np.asarray(
         e.where(F.col("vec_id") == 1).first()["embedding"], dtype=float
     )
@@ -740,7 +744,7 @@ def test_rebuild_ivf_restores_balance_and_serves(spark, tmp_path):
     report = rebuild_ivf_index(spark, path, full, kmeans_iters=3)
     assert report["n_rows"] == full.count()
     assert report["after_imbalance"] < report["before_imbalance"], report
-    postings, cents, meta = load_ivf_index(spark, path, with_meta=True)
+    postings, cents, meta = load_ivf_index(spark, path)
     assert meta["n_lists"] == 16 and len(cents) == 16
     # id set preserved exactly; labels (non-list columns) intact
     assert postings.select("vec_id").distinct().count() == report["n_rows"]
@@ -760,43 +764,36 @@ def test_rebuild_ivf_crashed_swap_detected_and_recoverable(
     aside, stage not yet installed): both datasets must survive,
     load_ivf_index must refuse with the recovery naming the stage, and
     the documented rename must restore service."""
-    import os
-
-    from pyveb_spark.sinks import index_store
+    from pyveb_spark.sinks import writers
     from pyveb_spark.sinks.index_store import (
         load_ivf_index,
         rebuild_ivf_index,
     )
 
     path, full = _hotspot_index(spark, tmp_path)
-    real_save = index_store.save_ivf_index
-    state = {}
+    spark_jvm = spark._jvm
+    HPath = spark_jvm.org.apache.hadoop.fs.Path
+    fs = HPath(path).getFileSystem(spark._jsc.hadoopConfiguration())
 
-    def crashing_swap_save(*a, **kw):
-        real_save(*a, **kw)
-        # after the stage artifact is fully written, simulate the crash
-        # window by doing the first rename ourselves and aborting
-        spark_jvm = spark._jvm
-        HPath = spark_jvm.org.apache.hadoop.fs.Path
-        fs = HPath(path).getFileSystem(spark._jsc.hadoopConfiguration())
-        state["fs"], state["HPath"] = fs, HPath
+    def crashing_swap(*a, **kw):
+        # the stage artifact is fully written when the commit starts:
+        # simulate the crash window by aborting before any rename
         raise RuntimeError("injected post-stage crash")
 
-    monkeypatch.setattr(index_store, "save_ivf_index", crashing_swap_save)
+    monkeypatch.setattr(writers, "swap_dir", crashing_swap)
     with pytest.raises(RuntimeError, match="injected"):
         rebuild_ivf_index(spark, path, full, kmeans_iters=1)
-    monkeypatch.setattr(index_store, "save_ivf_index", real_save)
+    monkeypatch.undo()
     # manufacture the exact mid-swap state: original renamed aside
-    fs, HPath = state["fs"], state["HPath"]
-    aside = path.rstrip("/") + "__rebuild_old"
-    stage = path.rstrip("/") + "__rebuild_stage"
+    aside = path.rstrip("/") + "__save_old"
+    stage = path.rstrip("/") + "__save_stage"
     assert os.path.isdir(stage)  # complete new artifact survived
     fs.rename(HPath(path), HPath(aside))
-    with pytest.raises(RuntimeError, match="__rebuild_stage"):
+    with pytest.raises(RuntimeError, match="__save_stage"):
         load_ivf_index(spark, path)
     # the documented recovery: install the complete new artifact
     fs.rename(HPath(stage), HPath(path))
-    postings, cents = load_ivf_index(spark, path)
+    postings, cents, _ = load_ivf_index(spark, path)
     assert postings.count() == full.count() and len(cents) == 16
 
 
@@ -832,6 +829,6 @@ def test_rebuild_ivf_copies_sidecars_and_guards_coverage(
     assert load_ivf_index(spark, path)[0].count() == n_before
 
     rebuild_ivf_index(spark, path, full, kmeans_iters=0)
-    bloom2, meta2 = load_id_bloom(spark, bloom_path)
+    bloom2, meta2, _ = load_id_bloom(spark, bloom_path)
     assert sorted(tuple(r) for r in bloom2.collect()) == before_words
     assert int(meta2["num_bits"]) == 8192
