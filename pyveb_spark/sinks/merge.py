@@ -124,9 +124,11 @@ def scd2_apply(
 
     Scale notes: one shuffle on ``keys`` (the change-detection join);
     closed/untouched/new branches are unions of that one join's outputs —
-    no O(history) rewrite beyond what the caller's sink does (pair with
-    ``ParquetMergeSink.upsert_partitioned`` keyed on ``valid_from`` dates
-    to rewrite only touched partitions).
+    no O(history) rewrite beyond what the caller's sink does. Pairing it
+    with ``ParquetMergeSink.upsert_partitioned`` keyed on ``valid_from``
+    dates rewrites only touched partitions, but a crash mid-write can then
+    lose one of them; ``ParquetMergeSink.upsert`` rewrites the whole
+    history and loses nothing to a crash.
     """
     keys = list(keys)
     attr_cols = [c for c in stage.columns if c not in (*keys, effective_col)]
@@ -329,8 +331,11 @@ class ParquetMergeSink:
         is a no-op (property-tested).
 
         Scale note: this rewrites the table — correct but O(table). For
-        partitioned targets prefer ``upsert_partitioned`` which rewrites
-        only the partitions the stage batch touches.
+        partitioned targets ``upsert_partitioned`` rewrites only the
+        partitions the stage batch touches, at a price: it commits without
+        ``swap_dir``, so a crash mid-write can lose a touched partition
+        (see there). This method commits through ``swap_dir``, so a crash
+        loses nothing.
         """
         if self.exists():
             df = upsert_frames(self.read(), df, keys)
@@ -343,11 +348,17 @@ class ParquetMergeSink:
         partition_cols: Sequence[str],
     ) -> None:
         """Partition-scoped upsert: merge only the partitions present in the
-        stage batch and rewrite them via dynamic partition overwrite
-        (``partitionOverwriteMode=dynamic``, set in session.py) — the
-        100 TB-safe upsert. ↔ the reference's partition-prefix
-        delete-then-rewrite idempotency (``s3_client.py:110-133``) but
-        transactional per-partition and computed distributively.
+        stage batch and rewrite them via dynamic partition overwrite — the
+        O(touched) upsert. The write sets ``partitionOverwriteMode=dynamic``
+        itself, so partitions the batch does not touch survive whatever
+        the session's mode. ↔ the reference's partition-prefix
+        delete-then-rewrite idempotency (``s3_client.py:110-133``),
+        computed distributively.
+
+        Not crash-safe: Spark's dynamic overwrite deletes each touched
+        partition and then moves the staged copy into place, with no
+        ``swap_dir``. A crash between the two steps loses that partition.
+        Use ``upsert`` where a crash must lose nothing.
         """
         partition_cols = list(partition_cols)
         if not self.exists():
@@ -365,7 +376,9 @@ class ParquetMergeSink:
             )
         current = current.join(F.broadcast(touched), partition_cols, "inner")
         merged = upsert_frames(current, df, keys).localCheckpoint(eager=True)
-        merged.write.mode("overwrite").partitionBy(*partition_cols).parquet(self.path)
+        (merged.write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy(*partition_cols).parquet(self.path))
 
 
 def snapshot_diff(

@@ -73,27 +73,36 @@ def test_sink_upsert_creates_table(spark, frames):
         assert sink.exists() and sink.read().count() == 4
 
 
-def test_partitioned_upsert_touches_only_stage_partitions(spark):
-    with tempfile.TemporaryDirectory() as tmp:
-        path = os.path.join(tmp, "ptbl")
-        sink = ParquetMergeSink(spark, path)
-        base = spark.createDataFrame(
-            [(1, "2024-01-01", 1.0), (2, "2024-01-01", 2.0), (3, "2024-01-02", 3.0)],
-            "k int, day string, v double",
-        )
-        sink.upsert_partitioned(base, keys=["k"], partition_cols=["day"])
-        stage = spark.createDataFrame(
-            [(1, "2024-01-01", 10.0), (4, "2024-01-01", 40.0)],
-            "k int, day string, v double",
-        )
-        sink.upsert_partitioned(stage, keys=["k"], partition_cols=["day"])
-        rows = {r.k: (r.day, r.v) for r in sink.read().collect()}
-        assert rows == {
-            1: ("2024-01-01", 10.0),
-            2: ("2024-01-01", 2.0),
-            3: ("2024-01-02", 3.0),  # untouched partition intact
-            4: ("2024-01-01", 40.0),
-        }
+@pytest.mark.parametrize("session_mode", ["dynamic", "static"])
+def test_partitioned_upsert_touches_only_stage_partitions(spark, session_mode):
+    # "static" is a plain SparkSession's default: the sink must not rely on
+    # get_spark's session-wide dynamic partition overwrite.
+    conf_key = "spark.sql.sources.partitionOverwriteMode"
+    saved = spark.conf.get(conf_key)
+    spark.conf.set(conf_key, session_mode)
+    try:
+        with tempfile.TemporaryDirectory() as tmp:
+            path = os.path.join(tmp, "ptbl")
+            sink = ParquetMergeSink(spark, path)
+            base = spark.createDataFrame(
+                [(1, "2024-01-01", 1.0), (2, "2024-01-01", 2.0), (3, "2024-01-02", 3.0)],
+                "k int, day string, v double",
+            )
+            sink.upsert_partitioned(base, keys=["k"], partition_cols=["day"])
+            stage = spark.createDataFrame(
+                [(1, "2024-01-01", 10.0), (4, "2024-01-01", 40.0)],
+                "k int, day string, v double",
+            )
+            sink.upsert_partitioned(stage, keys=["k"], partition_cols=["day"])
+            rows = {r.k: (r.day, r.v) for r in sink.read().collect()}
+            assert rows == {
+                1: ("2024-01-01", 10.0),
+                2: ("2024-01-01", 2.0),
+                3: ("2024-01-02", 3.0),  # untouched partition intact
+                4: ("2024-01-01", 40.0),
+            }
+    finally:
+        spark.conf.set(conf_key, saved)
 
 
 def test_upsert_if_changed_skips_noop_updates(spark):

@@ -1,21 +1,9 @@
-"""Driver-t1-style smoke: every registered query runs at sf0.001 and yields
-a stable schema with ≥0 rows (covers the oracle-less rows-only entries)."""
+"""Registry contract: the driver entry point, one oracle per query, and the
+certification window (the first 50 registry entries)."""
 
 from __future__ import annotations
 
-import pytest
-
 from pyveb_spark.queries import ORACLE_SQL, QUERIES
-
-ROWS_ONLY = sorted(set(QUERIES) - set(ORACLE_SQL))
-
-
-@pytest.mark.parametrize("name", ROWS_ONLY)
-def test_rows_only_queries_run(name, spark):
-    df = QUERIES[name](spark, "/root/testdata/sf0.001")
-    rows = df.collect()
-    assert len(rows) >= 0
-    assert len(df.schema.fields) > 0
 
 
 def test_entry_contract(spark):
@@ -45,52 +33,55 @@ def test_every_query_has_an_oracle():
     # (which already collects each result, so the assert is free there).
 
 
-def test_gate_window_composition():
-    """The driver certifies only the first 50 registry entries; the
-    rotation contract (gate-window comment in
-    pyveb_spark/queries/__init__.py). Round 12 takes never-certified
-    back to ZERO: the window keeps the eight ever-standing heads, q117,
-    q74, 12 of the 19 round-8 heads, q200–q205 (fourth consecutive),
-    the 8 TPC-H residue anchors, q206–q212 (third consecutive), and
-    q213–q217 (second consecutive — the soak-then-anchor pattern); the
-    two incoming slots are the round-11 heads q218–q219 — the only
-    queries without a hard CORRECTNESS row. Every displaced query must
-    still exist (selfcheck covers it outside the window)."""
-    from pyveb_spark.queries import (
-        _R8_IN,
-        _R9_IN,
-        _R10_IN,
-        _R10_OUT,
-        _R11_IN,
-        _R11_OUT,
-        _R12_IN,
-        _R12_OUT,
-    )
+# The driver's CORRECTNESS gate certifies only the first 50 registry
+# entries; this is that window, in registry order.
+GATE_WINDOW = [
+    "q01_pricing_summary", "q03_revenue_by_nation", "q06_window_topn",
+    "q08_rollup", "q10_set_ops", "q12_json_props", "q31_session_windows",
+    "q48_last_shipper", "q117_vocab_encode", "q181_dpo_pairs",
+    "q182_ul2_denoiser_mix", "q183_mmr_diverse_topk",
+    "q184_rag_context_assembly", "q185_quality_survivorship",
+    "q187_zorder_pruning_audit", "q190_gdpr_cascade_audit",
+    "q193_embedding_ood", "q194_padding_waste_audit",
+    "q195_dedup_signal_agreement", "q198_prototype_assignment",
+    "q199_prefix_cache_grouping", "q74_market_share",
+    "q200_bitext_lsh_mining", "q201_bradley_terry_sources",
+    "q202_preference_length_bias", "q203_group_advantage",
+    "q204_kmv_quantiles", "q205_threshold_sweep_lsh",
+    "q53_idle_rich_customers", "q58_order_count_distribution",
+    "q68_promo_revenue_share", "q69_supplier_part_counts",
+    "q72_local_supplier_volume", "q73_returned_item_customers",
+    "q77_cheapest_supplier", "q79_excess_stock",
+    "q206_stream_lsh_admission", "q207_ivf_persisted_search",
+    "q208_minhash_persisted_admission", "q209_minhash_index_evolution",
+    "q210_ivf_incremental_admission", "q211_ivf_index_health",
+    "q212_dataset_datasheet", "q213_pq_persisted_search",
+    "q214_sq8_persisted_ann", "q215_ivfpq_persisted_serving",
+    "q216_minhash_compacted_evolution", "q217_ivf_compacted_search",
+    "q218_stream_ivfpq_admission", "q219_simhash_persisted_admission",
+]
 
+# Queries moved out of the window to make room for newer ones; each keeps
+# a family sibling inside it and is verified by selfcheck.py instead.
+DISPLACED = [
+    "q51_part_value_concentration", "q52_top_supplier",
+    "q59_disjunctive_revenue", "q60_large_orders", "q70_bilateral_volume",
+    "q71_shipmode_priority", "q83_small_qty_revenue",
+    "q186_dedup_threshold_sweep", "q188_kmv_set_algebra",
+    "q189_bitext_margin_mining", "q191_compaction_plan",
+    "q197_batch_knn_join", "q192_embedding_drift",
+    "q196_jl_distortion_audit",
+]
+
+
+def test_gate_window_composition():
+    """The first 50 registry entries are exactly ``GATE_WINDOW``, in
+    order, and every displaced query is still registered outside it."""
     window = list(QUERIES)[:50]
-    standing = [
-        "q01_pricing_summary", "q03_revenue_by_nation", "q06_window_topn",
-        "q08_rollup", "q10_set_ops", "q12_json_props",
-        "q31_session_windows", "q48_last_shipper",
-    ]
-    r8_heads = [q for q in _R8_IN if q.startswith(
-        ("q181", "q182", "q183", "q184", "q185", "q186", "q187", "q188",
-         "q189", "q190", "q191", "q192", "q193", "q194", "q195", "q196",
-         "q197", "q198", "q199"))]
-    must_be_in = (
-        standing + ["q117_vocab_encode", "q74_market_share"]
-        + [q for q in r8_heads
-           if q not in _R11_OUT and q not in _R12_OUT]
-        + [q for q in _R9_IN if q not in _R10_OUT]
-        + list(_R10_IN)
-        + list(_R11_IN)
-        + list(_R12_IN)
-    )
-    missing = [q for q in must_be_in if q not in window]
-    assert missing == [], f"expected in the gate window: {missing}"
-    assert len(_R12_IN) == 2 and len(_R12_OUT) == 2
-    assert set(window) == set(must_be_in)
-    # every displaced query is still registered (soaks under selfcheck)
-    for q in _R10_OUT + _R11_OUT + _R12_OUT:
-        assert q in QUERIES and q not in window, q
     assert len(window) == 50
+    assert len(set(GATE_WINDOW)) == 50
+    missing = [q for q in GATE_WINDOW if q not in window]
+    assert missing == [], f"expected in the gate window: {missing}"
+    assert window == GATE_WINDOW
+    for q in DISPLACED:
+        assert q in QUERIES and q not in window, q
