@@ -3,14 +3,19 @@ certification window (the first 50 registry entries)."""
 
 from __future__ import annotations
 
+import os
+
+import pyveb_spark
 from pyveb_spark.queries import ORACLE_SQL, QUERIES
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(pyveb_spark.__file__)))
 
 
 def test_entry_contract(spark):
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "entry_mod", "/root/repo/__spark_entry__.py"
+        "entry_mod", os.path.join(ROOT, "__spark_entry__.py")
     )
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)

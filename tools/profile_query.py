@@ -3,7 +3,10 @@
 
 Runs one or more named queries on the bench session, timing each with the
 noop sink (computes every column, discards output — §1.4) after a warmup,
-and optionally dumps ``.explain("formatted")`` to a file.
+and optionally dumps ``.explain("formatted")`` to a file. Next to each
+timed run it prints how many classes Spark's code generator compiled
+during it (``CodegenMetrics``): a warm repeat run should compile none, so
+a nonzero count is a query whose generated code misses the codegen cache.
 
 Usage::
 
@@ -48,6 +51,7 @@ def main() -> int:
         k, _, v = kv.partition("=")
         spark.conf.set(k, v)
     spark.sparkContext.setLogLevel("ERROR")
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
 
     selected = []
     for want in args.names:
@@ -61,21 +65,25 @@ def main() -> int:
         fn = QUERIES[name]
         spark.sparkContext.setJobDescription(f"profile:{name}")
 
-        def run_once() -> float:
+        def run_once() -> tuple[float, int]:
+            """Seconds and generated-class compiles of one run."""
+            c0 = codegen.METRIC_COMPILATION_TIME().getCount()
             t0 = time.perf_counter()
             df = fn(spark, args.sf_dir)
             if args.count:
                 df.count()
             else:
                 df.write.format("noop").mode("overwrite").save()
-            return time.perf_counter() - t0
+            return (time.perf_counter() - t0,
+                    codegen.METRIC_COMPILATION_TIME().getCount() - c0)
 
         for _ in range(args.warmup):
             run_once()
-        times = [run_once() for _ in range(args.runs)]
+        times, compiles = zip(*(run_once() for _ in range(args.runs)))
         print(
             f"{name}: median {statistics.median(times):.3f}s "
-            f"min {min(times):.3f}s runs {[round(t, 3) for t in times]}"
+            f"min {min(times):.3f}s runs {[round(t, 3) for t in times]} "
+            f"compiles {list(compiles)}"
         )
         if args.explain:
             df = fn(spark, args.sf_dir)
