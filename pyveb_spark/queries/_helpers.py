@@ -2,10 +2,11 @@
 
 from __future__ import annotations
 
+import functools
 import shutil
 import tempfile
 import uuid
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
@@ -57,7 +58,8 @@ def query_scratch(spark: SparkSession, prefix: str) -> Iterator[QueryScratch]:
     is dropped as a memory-sink view, as a catalog table and as its
     ``__compact_stage`` twin, and then the directory is removed. Nothing
     the run created outlives it, so a frame the query returns must be
-    materialized (``localCheckpoint(eager=True)``) inside the ``with``.
+    materialized inside the ``with``; :func:`scratch_query` does that
+    for every registered query that uses one.
     """
     s = QueryScratch(prefix, tempfile.mkdtemp(prefix=f"{prefix}_"))
     try:
@@ -70,3 +72,42 @@ def query_scratch(spark: SparkSession, prefix: str) -> Iterator[QueryScratch]:
                 spark.sql(f"DROP TABLE IF EXISTS {n}__compact_stage")
         finally:
             shutil.rmtree(s.dir, ignore_errors=True)
+
+
+def scratch_query(
+    builder: Callable[[SparkSession, str, QueryScratch], DataFrame],
+) -> Callable[[SparkSession, str], DataFrame]:
+    """Turn a self-cleaning builder ``f(spark, sf_dir, s)`` into a
+    registry query ``(spark, sf_dir)``: it runs the builder inside
+    :func:`query_scratch` (prefix ``qNNN`` from the builder's name) and
+    returns its frame materialized by ``localCheckpoint(eager=True)``
+    before the scratch is cleaned up — a checkpoint, not
+    collect-and-rebuild, whose Python-RDD frame pays a worker round trip
+    per partition on every scan (``session.local_df`` docstring). The
+    lazy builder stays reachable as ``__wrapped__``; :func:`lazy_frame`
+    runs it for plan inspection."""
+    prefix = builder.__name__.split("_", 1)[0]
+
+    @functools.wraps(builder)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        with query_scratch(spark, prefix) as s:
+            return builder(spark, sf_dir, s).localCheckpoint(eager=True)
+
+    return run
+
+
+@contextmanager
+def lazy_frame(
+    spark: SparkSession, query: Callable[[SparkSession, str], DataFrame],
+    sf_dir: str,
+) -> Iterator[DataFrame]:
+    """The frame a registry query builds, before any final
+    materialization, for plan inspection: a :func:`scratch_query`
+    query's lazy builder runs inside a fresh scratch and its frame is
+    valid until exit; any other query's frame is yielded as is."""
+    builder = getattr(query, "__wrapped__", None)
+    if builder is None:
+        yield query(spark, sf_dir)
+        return
+    with query_scratch(spark, builder.__name__.split("_", 1)[0]) as s:
+        yield builder(spark, sf_dir, s)

@@ -12,7 +12,12 @@ from pyspark.sql import functions as F
 
 from pyveb_spark.operators.cleaning import clean_old_dates
 from pyveb_spark.operators.joins import asof_join
-from pyveb_spark.queries._helpers import _dec, _query_vec, query_scratch
+from pyveb_spark.queries._helpers import (
+    QueryScratch,
+    _dec,
+    _query_vec,
+    scratch_query,
+)
 from pyveb_spark.sources.readers import read_table
 
 
@@ -1222,8 +1227,9 @@ pairs AS (
 # MinHash admission from a PERSISTED bucketed index — round-10 head
 # ---------------------------------------------------------------------------
 
+@scratch_query
 def q208_minhash_persisted_admission(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, s: QueryScratch
 ) -> DataFrame:
     """q45's incremental near-dup admission served from a DURABLE index
     (``sinks/index_store.py``): the corpus postings (doc_id ≥ 100) are
@@ -1244,18 +1250,7 @@ def q208_minhash_persisted_admission(
     join against postings that are never reshuffled or rebuilt — the
     warm-index property durable across sessions; appends go to the same
     bucketed table, blacklist refresh rides compaction (staleness only
-    loosens the skew guard). Pre-checkpoint plan gated via
-    :func:`_q208_frame` (test_index_store.py)."""
-    with query_scratch(spark, "q208") as s:
-        return _q208_frame(
-            spark, sf_dir, s.dir, s.name("minhash_idx")
-        ).localCheckpoint(eager=True)
-
-
-def _q208_frame(
-    spark: SparkSession, sf_dir: str, tmp: str, table: str
-) -> DataFrame:
-    """q208's pre-checkpoint frame over a caller-owned table + dir."""
+    loosens the skew guard)."""
     from pyveb_spark.operators.dedup import (
         minhash_lsh_index,
         minhash_lsh_lookup,
@@ -1265,6 +1260,7 @@ def _q208_frame(
         save_minhash_index,
     )
 
+    table = s.name("minhash_idx")
     d = read_table(spark, sf_dir, "documents")
     corpus = d.where(F.col("doc_id") >= 100)
     batch = d.where(F.col("doc_id") < 100)
@@ -1272,11 +1268,11 @@ def _q208_frame(
     save_minhash_index(
         minhash_lsh_index(corpus, "doc_id", "text"),
         table,
-        f"{tmp}/hot",
-        path=f"{tmp}/postings",
+        f"{s.dir}/hot",
+        path=f"{s.dir}/postings",
         meta={"n": 2, "num_hashes": 32, "bands": 8},
     )
-    idx, hot, idx_meta = load_minhash_index(spark, table, f"{tmp}/hot")
+    idx, hot, idx_meta = load_minhash_index(spark, table, f"{s.dir}/hot")
     matches = minhash_lsh_lookup(
         batch, idx, "doc_id", "text", threshold=0.8, hot_buckets=hot,
         meta=idx_meta,
@@ -1355,8 +1351,9 @@ ORDER BY d.doc_id
 # Sequential ingest: the MinHash index EVOLVES between waves — round-10 head
 # ---------------------------------------------------------------------------
 
+@scratch_query
 def q209_minhash_index_evolution(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, s: QueryScratch
 ) -> DataFrame:
     """The full production ingest CYCLE over the durable MinHash index —
     q208 certified the save→load half; this certifies admit→APPEND→
@@ -1380,19 +1377,14 @@ def q209_minhash_index_evolution(
     100 TB design: each wave costs |wave| hashing + one bucket-local
     join; the corpus postings are written once and never reshuffled —
     appends are new files in existing buckets. This is the shape a
-    continuous ingest runs forever. Pre-checkpoint plan gated via
-    :func:`_q209_frame` (test_index_store.py)."""
-    with query_scratch(spark, "q209") as s:
-        return _q209_frame(
-            spark, sf_dir, s.dir, s.name("minhash_idx")
-        ).localCheckpoint(eager=True)
+    continuous ingest runs forever."""
+    return _q209_frame(spark, sf_dir, s)
 
 
 def _q209_frame(
-    spark: SparkSession, sf_dir: str, tmp: str, table: str,
-    compact: bool = False,
+    spark: SparkSession, sf_dir: str, s: QueryScratch, compact: bool = False
 ) -> DataFrame:
-    """q209's pre-checkpoint frame over a caller-owned table + dir.
+    """The q209 lifecycle over an index table and files in ``s``.
 
     ``compact=True`` inserts ``index_store.compact_minhash_index``
     between the append and the wave-2 admission — the q216 lifecycle
@@ -1407,6 +1399,7 @@ def _q209_frame(
         save_minhash_index,
     )
 
+    table = s.name("minhash_idx")
     d = read_table(spark, sf_dir, "documents")
     corpus0 = d.where(F.col("doc_id") >= 200)
     wave1 = d.where((F.col("doc_id") >= 100) & (F.col("doc_id") < 200))
@@ -1415,11 +1408,11 @@ def _q209_frame(
     save_minhash_index(
         minhash_lsh_index(corpus0, "doc_id", "text"),
         table,
-        f"{tmp}/hot",
-        path=f"{tmp}/postings",
+        f"{s.dir}/hot",
+        path=f"{s.dir}/postings",
         meta={"n": 2, "num_hashes": 32, "bands": 8},
     )
-    idx, hot, idx_meta = load_minhash_index(spark, table, f"{tmp}/hot")
+    idx, hot, idx_meta = load_minhash_index(spark, table, f"{s.dir}/hot")
     w1_matched = (
         minhash_lsh_lookup(
             wave1, idx, "doc_id", "text", threshold=0.8,
@@ -1432,16 +1425,16 @@ def _q209_frame(
     append_minhash_index(
         minhash_lsh_index(admitted1, "doc_id", "text"),
         table,
-        hot_path=f"{tmp}/hot",
+        hot_path=f"{s.dir}/hot",
     )
     if compact:
         from pyveb_spark.sinks.index_store import compact_minhash_index
 
-        compact_minhash_index(spark, table, hot_path=f"{tmp}/hot")
+        compact_minhash_index(spark, table, hot_path=f"{s.dir}/hot")
     # the second reload's manifest comes THROUGH the lifecycle: it
     # must survive the append (same table) and the q216 compaction swap
     # (properties copied to the staged replacement, pinned by test).
-    idx2, hot2, meta2 = load_minhash_index(spark, table, f"{tmp}/hot")
+    idx2, hot2, meta2 = load_minhash_index(spark, table, f"{s.dir}/hot")
     matches2 = minhash_lsh_lookup(
         wave2, idx2, "doc_id", "text", threshold=0.8,
         hot_buckets=hot2, meta=meta2,
@@ -1551,8 +1544,9 @@ ORDER BY d.doc_id
 # MinHash index compaction in the lifecycle — round-11 head (built r10)
 # ---------------------------------------------------------------------------
 
+@scratch_query
 def q216_minhash_compacted_evolution(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, s: QueryScratch
 ) -> DataFrame:
     """The compaction step of the MinHash index lifecycle — the gap
     q209 left open: every ``append_minhash_index`` lands one file per
@@ -1572,12 +1566,8 @@ def q216_minhash_compacted_evolution(
     the postings (the repartition IS the bucket hash, so the write
     needs no extra shuffle beyond it), schedulable off the ingest path;
     lookups before and after read identical postings through fewer
-    opens. Pre-checkpoint plan covered by the q209 gate row
-    (test_index_store.py — same builder, ``compact=True``)."""
-    with query_scratch(spark, "q216") as s:
-        return _q209_frame(
-            spark, sf_dir, s.dir, s.name("minhash_idx"), compact=True
-        ).localCheckpoint(eager=True)
+    opens."""
+    return _q209_frame(spark, sf_dir, s, compact=True)
 
 
 _Q216_SQL = _Q209_SQL
@@ -1589,8 +1579,9 @@ _Q216_SQL = _Q209_SQL
 # ---------------------------------------------------------------------------
 
 
+@scratch_query
 def q219_simhash_persisted_admission(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, s: QueryScratch
 ) -> DataFrame:
     """The SimHash tier of the durable-index program — the fingerprint
     family (q29/q64) gets what MinHash got in q208/q209/q216: the
@@ -1618,17 +1609,7 @@ def q219_simhash_persisted_admission(
     100 TB design: lookup cost scales with the batch (scan-stage
     fingerprint fold + one bucketed equijoin); appends are batch-sized;
     compaction is the shared crash-safe aligned rewrite, off the ingest
-    path. Pre-checkpoint plan gated via :func:`_q219_frame`."""
-    with query_scratch(spark, "q219") as s:
-        return _q219_frame(
-            spark, sf_dir, s.dir, s.name("simhash_idx")
-        ).localCheckpoint(eager=True)
-
-
-def _q219_frame(
-    spark: SparkSession, sf_dir: str, tmp: str, table: str
-) -> DataFrame:
-    """q219's pre-checkpoint frame over a caller-owned table + dir."""
+    path."""
     from pyveb_spark.operators.dedup import simhash_index, simhash_lookup
     from pyveb_spark.sinks.index_store import (
         append_bucketed_index,
@@ -1637,6 +1618,7 @@ def _q219_frame(
         save_bucketed_index,
     )
 
+    table = s.name("simhash_idx")
     d = read_table(spark, sf_dir, "documents")
     corpus0 = d.where(F.col("doc_id") >= 200)
     wave1 = d.where((F.col("doc_id") >= 100) & (F.col("doc_id") < 200))
@@ -1646,7 +1628,7 @@ def _q219_frame(
         simhash_index(corpus0, "doc_id", "text"),
         table,
         ["__band", "__h"],
-        path=f"{tmp}/postings",
+        path=f"{s.dir}/postings",
         meta={"bands": 4, "bits": 60},
     )
     idx, idx_meta = load_bucketed_index(spark, table)

@@ -12,7 +12,12 @@ from pyspark.sql import functions as F
 
 from pyveb_spark.operators.cleaning import clean_old_dates
 from pyveb_spark.operators.joins import asof_join
-from pyveb_spark.queries._helpers import _dec, _query_vec, query_scratch
+from pyveb_spark.queries._helpers import (
+    QueryScratch,
+    _dec,
+    _query_vec,
+    scratch_query,
+)
 from pyveb_spark.sources.readers import read_table
 
 
@@ -67,7 +72,10 @@ ORDER BY o_orderstatus
 """
 
 
-def q32_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def q32_pipeline_e2e(
+    spark: SparkSession, sf_dir: str, s: QueryScratch
+) -> DataFrame:
     """The reference's whole Extract → Transform → Load flow as ONE
     oracle-checked job: a declarative ``Pipeline`` reads orders, runs the
     §2.3 transform library (clamp old dates, nan_to_null on the status
@@ -95,27 +103,21 @@ def q32_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    with query_scratch(spark, "q32") as s:
-        sink = ParquetMergeSink(spark, os.path.join(s.dir, "table"))
-        pipe = Pipeline(
-            name="orders_rollup",
-            source=lambda sess: read_table(sess, sf_dir, "orders"),
-            steps=[
-                PipelineStep("clamp", clean_old_dates,
-                             {"cols": ["o_orderdate"], "floor": "1996-01-01"}),
-                PipelineStep("nulls", nan_to_null, {"cols": ["o_orderstatus"]}),
-                PipelineStep("rollup", agg),
-            ],
-            sink=lambda df: sink.upsert(df, keys=["order_year", "priority"]),
-        )
-        pipe.run(spark)
-        pipe.run(spark)  # idempotent re-run: same keys upsert to same state
-        # eager checkpoint, not collect-and-rebuild — the q26 treatment
-        return (
-            sink.read()
-            .orderBy("order_year", "priority")
-            .localCheckpoint(eager=True)
-        )
+    sink = ParquetMergeSink(spark, os.path.join(s.dir, "table"))
+    pipe = Pipeline(
+        name="orders_rollup",
+        source=lambda sess: read_table(sess, sf_dir, "orders"),
+        steps=[
+            PipelineStep("clamp", clean_old_dates,
+                         {"cols": ["o_orderdate"], "floor": "1996-01-01"}),
+            PipelineStep("nulls", nan_to_null, {"cols": ["o_orderstatus"]}),
+            PipelineStep("rollup", agg),
+        ],
+        sink=lambda df: sink.upsert(df, keys=["order_year", "priority"]),
+    )
+    pipe.run(spark)
+    pipe.run(spark)  # idempotent re-run: same keys upsert to same state
+    return sink.read().orderBy("order_year", "priority")
 
 
 _Q32_SQL = """

@@ -12,7 +12,12 @@ from pyspark.sql import functions as F
 
 from pyveb_spark.operators.cleaning import clean_old_dates
 from pyveb_spark.operators.joins import asof_join
-from pyveb_spark.queries._helpers import _dec, _query_vec, query_scratch
+from pyveb_spark.queries._helpers import (
+    QueryScratch,
+    _dec,
+    _query_vec,
+    scratch_query,
+)
 from pyveb_spark.sources.readers import read_table
 
 
@@ -1611,7 +1616,10 @@ ORDER BY label
 # IVF search over a PERSISTED (save → load) index — round-10 head
 # ---------------------------------------------------------------------------
 
-def q207_ivf_persisted_search(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def q207_ivf_persisted_search(
+    spark: SparkSession, sf_dir: str, s: QueryScratch
+) -> DataFrame:
     """ANN index persistence made first-class (``sinks/index_store.py``):
     build the q37 IVF-Flat index, SAVE it (postings partitioned by
     ``ivf_list``, centroids as a k×dim side table), RELOAD it in what
@@ -1627,27 +1635,14 @@ def q207_ivf_persisted_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan-gated in tests/test_plan_quality.py) — ~nprobe/n_lists of the
     corpus bytes read, the durable form of the warm-index property. The
     centroid reload is k×dim driver state (the coarse-quantizer
-    convention).
-
-    The eager ``localCheckpoint`` exists because the temp index dir is
-    deleted on exit; the PRE-checkpoint plan (what the global gates
-    can't see through the checkpoint scan) is gated by
-    ``tests/test_index_store.py::test_lifecycle_pre_checkpoint_plans``
-    via :func:`_q207_frame`."""
-    with query_scratch(spark, "q207") as s:
-        return _q207_frame(spark, sf_dir, s.dir).localCheckpoint(eager=True)
-
-
-def _q207_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
-    """q207's pre-checkpoint frame against an index persisted under the
-    CALLER-owned ``tmp`` (the gate-inspectable form)."""
+    convention)."""
     from pyveb_spark.operators.similarity import ivf_index, ivf_search
     from pyveb_spark.sinks.index_store import load_ivf_index, save_ivf_index
 
     e = read_table(spark, sf_dir, "embeddings")
     query_vec = _query_vec(e)
     indexed, centroids = ivf_index(e, n_lists=16)
-    ivf_dir = f"{tmp}/ivf"
+    ivf_dir = f"{s.dir}/ivf"
     save_ivf_index(indexed, centroids, ivf_dir)
     postings, cents, idx_meta = load_ivf_index(spark, ivf_dir)
     return (
@@ -1701,8 +1696,9 @@ LIMIT 8
 # (round-10 head)
 # ---------------------------------------------------------------------------
 
+@scratch_query
 def q210_ivf_incremental_admission(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, s: QueryScratch
 ) -> DataFrame:
     """The IVF serving lifecycle q207 left open: ADMIT new vectors into
     a persisted index without a rebuild. The coarse quantizer is trained
@@ -1725,16 +1721,14 @@ def q210_ivf_incremental_admission(
     100 TB design: admission is a stateless scan of the batch (k×dim
     literal argmin) + a partitioned append — no corpus reads, no
     shuffle; searches keep paying only ~nprobe/n_lists of the (grown)
-    corpus via partition pruning. Pre-checkpoint plan gated via
-    :func:`_q210_frame` (test_index_store.py)."""
-    with query_scratch(spark, "q210") as s:
-        return _q210_frame(spark, sf_dir, s.dir).localCheckpoint(eager=True)
+    corpus via partition pruning."""
+    return _q210_frame(spark, sf_dir, s)
 
 
 def _q210_frame(
-    spark: SparkSession, sf_dir: str, tmp: str, compact: bool = False
+    spark: SparkSession, sf_dir: str, s: QueryScratch, compact: bool = False
 ) -> DataFrame:
-    """q210's pre-checkpoint frame over a caller-owned index dir.
+    """The q210 lifecycle over an index in ``s.dir``.
 
     ``compact=True`` inserts ``index_store.compact_ivf_postings``
     between the append and the search — the q217 lifecycle variant:
@@ -1764,7 +1758,7 @@ def _q210_frame(
         return spark.createDataFrame(
             [], "vec_id bigint, label int, cosine_sim double"
         )
-    ivf_dir = f"{tmp}/ivf"
+    ivf_dir = f"{s.dir}/ivf"
     save_ivf_index(indexed0, centroids, ivf_dir)
     _, cents, _ = load_ivf_index(spark, ivf_dir)
     assigned = batch.withColumn(
@@ -1826,7 +1820,10 @@ LIMIT 10
 # Post-append IVF index health audit — round-10 head
 # ---------------------------------------------------------------------------
 
-def q211_ivf_index_health(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def q211_ivf_index_health(
+    spark: SparkSession, sf_dir: str, s: QueryScratch
+) -> DataFrame:
     """The monitoring half of the frozen-quantizer contract (q210): as
     batches append under centroids trained on the ORIGINAL corpus, list
     populations drift — hot regions of the new data pile into a few
@@ -1845,14 +1842,7 @@ def q211_ivf_index_health(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Oracle: centroid selection restricted to vec_id ≥ 100 (the frozen
     quantizer), assignment argmin over all vectors, grouped split
-    counts — the q210 CTEs plus integer arithmetic. Pre-checkpoint plan
-    gated via :func:`_q211_frame` (test_index_store.py)."""
-    with query_scratch(spark, "q211") as s:
-        return _q211_frame(spark, sf_dir, s.dir).localCheckpoint(eager=True)
-
-
-def _q211_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
-    """q211's pre-checkpoint frame over a caller-owned index dir."""
+    counts — the q210 CTEs plus integer arithmetic."""
     from pyveb_spark.operators.similarity import (
         ivf_index,
         nearest_centroid,
@@ -1875,7 +1865,7 @@ def _q211_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
             "list_id int, n_original bigint, n_appended bigint,"
             " n_total bigint, corpus_share double, growth_ratio double",
         )
-    ivf_dir = f"{tmp}/ivf"
+    ivf_dir = f"{s.dir}/ivf"
     save_ivf_index(indexed0, centroids, ivf_dir)
     _, cents, _ = load_ivf_index(spark, ivf_dir)
     append_ivf_postings(
@@ -1955,7 +1945,10 @@ ORDER BY list_id
 # index_store durability story extended to the remaining ANN quantizers
 # ---------------------------------------------------------------------------
 
-def q213_pq_persisted_search(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def q213_pq_persisted_search(
+    spark: SparkSession, sf_dir: str, s: QueryScratch
+) -> DataFrame:
     """The PQ tier of the q207 durability contract: train the m=4 × k=16
     codebooks once (``pq_train`` — the seeded Lloyd recurrence), SAVE
     them as the m×k-row model table (``index_store.save_pq_codebooks``),
@@ -1971,14 +1964,7 @@ def q213_pq_persisted_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB design: training is sample-bounded and paid once; the saved
     codes table is 64× smaller than the vectors, and every query scans
     ONLY it (shuffle-free TakeOrdered heap) — the reloaded-model serving
-    shape every FAISS deployment runs. Pre-checkpoint plan gated via
-    :func:`_q213_frame` (test_index_store.py)."""
-    with query_scratch(spark, "q213") as s:
-        return _q213_frame(spark, sf_dir, s.dir).localCheckpoint(eager=True)
-
-
-def _q213_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
-    """q213's pre-checkpoint frame over a caller-owned artifact dir."""
+    shape every FAISS deployment runs."""
     import os
 
     from pyveb_spark.operators.similarity import (
@@ -1994,16 +1980,16 @@ def _q213_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     e = read_table(spark, sf_dir, "embeddings")
     query_vec = _query_vec(e)
     save_pq_codebooks(spark, pq_train(e, m=4, k=16, iters=2),
-                      os.path.join(tmp, "codebooks"))
+                      os.path.join(s.dir, "codebooks"))
     codebooks, cb_meta = load_pq_codebooks(
-        spark, os.path.join(tmp, "codebooks")
+        spark, os.path.join(s.dir, "codebooks")
     )
     from pyveb_spark.operators.layout import widen_scan
 
     pq_encode(widen_scan(e), codebooks, meta=cb_meta).select(
         "vec_id", "pq_codes"
-    ).write.mode("overwrite").parquet(os.path.join(tmp, "codes"))
-    codes = spark.read.parquet(os.path.join(tmp, "codes"))
+    ).write.mode("overwrite").parquet(os.path.join(s.dir, "codes"))
+    codes = spark.read.parquet(os.path.join(s.dir, "codes"))
     short = pq_adc_topk(
         codes, codebooks, query_vec, k=40, exclude_ids=[0], meta=cb_meta
     )
@@ -2030,7 +2016,10 @@ def _q213_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
 _Q213_SQL = _pq_sql(4, 16, 2, 16, 40, 8)
 
 
-def q214_sq8_persisted_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def q214_sq8_persisted_ann(
+    spark: SparkSession, sf_dir: str, s: QueryScratch
+) -> DataFrame:
     """The SQ8 tier of the durability contract: the per-dimension
     (lo, hi) quantizer stats — SQ8's whole model — are computed once,
     persisted (``index_store.save_sq8_stats``), and the q140 serving
@@ -2042,14 +2031,7 @@ def q214_sq8_persisted_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB design: the stats table is dim rows; serving scans only the
     4×-compressed codes. In production the encode also persists (like
     q213's codes table) — kept in-plan here so the query certifies the
-    STATS round trip in isolation. Pre-checkpoint plan gated via
-    :func:`_q214_frame` (test_index_store.py)."""
-    with query_scratch(spark, "q214") as s:
-        return _q214_frame(spark, sf_dir, s.dir).localCheckpoint(eager=True)
-
-
-def _q214_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
-    """q214's pre-checkpoint frame over a caller-owned artifact dir."""
+    STATS round trip in isolation."""
     import os
 
     from pyveb_spark.operators.similarity import sq8_ann, sq8_stats
@@ -2060,8 +2042,8 @@ def _q214_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
 
     e = read_table(spark, sf_dir, "embeddings")
     query_vec = _query_vec(e)
-    save_sq8_stats(spark, sq8_stats(e), os.path.join(tmp, "stats"))
-    stats, sq_meta = load_sq8_stats(spark, os.path.join(tmp, "stats"))
+    save_sq8_stats(spark, sq8_stats(e), os.path.join(s.dir, "stats"))
+    stats, sq_meta = load_sq8_stats(spark, os.path.join(s.dir, "stats"))
     from pyveb_spark.operators.layout import widen_scan
 
     out = sq8_ann(
@@ -2076,8 +2058,9 @@ def _q214_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
 _Q214_SQL = _sq8_sql(30, 8)
 
 
+@scratch_query
 def q215_ivfpq_persisted_serving(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, s: QueryScratch
 ) -> DataFrame:
     """The fully durable IVF-PQ serving stack — the 100 TB ANN shape
     with NOTHING left in session state: the coarse quantizer's postings
@@ -2092,15 +2075,7 @@ def q215_ivfpq_persisted_serving(
 
     100 TB design: bytes read per query ≈ (nprobe/n_lists) × corpus ×
     (m bytes/vector) — partition pruning multiplied by 64× compression,
-    the two effects this tranche made durable, now composed. Pre-
-    checkpoint plan gated via :func:`_q215_frame`
-    (test_index_store.py)."""
-    with query_scratch(spark, "q215") as s:
-        return _q215_frame(spark, sf_dir, s.dir).localCheckpoint(eager=True)
-
-
-def _q215_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
-    """q215's pre-checkpoint frame over a caller-owned artifact dir."""
+    the two effects this tranche made durable, now composed."""
     import os
 
     from pyveb_spark.operators.similarity import (
@@ -2120,19 +2095,19 @@ def _q215_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     query_vec = _query_vec(e)
     indexed, cents = ivf_index(e, n_lists=16)
     save_pq_codebooks(spark, pq_train(e, m=4, k=16, iters=2),
-                      os.path.join(tmp, "codebooks"))
+                      os.path.join(s.dir, "codebooks"))
     codebooks, cb_meta = load_pq_codebooks(
-        spark, os.path.join(tmp, "codebooks")
+        spark, os.path.join(s.dir, "codebooks")
     )
     save_ivf_index(
         pq_encode(indexed, codebooks, meta=cb_meta).select(
             "vec_id", "pq_codes", "ivf_list"
         ),
         cents,
-        os.path.join(tmp, "ivf"),
+        os.path.join(s.dir, "ivf"),
     )
     postings, loaded_cents, ivf_meta = load_ivf_index(
-        spark, os.path.join(tmp, "ivf")
+        spark, os.path.join(s.dir, "ivf")
     )
     short = ivfpq_search(
         postings, loaded_cents, codebooks, query_vec,
@@ -2162,8 +2137,9 @@ def _q215_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
 _Q215_SQL = _pq_sql(4, 16, 2, 16, 40, 8, nprobe=3)
 
 
+@scratch_query
 def q217_ivf_compacted_search(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, s: QueryScratch
 ) -> DataFrame:
     """The compaction step of the IVF index lifecycle (the gap q210
     left open): after N admission batches each grown list partition
@@ -2181,10 +2157,7 @@ def q217_ivf_compacted_search(
     (no shuffle — ``repartition`` by the partition column), runs per
     partition and is throttleable; probes before and after read the
     same pruned byte ranges, just through fewer opens."""
-    with query_scratch(spark, "q217") as s:
-        return _q210_frame(
-            spark, sf_dir, s.dir, compact=True
-        ).localCheckpoint(eager=True)
+    return _q210_frame(spark, sf_dir, s, compact=True)
 
 
 _Q217_SQL = _Q210_SQL
@@ -2195,7 +2168,10 @@ _Q217_SQL = _Q210_SQL
 # health audit exists to trigger, executed and certified
 # ---------------------------------------------------------------------------
 
-def q222_ivf_rebuild_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def q222_ivf_rebuild_lifecycle(
+    spark: SparkSession, sf_dir: str, s: QueryScratch
+) -> DataFrame:
     """The acting half of q211's index-health audit: q210 froze the
     coarse quantizer while batches appended (the serving contract), and
     the audit's drift table is pointless unless something ACTS on it —
@@ -2221,14 +2197,7 @@ def q222_ivf_rebuild_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     + one partitioned rewrite — initial-build cost, run at audit
     cadence, off the ingest and query paths; serving keeps q207's
     partition-pruned probe. Balance-improvement and crash-window
-    recovery are pinned by tests (test_r12_operators.py).
-    Pre-checkpoint plan gated via :func:`_q222_frame`."""
-    with query_scratch(spark, "q222") as s:
-        return _q222_frame(spark, sf_dir, s.dir).localCheckpoint(eager=True)
-
-
-def _q222_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
-    """q222's pre-checkpoint frame over a caller-owned artifact dir."""
+    recovery are pinned by tests (test_r12_operators.py)."""
     import os
 
     from pyveb_spark.operators.similarity import (
@@ -2245,7 +2214,7 @@ def _q222_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
 
     e = read_table(spark, sf_dir, "embeddings")
     query_vec = _query_vec(e)
-    ivf_dir = os.path.join(tmp, "ivf")
+    ivf_dir = os.path.join(s.dir, "ivf")
 
     # seed on the original corpus, admit the wave FROZEN (q210 shape)
     corpus0 = e.where(F.col("vec_id") % 5 != 0)

@@ -15,7 +15,12 @@ from pyspark.sql import functions as F
 
 from pyveb_spark.operators.cleaning import clean_old_dates
 from pyveb_spark.operators.joins import asof_join
-from pyveb_spark.queries._helpers import _dec, _query_vec, query_scratch
+from pyveb_spark.queries._helpers import (
+    QueryScratch,
+    _dec,
+    _query_vec,
+    scratch_query,
+)
 from pyveb_spark.sources.readers import read_table
 
 
@@ -147,7 +152,10 @@ ORDER BY user_id, session_no
 # gate too.
 # ---------------------------------------------------------------------------
 
-def q40_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def q40_stream_replay(
+    spark: SparkSession, sf_dir: str, s: QueryScratch
+) -> DataFrame:
     """events replayed as a file stream → daily windowed counts per type via
     an AvailableNow pass (the backfill execution mode); returns the
     materialized result. Exercises readStream → window agg → memory sink
@@ -161,38 +169,36 @@ def q40_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     src = read_table(spark, sf_dir, "events")
-    with query_scratch(spark, "q40") as s:
-        drops = os.path.join(s.dir, "drops")
-        src.repartition(2).write.mode("overwrite").parquet(drops)
-        stream = read_file_stream(
-            spark, drops, src.schema, max_files_per_trigger=1
+    drops = os.path.join(s.dir, "drops")
+    src.repartition(2).write.mode("overwrite").parquet(drops)
+    stream = read_file_stream(
+        spark, drops, src.schema, max_files_per_trigger=1
+    )
+    windowed = windowed_agg(
+        stream,
+        ts_col="ts",
+        window_duration="1 day",
+        aggs={"n_events": F.count(F.lit(1))},
+        group_by=["event_type"],
+    )
+    name = s.name("sink")
+    with _state_width(spark):
+        run_available_now(
+            windowed,
+            os.path.join(s.dir, "ck"),
+            output_mode="complete",
+            fmt="memory",
+            query_name=name,
         )
-        windowed = windowed_agg(
-            stream,
-            ts_col="ts",
-            window_duration="1 day",
-            aggs={"n_events": F.count(F.lit(1))},
-            group_by=["event_type"],
+    return (
+        spark.table(name)
+        .select(
+            F.date_format("window_start", "yyyy-MM-dd").alias("day"),
+            "event_type",
+            "n_events",
         )
-        name = s.name("sink")
-        with _state_width(spark):
-            run_available_now(
-                windowed,
-                os.path.join(s.dir, "ck"),
-                output_mode="complete",
-                fmt="memory",
-                query_name=name,
-            )
-        return (
-            spark.table(name)
-            .select(
-                F.date_format("window_start", "yyyy-MM-dd").alias("day"),
-                "event_type",
-                "n_events",
-            )
-            .orderBy("day", "event_type")
-            .localCheckpoint(eager=True)
-        )
+        .orderBy("day", "event_type")
+    )
 
 
 # F.window(ts, '1 day') buckets are epoch-aligned UTC days — identical to
@@ -213,7 +219,10 @@ ORDER BY day, event_type
 # tests/test_streaming.py::test_stream_interval_join_equals_batch)
 # ---------------------------------------------------------------------------
 
-def q49_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def q49_stream_attribution(
+    spark: SparkSession, sf_dir: str, s: QueryScratch
+) -> DataFrame:
     """events replayed as TWO file streams (clicks, purchases) joined
     stream-to-stream on user within a 2-day interval — the attribution
     shape. Watermarks on both sides + both-bounded time condition keep the
@@ -231,46 +240,44 @@ def q49_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     src = read_table(spark, sf_dir, "events")
-    with query_scratch(spark, "q49") as s:
-        drops = os.path.join(s.dir, "drops")
-        src.repartition(2).write.mode("overwrite").parquet(drops)
-        stream = read_file_stream(spark, drops, src.schema)
-        clicks = stream.where(F.col("event_type") == "click").select(
-            "user_id",
-            F.col("ts").alias("ts_click"),
-            F.col("event_id").alias("click_id"),
+    drops = os.path.join(s.dir, "drops")
+    src.repartition(2).write.mode("overwrite").parquet(drops)
+    stream = read_file_stream(spark, drops, src.schema)
+    clicks = stream.where(F.col("event_type") == "click").select(
+        "user_id",
+        F.col("ts").alias("ts_click"),
+        F.col("event_id").alias("click_id"),
+    )
+    buys = stream.where(F.col("event_type") == "purchase").select(
+        "user_id",
+        F.col("ts").alias("ts_buy"),
+        F.col("event_id").alias("buy_id"),
+    )
+    joined = stream_interval_join(
+        clicks,
+        buys,
+        keys=["user_id"],
+        left_ts="ts_click",
+        right_ts="ts_buy",
+        max_delay="2 days",
+        watermark="1 day",
+    ).select("user_id", "click_id", "buy_id")
+    name = s.name("sink")
+    # one state store per shuffle partition, ×2 join sides
+    with _state_width(spark):
+        run_available_now(
+            joined,
+            os.path.join(s.dir, "ck"),
+            output_mode="append",
+            fmt="memory",
+            query_name=name,
         )
-        buys = stream.where(F.col("event_type") == "purchase").select(
-            "user_id",
-            F.col("ts").alias("ts_buy"),
-            F.col("event_id").alias("buy_id"),
-        )
-        joined = stream_interval_join(
-            clicks,
-            buys,
-            keys=["user_id"],
-            left_ts="ts_click",
-            right_ts="ts_buy",
-            max_delay="2 days",
-            watermark="1 day",
-        ).select("user_id", "click_id", "buy_id")
-        name = s.name("sink")
-        # one state store per shuffle partition, ×2 join sides
-        with _state_width(spark):
-            run_available_now(
-                joined,
-                os.path.join(s.dir, "ck"),
-                output_mode="append",
-                fmt="memory",
-                query_name=name,
-            )
-        return (
-            spark.table(name)
-            .groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("n_attributed"))
-            .orderBy("user_id")
-            .localCheckpoint(eager=True)
-        )
+    return (
+        spark.table(name)
+        .groupBy("user_id")
+        .agg(F.count(F.lit(1)).alias("n_attributed"))
+        .orderBy("user_id")
+    )
 
 
 _Q49_SQL = """
@@ -285,7 +292,10 @@ ORDER BY c.user_id
 """
 
 
-def q46_stream_stateful_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def q46_stream_stateful_dedup(
+    spark: SparkSession, sf_dir: str, s: QueryScratch
+) -> DataFrame:
     """events replayed as a file stream through
     ``dropDuplicatesWithinWatermark`` on (user, type, day) — bounded-state
     cross-batch dedup, the streaming form of daily-active rollups. The
@@ -309,49 +319,47 @@ def q46_stream_stateful_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     src = read_table(spark, sf_dir, "events")
-    with query_scratch(spark, "q46") as s:
-        drops = os.path.join(s.dir, "drops")
-        src.repartition(2).write.mode("overwrite").parquet(drops)
-        stream = read_file_stream(spark, drops, src.schema)
-        dd = stateful_dedup(
-            stream.select(
-                "user_id", "event_type", F.to_date("ts").alias("day"), "ts"
-            ),
-            ["user_id", "event_type", "day"],
-            ts_col="ts",
-            watermark="1 day",
-        ).drop("ts")
-        name = s.name("sink")
-        with _state_width(spark):
-            q = run_available_now(
-                dd,
-                os.path.join(s.dir, "ck"),
-                output_mode="append",
-                fmt="memory",
-                query_name=name,
-            )
-        # pin the single-micro-batch dependence the docstring explains:
-        # every input row must arrive in batch 0 (later batches are only
-        # the empty state-cleanup trigger AvailableNow appends)
-        late_rows = sum(
-            p["numInputRows"]
-            for p in q.recentProgress
-            if p["batchId"] > 0
+    drops = os.path.join(s.dir, "drops")
+    src.repartition(2).write.mode("overwrite").parquet(drops)
+    stream = read_file_stream(spark, drops, src.schema)
+    dd = stateful_dedup(
+        stream.select(
+            "user_id", "event_type", F.to_date("ts").alias("day"), "ts"
+        ),
+        ["user_id", "event_type", "day"],
+        ts_col="ts",
+        watermark="1 day",
+    ).drop("ts")
+    name = s.name("sink")
+    with _state_width(spark):
+        q = run_available_now(
+            dd,
+            os.path.join(s.dir, "ck"),
+            output_mode="append",
+            fmt="memory",
+            query_name=name,
         )
-        if late_rows:
-            raise AssertionError(
-                f"q46 drop spanned multiple micro-batches ({late_rows} "
-                "rows after batch 0) — watermark eviction can now re-emit "
-                "duplicates and the batch oracle no longer applies; see "
-                "docstring"
-            )
-        return (
-            spark.table(name)
-            .groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n_user_days"))
-            .orderBy("event_type")
-            .localCheckpoint(eager=True)
+    # pin the single-micro-batch dependence the docstring explains:
+    # every input row must arrive in batch 0 (later batches are only
+    # the empty state-cleanup trigger AvailableNow appends)
+    late_rows = sum(
+        p["numInputRows"]
+        for p in q.recentProgress
+        if p["batchId"] > 0
+    )
+    if late_rows:
+        raise AssertionError(
+            f"q46 drop spanned multiple micro-batches ({late_rows} "
+            "rows after batch 0) — watermark eviction can now re-emit "
+            "duplicates and the batch oracle no longer applies; see "
+            "docstring"
         )
+    return (
+        spark.table(name)
+        .groupBy("event_type")
+        .agg(F.count(F.lit(1)).alias("n_user_days"))
+        .orderBy("event_type")
+    )
 
 
 _Q46_SQL = """
@@ -363,7 +371,10 @@ ORDER BY event_type
 """
 
 
-def q47_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def q47_stream_enrich(
+    spark: SparkSession, sf_dir: str, s: QueryScratch
+) -> DataFrame:
     """events replayed as a file stream, enriched per micro-batch with the
     customer dimension via a broadcast stream-static join (no stream-side
     shuffle, no streaming state — the right shape for dimension lookup at
@@ -382,32 +393,30 @@ def q47_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = read_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
-    with query_scratch(spark, "q47") as s:
-        drops = os.path.join(s.dir, "drops")
-        src.repartition(2).write.mode("overwrite").parquet(drops)
-        stream = read_file_stream(spark, drops, src.schema)
-        enriched = stream_enrich(
-            stream.select("event_id", "user_id", "event_type"),
-            cust,
-            keys=["user_id"],
-            how="inner",
+    drops = os.path.join(s.dir, "drops")
+    src.repartition(2).write.mode("overwrite").parquet(drops)
+    stream = read_file_stream(spark, drops, src.schema)
+    enriched = stream_enrich(
+        stream.select("event_id", "user_id", "event_type"),
+        cust,
+        keys=["user_id"],
+        how="inner",
+    )
+    name = s.name("sink")
+    with _state_width(spark):
+        run_available_now(
+            enriched,
+            os.path.join(s.dir, "ck"),
+            output_mode="append",
+            fmt="memory",
+            query_name=name,
         )
-        name = s.name("sink")
-        with _state_width(spark):
-            run_available_now(
-                enriched,
-                os.path.join(s.dir, "ck"),
-                output_mode="append",
-                fmt="memory",
-                query_name=name,
-            )
-        return (
-            spark.table(name)
-            .groupBy("c_mktsegment", "event_type")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .orderBy("c_mktsegment", "event_type")
-            .localCheckpoint(eager=True)
-        )
+    return (
+        spark.table(name)
+        .groupBy("c_mktsegment", "event_type")
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .orderBy("c_mktsegment", "event_type")
+    )
 
 
 _Q47_SQL = """
@@ -419,7 +428,10 @@ ORDER BY c.c_mktsegment, e.event_type
 """
 
 
-def q26_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def q26_stream_upsert(
+    spark: SparkSession, sf_dir: str, s: QueryScratch
+) -> DataFrame:
     """The continuous-materialization pattern end-to-end: a purchase
     stream's running per-user counts (update-mode aggregation) land in a
     ``ParquetMergeSink`` through ``foreachBatch`` upsert — each micro-batch
@@ -438,31 +450,23 @@ def q26_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     src = read_table(spark, sf_dir, "events")
-    with query_scratch(spark, "q26") as s, _state_width(spark):
-        drops = os.path.join(s.dir, "drops")
-        src.repartition(2).write.mode("overwrite").parquet(drops)
-        stream = read_file_stream(spark, drops, src.schema)
-        agg = (
-            stream.where(F.col("event_type") == "purchase")
-            .groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("n_purchases"))
-        )
-        sink = ParquetMergeSink(spark, os.path.join(s.dir, "table"))
+    drops = os.path.join(s.dir, "drops")
+    src.repartition(2).write.mode("overwrite").parquet(drops)
+    stream = read_file_stream(spark, drops, src.schema)
+    agg = (
+        stream.where(F.col("event_type") == "purchase")
+        .groupBy("user_id")
+        .agg(F.count(F.lit(1)).alias("n_purchases"))
+    )
+    sink = ParquetMergeSink(spark, os.path.join(s.dir, "table"))
+    with _state_width(spark):
         run_available_now(
             agg,
             os.path.join(s.dir, "ck"),
             foreach_batch=foreach_batch_upsert(sink, ["user_id"]),
             output_mode="update",
         )
-        # an eager checkpoint, not collect-and-rebuild (the rebuilt frame
-        # was a Python RDD whose every scan paid 32 worker roundtrips;
-        # session.local_df docstring has the measurement)
-        return (
-            sink.read()
-            .select("user_id", "n_purchases")
-            .orderBy("user_id")
-            .localCheckpoint(eager=True)
-        )
+    return sink.read().select("user_id", "n_purchases").orderBy("user_id")
 
 
 _Q26_SQL = """
@@ -524,7 +528,10 @@ ORDER BY user_id, start_us
 """
 
 
-def q119_stream_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def q119_stream_sliding_windows(
+    spark: SparkSession, sf_dir: str, s: QueryScratch
+) -> DataFrame:
     """events replayed as a file stream through a SLIDING window
     aggregation (1-day windows every 12 hours — each event lands in two
     overlapping windows) per event type, complete-mode memory sink. The
@@ -543,41 +550,39 @@ def q119_stream_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     src = read_table(spark, sf_dir, "events")
-    with query_scratch(spark, "q119") as s:
-        drops = os.path.join(s.dir, "drops")
-        src.repartition(2).write.mode("overwrite").parquet(drops)
-        stream = read_file_stream(spark, drops, src.schema)
-        win = windowed_agg(
-            stream,
-            "ts",
-            "1 day",
-            {
-                "n_events": F.count(F.lit(1)),
-                "sum_value": F.sum(_dec("value")).cast("double"),
-            },
-            slide_duration="12 hours",
-            group_by=["event_type"],
+    drops = os.path.join(s.dir, "drops")
+    src.repartition(2).write.mode("overwrite").parquet(drops)
+    stream = read_file_stream(spark, drops, src.schema)
+    win = windowed_agg(
+        stream,
+        "ts",
+        "1 day",
+        {
+            "n_events": F.count(F.lit(1)),
+            "sum_value": F.sum(_dec("value")).cast("double"),
+        },
+        slide_duration="12 hours",
+        group_by=["event_type"],
+    )
+    name = s.name("sink")
+    with _state_width(spark):
+        run_available_now(
+            win,
+            os.path.join(s.dir, "ck"),
+            output_mode="complete",
+            fmt="memory",
+            query_name=name,
         )
-        name = s.name("sink")
-        with _state_width(spark):
-            run_available_now(
-                win,
-                os.path.join(s.dir, "ck"),
-                output_mode="complete",
-                fmt="memory",
-                query_name=name,
-            )
-        return (
-            spark.table(name)
-            .select(
-                F.unix_micros("window_start").alias("window_start_us"),
-                "event_type",
-                "n_events",
-                "sum_value",
-            )
-            .orderBy("window_start_us", "event_type")
-            .localCheckpoint(eager=True)
+    return (
+        spark.table(name)
+        .select(
+            F.unix_micros("window_start").alias("window_start_us"),
+            "event_type",
+            "n_events",
+            "sum_value",
         )
+        .orderBy("window_start_us", "event_type")
+    )
 
 
 _Q119_SQL = """
@@ -598,7 +603,10 @@ ORDER BY window_start_us, event_type
 """
 
 
-def q164_stream_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def q164_stream_admission(
+    spark: SparkSession, sf_dir: str, s: QueryScratch
+) -> DataFrame:
     """STREAMING corpus admission: the documents table replayed as a file
     stream through the Gopher quality gates
     (``text.py::gopher_quality_filter`` — pure scan-stage expressions,
@@ -617,29 +625,27 @@ def q164_stream_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     src = read_table(spark, sf_dir, "documents")
-    with query_scratch(spark, "q164") as s:
-        drops = os.path.join(s.dir, "drops")
-        src.repartition(2).write.mode("overwrite").parquet(drops)
-        stream = read_file_stream(spark, drops, src.schema)
-        gated = gopher_quality_filter(stream, min_words=30)
-        counts = gated.groupBy("source").agg(
-            F.sum(F.col("keep").cast("int")).alias("n_admitted"),
-            F.sum((~F.col("keep")).cast("int")).alias("n_rejected"),
-        )
-        name = s.name("sink")
-        run_available_now(
-            counts,
-            os.path.join(s.dir, "ck"),
-            output_mode="complete",
-            fmt="memory",
-            query_name=name,
-        )
-        return (
-            spark.table(name)
-            .select("source", "n_admitted", "n_rejected")
-            .orderBy("source")
-            .localCheckpoint(eager=True)
-        )
+    drops = os.path.join(s.dir, "drops")
+    src.repartition(2).write.mode("overwrite").parquet(drops)
+    stream = read_file_stream(spark, drops, src.schema)
+    gated = gopher_quality_filter(stream, min_words=30)
+    counts = gated.groupBy("source").agg(
+        F.sum(F.col("keep").cast("int")).alias("n_admitted"),
+        F.sum((~F.col("keep")).cast("int")).alias("n_rejected"),
+    )
+    name = s.name("sink")
+    run_available_now(
+        counts,
+        os.path.join(s.dir, "ck"),
+        output_mode="complete",
+        fmt="memory",
+        query_name=name,
+    )
+    return (
+        spark.table(name)
+        .select("source", "n_admitted", "n_rejected")
+        .orderBy("source")
+    )
 
 
 _Q164_SQL = """
@@ -682,7 +688,10 @@ _Q206_THRESHOLD = 0.3
 _Q206_PLANES = 6
 
 
-def q206_stream_lsh_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def q206_stream_lsh_admission(
+    spark: SparkSession, sf_dir: str, s: QueryScratch
+) -> DataFrame:
     """STREAMING embedding near-dup admission — q165's warm-index lookup
     married to the q164/q26 streaming machinery, against an index that
     SURVIVES sessions (``sinks/index_store.py``): the corpus (vec_id %
@@ -734,83 +743,81 @@ def q206_stream_lsh_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus.select(F.size("embedding").alias("d")).first()["d"]
     )
 
-    with query_scratch(spark, "q206") as s:
-        # build parameters travel WITH the artifact (the manifest): the
-        # admission side below hashes with the reloaded n_planes/seed,
-        # never a remembered constant — the pattern that makes
-        # suggest_lsh_planes-at-build-time safe across sessions
-        save_lsh_index(
-            lsh_bucket(
-                corpus, dim, _Q206_PLANES, vec_col="embedding",
-                seed=42, bucket_col="__b",
-            ),
-            os.path.join(s.dir, "index"),
-            meta={"n_planes": _Q206_PLANES, "seed": 42, "dim": dim},
-        )
-        warm, idx_meta = load_lsh_index(spark, os.path.join(s.dir, "index"))
-        # Pin the reloaded index for the stream's lifetime: every
-        # micro-batch joins it TWICE (bucket equijoin + the
-        # index-authoritative vector join-back, ADVICE r9), and
-        # re-scanning the bucket-partitioned small files per batch
-        # doubled the admission cost (measured 6.1 s → 13.5 s at
-        # sf0.1). One eager materialization serves all batches — the
-        # warm-index cache every production ANN server keeps; on a
-        # cluster this is persist(MEMORY_AND_DISK) over the same
-        # frame, and the DISK layout remains the restart/recovery
-        # source of truth.
-        warm = warm.localCheckpoint(eager=True)
+    # build parameters travel WITH the artifact (the manifest): the
+    # admission side below hashes with the reloaded n_planes/seed,
+    # never a remembered constant — the pattern that makes
+    # suggest_lsh_planes-at-build-time safe across sessions
+    save_lsh_index(
+        lsh_bucket(
+            corpus, dim, _Q206_PLANES, vec_col="embedding",
+            seed=42, bucket_col="__b",
+        ),
+        os.path.join(s.dir, "index"),
+        meta={"n_planes": _Q206_PLANES, "seed": 42, "dim": dim},
+    )
+    warm, idx_meta = load_lsh_index(spark, os.path.join(s.dir, "index"))
+    # Pin the reloaded index for the stream's lifetime: every
+    # micro-batch joins it TWICE (bucket equijoin + the
+    # index-authoritative vector join-back, ADVICE r9), and
+    # re-scanning the bucket-partitioned small files per batch
+    # doubled the admission cost (measured 6.1 s → 13.5 s at
+    # sf0.1). One eager materialization serves all batches — the
+    # warm-index cache every production ANN server keeps; on a
+    # cluster this is persist(MEMORY_AND_DISK) over the same
+    # frame, and the DISK layout remains the restart/recovery
+    # source of truth.
+    warm = warm.localCheckpoint(eager=True)
 
-        drops = os.path.join(s.dir, "drops")
-        arriving.repartition(3).write.mode("overwrite").parquet(drops)
-        stream = read_file_stream(
-            spark, drops, arriving.schema, max_files_per_trigger=1
-        )
-        sink = ParquetMergeSink(spark, os.path.join(s.dir, "admitted"))
-        # the probe bucket expression is frozen for the stream's lifetime
-        # (pure function of the manifest geometry) — build the Column
-        # ONCE here, not per micro-batch (r13; the q218 change-#15 shape)
-        probe = lsh_bucket_expr(
-            int(idx_meta["dim"]), idx_meta["n_planes"], "embedding",
-            idx_meta["seed"],
-        )
+    drops = os.path.join(s.dir, "drops")
+    arriving.repartition(3).write.mode("overwrite").parquet(drops)
+    stream = read_file_stream(
+        spark, drops, arriving.schema, max_files_per_trigger=1
+    )
+    sink = ParquetMergeSink(spark, os.path.join(s.dir, "admitted"))
+    # the probe bucket expression is frozen for the stream's lifetime
+    # (pure function of the manifest geometry) — build the Column
+    # ONCE here, not per micro-batch (r13; the q218 change-#15 shape)
+    probe = lsh_bucket_expr(
+        int(idx_meta["dim"]), idx_meta["n_planes"], "embedding",
+        idx_meta["seed"],
+    )
 
-        def _admit(batch_df: DataFrame, batch_id: int) -> None:
-            matches = lsh_cosine_lookup(
-                batch_df, corpus, threshold=_Q206_THRESHOLD,
-                n_planes=idx_meta["n_planes"], seed=idx_meta["seed"],
-                index=warm,
-                # geometry from the build manifest — skips one probe job
-                # per micro-batch (the dim is an artifact constant)
-                dim=int(idx_meta["dim"]),
-                probe_bucket=probe,
+    def _admit(batch_df: DataFrame, batch_id: int) -> None:
+        matches = lsh_cosine_lookup(
+            batch_df, corpus, threshold=_Q206_THRESHOLD,
+            n_planes=idx_meta["n_planes"], seed=idx_meta["seed"],
+            index=warm,
+            # geometry from the build manifest — skips one probe job
+            # per micro-batch (the dim is an artifact constant)
+            dim=int(idx_meta["dim"]),
+            probe_bucket=probe,
+        )
+        per = matches.groupBy("vec_id_new").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_matches"),
+            F.max("cosine_sim").alias("best_cosine"),
+        )
+        decided = (
+            batch_df.select("vec_id")
+            .join(per, F.col("vec_id") == F.col("vec_id_new"), "left")
+            .select(
+                "vec_id",
+                F.coalesce("n_matches", F.lit(0).cast("bigint"))
+                .alias("n_matches"),
+                "best_cosine",
+                F.col("vec_id_new").isNull().cast("int")
+                .alias("admitted"),
             )
-            per = matches.groupBy("vec_id_new").agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_matches"),
-                F.max("cosine_sim").alias("best_cosine"),
-            )
-            decided = (
-                batch_df.select("vec_id")
-                .join(per, F.col("vec_id") == F.col("vec_id_new"), "left")
-                .select(
-                    "vec_id",
-                    F.coalesce("n_matches", F.lit(0).cast("bigint"))
-                    .alias("n_matches"),
-                    "best_cosine",
-                    F.col("vec_id_new").isNull().cast("int")
-                    .alias("admitted"),
-                )
-            )
-            sink.upsert(decided, keys=["vec_id"])
+        )
+        sink.upsert(decided, keys=["vec_id"])
 
-        run_available_now(
-            stream, os.path.join(s.dir, "ck"), foreach_batch=_admit
-        )
-        return (
-            sink.read()
-            .select("vec_id", "n_matches", "best_cosine", "admitted")
-            .orderBy("vec_id")
-            .localCheckpoint(eager=True)
-        )
+    run_available_now(
+        stream, os.path.join(s.dir, "ck"), foreach_batch=_admit
+    )
+    return (
+        sink.read()
+        .select("vec_id", "n_matches", "best_cosine", "admitted")
+        .orderBy("vec_id")
+    )
 
 
 _Q206_SQL = """
@@ -858,8 +865,9 @@ ORDER BY e.vec_id
 # ---------------------------------------------------------------------------
 
 
+@scratch_query
 def q218_stream_ivfpq_admission(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, s: QueryScratch
 ) -> DataFrame:
     """STREAMING ingest into the durable IVF-PQ serving stack — the
     composition q215 (fully durable IVF-PQ) and q206 (streaming
@@ -902,14 +910,7 @@ def q218_stream_ivfpq_admission(
     is fixed by the filter geometry, refreshed exactly at compaction
     time. Compaction amortizes to one rewrite per ~cap batches per
     list, off the query path (staged swap — probes see old or new
-    layout, never half). Pre-checkpoint plan gated via
-    :func:`_q218_frame`."""
-    with query_scratch(spark, "q218") as s:
-        return _q218_frame(spark, sf_dir, s.dir).localCheckpoint(eager=True)
-
-
-def _q218_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
-    """q218's pre-checkpoint frame over a caller-owned artifact dir."""
+    layout, never half)."""
     import os
 
     from pyveb_spark.operators.similarity import (
@@ -940,13 +941,13 @@ def _q218_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     arriving = e.where(F.col("vec_id") % 17 == 0)
     corpus = e.where(F.col("vec_id") % 17 != 0)
     query_vec = _query_vec(e)
-    ivf_dir = os.path.join(tmp, "ivf")
+    ivf_dir = os.path.join(s.dir, "ivf")
 
     # ---- build once: quantizers trained on the corpus, persisted ----
     save_pq_codebooks(spark, pq_train(corpus, m=4, k=16, iters=2),
-                      os.path.join(tmp, "codebooks"))
+                      os.path.join(s.dir, "codebooks"))
     codebooks, cb_meta = load_pq_codebooks(
-        spark, os.path.join(tmp, "codebooks")
+        spark, os.path.join(s.dir, "codebooks")
     )
     indexed0, cents = ivf_index(corpus, n_lists=16)
     # Build the df-independent encode Columns ONCE: the quantizers are
@@ -978,7 +979,7 @@ def _q218_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     )
 
     # ---- stream: admit → frozen-quantizer encode → append → compact ----
-    drops = os.path.join(tmp, "drops")
+    drops = os.path.join(s.dir, "drops")
     arriving.repartition(3).write.mode("overwrite").parquet(drops)
     stream = read_file_stream(
         spark, drops, arriving.schema, max_files_per_trigger=1
@@ -1046,7 +1047,7 @@ def _q218_frame(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
                 num_hashes=int(bmeta["num_hashes"]),
             )
 
-    run_available_now(stream, os.path.join(tmp, "ck"), foreach_batch=_admit)
+    run_available_now(stream, os.path.join(s.dir, "ck"), foreach_batch=_admit)
 
     # ---- serve from the RELOADED grown artifacts only ----
     grown, cents2, meta2 = load_ivf_index(spark, ivf_dir)

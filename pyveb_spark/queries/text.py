@@ -12,7 +12,12 @@ from pyspark.sql import functions as F
 
 from pyveb_spark.operators.cleaning import clean_old_dates
 from pyveb_spark.operators.joins import asof_join
-from pyveb_spark.queries._helpers import _dec, _query_vec, query_scratch
+from pyveb_spark.queries._helpers import (
+    QueryScratch,
+    _dec,
+    _query_vec,
+    scratch_query,
+)
 from pyveb_spark.sources.readers import read_table
 
 
@@ -2183,8 +2188,9 @@ ORDER BY lang
 # ---------------------------------------------------------------------------
 
 
+@scratch_query
 def q220_bm25_persisted_lifecycle(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, s: QueryScratch
 ) -> DataFrame:
     """The lexical tier of the durable-index program — BM25 gets what
     the vector/dedup families got in q206–q219: the corpus's token
@@ -2212,18 +2218,7 @@ def q220_bm25_persisted_lifecycle(
     100 TB design: admission cost scales with the batch; the search
     reads only the query tokens' buckets (bucket pruning on the
     token-bucketed table) plus matched doclens; compaction amortizes
-    off the ingest path with the crash-safe rename-aside swap.
-    Pre-checkpoint plan gated via :func:`_q220_frame`."""
-    with query_scratch(spark, "q220") as s:
-        return _q220_frame(
-            spark, sf_dir, s.dir, s.name("bm25_idx")
-        ).localCheckpoint(eager=True)
-
-
-def _q220_frame(
-    spark: SparkSession, sf_dir: str, tmp: str, table: str
-) -> DataFrame:
-    """q220's pre-checkpoint frame over a caller-owned table + dir."""
+    off the ingest path with the crash-safe rename-aside swap."""
     from pyveb_spark.operators.retrieval import bm25_search_indexed
     from pyveb_spark.sinks.index_store import (
         append_bm25_index,
@@ -2233,12 +2228,13 @@ def _q220_frame(
         save_bm25_index,
     )
 
+    table = s.name("bm25_idx")
     d = read_table(spark, sf_dir, "documents")
     corpus = d.where(F.col("doc_id") >= 100)
     wave = d.where(F.col("doc_id") < 100)
-    dl_path = f"{tmp}/doclens"
+    dl_path = f"{s.dir}/doclens"
 
-    save_bm25_index(corpus, table, dl_path, path=f"{tmp}/postings")
+    save_bm25_index(corpus, table, dl_path, path=f"{s.dir}/postings")
     append_bm25_index(wave, table, dl_path)
     compact_bucketed_index(spark, table)
     refresh_bm25_stats(spark, table, dl_path)
@@ -2256,8 +2252,9 @@ def _q220_frame(
 _Q220_SQL = _Q44_SQL
 
 
+@scratch_query
 def q221_phrase_persisted_lifecycle(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, s: QueryScratch
 ) -> DataFrame:
     """q220's sibling for EXACT-PHRASE retrieval: the positional n-gram
     index persists bucketed on the window hash with the window width
@@ -2275,18 +2272,7 @@ def q221_phrase_persisted_lifecycle(
 
     100 TB design: the probe is one literal pushed into a bucket-pruned
     scan of the hash-bucketed postings; appends are batch-sized;
-    compaction is the shared staged swap. Pre-checkpoint plan gated via
-    :func:`_q221_frame`."""
-    with query_scratch(spark, "q221") as s:
-        return _q221_frame(
-            spark, sf_dir, s.dir, s.name("ngram_idx")
-        ).localCheckpoint(eager=True)
-
-
-def _q221_frame(
-    spark: SparkSession, sf_dir: str, tmp: str, table: str
-) -> DataFrame:
-    """q221's pre-checkpoint frame over a caller-owned table + dir."""
+    compaction is the shared staged swap."""
     from pyveb_spark.operators.retrieval import phrase_search
     from pyveb_spark.sinks.index_store import (
         append_ngram_index,
@@ -2295,13 +2281,14 @@ def _q221_frame(
         save_ngram_index,
     )
 
+    table = s.name("ngram_idx")
     d = read_table(spark, sf_dir, "documents")
     row = d.where(F.col("doc_id") == 0).select("text").first()
     phrase = " ".join(row["text"].split(" ")[:3])
     n = len(phrase.split(" "))
 
     save_ngram_index(
-        d.where(F.col("doc_id") >= 100), table, n, path=f"{tmp}/ngrams"
+        d.where(F.col("doc_id") >= 100), table, n, path=f"{s.dir}/ngrams"
     )
     append_ngram_index(d.where(F.col("doc_id") < 100), table, n)
     compact_bucketed_index(spark, table)
@@ -2327,8 +2314,9 @@ def _q221_frame(
 _Q221_SQL = _Q158_SQL
 
 
+@scratch_query
 def q223_hybrid_persisted_serving(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, s: QueryScratch
 ) -> DataFrame:
     """q169's hybrid production shape with BOTH legs served from DURABLE
     index artifacts — the composition the round-12 lexical tier exists
@@ -2345,18 +2333,7 @@ def q223_hybrid_persisted_serving(
     Oracle: q44's BM25 pipeline + q207's IVF probe replay (seeded
     centroids, argmin assignment, 3-list probe) + the RRF arithmetic,
     end-to-end in SQL. Ranks are assigned on (rounded score, id) — the
-    q169 determinism contract. Pre-checkpoint plan gated via
-    :func:`_q223_frame`."""
-    with query_scratch(spark, "q223") as s:
-        return _q223_frame(
-            spark, sf_dir, s.dir, s.name("bm25_idx")
-        ).localCheckpoint(eager=True)
-
-
-def _q223_frame(
-    spark: SparkSession, sf_dir: str, tmp: str, table: str
-) -> DataFrame:
-    """q223's pre-checkpoint frame over a caller-owned table + dir."""
+    q169 determinism contract."""
     from pyveb_spark.operators.retrieval import (
         bm25_search_indexed,
         rrf_fuse,
@@ -2370,16 +2347,17 @@ def _q223_frame(
         save_ivf_index,
     )
 
+    table = s.name("bm25_idx")
     d = read_table(spark, sf_dir, "documents")
     e = read_table(spark, sf_dir, "embeddings")
 
     # ---- persist both index artifacts, then serve from reloads only ----
-    save_bm25_index(d, table, f"{tmp}/doclens", path=f"{tmp}/postings")
+    save_bm25_index(d, table, f"{s.dir}/doclens", path=f"{s.dir}/postings")
     indexed, cents = ivf_index(e, n_lists=16)
-    save_ivf_index(indexed, cents, f"{tmp}/ivf")
+    save_ivf_index(indexed, cents, f"{s.dir}/ivf")
 
     postings, doclens, bm_meta = load_bm25_index(
-        spark, table, f"{tmp}/doclens"
+        spark, table, f"{s.dir}/doclens"
     )
     bm = bm25_search_indexed(
         postings, doclens, bm_meta["n_docs"], bm_meta["sum_dl"],
@@ -2392,7 +2370,7 @@ def _q223_frame(
         .alias("rank"),
     )
 
-    ivf_postings, ivf_cents, ivf_meta = load_ivf_index(spark, f"{tmp}/ivf")
+    ivf_postings, ivf_cents, ivf_meta = load_ivf_index(spark, f"{s.dir}/ivf")
     qv = _query_vec(e)
     knn = ivf_search(
         ivf_postings, ivf_cents, qv, k=10, nprobe=3,

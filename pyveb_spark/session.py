@@ -70,10 +70,6 @@ def get_spark(
         # through pandas; we stay in the JVM so CORRECTED is right).
         .config("spark.sql.parquet.datetimeRebaseModeInRead", "CORRECTED")
         .config("spark.sql.parquet.datetimeRebaseModeInWrite", "CORRECTED")
-        # Parquet TIMESTAMP(NANOS) columns (the events fixture) read as long
-        # nanos; sources.readers converts them to TimestampType with exact
-        # integer math (FIXTURES.md: "cast to TimestampType on read").
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # --- performance (deliberate divergences, SURVEY §4) ---
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -276,8 +276,8 @@ def read_records(
     return spark.createDataFrame(records)
 
 
-# Columns stored as Parquet TIMESTAMP(NANOS) — Spark reads them as long
-# nanos (session conf ``nanosAsLong``); we restore TimestampType here.
+# Columns stored as Parquet TIMESTAMP(NANOS) — normalized to TimestampType
+# by ``read_table``.
 _NANOS_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
 
@@ -293,16 +293,15 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one synthetic testdata table (TESTDATA.md).
 
     Session-independent: the events fixture is Parquet ``TIMESTAMP(NANOS)``,
-    whose read type varies by session conf — long nanos (legacy
-    ``nanosAsLong``), ``TIMESTAMP_NTZ`` (``inferTimestampNTZ`` default), or
-    ``TIMESTAMP`` (infer disabled). The engine contract is TimestampType
-    (LTZ) under a UTC session, so we set the confs defensively (they are
-    runtime-settable; the driver uses a plain session, not ``get_spark``)
-    AND normalize whatever type actually comes back.
+    whose read type varies by session conf. The engine contract is
+    TimestampType (LTZ) under a UTC session, so this function owns the
+    read policy (the confs are runtime-settable; the driver uses a plain
+    session, not ``get_spark``): with ``inferTimestampNTZ`` off, Spark 4.1
+    reads the column as ``TIMESTAMP`` under either ``nanosAsLong`` value;
+    a Spark that honours ``nanosAsLong`` reads long nanos, converted here
+    with exact integer math.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Spark 4.1 ignores nanosAsLong and infers NTZ for NANOS columns;
-    # disabling the NTZ inference yields TimestampType directly.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     # Engine semantics are UTC end-to-end (session.py); pin it so results
     # are identical under any caller session regardless of host timezone.
@@ -314,10 +313,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         t = df.schema[c].dataType.typeName()
         if t in ("long", "bigint"):
             df = nanos_to_timestamp(df, c)
-        elif t == "timestamp_ntz":
-            # wall-clock is UTC by fixture contract; session tz is pinned
-            # UTC above, so a plain cast reinterprets without shifting.
-            df = df.withColumn(c, F.col(c).cast("timestamp"))
     return df
 
 

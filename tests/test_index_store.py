@@ -330,118 +330,6 @@ def test_q210_append_search_equals_assign_all_search(spark, tmp_path):
     )  # appended vectors are searchable (present when they rank)
 
 
-def test_lifecycle_pre_checkpoint_plans(spark, tmp_path):
-    """The global plan gates (test_plan_quality.py) cannot see through
-    the eager localCheckpoint the index-lifecycle queries end with (the
-    temp index dir is deleted on return, so materialization is
-    mandatory) — ADVICE r9. This applies the SAME two checks to the
-    PRE-checkpoint plans via the _q2NN_frame builders the public
-    queries wrap: (1) no unpartitioned window over corpus-sized input,
-    (2) no row-at-a-time Python UDF, and no Arrow stage except the
-    lsh_cosine_lookup rescore kernel (none of these five use it)."""
-    import re
-    import uuid
-
-    from pyveb_spark.queries.dedup import (
-        _q208_frame,
-        _q209_frame,
-        _q219_frame,
-    )
-    from pyveb_spark.queries.similarity import (
-        _q207_frame,
-        _q210_frame,
-        _q211_frame,
-        _q213_frame,
-        _q214_frame,
-        _q215_frame,
-        _q222_frame,
-    )
-    from pyveb_spark.queries.streaming import _q218_frame
-    from pyveb_spark.queries.text import (
-        _q220_frame,
-        _q221_frame,
-        _q223_frame,
-    )
-
-    frames = {}
-    t208 = f"t_gate208_{uuid.uuid4().hex[:8]}"
-    t209 = f"t_gate209_{uuid.uuid4().hex[:8]}"
-    t219 = f"t_gate219_{uuid.uuid4().hex[:8]}"
-    t220 = f"t_gate220_{uuid.uuid4().hex[:8]}"
-    t221 = f"t_gate221_{uuid.uuid4().hex[:8]}"
-    t223 = f"t_gate223_{uuid.uuid4().hex[:8]}"
-    try:
-        frames["q207"] = _q207_frame(spark, SF, str(tmp_path / "i207"))
-        frames["q208"] = _q208_frame(
-            spark, SF, str(tmp_path / "i208"), t208
-        )
-        frames["q209"] = _q209_frame(
-            spark, SF, str(tmp_path / "i209"), t209
-        )
-        frames["q210"] = _q210_frame(spark, SF, str(tmp_path / "i210"))
-        frames["q211"] = _q211_frame(spark, SF, str(tmp_path / "i211"))
-        # q216/q217 are the same builders with compact=True (the plan
-        # shape downstream of the compacted artifact is identical)
-        frames["q213"] = _q213_frame(spark, SF, str(tmp_path / "i213"))
-        frames["q214"] = _q214_frame(spark, SF, str(tmp_path / "i214"))
-        frames["q215"] = _q215_frame(spark, SF, str(tmp_path / "i215"))
-        frames["q218"] = _q218_frame(spark, SF, str(tmp_path / "i218"))
-        frames["q219"] = _q219_frame(
-            spark, SF, str(tmp_path / "i219"), t219
-        )
-        frames["q220"] = _q220_frame(
-            spark, SF, str(tmp_path / "i220"), t220
-        )
-        frames["q221"] = _q221_frame(
-            spark, SF, str(tmp_path / "i221"), t221
-        )
-        frames["q222"] = _q222_frame(spark, SF, str(tmp_path / "i222"))
-        frames["q223"] = _q223_frame(
-            spark, SF, str(tmp_path / "i223"), t223
-        )
-
-        # bounded-window exemptions, mirroring test_plan_quality.py's
-        # _GLOBAL_WINDOW_BOUNDED_OK: q223's two rank windows run over
-        # k<=10 retrieval shortlists (post-limit), the q169 RRF class —
-        # provably bounded input, not a corpus sort
-        window_bounded_ok = {"q223"}
-        window_offenders, py_offenders = {}, []
-        for name, frame in frames.items():
-            opt = (
-                frame._jdf.queryExecution().optimizedPlan().toString()
-            )
-            hits = []
-            for m in re.finditer(r"windowspecdefinition\(", opt):
-                first = opt[m.end():m.end() + 200].split(",")[0]
-                if " ASC" in first or " DESC" in first:
-                    hits.append(first.strip()[:60])
-            if hits and name not in window_bounded_ok:
-                window_offenders[name] = hits
-            phys = (
-                frame._jdf.queryExecution().executedPlan().toString()
-            )
-            if any(
-                t in phys
-                for t in (
-                    "BatchEvalPython", "ArrowEvalPython", "MapInPandas",
-                    "FlatMapGroupsInPandas", "MapInArrow",
-                )
-            ):
-                py_offenders.append(name)
-        assert not window_offenders, window_offenders
-        assert not py_offenders, py_offenders
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {t208}")
-        spark.sql(f"DROP TABLE IF EXISTS {t209}")
-        spark.sql(f"DROP TABLE IF EXISTS {t219}")
-        spark.sql(f"DROP TABLE IF EXISTS {t219}__compact_stage")
-        spark.sql(f"DROP TABLE IF EXISTS {t220}")
-        spark.sql(f"DROP TABLE IF EXISTS {t220}__compact_stage")
-        spark.sql(f"DROP TABLE IF EXISTS {t221}")
-        spark.sql(f"DROP TABLE IF EXISTS {t221}__compact_stage")
-        spark.sql(f"DROP TABLE IF EXISTS {t223}")
-
-
 def test_ivf_empty_corpus_split_degenerates_to_empty(spark, tmp_path):
     """Found by the 0.15x size twin: a corpus split that is EMPTY (all
     vec_ids below the split point) must yield an empty search/audit, not

@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 
 from pyveb_spark.queries import QUERIES
+from pyveb_spark.queries._helpers import lazy_frame
 
 
 def _formatted_plan(df) -> str:
@@ -243,8 +244,8 @@ _ARROW_PY_OK = {
 
 # streaming replays execute a stream inside the query fn; their final
 # (batch) plan over the memory sink is trivially Python-free, and running
-# three stream replays in this sweep would triple its cost — covered by
-# their oracle rows instead
+# the stream replays in these gates would multiply their cost — covered
+# by their oracle rows instead
 _STREAM_REPLAYS = {
     "q40_stream_replay",
     "q49_stream_attribution",
@@ -258,26 +259,11 @@ _STREAM_REPLAYS = {
     "q206_stream_lsh_admission",
 }
 
-# Index-lifecycle queries end in an eager localCheckpoint (the temp
-# index dir is deleted before return, so the returned plan MUST be
-# materialized) — the global gates would only see the checkpoint scan
-# (de facto exempt, ADVICE r9) while executing each full side-effecting
-# index build per sweep. Explicitly exempt here; their PRE-checkpoint
-# plans get the SAME two gate checks (window regex + Python-stage scan)
-# in tests/test_index_store.py::test_lifecycle_pre_checkpoint_plans via
-# the _q2NN_frame builders the public queries wrap.
-_CHECKPOINTED_INDEX_LIFECYCLE = {
-    "q207_ivf_persisted_search",
-    "q208_minhash_persisted_admission",
-    "q209_minhash_index_evolution",
-    "q210_ivf_incremental_admission",
-    "q211_ivf_index_health",
-    "q213_pq_persisted_search",
-    "q214_sq8_persisted_ann",
-    "q215_ivfpq_persisted_serving",
-    "q216_minhash_compacted_evolution",   # q209's builder, compact=True
-    "q217_ivf_compacted_search",          # q210's builder, compact=True
-}
+
+def _self_cleaning(fn) -> bool:
+    """A ``queries._helpers.scratch_query`` query: it returns a
+    checkpoint scan, and its lazy builder is ``fn.__wrapped__``."""
+    return hasattr(fn, "__wrapped__")
 
 
 # Unpartitioned windows allowed ONLY over provably bounded inputs — each
@@ -298,7 +284,34 @@ _GLOBAL_WINDOW_BOUNDED_OK = {
     "q169_hybrid_retrieval",    # RRF over k<=10 retrieval shortlists
     "q176_token_budget_allocation",  # largest-remainder over #sources
     "q179_cluster_balanced_sample",  # largest-remainder over k clusters
+    "q223_hybrid_persisted_serving",  # rank over k<=10 retrieval
+                                      # shortlists (post-limit, q169 RRF)
 }
+
+
+def _corpus_window_hits(df) -> list[str]:
+    """Unpartitioned ordering windows in the optimized plan: a
+    ``windowspecdefinition`` whose FIRST argument is an ordering
+    expression (carries ASC/DESC) has an empty partition spec."""
+    import re
+
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    hits = []
+    for m in re.finditer(r"windowspecdefinition\(", plan):
+        first = plan[m.end():m.end() + 200].split(",")[0]
+        if " ASC" in first or " DESC" in first:
+            hits.append(first.strip()[:60])
+    return hits
+
+
+def _python_stages(df) -> tuple[bool, bool]:
+    """(row-at-a-time Python UDF, Arrow-batched Python stage) in the
+    physical plan."""
+    plan = _formatted_plan(df)
+    return "BatchEvalPython" in plan, any(
+        t in plan for t in ("ArrowEvalPython", "MapInPandas",
+                            "FlatMapGroupsInPandas", "MapInArrow")
+    )
 
 
 def test_no_unpartitioned_window_over_corpus(spark):
@@ -308,28 +321,19 @@ def test_no_unpartitioned_window_over_corpus(spark):
     shortlist, a constant-size table) — never the raw corpus. Corpus-wide
     orderings must go through ``packing.with_token_offsets`` /
     ``distributed_ntile`` (range-partitioned prefix sums; q194, q187,
-    quantile_bins). Detection: in the optimized plan, a
-    ``windowspecdefinition`` whose FIRST argument is an ordering
-    expression (carries ASC/DESC) has an empty partition spec."""
-    import re
-
+    quantile_bins). Detection: :func:`_corpus_window_hits`.
+    Self-cleaning queries are gated by
+    :func:`test_self_cleaning_query_plans`."""
     sf = "/root/testdata/sf0.001"
     offenders = {}
     for name, fn in QUERIES.items():
         if (
             name in _STREAM_REPLAYS
             or name in _GLOBAL_WINDOW_BOUNDED_OK
-            or name in _CHECKPOINTED_INDEX_LIFECYCLE
+            or _self_cleaning(fn)
         ):
             continue
-        plan = (
-            fn(spark, sf)._jdf.queryExecution().optimizedPlan().toString()
-        )
-        hits = []
-        for m in re.finditer(r"windowspecdefinition\(", plan):
-            first = plan[m.end():m.end() + 200].split(",")[0]
-            if " ASC" in first or " DESC" in first:
-                hits.append(first.strip()[:60])
+        hits = _corpus_window_hits(fn(spark, sf))
         if hits:
             offenders[name] = hits
     assert not offenders, (
@@ -341,25 +345,46 @@ def test_no_row_python_udf_anywhere(spark):
     """Global gate: NO query's plan may contain a row-at-a-time Python UDF
     (BatchEvalPython) — the engine rule since SURVEY §4. Arrow-batched
     stages (ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas) are
-    allowed only for the known kernel queries."""
+    allowed only for the known kernel queries. Self-cleaning queries
+    are gated by :func:`test_self_cleaning_query_plans`."""
     sf = "/root/testdata/sf0.001"
     offenders, arrow_unexpected = [], []
     for name, fn in QUERIES.items():
-        if name in _STREAM_REPLAYS or name in _CHECKPOINTED_INDEX_LIFECYCLE:
+        if name in _STREAM_REPLAYS or _self_cleaning(fn):
             continue
-        plan = _formatted_plan(fn(spark, sf))
-        if "BatchEvalPython" in plan:
+        row_udf, arrow = _python_stages(fn(spark, sf))
+        if row_udf:
             offenders.append(name)
-        if (
-            any(t in plan for t in ("ArrowEvalPython", "MapInPandas",
-                                    "FlatMapGroupsInPandas", "MapInArrow"))
-            and name not in _ARROW_PY_OK
-        ):
+        if arrow and name not in _ARROW_PY_OK:
             arrow_unexpected.append(name)
     assert not offenders, f"row-UDF (BatchEvalPython) in: {offenders}"
     assert not arrow_unexpected, (
         f"unexpected Python stage in: {arrow_unexpected}"
     )
+
+
+def test_self_cleaning_query_plans(spark):
+    """The two global gates above, applied to the queries that end in
+    ``scratch_query``'s checkpoint: the returned frame is a checkpoint
+    scan, so each builder's lazy frame is built inside its own scratch
+    (``lazy_frame``) and checked there, before the scratch is cleaned
+    up. Stream replays keep their one exemption (cost)."""
+    sf = "/root/testdata/sf0.001"
+    checked, window_offenders, py_offenders = [], {}, []
+    for name, fn in QUERIES.items():
+        if name in _STREAM_REPLAYS or not _self_cleaning(fn):
+            continue
+        with lazy_frame(spark, fn, sf) as df:
+            hits = _corpus_window_hits(df)
+            if hits and name not in _GLOBAL_WINDOW_BOUNDED_OK:
+                window_offenders[name] = hits
+            row_udf, arrow = _python_stages(df)
+            if row_udf or (arrow and name not in _ARROW_PY_OK):
+                py_offenders.append(name)
+        checked.append(name)
+    assert checked
+    assert not window_offenders, window_offenders
+    assert not py_offenders, py_offenders
 
 
 def test_pin_width_on_fanout_joins(spark, sf_dir):

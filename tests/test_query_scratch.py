@@ -1,6 +1,7 @@
-"""Self-cleaning query runs (``queries/_helpers.query_scratch``): whatever
-a query creates — a temp directory, catalog tables, memory-sink views — is
-gone when it returns, and also when it raises."""
+"""Self-cleaning query runs (``queries/_helpers.scratch_query`` over
+``query_scratch``): whatever a query creates — a temp directory, catalog
+tables, memory-sink views — is gone when it returns, and also when it
+raises; the frame it returns is materialized and outlives its scratch."""
 
 from __future__ import annotations
 
@@ -34,6 +35,17 @@ def test_memory_sink_queries_leave_no_tables(spark, sf_dir):
             out = QUERIES[name](spark, sf_dir)
             assert out.count() > 0, name
             assert _table_names(spark) - before == set(), name
+
+
+def test_returned_frame_outlives_its_scratch(spark, sf_dir, tmp_path,
+                                            monkeypatch):
+    """A non-stream self-cleaning query (q213, persisted PQ codes): its
+    directory is gone when it returns, and its frame still counts its
+    rows, so the frame reads nothing from that directory."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    out = QUERIES["q213_pq_persisted_search"](spark, sf_dir)
+    assert list(tmp_path.glob("q213*")) == []
+    assert out.count() > 0
 
 
 def test_failed_stream_run_removes_its_dir(spark, sf_dir, tmp_path,

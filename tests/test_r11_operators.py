@@ -395,7 +395,7 @@ def test_maybe_compact_ivf_postings_threshold(spark, tmp_path):
     assert max(files_per_list().values()) == 1
 
 
-def test_q218_stream_equals_batch(spark, tmp_path):
+def test_q218_stream_equals_batch(spark):
     """The q218 correctness claim, pinned directly: the streamed
     lifecycle (frozen-quantizer encode, idempotent append, threshold
     compaction) serves EXACTLY what a single-pass batch composition
@@ -409,18 +409,18 @@ def test_q218_stream_equals_batch(spark, tmp_path):
         pq_encode,
         pq_train,
     )
-    from pyveb_spark.queries._helpers import _query_vec
-    from pyveb_spark.queries.streaming import _q218_frame
+    from pyveb_spark.queries._helpers import _query_vec, lazy_frame
+    from pyveb_spark.queries.streaming import q218_stream_ivfpq_admission
 
-    frame = _q218_frame(spark, SF, str(tmp_path / "s"))
-    # the serve must prune the RELOADED grown postings at the scan
-    # (q215's PartitionFilters property, inherited through the stream)
-    plan = frame._jdf.queryExecution().executedPlan().toString()
-    assert any(
-        "PartitionFilters" in ln and "ivf_list" in ln
-        for ln in plan.splitlines()
-    ), plan
-    streamed = [(r.vec_id, r.label, r.l2_dist) for r in frame.collect()]
+    with lazy_frame(spark, q218_stream_ivfpq_admission, SF) as frame:
+        # the serve must prune the RELOADED grown postings at the scan
+        # (q215's PartitionFilters property, inherited through the stream)
+        plan = frame._jdf.queryExecution().executedPlan().toString()
+        assert any(
+            "PartitionFilters" in ln and "ivf_list" in ln
+            for ln in plan.splitlines()
+        ), plan
+        streamed = [(r.vec_id, r.label, r.l2_dist) for r in frame.collect()]
 
     e = read_table(spark, SF, "embeddings")
     corpus = e.where(F.col("vec_id") % 17 != 0)

@@ -7,8 +7,10 @@ Usage::
 
 Writes plans/<tag>/<full_query_name>_<suffix>.txt for each name (prefix
 match against the registry, like tools/profile_query.py). Plan-only — the
-single action cost is whatever pre-checkpoint builders the query runs at
-construction time.
+single action cost is whatever eager jobs the query runs at construction
+time. A self-cleaning query (``queries._helpers.scratch_query``) is
+explained before its final checkpoint: its lazy builder runs inside its
+own scratch, which is cleaned up after the plan is written.
 """
 
 from __future__ import annotations
@@ -20,6 +22,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyveb_spark.queries import QUERIES  # noqa: E402
+from pyveb_spark.queries._helpers import lazy_frame  # noqa: E402
 from pyveb_spark.session import get_spark  # noqa: E402
 
 
@@ -51,10 +54,10 @@ def main() -> int:
 
     for name in selected:
         spark.sparkContext.setJobDescription(f"plan:{name}")
-        df = QUERIES[name](spark, args.sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        with lazy_frame(spark, QUERIES[name], args.sf_dir) as df:
+            plan = df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            )
         path = os.path.join(out_dir, f"{name}_{args.suffix}.txt")
         with open(path, "w") as fh:
             fh.write(plan)
