@@ -269,15 +269,34 @@ def _doc_shingle_sets(df: DataFrame, id_col: str, text_col: str, n: int) -> Data
     ).withColumn("__n", F.size("__grams"))
 
 
+def _jaccard_at_least(
+    cand: DataFrame, a: str, b: str, threshold: float
+) -> DataFrame:
+    """``(a, b, jaccard)`` for candidate rows carrying both shingle sets
+    (``__ga``/``__na``, ``__gb``/``__nb``), kept when ``jaccard ≥
+    threshold``. ``array_intersect`` is evaluated row-wise inside
+    codegen; the division matches the oracle's ``intersection * 1.0 /
+    (na + nb - intersection)`` bit-for-bit."""
+    inter = F.size(F.array_intersect("__ga", "__gb"))
+    return (
+        cand.withColumn("intersection", inter)
+        .withColumn(
+            "jaccard",
+            F.col("intersection").cast("double")
+            / (F.col("__na") + F.col("__nb") - F.col("intersection")),
+        )
+        .where(F.col("jaccard") >= threshold)
+        .select(a, b, "jaccard")
+    )
+
+
 def _verify_jaccard(
     cand: DataFrame, docs: DataFrame, id_col: str, threshold: float
 ) -> DataFrame:
     """Exact-Jaccard verify of candidate ``(<id>_a, <id>_b)`` pairs against
-    the per-doc shingle-set table. ``array_intersect`` is evaluated row-wise
-    inside codegen — no extra shuffle beyond the two id joins (which Spark
-    broadcasts whenever the doc table is small enough; at cluster scale AQE
-    picks the strategy). The division matches the oracle's
-    ``intersection * 1.0 / (na + nb - intersection)`` bit-for-bit."""
+    the per-doc shingle-set table — no extra shuffle beyond the two id
+    joins (which Spark broadcasts whenever the doc table is small enough;
+    at cluster scale AQE picks the strategy)."""
     a, b = f"{id_col}_a", f"{id_col}_b"
     da = docs.select(
         F.col(id_col).alias(a),
@@ -289,19 +308,7 @@ def _verify_jaccard(
         F.col("__grams").alias("__gb"),
         F.col("__n").alias("__nb"),
     )
-    inter = F.size(F.array_intersect("__ga", "__gb"))
-    return (
-        cand.join(da, a)
-        .join(db, b)
-        .withColumn("intersection", inter)
-        .withColumn(
-            "jaccard",
-            F.col("intersection").cast("double")
-            / (F.col("__na") + F.col("__nb") - F.col("intersection")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select(a, b, "jaccard")
-    )
+    return _jaccard_at_least(cand.join(da, a).join(db, b), a, b, threshold)
 
 
 def ngram_jaccard_pairs(
@@ -501,45 +508,31 @@ def _minhash_expr(grams_col, seed: int) -> Column:
 # measured ~0.57 s of pure Py4J Column construction per call at
 # num_hashes=32 (plus ~0.2 s for the band array), paid 4× per q209/q216
 # lifecycle run and once per pairs call. Columns are immutable
-# df-independent expression trees (the r12 change-#15 rule, pinned by
-# test_lsh_bucket_expr_matches_lsh_bucket's reuse-across-frames shape), so
-# process-lifetime memoization is semantics-free. The cached objects are
-# unresolved JVM expression trees: they hold no session state (analysis
-# happens per plan), so they stay valid across getOrCreate sessions within
-# one driver process — the same lifetime pq_code_expr/lsh_bucket_expr
-# callers already rely on.
+# df-independent expression trees (pinned by
+# test_minhash_memoized_columns_value_identity's reuse-across-frames
+# shape), so process-lifetime memoization is semantics-free. The cached
+# objects are unresolved JVM expression trees: they hold no session state
+# (analysis happens per plan), so they stay valid across getOrCreate
+# sessions within one driver process — the same lifetime
+# _simhash_fp_expr/lsh_bucket_expr callers rely on.
 # --------------------------------------------------------------------------
 
 
 @lru_cache(maxsize=32)
-def _minhash_exprs_cached(num_hashes: int) -> tuple[Column, ...]:
-    """The ``num_hashes`` seeded min-hash Columns over ``__grams``."""
+def _minhash_cols_aliased(num_hashes: int) -> tuple[Column, ...]:
+    """The ``num_hashes`` seeded min-hash Columns over ``__grams``,
+    aliased ``mh_<s>`` (the signature-frame select list)."""
     return tuple(
-        _minhash_expr(F.col("__grams"), s) for s in range(num_hashes)
-    )
-
-
-@lru_cache(maxsize=32)
-def _band_arr_inline(num_hashes: int, bands: int) -> Column:
-    """The banded-postings band-hash array with the min-hash expressions
-    INLINED (the ``_banded_postings`` shape)."""
-    r = _check_banding(num_hashes, bands)
-    mh = _minhash_exprs_cached(num_hashes)
-    return F.array(
-        *[
-            portable_hash48(
-                F.concat_ws("|", *[mh[b * r + i] for i in range(r)])
-            )
-            for b in range(bands)
-        ]
+        _minhash_expr(F.col("__grams"), s).alias(f"mh_{s}")
+        for s in range(num_hashes)
     )
 
 
 @lru_cache(maxsize=32)
 def _band_arr_named(num_hashes: int, bands: int) -> Column:
-    """The band-hash array over ALIASED ``mh_<s>`` signature columns (the
-    ``minhash_lsh_pairs`` shape, where the signature frame is built
-    first)."""
+    """The band-hash array over the ``mh_<s>`` signature columns: band
+    key = portable 48-bit hash of the '|'-joined min-hash tuple
+    (oracle-replayable)."""
     r = _check_banding(num_hashes, bands)
     return F.array(
         *[
@@ -550,16 +543,6 @@ def _band_arr_named(num_hashes: int, bands: int) -> Column:
             )
             for b in range(bands)
         ]
-    )
-
-
-@lru_cache(maxsize=32)
-def _minhash_cols_aliased(num_hashes: int) -> tuple[Column, ...]:
-    """``_minhash_exprs_cached`` aliased ``mh_<s>`` (the signature-frame
-    select list)."""
-    return tuple(
-        e.alias(f"mh_{s}")
-        for s, e in enumerate(_minhash_exprs_cached(num_hashes))
     )
 
 
@@ -627,17 +610,11 @@ def minhash_lsh_pairs(
     docs = cached_once(
         _doc_shingle_sets(df, id_col, text_col, n), "dedup.pairs.shingle_sets"
     )
-    sets = docs.where(F.size("__grams") > 0)
-    sig = sets.select(F.col(id_col), *_minhash_cols_aliased(num_hashes))
     # one (band_idx, band_hash) row per band → a single self-join keyed on
     # both, instead of `bands` separate joins + union (fewer stages, one
-    # shuffle). band_idx disambiguates hashes across bands. Band key =
-    # portable 48-bit hash of the '|'-joined minhash tuple (oracle-replayable).
-    banded = sig.select(
-        F.col(id_col),
-        F.posexplode(_band_arr_named(num_hashes, bands)).alias(
-            "__band", "__h"
-        ),
+    # shuffle). The verify re-reads `docs`, so only the keys go on.
+    banded = _banded_postings(docs, id_col, num_hashes, bands).select(
+        id_col, "__band", "__h"
     )
     if max_bucket_size is not None:
         # window count, not groupBy+join-back: one shuffle on (band, hash)
@@ -707,21 +684,29 @@ def _check_banding(num_hashes: int, bands: int) -> int:
 
 
 def _banded_postings(
-    df: DataFrame, id_col: str, text_col: str, n: int,
-    num_hashes: int, bands: int,
+    docs: DataFrame, id_col: str, num_hashes: int, bands: int
 ) -> DataFrame:
-    """(id, __grams, __n, __band, __h) posting rows: the doc's shingle set
-    plus one row per LSH band hash — the joinable form of a MinHash
-    signature."""
+    """(id, __grams, __n, __band, __h) posting rows of a
+    ``_doc_shingle_sets`` frame: the doc's shingle set plus one row per
+    LSH band hash — the joinable form of a MinHash signature, shared by
+    the pairs self-join, the index build and the lookup probe. Docs with
+    no shingles (< n tokens) are dropped.
+
+    The signature is selected as named ``mh_<s>`` columns and banded
+    from those: the min-hash ``Project`` then sits under a whole-stage
+    codegen ``Generate``. Inlining the min-hash expressions into the
+    band array loses codegen on the ``Generate``; it was slower in a
+    small probe (sf0.1, 4-core ``local[4]``, alternating runs, medians:
+    pairs 1.58 s vs 1.76 s, index build 1.80 s vs 1.98 s)."""
     _check_banding(num_hashes, bands)
-    sets = _doc_shingle_sets(df, id_col, text_col, n).where(
-        F.size("__grams") > 0
+    sig = docs.where(F.size("__grams") > 0).select(
+        F.col(id_col), "__grams", "__n", *_minhash_cols_aliased(num_hashes)
     )
-    return sets.select(
+    return sig.select(
         F.col(id_col),
         "__grams",
         "__n",
-        F.posexplode(_band_arr_inline(num_hashes, bands)).alias(
+        F.posexplode(_band_arr_named(num_hashes, bands)).alias(
             "__band", "__h"
         ),
     )
@@ -748,16 +733,17 @@ def minhash_lsh_index(
     tiny blacklist, broadcast anti-joined); persist that blacklist next
     to the index and refresh it at compaction time — it only guards
     skew, not correctness, so staleness after appends is acceptable.
-    (Earlier rounds attached a per-posting ``__m`` size column via a
-    window count, which shuffled every posting WITH its shingle array
-    just to carry 8 bytes of skew metadata — the blacklist shuffles
-    (band, hash) pairs only, map-side combined.)
+    (A per-posting bucket-size column would shuffle every posting WITH
+    its shingle array to carry 8 bytes of skew metadata; the blacklist
+    shuffles (band, hash) pairs only, map-side combined.)
 
     (A widen_scan of the input was measured here in r12 and REVERTED:
     parallelizing the hash build also multiplies the bucketed save's
     file count — parts × buckets — and the extra opens on every
     downstream bucket scan cost more than the build saved at sf0.1.)"""
-    return _banded_postings(df, id_col, text_col, n, num_hashes, bands)
+    return _banded_postings(
+        _doc_shingle_sets(df, id_col, text_col, n), id_col, num_hashes, bands
+    )
 
 
 def minhash_hot_buckets(
@@ -802,8 +788,8 @@ def minhash_lsh_lookup(
     Pass a persisted :func:`minhash_hot_buckets` frame as ``hot_buckets``
     to skip recomputing the skew blacklist per admission batch (the
     production shape) — an explicit blacklist is ALWAYS applied,
-    regardless of ``max_bucket_size`` or a legacy ``__m`` column;
-    otherwise it is derived from ``index`` on the fly.
+    regardless of ``max_bucket_size``; otherwise it is derived from
+    ``index`` on the fly.
 
     ``meta`` — the index's persisted build manifest
     (``load_minhash_index``) — makes the probe hash
@@ -825,7 +811,10 @@ def minhash_lsh_lookup(
         num_hashes = int(meta.get("num_hashes", num_hashes))
         bands = int(meta.get("bands", bands))
     a_id, b_id = f"{id_col}_new", f"{id_col}_corpus"
-    probe = _banded_postings(new_df, id_col, text_col, n, num_hashes, bands)
+    probe = _banded_postings(
+        _doc_shingle_sets(new_df, id_col, text_col, n), id_col, num_hashes,
+        bands,
+    )
     a = probe.select(
         F.col(id_col).alias(a_id),
         F.col("__grams").alias("__ga"),
@@ -833,44 +822,34 @@ def minhash_lsh_lookup(
         "__band",
         "__h",
     )
-    b_cols = [
+    b = index.select(
         F.col(id_col).alias(b_id),
         F.col("__grams").alias("__gb"),
         F.col("__n").alias("__nb"),
         "__band",
         "__h",
-    ]
-    has_sizes = "__m" in index.columns
-    if has_sizes:
-        b_cols.append("__m")
-    b = index.select(*b_cols)
+    )
     # hot-bucket skew cap on the CORPUS side (see minhash_lsh_pairs) — a
     # boilerplate bucket with m index members fans every probe row hitting
     # it out ×m. Precedence: an explicitly passed blacklist ALWAYS applies
-    # (the caller built it to protect this job); else a legacy per-posting
-    # ``__m`` column filters scan-stage; else the blacklist is derived
-    # from the index on the fly. The anti-join carries no broadcast hint —
-    # the blacklist is tiny in the rare-by-definition skew case and AQE
-    # picks broadcast then, but a pathological cap (most buckets hot)
-    # degrades to a sort-merge anti-join instead of a driver OOM.
+    # (the caller built it to protect this job); else the blacklist is
+    # derived from the index on the fly. The anti-join carries no
+    # broadcast hint — the blacklist is tiny in the rare-by-definition
+    # skew case and AQE picks broadcast then, but a pathological cap (most
+    # buckets hot) degrades to a sort-merge anti-join instead of a driver
+    # OOM.
     if hot_buckets is not None:
         b = b.join(hot_buckets, ["__band", "__h"], "left_anti")
     elif max_bucket_size is not None:
-        if has_sizes:
-            b = b.where(F.col("__m") <= F.lit(int(max_bucket_size)))
-        else:
-            # Deriving the blacklist on the fly reads the index twice
-            # (blacklist aggregation + candidate join); persist the
-            # postings so the expensive minhash pipeline runs once.
-            # Production passes a persisted blacklist and never hits
-            # this branch.
-            b = cached_once(b, "dedup.minhash_lsh_lookup.postings")
-            derived = minhash_hot_buckets(
-                b.select("__band", "__h"), max_bucket_size
-            )
-            b = b.join(derived, ["__band", "__h"], "left_anti")
-    if has_sizes:
-        b = b.drop("__m")
+        # Deriving the blacklist on the fly reads the index twice
+        # (blacklist aggregation + candidate join); persist the postings
+        # so the expensive minhash pipeline runs once. Production passes a
+        # persisted blacklist and never hits this branch.
+        b = cached_once(b, "dedup.minhash_lsh_lookup.postings")
+        derived = minhash_hot_buckets(
+            b.select("__band", "__h"), max_bucket_size
+        )
+        b = b.join(derived, ["__band", "__h"], "left_anti")
     # Pin the candidate-join exchange width on the PROBE side only
     # (layout.pin_width — the q17 rule): the probe batch is byte-tiny by
     # design (cost ∝ batch), so AQE would otherwise run the fan-out join
@@ -887,17 +866,8 @@ def minhash_lsh_lookup(
         .where(F.col(a_id) != F.col(b_id))
         .dropDuplicates([a_id, b_id])
     )
-    inter = F.size(F.array_intersect("__ga", "__gb"))
-    return (
-        cand.withColumn("__i", inter)
-        .withColumn(
-            "jaccard",
-            F.col("__i").cast("double")
-            / (F.col("__na") + F.col("__nb") - F.col("__i")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select(a_id, b_id, "jaccard")
-    )
+    # the postings carry both shingle sets, so the verify needs no join
+    return _jaccard_at_least(cand, a_id, b_id, threshold)
 
 
 def fuzzy_decontaminate(
@@ -979,7 +949,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 @lru_cache(maxsize=8)
 def _simhash_fp_expr(text_col: str) -> Column:
     """The df-independent fingerprint Column behind :func:`simhash`,
-    memoized per text column name (the _minhash_exprs_cached rule —
+    memoized per text column name (the _minhash_cols_aliased rule —
     ~0.15 s of fold construction per call, rebuilt 1-4× per
     fingerprint-family query)."""
     # one ArrayType Literal node instead of 60 child Literals (the
@@ -1057,15 +1027,38 @@ def hamming_pairs(
     (recall 1.0 whenever ``max_hamming < bands``); one band-bucket
     self-join is the only shuffle. Fingerprints must be non-negative
     (< 2^bits)."""
-    if max_hamming >= bands:
-        raise ValueError(
-            "pigeonhole blocking needs max_hamming < bands "
-            f"(got {max_hamming} >= {bands})"
-        )
+    a, b_ = f"{id_col}_a", f"{id_col}_b"
+    banded = _hamming_postings(fp, id_col, hash_col, bands, bits)
+    # Pin the band-key exchange width (layout.pin_width — the q17 rule):
+    # fingerprint rows are 16 bytes but the band self-join's output is
+    # quadratic in bucket size; AQE's bytes-based sizing would coalesce
+    # the candidate join onto a few tasks. The pin IS the join's hash
+    # distribution, so it replaces the exchange rather than adding one.
+    from pyveb_spark.operators.layout import pin_width
+
+    banded = pin_width(banded, "__band", "__h")
+    left = banded.select(
+        F.col(id_col).alias(a), F.col(hash_col).alias("__fa"),
+        "__band", "__h",
+    )
+    right = banded.select(
+        F.col(id_col).alias(b_), F.col(hash_col).alias("__fb"),
+        "__band", "__h",
+    )
+    cand = left.join(right, ["__band", "__h"]).where(F.col(a) < F.col(b_))
+    return _hamming_at_most(cand, a, b_, max_hamming, bands)
+
+
+def _hamming_postings(
+    fp: DataFrame, id_col: str, hash_col: str, bands: int, bits: int
+) -> DataFrame:
+    """(id, <hash_col>, __band, __h) rows: one per ``bits/bands``-wide
+    chunk of a non-negative ``bits``-wide fingerprint — the pigeonhole
+    blocking key of ``hamming_pairs``, ``simhash_index`` and the
+    ``simhash_lookup`` probe."""
     if bits % bands != 0:
         raise ValueError(f"bands must divide {bits} (got bands={bands})")
     width = bits // bands
-    a, b_ = f"{id_col}_a", f"{id_col}_b"
     # fingerprints are positive (< 2^bits), so plain shift + mask per band
     band_arr = F.array(
         *[
@@ -1076,37 +1069,34 @@ def hamming_pairs(
             for i in range(bands)
         ]
     )
-    banded = fp.select(
+    return fp.select(
         F.col(id_col),
         F.col(hash_col),
-        F.posexplode(band_arr).alias("__band", "__v"),
+        F.posexplode(band_arr).alias("__band", "__h"),
     )
-    # Pin the band-key exchange width (layout.pin_width — the q17 rule):
-    # fingerprint rows are 16 bytes but the band self-join's output is
-    # quadratic in bucket size; AQE's bytes-based sizing would coalesce
-    # the candidate join onto a few tasks. The pin IS the join's hash
-    # distribution, so it replaces the exchange rather than adding one.
-    from pyveb_spark.operators.layout import pin_width
 
-    banded = pin_width(banded, "__band", "__v")
-    left = banded.select(
-        F.col(id_col).alias(a), F.col(hash_col).alias("__fa"),
-        "__band", "__v",
-    )
-    right = banded.select(
-        F.col(id_col).alias(b_), F.col(hash_col).alias("__fb"),
-        "__band", "__v",
-    )
+
+def _hamming_at_most(
+    cand: DataFrame, a: str, b: str, max_hamming: int, bands: int
+) -> DataFrame:
+    """``(a, b, hamming)`` for band-join candidates carrying both
+    fingerprints (``__fa``, ``__fb``): one row per pair, verified exactly
+    with ``bit_count(xor)`` and kept when ``hamming ≤ max_hamming``.
+    Raises unless ``max_hamming < bands`` — the pigeonhole condition
+    under which the banding found every such pair."""
+    if max_hamming >= bands:
+        raise ValueError(
+            "pigeonhole blocking needs max_hamming < bands "
+            f"(got {max_hamming} >= {bands})"
+        )
     return (
-        left.join(right, ["__band", "__v"])
-        .where(F.col(a) < F.col(b_))
-        .dropDuplicates([a, b_])
+        cand.dropDuplicates([a, b])
         .withColumn(
             "hamming",
             F.bit_count(F.col("__fa").bitwiseXOR(F.col("__fb"))),
         )
         .where(F.col("hamming") <= F.lit(int(max_hamming)))
-        .select(a, b_, "hamming")
+        .select(a, b, "hamming")
     )
 
 
@@ -1134,23 +1124,8 @@ def simhash_index(
     one 64-bit xor on values already carried by the postings — O(1) per
     candidate, not O(|doc|). At 100 TB the principled skew lever is
     more/wider bands, never dropping buckets."""
-    if bits % bands != 0:
-        raise ValueError(f"bands must divide {bits} (got bands={bands})")
-    width = bits // bands
-    fp = simhash(df, id_col, text_col)
-    band_arr = F.array(
-        *[
-            F.expr(
-                f"(CAST(simhash AS BIGINT) >> {i * width})"
-                f" & {(1 << width) - 1}"
-            )
-            for i in range(bands)
-        ]
-    )
-    return fp.select(
-        F.col(id_col),
-        F.col("simhash"),
-        F.posexplode(band_arr).alias("__band", "__h"),
+    return _hamming_postings(
+        simhash(df, id_col, text_col), id_col, "simhash", bands, bits
     )
 
 
@@ -1188,11 +1163,6 @@ def simhash_lookup(
         )
         bands = int(meta.get("bands", bands))
         bits = int(meta.get("bits", bits))
-    if max_hamming >= bands:
-        raise ValueError(
-            "pigeonhole blocking needs max_hamming < bands "
-            f"(got {max_hamming} >= {bands})"
-        )
     a_id, b_id = f"{id_col}_new", f"{id_col}_corpus"
     probe = simhash_index(new_df, id_col, text_col, bands, bits)
     a = probe.select(
@@ -1203,15 +1173,8 @@ def simhash_lookup(
         F.col(id_col).alias(b_id), F.col("simhash").alias("__fb"),
         "__band", "__h",
     )
-    return (
-        a.join(b, ["__band", "__h"])
-        .dropDuplicates([a_id, b_id])
-        .withColumn(
-            "hamming",
-            F.bit_count(F.col("__fa").bitwiseXOR(F.col("__fb"))),
-        )
-        .where(F.col("hamming") <= F.lit(int(max_hamming)))
-        .select(a_id, b_id, "hamming")
+    return _hamming_at_most(
+        a.join(b, ["__band", "__h"]), a_id, b_id, max_hamming, bands
     )
 
 

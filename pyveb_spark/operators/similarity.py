@@ -712,14 +712,12 @@ def lsh_bucket_expr(
 ) -> Column:
     """The df-independent bucket-id Column behind :func:`lsh_bucket` —
     the ``pq_code_expr`` shape (r12 change #15): a Column is an immutable
-    expression tree, so a per-micro-batch admission loop builds it ONCE
-    before the stream and evaluates the same object against every batch
-    frame, instead of re-running the plane-literal construction per
-    trigger (``lsh_cosine_lookup(probe_bucket=...)`` threads it).
-    Memoized (r13, the dedup._minhash_exprs_cached rule): the expression
-    is a pure function of its four scalar arguments, and the LSH mining/
-    recall-audit queries rebuild the identical plane construction per
-    call."""
+    expression tree, so one object evaluates against every frame.
+    Memoized (r13, the dedup._minhash_cols_aliased rule): the expression
+    is a pure function of its four scalar arguments, so each
+    micro-batch's ``lsh_cosine_lookup`` probe and each LSH mining/
+    recall-audit call gets the same Column back instead of re-running
+    the plane-literal construction."""
     planes = _rademacher_planes(dim, n_planes, seed)
     if not planes:
         # n_planes=0 degenerate case (ADVICE r12): F.array() with no
@@ -1405,6 +1403,88 @@ def ann_recall_audit(
     )
 
 
+def _vector_dim(df: DataFrame, vec_col: str) -> int | None:
+    """Dimension of the first NON-NULL vector of ``df`` (one tiny job),
+    or None when there is none — a NULL in row 1 must not crash the
+    probe."""
+    row = (
+        df.where(F.col(vec_col).isNotNull())
+        .select(F.size(vec_col).alias("d"))
+        .first()
+    )
+    if row is None or row["d"] is None:
+        return None
+    return int(row["d"])
+
+
+def _empty_cosine_pairs(
+    df: DataFrame, id_col: str, a: str, b: str
+) -> DataFrame:
+    """The no-candidate result ``(a, b, cosine_sim)`` of an LSH cosine
+    operator, typed from ``df``'s ACTUAL id column so the empty path and
+    the populated path return the same schema for non-bigint ids (ADVICE
+    r8)."""
+    id_type = df.schema[id_col].dataType.simpleString()
+    return df.sparkSession.createDataFrame(
+        [], f"{a} {id_type}, {b} {id_type}, cosine_sim double"
+    )
+
+
+def _cosine_rescore(
+    cand: DataFrame,
+    av: DataFrame,
+    bv: DataFrame,
+    a: str,
+    b: str,
+    threshold: float,
+) -> DataFrame:
+    """``(a, b, cosine_sim)`` for candidate id pairs ``(a, b)``, kept when
+    ``round(cosine, 4) ≥ threshold`` — the one rescore of the sign-LSH
+    lookup and cross-pairs. Candidates are ``repartition``ed off the
+    skewed bucket key, vectors join back by id (``av``: ``(a, __va)``,
+    ``bv``: ``(b, __vb)``), and the exact cosine runs vectorized in numpy
+    over Arrow batches (``mapInPandas``)."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    from pyveb_spark.operators.layout import pin_width
+
+    joined = pin_width(cand.select(a, b), a, b).join(av, a).join(bv, b)
+    out_schema = StructType(
+        [
+            StructField(a, joined.schema[a].dataType),
+            StructField(b, joined.schema[b].dataType),
+            StructField("cosine_sim", DoubleType()),
+        ]
+    )
+
+    def _score(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            va = np.array(list(pdf["__va"]), dtype=np.float64)
+            vb = np.array(list(pdf["__vb"]), dtype=np.float64)
+            cos = _round_half_away(
+                (va * vb).sum(axis=1)
+                / (
+                    np.sqrt((va * va).sum(axis=1))
+                    * np.sqrt((vb * vb).sum(axis=1))
+                ),
+                4,
+            )
+            m = cos >= threshold
+            yield pd.DataFrame(
+                {
+                    a: pdf[a].to_numpy()[m],
+                    b: pdf[b].to_numpy()[m],
+                    "cosine_sim": cos[m],
+                }
+            )
+
+    return joined.mapInPandas(_score, schema=out_schema)
+
+
 def lsh_cosine_lookup(
     batch: DataFrame,
     corpus: DataFrame,
@@ -1415,7 +1495,6 @@ def lsh_cosine_lookup(
     vec_col: str = "embedding",
     index: DataFrame | None = None,
     dim: int | None = None,
-    probe_bucket: Column | None = None,
 ) -> DataFrame:
     """Incremental EMBEDDING near-dup admission — the vector twin of
     ``dedup.minhash_lsh_lookup``: check a new batch against the corpus
@@ -1441,11 +1520,12 @@ def lsh_cosine_lookup(
 
     100 TB design: with the index bucketed on disk the lookup is a
     bucket-pruned join touching ~|batch|·E[bucket] rows; no corpus
-    scan, no cross join. The rescore follows the
-    ``lsh_cosine_cross_pairs`` discipline — the bucket equijoin carries
-    (id, bucket) rows only, candidates are ``repartition``ed off the
-    skewed bucket key, vectors join back by id, and the exact cosine
-    runs vectorized in numpy over Arrow batches. The earlier form
+    scan, no cross join. The rescore is the one
+    ``lsh_cosine_cross_pairs`` uses (``_cosine_rescore``) — the bucket
+    equijoin carries (id, bucket) rows only, candidates are
+    ``repartition``ed off the skewed bucket key, vectors join back by id,
+    and the exact cosine runs vectorized in numpy over Arrow batches. The
+    earlier form
     (vectors carried through the bucket join + interpreted ``zip_with``
     cosine on its output) was measured 7× slower on a 2.9 k-batch ×
     47 k-corpus admission (q206's 10× twin: 92 s → 13 s) — hot buckets
@@ -1453,10 +1533,6 @@ def lsh_cosine_lookup(
     The 48-bit plane construction is portable, so the whole admission
     decision replays under the SQL oracle.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
     a_id, b_id = f"{id_col}_new", f"{id_col}_corpus"
     if dim is None:
         # probe the batch for the vector dimension — one tiny job. The
@@ -1464,20 +1540,9 @@ def lsh_cosine_lookup(
         # index's build manifest instead (q206 does): the probe costs a
         # full scheduler round-trip per batch for a constant the
         # artifact already records.
-        dim_row = (
-            batch.where(F.col(vec_col).isNotNull())
-            .select(F.size(vec_col).alias("d"))
-            .first()
-        )
-        if dim_row is None or dim_row["d"] is None:
-            # empty batch -> no candidates, not a crash; schema follows
-            # the actual id type (the lsh_cosine_cross_pairs empty-path
-            # rule)
-            id_type = batch.schema[id_col].dataType.simpleString()
-            return batch.sparkSession.createDataFrame(
-                [], f"{a_id} {id_type}, {b_id} {id_type}, cosine_sim double"
-            )
-        dim = int(dim_row["d"])
+        dim = _vector_dim(batch, vec_col)
+        if dim is None:
+            return _empty_cosine_pairs(batch, id_col, a_id, b_id)
     dim = int(dim)
     if n_planes == "auto":
         # the production resolution knob: pick the plane count from the
@@ -1499,33 +1564,15 @@ def lsh_cosine_lookup(
         )
     elif "__b" not in index.columns:
         raise ValueError("index must carry the '__b' bucket column")
-    # probe_bucket: the caller-prebuilt lsh_bucket_expr Column (r13 — the
-    # q218 change-#15 shape on the q206 path). The expression is a pure
-    # function of (dim, n_planes, seed, vec_col) — constants for a given
-    # index — so a per-micro-batch admission loop builds it once before
-    # the stream instead of re-constructing the plane literals per
-    # trigger. The caller owns geometry agreement with the index (same
-    # manifest the integer n_planes/seed come from).
     qb = batch.withColumn(
-        "__b",
-        probe_bucket
-        if probe_bucket is not None
-        else lsh_bucket_expr(dim, n_planes, vec_col, seed),
+        "__b", lsh_bucket_expr(dim, n_planes, vec_col, seed)
     )
     a = qb.select(F.col(id_col).alias(a_id), "__b")
     b = index.select(F.col(id_col).alias(b_id), "__b")
-    n_shuf = int(
-        batch.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
     # single-probe LSH: each vector owns exactly ONE bucket, so a pair
     # shares at most one bucket — no distinct needed, multiplicity is
     # already 1 (semantics identical to the join-predicate form)
-    cand = (
-        a.join(b, "__b")
-        .where(F.col(a_id) != F.col(b_id))
-        .select(a_id, b_id)
-        .repartition(n_shuf, a_id, b_id)
-    )
+    cand = a.join(b, "__b").where(F.col(a_id) != F.col(b_id))
     # vector join-back by id; NULL embeddings contribute no candidate
     # (the previous join-predicate form nulled their cosine — same rows)
     av = (
@@ -1538,47 +1585,13 @@ def lsh_cosine_lookup(
     # drop candidates / rescore against drifted vectors — the index's
     # own vectors are the admission ground truth. The corpus frame is
     # only consulted when the index is bucket-metadata-only.
-    b_vec_src = (
-        index if index is not None and vec_col in index.columns else corpus
-    )
+    b_vec_src = index if vec_col in index.columns else corpus
     bvs = (
         b_vec_src
         .where(F.col(vec_col).isNotNull())
         .select(F.col(id_col).alias(b_id), F.col(vec_col).alias("__vb"))
     )
-    joined = cand.join(av, a_id).join(bvs, b_id)
-    out_schema = StructType(
-        [
-            StructField(a_id, joined.schema[a_id].dataType),
-            StructField(b_id, joined.schema[b_id].dataType),
-            StructField("cosine_sim", DoubleType()),
-        ]
-    )
-
-    def _score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            va = np.array(list(pdf["__va"]), dtype=np.float64)
-            vb = np.array(list(pdf["__vb"]), dtype=np.float64)
-            cos = _round_half_away(
-                (va * vb).sum(axis=1)
-                / (
-                    np.sqrt((va * va).sum(axis=1))
-                    * np.sqrt((vb * vb).sum(axis=1))
-                ),
-                4,
-            )
-            m = cos >= threshold
-            yield pd.DataFrame(
-                {
-                    a_id: pdf[a_id].to_numpy()[m],
-                    b_id: pdf[b_id].to_numpy()[m],
-                    "cosine_sim": cos[m],
-                }
-            )
-
-    return joined.mapInPandas(_score, schema=out_schema)
+    return _cosine_rescore(cand, av, bvs, a_id, b_id, threshold)
 
 
 def lsh_cosine_cross_pairs(
@@ -1622,26 +1635,10 @@ def lsh_cosine_cross_pairs(
     threshold``; pairs are distinct, sides keep their origin (a-side id
     in ``_a``). The whole construction — planes, buckets, cap, rounded
     rescore — replays under the SQL oracle."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
     a, b = f"{id_col}_a", f"{id_col}_b"
-    # Probe the dim from the first NON-NULL embedding (a NULL in row 1
-    # must not crash the probe), and derive the empty-frame schema from
-    # the ACTUAL id column type so the empty path and the populated path
-    # return the same schema for non-bigint ids (ADVICE r8).
-    dim_row = (
-        a_df.where(F.col(vec_col).isNotNull())
-        .select(F.size(vec_col).alias("d"))
-        .first()
-    )
-    if dim_row is None or dim_row["d"] is None:
-        id_type = a_df.schema[id_col].dataType.simpleString()
-        return a_df.sparkSession.createDataFrame(
-            [], f"{a} {id_type}, {b} {id_type}, cosine_sim double"
-        )
-    dim = int(dim_row["d"])
+    dim = _vector_dim(a_df, vec_col)
+    if dim is None:
+        return _empty_cosine_pairs(a_df, id_col, a, b)
     if n_planes == "auto":
         # resolution follows the TOTAL hashed population (both sides
         # land in the same bucket space) — the suggest_lsh_planes knob
@@ -1668,51 +1665,10 @@ def lsh_cosine_cross_pairs(
     from pyveb_spark.operators.joins import broadcast_if_bounded
 
     ok = broadcast_if_bounded(ok)
-    n_shuf = int(
-        a_df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    cand = (
-        ab.join(ok, "__b")
-        .join(bb, "__b")
-        .select(a, b)
-        .distinct()
-        .repartition(n_shuf, a, b)
-    )
+    cand = ab.join(ok, "__b").join(bb, "__b").select(a, b).distinct()
     av = a_df.select(F.col(id_col).alias(a), F.col(vec_col).alias("__va"))
     bv = b_df.select(F.col(id_col).alias(b), F.col(vec_col).alias("__vb"))
-    joined = cand.join(av, a).join(bv, b)
-    out_schema = StructType(
-        [
-            StructField(a, joined.schema[a].dataType),
-            StructField(b, joined.schema[b].dataType),
-            StructField("cosine_sim", DoubleType()),
-        ]
-    )
-
-    def _score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            va = np.array(list(pdf["__va"]), dtype=np.float64)
-            vb = np.array(list(pdf["__vb"]), dtype=np.float64)
-            cos = _round_half_away(
-                (va * vb).sum(axis=1)
-                / (
-                    np.sqrt((va * va).sum(axis=1))
-                    * np.sqrt((vb * vb).sum(axis=1))
-                ),
-                4,
-            )
-            m = cos >= threshold
-            yield pd.DataFrame(
-                {
-                    a: pdf[a].to_numpy()[m],
-                    b: pdf[b].to_numpy()[m],
-                    "cosine_sim": cos[m],
-                }
-            )
-
-    return joined.mapInPandas(_score, schema=out_schema)
+    return _cosine_rescore(cand, av, bv, a, b, threshold)
 
 
 def mmr_select(

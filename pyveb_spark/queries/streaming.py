@@ -724,11 +724,7 @@ def q206_stream_lsh_admission(
     n_matches, best_cosine, admitted)`` for every streamed vector."""
     import os
 
-    from pyveb_spark.operators.similarity import (
-        lsh_bucket,
-        lsh_bucket_expr,
-        lsh_cosine_lookup,
-    )
+    from pyveb_spark.operators.similarity import lsh_bucket, lsh_cosine_lookup
     from pyveb_spark.sinks.index_store import load_lsh_index, save_lsh_index
     from pyveb_spark.sinks.merge import ParquetMergeSink
     from pyveb_spark.streaming.stream import (
@@ -774,13 +770,6 @@ def q206_stream_lsh_admission(
         spark, drops, arriving.schema, max_files_per_trigger=1
     )
     sink = ParquetMergeSink(spark, os.path.join(s.dir, "admitted"))
-    # the probe bucket expression is frozen for the stream's lifetime
-    # (pure function of the manifest geometry) — build the Column
-    # ONCE here, not per micro-batch (r13; the q218 change-#15 shape)
-    probe = lsh_bucket_expr(
-        int(idx_meta["dim"]), idx_meta["n_planes"], "embedding",
-        idx_meta["seed"],
-    )
 
     def _admit(batch_df: DataFrame, batch_id: int) -> None:
         matches = lsh_cosine_lookup(
@@ -790,7 +779,6 @@ def q206_stream_lsh_admission(
             # geometry from the build manifest — skips one probe job
             # per micro-batch (the dim is an artifact constant)
             dim=int(idx_meta["dim"]),
-            probe_bucket=probe,
         )
         per = matches.groupBy("vec_id_new").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_matches"),

@@ -60,48 +60,54 @@ def test_lsh_bucket_expr_matches_lsh_bucket(spark):
     again = _rows(half.withColumn("lsh_bucket", expr).select(
         "vec_id", "lsh_bucket"))
     assert again == [r for r in via_fn if r[0] % 2 == 0]
+    # memoized: called positionally, as lsh_cosine_lookup calls it per
+    # micro-batch, the same arguments return the same Column object
+    assert lsh_bucket_expr(64, 6, "embedding", 42) is lsh_bucket_expr(
+        64, 6, "embedding", 42
+    )
 
 
-def test_lsh_cosine_lookup_probe_bucket_value_identity(spark):
-    """Threading the prebuilt probe Column must not change the admission
-    matches (same expression tree, built once instead of per batch)."""
+def test_lsh_cosine_lookup_equals_uncapped_cross_pairs(spark):
+    """The sign-LSH lookup and cross-pairs share one bucket hash and one
+    rescore: on disjoint sides, with the cross-pairs bucket cap above the
+    total population (so nothing is capped), both return the same
+    pairs."""
     from pyspark.sql import functions as F
 
     from pyveb_spark.operators.similarity import (
-        lsh_bucket,
-        lsh_bucket_expr,
+        lsh_cosine_cross_pairs,
         lsh_cosine_lookup,
     )
 
     e = read_table(spark, SF, "embeddings")
-    batch = e.where(F.col("vec_id") % 17 == 0)
-    corpus = e.where(F.col("vec_id") % 17 != 0)
-    idx = lsh_bucket(corpus, 64, 6, seed=42, bucket_col="__b")
-    plain = _rows(lsh_cosine_lookup(
-        batch, corpus, threshold=0.3, n_planes=6, seed=42, index=idx,
-        dim=64,
+    a = e.where(F.col("vec_id") % 2 == 0)
+    b = e.where(F.col("vec_id") % 2 == 1)
+    cross = _rows(lsh_cosine_cross_pairs(
+        a, b, threshold=0.3, max_bucket_size=a.count() + b.count(),
     ))
-    threaded = _rows(lsh_cosine_lookup(
-        batch, corpus, threshold=0.3, n_planes=6, seed=42, index=idx,
-        dim=64, probe_bucket=lsh_bucket_expr(64, 6, "embedding", seed=42),
+    lookup = _rows(lsh_cosine_lookup(a, b, threshold=0.3).select(
+        F.col("vec_id_new").alias("vec_id_a"),
+        F.col("vec_id_corpus").alias("vec_id_b"),
+        "cosine_sim",
     ))
-    assert plain == threaded and len(plain) > 0
+    assert cross == lookup and len(cross) > 0
 
 
 def test_minhash_memoized_columns_value_identity(spark):
-    """The memoized signature Columns (_minhash_exprs_cached /
-    _band_arr_inline / _band_arr_named / _minhash_cols_aliased) must
-    produce the same values as freshly-constructed trees, including when
-    the SAME cached Column objects are reused against different frames
-    (the lifecycle queries call the builders 4x per run)."""
+    """The memoized signature Columns (_minhash_cols_aliased /
+    _band_arr_named) must equal freshly-constructed trees, and the SAME
+    cached Column objects must serve different frames (the lifecycle
+    queries call the builders 4x per run)."""
     from pyspark.sql import functions as F
 
     from pyveb_spark.operators.dedup import (
-        _band_arr_inline,
+        _band_arr_named,
+        _check_banding,
+        _minhash_cols_aliased,
         _minhash_expr,
-        _minhash_exprs_cached,
         minhash_lsh_index,
         minhash_signatures,
+        portable_hash48,
     )
 
     import re
@@ -110,11 +116,25 @@ def test_minhash_memoized_columns_value_identity(spark):
     # cached vs fresh expression trees are identical up to the lambda
     # variable gensym counter (x_<n>, a process-global name counter)
     norm = lambda c: re.sub(r"x_\d+", "x", str(c))  # noqa: E731
-    fresh = [norm(_minhash_expr(F.col("__grams"), s)) for s in range(8)]
-    cached = [norm(c) for c in _minhash_exprs_cached(8)]
-    assert fresh == cached
+    fresh = [
+        norm(_minhash_expr(F.col("__grams"), s).alias(f"mh_{s}"))
+        for s in range(8)
+    ]
+    assert fresh == [norm(c) for c in _minhash_cols_aliased(8)]
+    r = _check_banding(32, 8)
+    fresh_bands = F.array(
+        *[
+            portable_hash48(
+                F.concat_ws(
+                    "|", *[F.col(f"mh_{b * r + i}") for i in range(r)]
+                )
+            )
+            for b in range(8)
+        ]
+    )
+    assert norm(fresh_bands) == norm(_band_arr_named(32, 8))
     # same cached band array reused across two different frames
-    assert _band_arr_inline(32, 8) is _band_arr_inline(32, 8)
+    assert _band_arr_named(32, 8) is _band_arr_named(32, 8)
     idx_a = _rows(minhash_lsh_index(d.where("doc_id >= 200"), "doc_id",
                                     "text").select("doc_id", "__band",
                                                    "__h"))

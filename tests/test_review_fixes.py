@@ -336,8 +336,12 @@ def test_bradley_terry_zero_strength_pair_does_not_divide_by_zero():
 def test_lsh_cross_pairs_empty_input_keeps_id_schema(spark):
     # ADVICE r8: the empty-input early return hardcoded bigint ids, so a
     # string-id frame got a different schema on the empty path than the
-    # populated path; a NULL embedding in row 1 also crashed the dim probe
-    from pyveb_spark.operators.similarity import lsh_cosine_cross_pairs
+    # populated path; a NULL embedding in row 1 also crashed the dim probe.
+    # The lookup shares the probe and the empty result.
+    from pyveb_spark.operators.similarity import (
+        lsh_cosine_cross_pairs,
+        lsh_cosine_lookup,
+    )
 
     empty = spark.createDataFrame(
         [], "vec_id string, embedding array<double>"
@@ -345,21 +349,26 @@ def test_lsh_cross_pairs_empty_input_keeps_id_schema(spark):
     out = empty.sparkSession.createDataFrame(
         [("x", [1.0, 0.0])], "vec_id string, embedding array<double>"
     )
-    res = lsh_cosine_cross_pairs(empty, out, threshold=0.9)
-    assert res.schema["vec_id_a"].dataType.simpleString() == "string"
-    assert res.schema["vec_id_b"].dataType.simpleString() == "string"
-    assert res.count() == 0
-
-    # NULL embedding in the first row: probe must skip it, not crash
     nullfirst = spark.createDataFrame(
         [(1, None), (2, [1.0, 0.0])],
         "vec_id bigint, embedding array<double>",
     )
-    pairs = lsh_cosine_cross_pairs(
-        nullfirst, nullfirst.where("vec_id = 2"), threshold=0.9,
-        n_planes=2,
-    )
-    assert {r.vec_id_a for r in pairs.collect()} <= {1, 2}
+    for op, a, b in (
+        (lsh_cosine_cross_pairs, "vec_id_a", "vec_id_b"),
+        (lsh_cosine_lookup, "vec_id_new", "vec_id_corpus"),
+    ):
+        res = op(empty, out, threshold=0.9)
+        assert res.columns == [a, b, "cosine_sim"]
+        assert res.schema[a].dataType.simpleString() == "string"
+        assert res.schema[b].dataType.simpleString() == "string"
+        assert res.count() == 0
+
+        # NULL embedding in the first row: probe must skip it, not crash
+        pairs = op(
+            nullfirst, nullfirst.where("vec_id = 2"), threshold=0.9,
+            n_planes=2,
+        )
+        assert {r[a] for r in pairs.collect()} <= {1, 2}
 
 
 def test_round_half_away_matches_duckdb_round():
