@@ -41,33 +41,55 @@ __all__ = [
 ]
 
 
-def _parquet_files(spark, path: str) -> list[tuple[str, int]]:
-    """(parent directory name, bytes) of every ``.parquet`` file under
-    ``path``. Local paths (every test/bench artifact dir) are walked with
-    ``os``: the Hadoop iterator costs several Py4J roundtrips PER FILE
-    (~0.5-1 s on a few dozen files, paid per micro-batch by the IVF
-    compaction trigger) where ``os.walk`` is sub-millisecond. Remote
-    stores (HDFS, s3a, ...) take the Hadoop listing."""
+def _file_listing(spark, path: str) -> list[tuple[str, int, int]]:
+    """(file path, bytes, mtime) of every file under ``path``, listed
+    recursively; a path that is itself a file lists as that one file.
+    Local paths (every test/bench artifact dir) are walked with ``os``:
+    the Hadoop iterator costs several Py4J roundtrips PER FILE (~0.5-1 s
+    on a few dozen files, paid per micro-batch by the IVF compaction
+    trigger) where ``os.walk`` is sub-millisecond. Remote stores (HDFS,
+    s3a, ...) take the Hadoop listing. A missing path lists as empty."""
     from urllib.parse import urlparse
 
     from pyveb_spark.sinks.writers import _hadoop_fs
 
     parsed = urlparse(path)
     if parsed.scheme in ("", "file"):
-        return [
-            (os.path.basename(d), os.path.getsize(os.path.join(d, f)))
-            for d, _dirs, files in os.walk(parsed.path or path)
-            for f in files
-            if f.endswith(".parquet")
-        ]
+        root = parsed.path or path
+        if os.path.isfile(root):
+            files = [root]
+        else:
+            files = [
+                os.path.join(d, f)
+                for d, _dirs, names in os.walk(root)
+                for f in names
+            ]
+        out = []
+        for p in files:
+            st = os.stat(p)
+            out.append((p, st.st_size, st.st_mtime_ns))
+        return out
     fs, HPath = _hadoop_fs(spark, path)
+    if not fs.exists(HPath(path)):
+        return []
     out = []
     it = fs.listFiles(HPath(path), True)
     while it.hasNext():
         f = it.next()
-        if f.getPath().getName().endswith(".parquet"):
-            out.append((f.getPath().getParent().getName(), f.getLen()))
+        out.append(
+            (f.getPath().toString(), f.getLen(), f.getModificationTime())
+        )
     return out
+
+
+def _parquet_files(spark, path: str) -> list[tuple[str, int]]:
+    """(parent directory name, bytes) of every ``.parquet`` file under
+    ``path`` (``_file_listing``)."""
+    return [
+        (os.path.basename(os.path.dirname(p)), size)
+        for p, size, _mtime in _file_listing(spark, path)
+        if p.endswith(".parquet")
+    ]
 
 
 def widen_scan(df: DataFrame, target: int | None = None) -> DataFrame:

@@ -1443,13 +1443,17 @@ def _cosine_rescore(
     lookup and cross-pairs. Candidates are ``repartition``ed off the
     skewed bucket key, vectors join back by id (``av``: ``(a, __va)``,
     ``bv``: ``(b, __vb)``), and the exact cosine runs vectorized in numpy
-    over Arrow batches (``mapInPandas``)."""
+    over Arrow batches (``mapInPandas``). A NULL vector on either side
+    drops its pairs: every NULL hashes to bucket 0, so two NULLs are a
+    candidate (after any bucket cap, which counts them)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     from pyveb_spark.operators.layout import pin_width
 
+    av = av.where(F.col("__va").isNotNull())
+    bv = bv.where(F.col("__vb").isNotNull())
     joined = pin_width(cand.select(a, b), a, b).join(av, a).join(bv, b)
     out_schema = StructType(
         [
@@ -1574,11 +1578,9 @@ def lsh_cosine_lookup(
     # already 1 (semantics identical to the join-predicate form)
     cand = a.join(b, "__b").where(F.col(a_id) != F.col(b_id))
     # vector join-back by id; NULL embeddings contribute no candidate
-    # (the previous join-predicate form nulled their cosine — same rows)
-    av = (
-        batch.where(F.col(vec_col).isNotNull())
-        .select(F.col(id_col).alias(a_id), F.col(vec_col).alias("__va"))
-    )
+    # (``_cosine_rescore`` drops them; the previous join-predicate form
+    # nulled their cosine — same rows)
+    av = batch.select(F.col(id_col).alias(a_id), F.col(vec_col).alias("__va"))
     # b-side vectors come from the INDEX when it carries them (ADVICE
     # r9): with a persisted index that has grown past the caller's
     # corpus frame (or vice versa), joining the corpus would silently
@@ -1586,10 +1588,8 @@ def lsh_cosine_lookup(
     # own vectors are the admission ground truth. The corpus frame is
     # only consulted when the index is bucket-metadata-only.
     b_vec_src = index if vec_col in index.columns else corpus
-    bvs = (
-        b_vec_src
-        .where(F.col(vec_col).isNotNull())
-        .select(F.col(id_col).alias(b_id), F.col(vec_col).alias("__vb"))
+    bvs = b_vec_src.select(
+        F.col(id_col).alias(b_id), F.col(vec_col).alias("__vb")
     )
     return _cosine_rescore(cand, av, bvs, a_id, b_id, threshold)
 

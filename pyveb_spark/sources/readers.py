@@ -289,6 +289,53 @@ def nanos_to_timestamp(df: DataFrame, col: str) -> DataFrame:
     )
 
 
+# Session confs that change the Spark schema inferred from a Parquet
+# footer (Spark 4.1's ``ParquetToSparkSchemaConverter`` and the inference
+# itself) and that ``read_table`` does not pin: part of each memo entry's
+# stamp, so a session that sets one differently re-infers.
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.variant.allowReadingShredded",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+)
+
+# path -> (stamp, inferred schema); one entry per path, replaced when the
+# stamp changes. Entries are written whole, so concurrent misses on one
+# path at worst infer twice.
+_schemas: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _read_parquet_memo(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once per file
+    listing: the inference is a Spark job per call, a read with a known
+    schema launches none. The stamp is the listing's (name, size, mtime)
+    per file plus the ``_SCHEMA_CONFS`` values, so any write to the path
+    re-infers."""
+    from pyveb_spark.operators.layout import _file_listing
+
+    listing = _file_listing(spark, path)
+    if not listing:
+        # nothing to fingerprint (a missing path, a glob): no memo, and a
+        # missing path raises the reader's own error
+        return spark.read.parquet(path)
+    stamp = (
+        tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS),
+        tuple(sorted(listing)),
+    )
+    hit = _schemas.get(path)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _schemas[path] = (stamp, df.schema)
+    return df
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one synthetic testdata table (TESTDATA.md).
 
@@ -300,13 +347,21 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     reads the column as ``TIMESTAMP`` under either ``nanosAsLong`` value;
     a Spark that honours ``nanosAsLong`` reads long nanos, converted here
     with exact integer math.
+
+    The schema is inferred once per file listing and memoized in the
+    process (``_read_parquet_memo``): later reads pass it to the reader
+    and launch no Spark job. The memo holds one entry per path, keyed on
+    the (name, size, mtime) of every file under it and on the session
+    values of the confs that change the inferred types
+    (``_SCHEMA_CONFS``); a rewrite, an appended file or a changed conf
+    re-infers and replaces the entry.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     # Engine semantics are UTC end-to-end (session.py); pin it so results
     # are identical under any caller session regardless of host timezone.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet_memo(spark, f"{sf_dir}/{name}.parquet")
     for c in _NANOS_TS_COLS.get(name, ()):
         if c not in df.columns:
             continue

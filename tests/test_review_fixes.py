@@ -371,6 +371,24 @@ def test_lsh_cross_pairs_empty_input_keeps_id_schema(spark):
         assert {r[a] for r in pairs.collect()} <= {1, 2}
 
 
+def test_lsh_cosine_null_vectors_on_both_sides(spark):
+    # Every NULL vector hashes to bucket 0 (all sign bits 0), so a NULL
+    # on each side made a candidate pair whose numpy rescore crashed in
+    # cross-pairs; both operators must drop NULL vectors alike.
+    from pyveb_spark.operators.similarity import (
+        lsh_cosine_cross_pairs,
+        lsh_cosine_lookup,
+    )
+
+    schema = "vec_id bigint, embedding array<double>"
+    a = spark.createDataFrame([(1, None), (2, [-1.0, -1.0])], schema)
+    b = spark.createDataFrame([(3, [-1.0, -1.0]), (4, None)], schema)
+    cross = lsh_cosine_cross_pairs(a, b, threshold=0.3, n_planes=2)
+    look = lsh_cosine_lookup(a, b, threshold=0.3, n_planes=2)
+    assert [tuple(r) for r in cross.collect()] == [(2, 3, 1.0)]
+    assert [tuple(r) for r in look.collect()] == [(2, 3, 1.0)]
+
+
 def test_round_half_away_matches_duckdb_round():
     # ADVICE r8: numpy rescores now share ONE rounding rule
     # (half-away-from-zero) with DuckDB ROUND and F.round

@@ -7,6 +7,9 @@ and optionally dumps ``.explain("formatted")`` to a file. Next to each
 timed run it prints how many classes Spark's code generator compiled
 during it (``CodegenMetrics``): a warm repeat run should compile none, so
 a nonzero count is a query whose generated code misses the codegen cache.
+It also prints how many Spark jobs each run launched while BUILDING the
+frame (job ids submitted during ``fn(spark, dir)``, before the timed
+action): eager work inside a builder shows there, not in the action.
 
 Usage::
 
@@ -52,6 +55,8 @@ def main() -> int:
         spark.conf.set(k, v)
     spark.sparkContext.setLogLevel("ERROR")
     codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    # job ids are 0 .. numTotalJobs-1, so the delta is the jobs submitted
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
 
     selected = []
     for want in args.names:
@@ -65,25 +70,31 @@ def main() -> int:
         fn = QUERIES[name]
         spark.sparkContext.setJobDescription(f"profile:{name}")
 
-        def run_once() -> tuple[float, int]:
-            """Seconds and generated-class compiles of one run."""
+        def run_once() -> tuple[float, int, int]:
+            """Seconds, generated-class compiles and build jobs of one
+            run."""
             c0 = codegen.METRIC_COMPILATION_TIME().getCount()
+            j0 = dag.numTotalJobs()
             t0 = time.perf_counter()
             df = fn(spark, args.sf_dir)
+            build_jobs = dag.numTotalJobs() - j0
             if args.count:
                 df.count()
             else:
                 df.write.format("noop").mode("overwrite").save()
             return (time.perf_counter() - t0,
-                    codegen.METRIC_COMPILATION_TIME().getCount() - c0)
+                    codegen.METRIC_COMPILATION_TIME().getCount() - c0,
+                    build_jobs)
 
         for _ in range(args.warmup):
             run_once()
-        times, compiles = zip(*(run_once() for _ in range(args.runs)))
+        times, compiles, build_jobs = zip(
+            *(run_once() for _ in range(args.runs))
+        )
         print(
             f"{name}: median {statistics.median(times):.3f}s "
             f"min {min(times):.3f}s runs {[round(t, 3) for t in times]} "
-            f"compiles {list(compiles)}"
+            f"compiles {list(compiles)} build_jobs {list(build_jobs)}"
         )
         if args.explain:
             df = fn(spark, args.sf_dir)
